@@ -216,13 +216,6 @@ object Run {
     finally out.close()
   }
 
-  /** Release every RDD block pinned since `before`, BLOCKING — async frees
-    * let dead blocks overlap live ones (the steady-epoch OOM, SURVEY §11.2);
-    * one definition so no call site quietly degrades to async again. */
-  private def releasePins(sc: org.apache.spark.SparkContext, before: Set[Int]): Unit =
-    (sc.getPersistentRDDs.keySet.toSet -- before)
-      .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
-
   /** A harness sf dir derives transcripts from `events × customer`; anything
     * else is read as a parquet table of the input-hint schema. */
   private def readTranscripts(spark: SparkSession, input: String): DataFrame =
@@ -271,8 +264,8 @@ object Run {
     * committed artifact is what scores, not the in-memory table). Returns
     * the loaded `(f, w_i)` table, its snapshot-derived lineage tag, and the
     * metrics fragment. All RDD blocks pinned by the prep/trainer are
-    * released before returning — the loaded model reads from parquet and
-    * holds no reference to them. */
+    * released once the snapshot is committed (or the training fails) — the
+    * loaded model reads from parquet and holds no reference to them. */
   private def trainAndCommit(spark: SparkSession, opt: Map[String, String],
       transcripts: DataFrame, generator: String, epochs: Int)
       : (DataFrame, String, String) = {
@@ -281,32 +274,31 @@ object Run {
       sys.error("--train requires --model-dir (where the packed model is committed)"))
     val loss = parseLoss(opt.getOrElse("loss", "zero"))
     val eta = opt.get("eta").map(_.toDouble).getOrElse(0.5)
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet.toSet
-    val mentions = extractMentions(transcripts, generator).localCheckpoint(true)
-    // train over the FULL blocked candidate universe (band ∪ surface-blocked
-    // cross-conversation pairs), not just the in-conversation band: the band
-    // alone can be all-positive (a conversation's mentions often share one
-    // entity), and a model that never sees a negative learns to link
-    // everything — the reference likewise trains on all pruned candidate
-    // antecedents (`CorefPruner.scala:100-153`).
-    val pairsAttr = Scoring.attachAttrs(
-      Blocking.candidatePairs(mentions, Blocking.Config()), mentions)
-    val feats = SparseFeatures.featureStrings(pairsAttr,
-      SparseFeatures.normCounts(mentions))
-    val g = goldEntities(spark, opt, mentions)
-    val labels = pairsAttr.select(col("ant_id"), col("cur_id"))
-      .join(g.select(col("mention_id").as("ant_id"), col("entity_id").as("e_a")), "ant_id")
-      .join(g.select(col("mention_id").as("cur_id"), col("entity_id").as("e_c")), "cur_id")
-      .select(col("ant_id"), col("cur_id"),
-        (col("e_a") === col("e_c")).cast("double").as("label"))
-    val (trained, trace) = Trainer.trainSparseRankingDistributed(
-      feats, labels, epochs = epochs, eta = eta, lossFn = loss)
     val token = s"train-$generator-ep$epochs-" +
       s"${loss.falseLink}-${loss.falseNew}-${loss.wrongLink}"
     val io = new TableIO(modelDir)
-    val snap = ModelIO.saveSparse(io, ModelIO.sparseWeightsFromTrained(trained), token)
-    releasePins(sc, pinnedBefore)
+    val (trace, snap) = Pins.scoped(spark.sparkContext) {
+      val mentions = extractMentions(transcripts, generator).localCheckpoint(true)
+      // train over the FULL blocked candidate universe (band ∪ surface-blocked
+      // cross-conversation pairs), not just the in-conversation band: the band
+      // alone can be all-positive (a conversation's mentions often share one
+      // entity), and a model that never sees a negative learns to link
+      // everything — the reference likewise trains on all pruned candidate
+      // antecedents (`CorefPruner.scala:100-153`).
+      val pairsAttr = Scoring.attachAttrs(
+        Blocking.candidatePairs(mentions, Blocking.Config()), mentions)
+      val feats = SparseFeatures.featureStrings(pairsAttr,
+        SparseFeatures.normCounts(mentions))
+      val g = goldEntities(spark, opt, mentions)
+      val labels = pairsAttr.select(col("ant_id"), col("cur_id"))
+        .join(g.select(col("mention_id").as("ant_id"), col("entity_id").as("e_a")), "ant_id")
+        .join(g.select(col("mention_id").as("cur_id"), col("entity_id").as("e_c")), "cur_id")
+        .select(col("ant_id"), col("cur_id"),
+          (col("e_a") === col("e_c")).cast("double").as("label"))
+      val (trained, trace) = Trainer.trainSparseRankingDistributed(
+        feats, labels, epochs = epochs, eta = eta, lossFn = loss)
+      (trace, ModelIO.saveSparse(io, ModelIO.sparseWeightsFromTrained(trained), token))
+    }
     val (w, tag) = ModelIO.loadSparse(spark, io, token, Some(snap))
     val nFeats = w.count()
     val frag =
@@ -604,61 +596,60 @@ object Run {
     val (nerFrag, nerW) =
       if (nerTrainEpochs.nonEmpty || opt.get("ner").exists(_.toBoolean)) {
       import graft.ner.{Ner, NerTrainer}
-      val sc = spark.sparkContext
-      val pinnedBefore = sc.getPersistentRDDs.keySet.toSet
-      // the PROPER extents of the all-generators universe double as the NER
-      // supervision (B/I/O projection — the reference distills its span
-      // annotation the same way) and as the A11 evaluation gold; computed
-      // against the SAME universe in both roles, independent of --generator
-      lazy val properExtents = {
-        val u = if (generator == "all") res.mentions
-          else extractMentions(transcripts, "all")
-        u.filter(col("mtype") === "PROPER")
-          .select(col("conv_id"), col("turn_idx"), col("start"), col("end"))
+      Pins.scoped(spark.sparkContext) {
+        // the PROPER extents of the all-generators universe double as the NER
+        // supervision (B/I/O projection — the reference distills its span
+        // annotation the same way) and as the A11 evaluation gold; computed
+        // against the SAME universe in both roles, independent of --generator
+        lazy val properExtents = {
+          val u = if (generator == "all") res.mentions
+            else extractMentions(transcripts, "all")
+          u.filter(col("mtype") === "PROPER")
+            .select(col("conv_id"), col("turn_idx"), col("start"), col("end"))
+        }
+        // the NER lineage extends the pipeline token with everything the
+        // emission model depends on: epochs, step size, the L7 dictionary's
+        // content identity — two differently-trained taggers into the same
+        // --output must not share a snapshot identity
+        val (emissions, wOpt, nerToken, trainNerFrag) = nerTrainEpochs match {
+          case Some(ep) =>
+            require(ep >= 1, s"--ner-train needs at least 1 epoch, got $ep")
+            val eta = opt.get("eta").map(_.toDouble).getOrElse(0.5)
+            val dictToks = opt.get("link-dict")
+              .map(p => NerTrainer.dictTokens(spark.read.parquet(p)))
+            val feats = NerTrainer.tokenFeatures(transcripts, dictToks)
+              .localCheckpoint(true) // consumed twice: trainer epochs + emissions
+            val w = NerTrainer.train(feats,
+              NerTrainer.goldTokenLabels(properExtents), epochs = ep, eta = eta)
+            val tok = subToken(s"ner|$ep|$eta|${optId("link-dict")}")
+            // the trained 3×F matrix is committed like the coref model — the
+            // store is what makes a later decode reproducible (RunSpec gates it)
+            import spark.implicits._
+            val wdf = (for {
+              l <- 0 until Ner.Labels.length
+              j <- NerTrainer.FeatureNames.indices
+            } yield (Ner.Labels(l), NerTrainer.FeatureNames(j), w(l)(j)))
+              .toDF("label", "feature", "weight")
+            out.commit("ner_model", wdf, tok)
+            (NerTrainer.emissions(feats, w), Some(w), tok,
+              s""""ner_trained_epochs":$ep,""")
+          case None =>
+            (Ner.emissions(transcripts), None, subToken("ner|fixed"), "")
+        }
+        val labeled = Ner.viterbi(spark, emissions)
+          .localCheckpoint(true) // consumed twice: committed + chunked
+        out.commit("ner", labeled, nerToken)
+        val chunks = Ner.chunks(labeled).localCheckpoint(true)
+        out.commit("ner_chunks", chunks, nerToken)
+        val nChunks = chunks.count()
+        // A11 under --evaluate: chunk F1 against the PROPER extents
+        val f1Frag = if (opt.get("evaluate").exists(_.toBoolean)) {
+          val f1 = Ner.chunkF1(chunks, properExtents).collect()(0)
+          f""""ner_chunk_f1":${f1.getAs[Double]("f1")}%.6f,"""
+        } else ""
+        (trainNerFrag + s""""ner_config":"$nerToken","ner_chunks":$nChunks,""" +
+          f1Frag, wOpt)
       }
-      // the NER lineage extends the pipeline token with everything the
-      // emission model depends on: epochs, step size, the L7 dictionary's
-      // content identity — two differently-trained taggers into the same
-      // --output must not share a snapshot identity
-      val (emissions, wOpt, nerToken, trainNerFrag) = nerTrainEpochs match {
-        case Some(ep) =>
-          require(ep >= 1, s"--ner-train needs at least 1 epoch, got $ep")
-          val eta = opt.get("eta").map(_.toDouble).getOrElse(0.5)
-          val dictToks = opt.get("link-dict")
-            .map(p => NerTrainer.dictTokens(spark.read.parquet(p)))
-          val feats = NerTrainer.tokenFeatures(transcripts, dictToks)
-            .localCheckpoint(true) // consumed twice: trainer epochs + emissions
-          val w = NerTrainer.train(feats,
-            NerTrainer.goldTokenLabels(properExtents), epochs = ep, eta = eta)
-          val tok = subToken(s"ner|$ep|$eta|${optId("link-dict")}")
-          // the trained 3×F matrix is committed like the coref model — the
-          // store is what makes a later decode reproducible (RunSpec gates it)
-          import spark.implicits._
-          val wdf = (for {
-            l <- 0 until Ner.Labels.length
-            j <- NerTrainer.FeatureNames.indices
-          } yield (Ner.Labels(l), NerTrainer.FeatureNames(j), w(l)(j)))
-            .toDF("label", "feature", "weight")
-          out.commit("ner_model", wdf, tok)
-          (NerTrainer.emissions(feats, w), Some(w), tok,
-            s""""ner_trained_epochs":$ep,""")
-        case None =>
-          (Ner.emissions(transcripts), None, subToken("ner|fixed"), "")
-      }
-      val labeled = Ner.viterbi(spark, emissions)
-        .localCheckpoint(true) // consumed twice: committed + chunked
-      out.commit("ner", labeled, nerToken)
-      val chunks = Ner.chunks(labeled).localCheckpoint(true)
-      out.commit("ner_chunks", chunks, nerToken)
-      val nChunks = chunks.count()
-      // A11 under --evaluate: chunk F1 against the PROPER extents
-      val f1Frag = if (opt.get("evaluate").exists(_.toBoolean)) {
-        val f1 = Ner.chunkF1(chunks, properExtents).collect()(0)
-        f""""ner_chunk_f1":${f1.getAs[Double]("f1")}%.6f,"""
-      } else ""
-      releasePins(sc, pinnedBefore)
-      (trainNerFrag + s""""ner_config":"$nerToken","ner_chunks":$nChunks,""" +
-        f1Frag, wOpt)
     } else ("", None)
 
     // G3 operational face: BP joint decode over the same scored arcs the
@@ -672,139 +663,138 @@ object Run {
       val nerCpl = opt.get("joint-ner-coupling").map(_.toDouble).getOrElse(0.0)
       val wikiCpl = opt.get("joint-wiki-coupling").map(_.toDouble).getOrElse(0.0)
       val wikiNil = opt.get("joint-wiki-nil").map(_.toDouble).getOrElse(0.0)
-      val sc = spark.sparkContext
-      val pinnedBefore = sc.getPersistentRDDs.keySet.toSet
-      // NER-agreement evidence: the forward-backward entity posterior
-      // (m_b + m_i) averaged over each mention's token span — the infer()
-      // contract's documented feed (JointDocFactorGraphOnto.scala:62-99) —
-      // from the emission model THIS RUN decodes with (trained when
-      // --ner-train ran, fixed otherwise); checkpointed: consumed by
-      // training (dozens of objective evaluations) and by the decode
-      val evidence = if (nerCpl != 0.0) {
-        val emis = nerW match {
-          case Some(w) => graft.ner.NerTrainer.emissions(
-            graft.ner.NerTrainer.tokenFeatures(transcripts,
-              opt.get("link-dict").map(p =>
-                graft.ner.NerTrainer.dictTokens(spark.read.parquet(p)))), w)
-          case None => graft.ner.Ner.emissions(transcripts)
-        }
-        val fb = graft.ner.Ner.forwardBackward(spark, emis)
-        Some(res.mentions.select(col("mention_id"), col("conv_id"),
-            col("turn_idx"), explode(sequence(col("start"), col("end"))).as("pos"))
-          .join(fb, Seq("conv_id", "turn_idx", "pos"))
-          .groupBy(col("mention_id"))
-          .agg(avg(col("m_b") + col("m_i")).as("p_entity"))
-          .withColumn("new_bias", lit(0.0))
-          .localCheckpoint(true))
-      } else None
-      // wiki denotation nodes: the full L5 grid (every candidate title per
-      // mention), not the chooser's argmax — the factor graph owns the choice
-      val wikiScores = if (wikiCpl != 0.0) {
-        val (dict, redirects, aux) = loadLinkInputs("--joint-wiki-coupling")
-        Some(graft.linking.Linking.denotationGrid(res.mentions, dict, redirects, aux))
-      } else None
-      // --joint-train: the reference's runTrainEvaluate for the factor graph
-      // (BP-gradient Adagrad over the factor weights) — coref and, when the
-      // evidence factor is active, NER couplings; wiki couplings stay
-      // user-set (no gold titles in the mention→entity supervision). The
-      // gold marker g_type = "NONE" is deliberately outside the Types enum:
-      // the row participates in the antecedent term (gold-new mentions
-      // included) with no type-supervision term.
-      val (cplCoref, cplNer, trainJointFrag) =
-        opt.get("joint-train").map(_.toInt) match {
-          case Some(ep) =>
-            require(ep >= 1, s"--joint-train needs at least 1 epoch, got $ep")
-            val g = goldEntities(spark, opt, res.mentions)
-            val mConv = res.mentions.select(col("mention_id"), col("conv_id"))
-            // the factor graph is per-conversation: the gold antecedent is
-            // the lowest-id gold-coreferent candidate IN THE SAME
-            // CONVERSATION. A cross-conversation chain/bridge arc is not a
-            // reachable assignment for any A_c, so deriving g_ant from one
-            // would floor that mention's goldLogLik term to a constant
-            // (zero gradient) even when an in-conversation gold candidate
-            // exists — silently destroying its training signal.
-            val goldArc = res.scored.select(col("ant_id"), col("cur_id"))
-              .join(mConv.select(col("mention_id").as("ant_id"),
-                col("conv_id").as("conv_a")), "ant_id")
-              .join(mConv.select(col("mention_id").as("cur_id"),
-                col("conv_id").as("conv_c")), "cur_id")
-              .filter(col("conv_a") === col("conv_c"))
-              .join(g.select(col("mention_id").as("ant_id"),
-                col("entity_id").as("e_a")), "ant_id")
-              .join(g.select(col("mention_id").as("cur_id"),
-                col("entity_id").as("e_c")), "cur_id")
-              .filter(col("e_a") === col("e_c"))
-              .groupBy(col("cur_id")).agg(min(col("ant_id")).as("g_ant"))
-            // supervision only for gold-COVERED mentions: a mention absent
-            // from the gold table gets NO gold row (the kernel's all-null
-            // case, no term), not a fabricated "gold-new" — a partial
-            // --gold must not read as "everything uncovered starts its own
-            // entity", which would bias the trained coupling against linking
-            val goldDf = g.select(col("mention_id")).distinct()
-              .join(goldArc.select(col("cur_id").as("mention_id"), col("g_ant")),
-                Seq("mention_id"), "left")
-              .select(col("mention_id"), col("g_ant"),
-                lit("NONE").as("g_type"),
-                lit(null).cast("string").as("g_wiki"))
-            val (trained, trace) = graft.joint.JointInference.trainCouplings(
-              spark, graft.joint.JointInference.typePriors(res.mentions),
-              res.scored.select(col("ant_id"), col("cur_id"), col("score")),
-              goldDf, epochs = ep,
-              eta = opt.get("eta").map(_.toDouble).getOrElse(0.5),
-              iters = iters,
-              init = graft.joint.JointInference.Couplings(coupling, nerCpl,
-                wikiCpl, wikiNil),
-              // no wikiScores in the TRAINING graph: every g_wiki is null,
-              // so a wiki-factored objective would read "all denotations are
-              // gold-NIL" — false supervision perturbing the coref gradient.
-              // Wiki factors join at decode with their user-set couplings.
-              evidence = evidence, wikiScores = None,
-              trainWiki = false, algorithm = "bp")
-            (trained.coref, trained.ner,
-              f""""joint_trained_epochs":$ep,""" +
-              f""""joint_loss_first":${trace.head._2}%.6f,""" +
-              f""""joint_loss_last":${trace.last._2}%.6f,""")
-          case None => (coupling, nerCpl, "")
-        }
-      val joint = graft.joint.JointInference.infer(spark,
-        graft.joint.JointInference.typePriors(res.mentions),
-        res.scored.select(col("ant_id"), col("cur_id"), col("score")),
-        coupling = cplCoref, iters = iters,
-        evidence = evidence, nerCoupling = cplNer,
-        wikiScores = wikiScores, wikiCoupling = wikiCpl, wikiNilScore = wikiNil,
-        algorithm = "bp")
-        .localCheckpoint(true) // consumed twice: committed + flip-diffed
-      // the joint table's lineage: pipeline token + everything the factor
-      // graph depends on beyond the pipeline — the (possibly trained)
-      // couplings, the iteration count, the gold table's content identity
-      // (it shaped the trained couplings), the emission model feeding the
-      // evidence, and the wiki grid's inputs
-      val emisId = if (nerCpl != 0.0) nerW.map(_ =>
-          s"trained|${nerTrainEpochs.get}|${opt.getOrElse("eta", "0.5")}|" +
-            optId("link-dict"))
-        .getOrElse("fixed") else ""
-      val wikiId = if (wikiCpl != 0.0)
-        s"${optId("link-dict")}|${optId("link-redirects")}|${optId("link-aux")}"
-        else ""
-      val jointToken = subToken(
-        s"joint|$cplCoref|$cplNer|$wikiCpl|$wikiNil|$iters|bp|" +
-        s"${opt.getOrElse("joint-train", "")}|${optId("gold")}|$emisId|$wikiId")
-      out.commit("joint", joint, jointToken)
-      val flips = joint
-        .select(col("mention_id").as("cur_id"), col("ant_id").as("joint_ant"))
-        .join(res.backptrs.select(col("cur_id"), col("ant_id").as("pair_ant")),
-          Seq("cur_id"), "left")
-        .filter(!(col("joint_ant") <=> col("pair_ant"))).count()
-      val wikiFrag = if (wikiCpl != 0.0) {
-        val titled = joint.filter(col("wiki_title").isNotNull).count()
-        s""""joint_wiki_coupling":$wikiCpl,"joint_wiki_titled":$titled,"""
-      } else ""
-      val nerCplFrag =
-        if (cplNer != 0.0) s""""joint_ner_coupling":$cplNer,""" else ""
-      releasePins(sc, pinnedBefore)
-      trainJointFrag + s""""joint_config":"$jointToken",""" +
-        s""""joint_coupling":$cplCoref,"joint_iters":$iters,""" +
-        nerCplFrag + wikiFrag + s""""joint_flips":$flips,"""
+      Pins.scoped(spark.sparkContext) {
+        // NER-agreement evidence: the forward-backward entity posterior
+        // (m_b + m_i) averaged over each mention's token span — the infer()
+        // contract's documented feed (JointDocFactorGraphOnto.scala:62-99) —
+        // from the emission model THIS RUN decodes with (trained when
+        // --ner-train ran, fixed otherwise); checkpointed: consumed by
+        // training (dozens of objective evaluations) and by the decode
+        val evidence = if (nerCpl != 0.0) {
+          val emis = nerW match {
+            case Some(w) => graft.ner.NerTrainer.emissions(
+              graft.ner.NerTrainer.tokenFeatures(transcripts,
+                opt.get("link-dict").map(p =>
+                  graft.ner.NerTrainer.dictTokens(spark.read.parquet(p)))), w)
+            case None => graft.ner.Ner.emissions(transcripts)
+          }
+          val fb = graft.ner.Ner.forwardBackward(spark, emis)
+          Some(res.mentions.select(col("mention_id"), col("conv_id"),
+              col("turn_idx"), explode(sequence(col("start"), col("end"))).as("pos"))
+            .join(fb, Seq("conv_id", "turn_idx", "pos"))
+            .groupBy(col("mention_id"))
+            .agg(avg(col("m_b") + col("m_i")).as("p_entity"))
+            .withColumn("new_bias", lit(0.0))
+            .localCheckpoint(true))
+        } else None
+        // wiki denotation nodes: the full L5 grid (every candidate title per
+        // mention), not the chooser's argmax — the factor graph owns the choice
+        val wikiScores = if (wikiCpl != 0.0) {
+          val (dict, redirects, aux) = loadLinkInputs("--joint-wiki-coupling")
+          Some(graft.linking.Linking.denotationGrid(res.mentions, dict, redirects, aux))
+        } else None
+        // --joint-train: the reference's runTrainEvaluate for the factor graph
+        // (BP-gradient Adagrad over the factor weights) — coref and, when the
+        // evidence factor is active, NER couplings; wiki couplings stay
+        // user-set (no gold titles in the mention→entity supervision). The
+        // gold marker g_type = "NONE" is deliberately outside the Types enum:
+        // the row participates in the antecedent term (gold-new mentions
+        // included) with no type-supervision term.
+        val (cplCoref, cplNer, trainJointFrag) =
+          opt.get("joint-train").map(_.toInt) match {
+            case Some(ep) =>
+              require(ep >= 1, s"--joint-train needs at least 1 epoch, got $ep")
+              val g = goldEntities(spark, opt, res.mentions)
+              val mConv = res.mentions.select(col("mention_id"), col("conv_id"))
+              // the factor graph is per-conversation: the gold antecedent is
+              // the lowest-id gold-coreferent candidate IN THE SAME
+              // CONVERSATION. A cross-conversation chain/bridge arc is not a
+              // reachable assignment for any A_c, so deriving g_ant from one
+              // would floor that mention's goldLogLik term to a constant
+              // (zero gradient) even when an in-conversation gold candidate
+              // exists — silently destroying its training signal.
+              val goldArc = res.scored.select(col("ant_id"), col("cur_id"))
+                .join(mConv.select(col("mention_id").as("ant_id"),
+                  col("conv_id").as("conv_a")), "ant_id")
+                .join(mConv.select(col("mention_id").as("cur_id"),
+                  col("conv_id").as("conv_c")), "cur_id")
+                .filter(col("conv_a") === col("conv_c"))
+                .join(g.select(col("mention_id").as("ant_id"),
+                  col("entity_id").as("e_a")), "ant_id")
+                .join(g.select(col("mention_id").as("cur_id"),
+                  col("entity_id").as("e_c")), "cur_id")
+                .filter(col("e_a") === col("e_c"))
+                .groupBy(col("cur_id")).agg(min(col("ant_id")).as("g_ant"))
+              // supervision only for gold-COVERED mentions: a mention absent
+              // from the gold table gets NO gold row (the kernel's all-null
+              // case, no term), not a fabricated "gold-new" — a partial
+              // --gold must not read as "everything uncovered starts its own
+              // entity", which would bias the trained coupling against linking
+              val goldDf = g.select(col("mention_id")).distinct()
+                .join(goldArc.select(col("cur_id").as("mention_id"), col("g_ant")),
+                  Seq("mention_id"), "left")
+                .select(col("mention_id"), col("g_ant"),
+                  lit("NONE").as("g_type"),
+                  lit(null).cast("string").as("g_wiki"))
+              val (trained, trace) = graft.joint.JointInference.trainCouplings(
+                spark, graft.joint.JointInference.typePriors(res.mentions),
+                res.scored.select(col("ant_id"), col("cur_id"), col("score")),
+                goldDf, epochs = ep,
+                eta = opt.get("eta").map(_.toDouble).getOrElse(0.5),
+                iters = iters,
+                init = graft.joint.JointInference.Couplings(coupling, nerCpl,
+                  wikiCpl, wikiNil),
+                // no wikiScores in the TRAINING graph: every g_wiki is null,
+                // so a wiki-factored objective would read "all denotations are
+                // gold-NIL" — false supervision perturbing the coref gradient.
+                // Wiki factors join at decode with their user-set couplings.
+                evidence = evidence, wikiScores = None,
+                trainWiki = false, algorithm = "bp")
+              (trained.coref, trained.ner,
+                f""""joint_trained_epochs":$ep,""" +
+                f""""joint_loss_first":${trace.head._2}%.6f,""" +
+                f""""joint_loss_last":${trace.last._2}%.6f,""")
+            case None => (coupling, nerCpl, "")
+          }
+        val joint = graft.joint.JointInference.infer(spark,
+          graft.joint.JointInference.typePriors(res.mentions),
+          res.scored.select(col("ant_id"), col("cur_id"), col("score")),
+          coupling = cplCoref, iters = iters,
+          evidence = evidence, nerCoupling = cplNer,
+          wikiScores = wikiScores, wikiCoupling = wikiCpl, wikiNilScore = wikiNil,
+          algorithm = "bp")
+          .localCheckpoint(true) // consumed twice: committed + flip-diffed
+        // the joint table's lineage: pipeline token + everything the factor
+        // graph depends on beyond the pipeline — the (possibly trained)
+        // couplings, the iteration count, the gold table's content identity
+        // (it shaped the trained couplings), the emission model feeding the
+        // evidence, and the wiki grid's inputs
+        val emisId = if (nerCpl != 0.0) nerW.map(_ =>
+            s"trained|${nerTrainEpochs.get}|${opt.getOrElse("eta", "0.5")}|" +
+              optId("link-dict"))
+          .getOrElse("fixed") else ""
+        val wikiId = if (wikiCpl != 0.0)
+          s"${optId("link-dict")}|${optId("link-redirects")}|${optId("link-aux")}"
+          else ""
+        val jointToken = subToken(
+          s"joint|$cplCoref|$cplNer|$wikiCpl|$wikiNil|$iters|bp|" +
+          s"${opt.getOrElse("joint-train", "")}|${optId("gold")}|$emisId|$wikiId")
+        out.commit("joint", joint, jointToken)
+        val flips = joint
+          .select(col("mention_id").as("cur_id"), col("ant_id").as("joint_ant"))
+          .join(res.backptrs.select(col("cur_id"), col("ant_id").as("pair_ant")),
+            Seq("cur_id"), "left")
+          .filter(!(col("joint_ant") <=> col("pair_ant"))).count()
+        val wikiFrag = if (wikiCpl != 0.0) {
+          val titled = joint.filter(col("wiki_title").isNotNull).count()
+          s""""joint_wiki_coupling":$wikiCpl,"joint_wiki_titled":$titled,"""
+        } else ""
+        val nerCplFrag =
+          if (cplNer != 0.0) s""""joint_ner_coupling":$cplNer,""" else ""
+        trainJointFrag + s""""joint_config":"$jointToken",""" +
+          s""""joint_coupling":$cplCoref,"joint_iters":$iters,""" +
+          nerCplFrag + wikiFrag + s""""joint_flips":$flips,"""
+      }
     } else ""
     // L2–L5 operational face: wikify the mentions against a user-supplied
     // title dictionary and commit the per-mention links alongside the
@@ -812,27 +802,26 @@ object Run {
     // (`wiki/JointQueryDenotationChooser.scala`, `WikificationEvaluator`)
     val linkFrag = if (opt.get("link").exists(_.toBoolean)) {
       val (dict, redirects, aux) = loadLinkInputs("--link")
-      val sc = spark.sparkContext
-      val pinnedBefore = sc.getPersistentRDDs.keySet.toSet
-      val choose = opt.getOrElse("link-choose", "grid")
-      val links = (choose match {
-        case "grid" => // L5 query×denotation grid with the L4 aux purge
-          graft.linking.Linking.queryDenotationChoose(res.mentions, dict, redirects, aux)
-        case "cascade" => // L2+L3 best-priority-then-count cascade
-          graft.linking.Linking.link(res.mentions, dict, redirects)
-        case other => sys.error(s"--link-choose must be grid|cascade, got $other")
-      }).localCheckpoint(true) // consumed twice: committed + counted
-      // links lineage extends the pipeline token with the linking inputs —
-      // the same clusters wikified against a different dictionary (or chooser)
-      // must NOT share a token, or a resume-style reader would treat the two
-      // as interchangeable snapshots (see optId/subToken above)
-      val linkToken = subToken(
-        s"${optId("link-dict")}|${optId("link-redirects")}|" +
-        s"${optId("link-aux")}|$choose")
-      out.commit("links", links, linkToken)
-      val nLinked = links.count()
-      releasePins(sc, pinnedBefore)
-      s""""link_config":"$linkToken","linked_mentions":$nLinked,"""
+      Pins.scoped(spark.sparkContext) {
+        val choose = opt.getOrElse("link-choose", "grid")
+        val links = (choose match {
+          case "grid" => // L5 query×denotation grid with the L4 aux purge
+            graft.linking.Linking.queryDenotationChoose(res.mentions, dict, redirects, aux)
+          case "cascade" => // L2+L3 best-priority-then-count cascade
+            graft.linking.Linking.link(res.mentions, dict, redirects)
+          case other => sys.error(s"--link-choose must be grid|cascade, got $other")
+        }).localCheckpoint(true) // consumed twice: committed + counted
+        // links lineage extends the pipeline token with the linking inputs —
+        // the same clusters wikified against a different dictionary (or chooser)
+        // must NOT share a token, or a resume-style reader would treat the two
+        // as interchangeable snapshots (see optId/subToken above)
+        val linkToken = subToken(
+          s"${optId("link-dict")}|${optId("link-redirects")}|" +
+          s"${optId("link-aux")}|$choose")
+        out.commit("links", links, linkToken)
+        val nLinked = links.count()
+        s""""link_config":"$linkToken","linked_mentions":$nLinked,"""
+      }
     } else ""
     // S4 operational face: the reference predict driver's actual output
     // format (`ConllDocWriter.writeDoc`) — token-per-line text with coref

@@ -37,7 +37,8 @@ import org.apache.spark.sql.functions._
   * antecedent/type/title assignments — the smooth surrogate is the summed
   * log-marginal of the gold assignment under the converged beliefs
   * ([[goldLogLik]]), its gradient taken by central finite differences and
-  * fed through the SAME Adagrad update rule as [[graft.train.Trainer]].
+  * fed through the engine's one Adagrad step ([[graft.train.Adagrad]],
+  * λ = 0).
   * Both the as-cur and as-ant message passes use a precomputed reverse
   * adjacency (ant → arcs targeting it), so a mean-field iteration is
   * O(total arcs × states), not O(mentions × total arcs).
@@ -733,9 +734,9 @@ object JointInference {
   }
 
   /** Train the 4 factor couplings by central-finite-difference gradient of
-    * [[goldLogLik]] + the same Adagrad update rule as the pairwise trainers
-    * (`CorefFeaturizerTrainer.scala:174-191` shape, no L1 — 4 parameters
-    * don't need sparsity). Mirrors the reference's
+    * [[goldLogLik]] + the pairwise trainers' Adagrad step
+    * ([[graft.train.Adagrad]] with λ = 0, the plain Adagrad step bit for
+    * bit — 4 parameters don't need sparsity). Mirrors the reference's
     * `GeneralTrainer.trainAdagrad` driving BP factor-weight gradients
     * (`JointComputerShared.addUnregularizedStochasticGradient`).
     *
@@ -752,18 +753,16 @@ object JointInference {
     // every objective evaluation re-runs the kernel only, never the inputs'
     // upstream plans — with 4 dims and 8 epochs the objective runs
     // (1 + 2·dims)·epochs = 72 times. The pins are released when training
-    // returns (the result is 4 scalars + a trace — nothing derives from
-    // them), so repeated runs don't accumulate dead checkpoint blocks.
-    val sctx = spark.sparkContext
-    val pinsBefore = sctx.getPersistentRDDs.keySet.toSet
-    val mp = mentionPriors.localCheckpoint(true)
-    val sc = scored.localCheckpoint(true)
-    val g = gold.localCheckpoint(true)
-    val ev = evidence.map(_.localCheckpoint(true))
-    val ws = wikiScores.map(_.localCheckpoint(true))
-    def obj(c: Array[Double]): Double = goldLogLik(spark, mp, sc, g,
-      Couplings(c(0), c(1), c(2), c(3)), iters, ev, ws, algorithm)
-    try {
+    // returns or fails (the result is 4 scalars + a trace — nothing derives
+    // from them), so repeated runs don't accumulate dead checkpoint blocks.
+    graft.Pins.scoped(spark.sparkContext) {
+      val mp = mentionPriors.localCheckpoint(true)
+      val sc = scored.localCheckpoint(true)
+      val g = gold.localCheckpoint(true)
+      val ev = evidence.map(_.localCheckpoint(true))
+      val ws = wikiScores.map(_.localCheckpoint(true))
+      def obj(c: Array[Double]): Double = goldLogLik(spark, mp, sc, g,
+        Couplings(c(0), c(1), c(2), c(3)), iters, ev, ws, algorithm)
       // per-dimension activity, not a prefix count: each coupling's gradient
       // is provably zero when its factor has no inputs (no evidence table →
       // p_entity = 0 everywhere → the objective is constant in `ner`), and a
@@ -785,22 +784,10 @@ object JointInference {
             -(obj(wp) - obj(wm)) / (2 * h) // d(-loglik)/dc_i
           }
         }
-        var i = 0
-        while (i < 4) {
-          if (active(i)) {
-            sq(i) += grad(i) * grad(i)
-            w(i) -= eta * grad(i) / (1.0 + math.sqrt(sq(i)))
-          }
-          i += 1
-        }
+        for (i <- 0 until 4 if active(i))
+          graft.train.Adagrad.step(w, sq, i, grad(i), eta, lambda = 0.0)
       }
       (Couplings(w(0), w(1), w(2), w(3)), trace.toSeq)
-    } finally {
-      // BLOCKING frees (repo-wide rule, SURVEY §11.2): back-to-back training
-      // runs re-pin the same corpus-sized tables, and async frees let the
-      // dead blocks overlap the live ones
-      (sctx.getPersistentRDDs.keySet.toSet -- pinsBefore).foreach(id =>
-        sctx.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
     }
   }
 

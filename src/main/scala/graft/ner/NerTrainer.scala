@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 /** Trained NER emissions (the corpus-statistics path of
   * `ner/NerFeaturizer.scala:139-166` + `NerSystemLabeled.scala:52-128`,
   * scoped to this engine's 3-label chain): a multinomial logistic emission
-  * model over per-token surface features, trained with the same Adagrad+L1
-  * regime as the coref trainer — supervision comes from PROPER mention
-  * extents (B/I/O projection), i.e. the tagger distills the span generators
-  * into a sequence model whose Viterbi/FB inference then runs without them.
+  * model over per-token surface features, trained with the engine's one
+  * Adagrad+L1 step ([[graft.train.Adagrad]]) — supervision comes from
+  * PROPER mention extents (B/I/O projection), i.e. the tagger distills the
+  * span generators into a sequence model whose Viterbi/FB inference then
+  * runs without them.
   *
   * Also carries the L7 surface-match feature
   * (`ner/NerFeaturizer.scala:98-125`): token membership in the entity-link
@@ -122,14 +123,15 @@ object NerTrainer {
       names: Seq[String] = FeatureNames): Array[Array[Double]] = {
     val dim = names.size
     val xCols = names.map(n => col(s"x_$n"))
-    val sc = features.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val data = features
-      .join(labels, Seq("conv_id", "turn_idx", "pos"), "left")
-      .withColumn("y", coalesce(col("y"), lit(0)))
-      .select((xCols :+ col("y")): _*)
-      .localCheckpoint(true)
-    try {
+    // the checkpointed feature table is released on return and on failure
+    // alike: without this every train() call in a long-lived session
+    // (k-fold sweeps) leaks a token-table-sized pin
+    graft.Pins.scoped(features.sparkSession.sparkContext) {
+      val data = features
+        .join(labels, Seq("conv_id", "turn_idx", "pos"), "left")
+        .withColumn("y", coalesce(col("y"), lit(0)))
+        .select((xCols :+ col("y")): _*)
+        .localCheckpoint(true)
       val n = data.count().toDouble
       // empty input would otherwise surface as an opaque NPE (null aggregate
       // sums → row.getDouble throws) and a 0/0 gradient
@@ -146,23 +148,11 @@ object NerTrainer {
         val aggs = (for (l <- 0 until 3; j <- 0 until dim) yield
           sum((p(l) - (col("y") === l).cast("double")) * xCols(j)).as(s"g_${l}_$j")).toSeq
         val row = data.agg(aggs.head, aggs.tail: _*).collect()(0)
-        var k = 0
-        for (l <- 0 until 3; j <- 0 until dim) {
-          val g = row.getDouble(k) / n; k += 1
-          sq(l)(j) += g * g
-          val h = 1.0 + math.sqrt(sq(l)(j))
-          val wi = w(l)(j) - eta * g / h
-          val shrink = eta * lambda / h
-          w(l)(j) = math.signum(wi) * math.max(0.0, math.abs(wi) - shrink)
-        }
+        for (l <- 0 until 3)
+          graft.train.Adagrad.update(w(l), sq(l),
+            Array.tabulate(dim)(j => row.getDouble(l * dim + j) / n), eta, lambda)
       }
       w
-    } finally {
-      // release the checkpointed feature table, BLOCKING (the session-wide
-      // pin-hygiene rule, SURVEY §11.2): without this every train() call in
-      // a long-lived session (k-fold sweeps) leaks a token-table-sized pin
-      (sc.getPersistentRDDs.keySet.toSet -- before)
-        .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
     }
   }
 

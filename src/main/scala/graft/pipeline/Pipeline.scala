@@ -27,7 +27,8 @@ object Pipeline {
         * surface pair. Requires [[sparseWeights]]. */
       scoringMode: String = "dense", // "dense" | "sparse"
       /** Sparse weight table `(f, w_i)` (integer-scaled;
-        * [[SparseFeatures.weightsTable]] converts a trained map). */
+        * [[graft.train.ModelIO.sparseWeightsFromTrained]] converts a
+        * trained `(f, w)` table). */
       sparseWeights: Option[DataFrame] = None,
       /** Caller-supplied stable tag identifying [[sparseWeights]] for the
         * resume-lineage token (a DataFrame can't be hashed into it). */
@@ -38,14 +39,7 @@ object Pipeline {
         * snapshots, or the second silently returns the first's clusters.
         * Empty ("") keeps the config-only token — only safe when the caller
         * dedicates a checkpoint dir per input (the test-suite convention). */
-      inputTag: String = "",
-      /** Sparse models at or under this many features are collected and
-        * scored by in-projection hash lookup
-        * ([[SparseFeatures.collectWeights]]); larger models stay on the
-        * shuffle-hash weight-join plan. Excluded from [[token]] — both plans
-        * produce bit-identical scores (integer-exact sums), so snapshots
-        * remain valid across the cutoff. */
-      sparseBroadcastMax: Int = SparseFeatures.BroadcastMaxFeatures) {
+      inputTag: String = "") {
     /** Deterministic config token for lineage. */
     def token: String = {
       val s = s"$blocking|${weights.values.mkString(",")}|$linkThreshold|" +
@@ -109,7 +103,7 @@ object Pipeline {
     // in-projection lookup in all three legs; over-cutoff models stay on the
     // weight-join plans (bit-identical scores either way)
     lazy val wmap = if (sparse)
-      SparseFeatures.collectWeights(cfg.sparseWeights.get, cfg.sparseBroadcastMax)
+      SparseFeatures.collectWeights(cfg.sparseWeights.get)
     else None
     val surfacePairs = stage("surface_pairs", tok)(
       Blocking.surfacePairs(surfaces, cfg.blocking))

@@ -334,16 +334,6 @@ object SparseFeatures {
       .withColumn("score", col("wsum").cast("double") / WeightScale.toDouble)
       .drop("wsum")
 
-  /** Driver-side sparse model (e.g. [[graft.train.Trainer.trainSparseRanking]]
-    * output) → integer-scaled weight table `(f, w_i)`. */
-  def weightsTable(spark: org.apache.spark.sql.SparkSession,
-      w: Map[String, Double]): DataFrame = {
-    import spark.implicits._
-    val df = if (w.isEmpty) Seq.empty[(String, Double)].toDF("f", "w")
-      else w.toSeq.toDF("f", "w")
-    df.select(col("f"), round(col("w") * WeightScale, 0).cast("long").as("w_i"))
-  }
-
   /** Sparse surface-pair scorer (the coarse-to-fine gate in sparse mode):
     * `(norm_a, norm_b, block_key, score)` — one score per distinct surface
     * pair, shared downstream by every mention pair of those surfaces. */
@@ -382,6 +372,14 @@ object SparseFeatures {
     * 10^9-feature design (the reference's packed model is likewise an
     * in-memory array on every worker, `PairwiseScorer.scala:10-35`). */
   val BroadcastMaxFeatures: Int = 4000000
+
+  /** `df` with a broadcast hint when `rows`, its caller-observed
+    * cardinality, is within [[BroadcastMaxFeatures]]; over the cutoff the
+    * hint is withheld and the join keeps its shuffle plan. The gate for
+    * every explicitly broadcast trainer table: checkpointed frames carry no
+    * reliable size statistics, so the hint, not the planner, decides. */
+  def broadcastWithin(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastMaxFeatures) broadcast(df) else df
 
   /** Collect a weight table `(f, w_i)` into a [[graft.functions.SparseWeightMap]]
     * when it is small enough to broadcast; `None` (→ caller stays on the join

@@ -79,8 +79,7 @@ object ModelIO {
 
   /** Convert a trained double-weight table `(f, w)` (e.g.
     * [[Trainer.trainSparseRankingDistributed]] output) to the integer-scaled
-    * execution table `(f, w_i)` — same fixed-point contract as
-    * [[graft.pipeline.SparseFeatures.weightsTable]]. */
+    * execution table `(f, w_i)`, `w_i = round(w · WeightScale)`. */
   def sparseWeightsFromTrained(trained: DataFrame): DataFrame =
     trained.select(col("f"),
       round(col("w") * graft.pipeline.SparseFeatures.WeightScale, 0)

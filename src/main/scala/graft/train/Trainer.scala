@@ -2,20 +2,21 @@ package graft.train
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.pipeline.Scoring
+import graft.pipeline.{Scoring, SparseFeatures}
 
-/** Adagrad + L1 logistic trainer (T1, SURVEY.md §2.11).
+/** Antecedent-ranking trainers (T1, SURVEY.md §2.11).
   *
   * The reference trains a feature-rich linear model with per-coordinate
-  * Adagrad and lazy L1 proximal updates
-  * (`CorefFeaturizerTrainer.scala:156-193`, defaults η=1.0, λ=0.001,
-  * `Driver.java:168-173`). This engine's feature space is the fixed dense
-  * vector of [[Scoring.FeatureNames]], so the per-epoch gradient is a single
-  * Spark aggregation (A4: `Σ (σ(w·x) − y)·x`) — map-side partial aggregation,
-  * one tiny row to the driver, update applied driver-side, weights re-enter
-  * the next plan as literals (the broadcast-weights pattern at dense-dim
-  * scale). Batch = full dataset per epoch: at 10^12 rows the aggregate
-  * amortizes the shuffle the reference's batch-of-1 never could.
+  * Adagrad and lazy L1 proximal updates ([[Adagrad]]) against a per-mention
+  * softmax(-margin) ranking objective ([[rankingResiduals]]). Both trainers
+  * here share those two pieces and differ only in the feature space:
+  * [[trainRanking]] over the fixed dense vector of [[Scoring.FeatureNames]]
+  * (the gradient is one Spark aggregation, one tiny row to the driver,
+  * weights re-enter the next plan as literals), and
+  * [[trainSparseRankingDistributed]] over the exploded string features of
+  * [[graft.pipeline.SparseFeatures]] (the model stays a DataFrame). Batch =
+  * full dataset per epoch: at 10^12 rows the aggregate amortizes the
+  * shuffle the reference's batch-of-1 never could.
   */
 object Trainer {
 
@@ -40,64 +41,59 @@ object Trainer {
     val Custom: LossFn = LossFn(0.1, 3.0, 1.0)
   }
 
-  /** @param labeled featurized pairs (output of Scoring.featurize) with a
-    *                `label` column (1.0 = same entity / 0.0 = not)
-    * @return learned weights + per-epoch loss trace */
-  def train(labeled: DataFrame, epochs: Int = 30, eta: Double = 1.0,
-      lambda: Double = 0.001, init: Option[Array[Double]] = None): (Scoring.Weights, Seq[Epoch]) = {
-    val feats = Scoring.featureVector
-    val dim = feats.size
-    val w = init.getOrElse(Array.fill(dim)(0.0)).clone()
-    val sqGrad = Array.fill(dim)(0.0)
-    val n = labeled.count().toDouble
-    val trace = scala.collection.mutable.ArrayBuffer.empty[Epoch]
-
-    val cached = labeled.localCheckpoint(true)
-    for (ep <- 0 until epochs) {
-      val linear = feats.zipWithIndex.map { case ((_, c), i) => c * w(i) }.reduce(_ + _)
-      val p = lit(1.0) / (lit(1.0) + exp(-linear))
-      val resid = p - col("label")
-      // gradient of mean log-loss + current loss, in one aggregation
-      val aggs = feats.map { case (name, c) => sum(resid * c).as(s"g_$name") } :+
-        sum(-col("label") * log(greatest(p, lit(1e-12))) -
-          (lit(1.0) - col("label")) * log(greatest(lit(1.0) - p, lit(1e-12)))).as("loss")
-      val row = cached.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val grad = (0 until dim).map(i => row.getDouble(i) / n).toArray
-      val loss = row.getDouble(dim) / n
-      // Adagrad + L1 proximal (CorefFeaturizerTrainer.scala:174-191 shape)
-      var i = 0
-      while (i < dim) {
-        sqGrad(i) += grad(i) * grad(i)
-        val h = 1.0 + math.sqrt(sqGrad(i))
-        val wi = w(i) - eta * grad(i) / h
-        val shrink = eta * lambda / h
-        w(i) = math.signum(wi) * math.max(0.0, math.abs(wi) - shrink)
-        i += 1
-      }
-      trace += Epoch(ep, loss, w.clone())
-    }
-    (Scoring.Weights(w), trace.toSeq)
+  /** The ranking objective's per-arc terms (`DocumentInferencerBasic.
+    * addUnregularizedStochasticGradient` `:24-50`): per mention (`cur_id`
+    * window), a softmax over its candidate arcs plus an implicit zero-score
+    * "start new entity" arc, each non-gold arc's `score` shifted by its
+    * `lossFn` cost (G4, `MentionRankingDocumentComputer.scala:12-209`).
+    * `scored` carries `cur_id` and the gold `label` (1.0 = gold arc); the
+    * result adds, among intermediates, `resid = p − p̃` (the arc's gradient
+    * weight, `p̃` renormalized over GOLD arcs — gold-marginal likelihood,
+    * A3) and `l`, the arc's share of its mention's loss (the shares of one
+    * mention sum to its loss). */
+  def rankingResiduals(scored: DataFrame, score: Column, lossFn: LossFn): DataFrame = {
+    val wCur = org.apache.spark.sql.expressions.Window.partitionBy(col("cur_id"))
+    scored
+      // anaphoric = mention has >=1 gold antecedent among its candidates
+      .withColumn("anaph", max(col("label")).over(wCur) > 0.5)
+      // arc cost: 0 on gold arcs; wrongLink/falseLink otherwise
+      .withColumn("lcost", when(col("label") === 1.0, 0.0)
+        .otherwise(when(col("anaph"), lossFn.wrongLink).otherwise(lossFn.falseLink)))
+      // implicit new-entity arc: raw score 0 + falseNew cost when anaphoric
+      .withColumn("lnew", when(col("anaph"), lossFn.falseNew).otherwise(0.0))
+      .withColumn("s", score + col("lcost"))
+      .withColumn("mx", greatest(max(col("s")).over(wCur), col("lnew")))
+      .withColumn("e", exp(col("s") - col("mx")))
+      .withColumn("z", sum(col("e")).over(wCur) + exp(col("lnew") - col("mx")))
+      .withColumn("p", col("e") / col("z"))
+      // gold arcs have zero cost, so their augmented e equals the raw e —
+      // p̃ is the plain gold-renormalized distribution
+      .withColumn("ge", when(col("label") === 1.0, col("e")).otherwise(0.0))
+      .withColumn("gz", sum(col("ge")).over(wCur))
+      .withColumn("ptilde", when(col("gz") > 0, col("ge") / col("gz")).otherwise(0.0))
+      .withColumn("resid", col("p") - col("ptilde"))
+      // per-mention loss: -log(gold mass/z) for anaphoric mentions,
+      // -log(new-entity mass/z) otherwise (the non-anaphoric gold arc IS
+      // the new arc, whose cost is 0 by definition — hence exp(-mx), not
+      // exp(lnew-mx)). The loss is group-constant, so spreading it as
+      // value/count over the group's rows sums to exactly one copy —
+      // no ordered window (a per-group sort the aggregation doesn't need)
+      .withColumn("l",
+        when(col("gz") > 0, -log(col("gz") / col("z")))
+          .otherwise(-log(exp(-col("mx")) / col("z"))) /
+          count(lit(1)).over(wCur))
   }
 
-  /** Antecedent-ranking trainer — the reference's actual objective
-    * (`DocumentInferencerBasic.addUnregularizedStochasticGradient`
-    * `:24-50`): per mention, a softmax over its candidate antecedents plus an
-    * implicit zero-score "start new entity" arc; the gradient is
-    * `Σ (p(ant) − p̃(ant))·x(ant)` where `p̃` renormalizes over GOLD
-    * antecedents (gold-marginal likelihood, A3). Unlike independent-pair
-    * logistic loss this learns the *ranking* decode actually uses (e.g.
-    * dist_decay as the nearest-antecedent tie-breaker). One shuffle by
-    * `cur_id` + one aggregation per epoch.
-    *
-    * With `lossFn != Zero` this is the loss-augmented (softmax-margin)
-    * objective (G4, `MentionRankingDocumentComputer.scala:12-209`): each
-    * non-gold arc's score is shifted by its decode-error cost inside the
-    * softmax; gold arcs (and hence p̃) are untouched.
+  /** Dense antecedent-ranking trainer: [[rankingResiduals]] over the linear
+    * score `w·x` of the dense feature vector; the gradient is
+    * `Σ (p(ant) − p̃(ant))·x(ant)`. Unlike independent-pair logistic loss
+    * this learns the *ranking* decode actually uses (e.g. dist_decay as the
+    * nearest-antecedent tie-breaker). One shuffle by `cur_id` + one
+    * aggregation per epoch.
     */
   def trainRanking(labeled: DataFrame, epochs: Int = 40, eta: Double = 1.0,
       lambda: Double = 0.001, init: Option[Array[Double]] = None,
       lossFn: LossFn = LossFn.Zero): (Scoring.Weights, Seq[Epoch]) = {
-    import org.apache.spark.sql.expressions.Window
     val feats = Scoring.featureVector
     val dim = feats.size
     val w = init.getOrElse(Array.fill(dim)(0.0)).clone()
@@ -106,146 +102,33 @@ object Trainer {
 
     val cached = labeled.localCheckpoint(true)
     val nCur = cached.select(col("cur_id")).distinct().count().toDouble
-    val wCur = Window.partitionBy(col("cur_id"))
 
     for (ep <- 0 until epochs) {
       val linear = feats.zipWithIndex.map { case ((_, c), i) => c * w(i) }.reduce(_ + _)
-      val withP = cached
-        // anaphoric = mention has >=1 gold antecedent among its candidates
-        .withColumn("anaph", max(col("label")).over(wCur) > 0.5)
-        // arc cost: 0 on gold arcs; wrongLink/falseLink otherwise
-        .withColumn("lcost", when(col("label") === 1.0, 0.0)
-          .otherwise(when(col("anaph"), lossFn.wrongLink).otherwise(lossFn.falseLink)))
-        // implicit new-entity arc: raw score 0 + falseNew cost when anaphoric
-        .withColumn("lnew", when(col("anaph"), lossFn.falseNew).otherwise(0.0))
-        .withColumn("s", linear + col("lcost"))
-        .withColumn("mx", greatest(max(col("s")).over(wCur), col("lnew")))
-        .withColumn("e", exp(col("s") - col("mx")))
-        .withColumn("z", sum(col("e")).over(wCur) + exp(col("lnew") - col("mx")))
-        .withColumn("p", col("e") / col("z"))
-        // gold arcs have zero cost, so their augmented e equals the raw e —
-        // p̃ is the plain gold-renormalized distribution
-        .withColumn("ge", when(col("label") === 1.0, col("e")).otherwise(0.0))
-        .withColumn("gz", sum(col("ge")).over(wCur))
-        .withColumn("ptilde", when(col("gz") > 0, col("ge") / col("gz")).otherwise(0.0))
-        .withColumn("resid", col("p") - col("ptilde"))
-        // per-mention loss: -log(gold mass/z) for anaphoric mentions,
-        // -log(new-entity mass/z) otherwise (the non-anaphoric gold arc IS
-        // the new arc, whose cost is 0 by definition — hence exp(-mx), not
-        // exp(lnew-mx)). The loss is group-constant, so spreading it as
-        // value/count over the group's rows sums to exactly one copy —
-        // no ordered window (a per-group sort the aggregation doesn't need)
-        .withColumn("l",
-          when(col("gz") > 0, -log(col("gz") / col("z")))
-            .otherwise(-log(exp(-col("mx")) / col("z"))) /
-            count(lit(1)).over(wCur))
+      val withP = rankingResiduals(cached, linear, lossFn)
       val aggs = feats.map { case (name, c) => sum(col("resid") * c).as(s"g_$name") } :+
         sum(col("l")).as("loss")
       val row = withP.agg(aggs.head, aggs.tail: _*).collect()(0)
       val grad = (0 until dim).map(i => row.getDouble(i) / nCur).toArray
       val loss = row.getDouble(dim) / nCur
-      var i = 0
-      while (i < dim) {
-        sqGrad(i) += grad(i) * grad(i)
-        val h = 1.0 + math.sqrt(sqGrad(i))
-        val wi = w(i) - eta * grad(i) / h
-        val shrink = eta * lambda / h
-        w(i) = math.signum(wi) * math.max(0.0, math.abs(wi) - shrink)
-        i += 1
-      }
+      Adagrad.update(w, sqGrad, grad, eta, lambda)
       trace += Epoch(ep, loss, w.clone())
     }
     (Scoring.Weights(w), trace.toSeq)
   }
 
   /** Sparse-feature antecedent-ranking trainer (P1/A6/P8 at full strength):
-    * the same gold-marginal softmax(-margin) objective as [[trainRanking]],
-    * over the EXPLODED string-feature space of
-    * [[graft.pipeline.SparseFeatures]] instead of the dense 16-vector.
-    *
-    * Per epoch: (1) pair scores = `feats ⋈ weights` + `groupBy(pair).sum` —
-    * indicator features, so the dot product is a plain weight sum; (2) the
-    * per-mention softmax residual (one `cur_id` window); (3) per-feature
-    * gradient = `groupBy(f).sum(resid)` (map-side combine). Weights are held
-    * driver-side between epochs (the reference holds its full model in heap
-    * the same way, README 47 GB train config); at 10^9-feature scale the
-    * update would instead stay a DataFrame joined back in — the epoch plan is
-    * identical either way.
-    *
-    * @param feats   (ant_id, cur_id, f) exploded indicator features
-    * @param labeled (ant_id, cur_id, cur real cand... label) must contain
-    *                cur_id + label for the ranking windows
-    * @return (feature → weight, per-epoch loss trace) */
-  def trainSparseRanking(feats: DataFrame, labeled: DataFrame, epochs: Int = 30,
-      eta: Double = 0.5, lambda: Double = 1e-6,
-      lossFn: LossFn = LossFn.Zero): (Map[String, Double], Seq[(Int, Double)]) = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = feats.sparkSession
-    import spark.implicits._
-    val f = feats.localCheckpoint(true)
-    val lab = labeled.select(col("ant_id"), col("cur_id"), col("label")).localCheckpoint(true)
-    val nCur = lab.select(col("cur_id")).distinct().count().toDouble
-    val wCur = Window.partitionBy(col("cur_id"))
-    var w = Map.empty[String, Double]
-    val sqGrad = scala.collection.mutable.HashMap.empty[String, Double]
-    val trace = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    for (ep <- 0 until epochs) {
-      val wDf = if (w.isEmpty) Seq.empty[(String, Double)].toDF("f", "w")
-        else w.toSeq.toDF("f", "w")
-      val scored = f.join(broadcast(wDf), Seq("f"), "left")
-        .groupBy(col("ant_id"), col("cur_id"))
-        .agg(sum(coalesce(col("w"), lit(0.0))).as("s0"))
-        .join(lab, Seq("ant_id", "cur_id"))
-      val withP = scored
-        .withColumn("anaph", max(col("label")).over(wCur) > 0.5)
-        .withColumn("lcost", when(col("label") === 1.0, 0.0)
-          .otherwise(when(col("anaph"), lossFn.wrongLink).otherwise(lossFn.falseLink)))
-        .withColumn("lnew", when(col("anaph"), lossFn.falseNew).otherwise(0.0))
-        .withColumn("s", col("s0") + col("lcost"))
-        .withColumn("mx", greatest(max(col("s")).over(wCur), col("lnew")))
-        .withColumn("e", exp(col("s") - col("mx")))
-        .withColumn("z", sum(col("e")).over(wCur) + exp(col("lnew") - col("mx")))
-        .withColumn("p", col("e") / col("z"))
-        .withColumn("ge", when(col("label") === 1.0, col("e")).otherwise(0.0))
-        .withColumn("gz", sum(col("ge")).over(wCur))
-        .withColumn("ptilde", when(col("gz") > 0, col("ge") / col("gz")).otherwise(0.0))
-        .withColumn("resid", col("p") - col("ptilde"))
-        // group-constant loss spread as value/count (see trainRanking)
-        .withColumn("l",
-          when(col("gz") > 0, -log(col("gz") / col("z")))
-            .otherwise(-log(exp(-col("mx")) / col("z"))) /
-            count(lit(1)).over(wCur))
-        .localCheckpoint(true)
-      val loss = withP.agg(sum(col("l"))).collect()(0).getDouble(0) / nCur
-      val grads = withP.select(col("ant_id"), col("cur_id"), col("resid"))
-        .join(f, Seq("ant_id", "cur_id"))
-        .groupBy(col("f")).agg(sum(col("resid")).as("g"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1) / nCur)
-      val wNew = scala.collection.mutable.HashMap.empty[String, Double] ++ w
-      grads.foreach { case (name, g) =>
-        val sg = sqGrad.getOrElse(name, 0.0) + g * g
-        sqGrad(name) = sg
-        val h = 1.0 + math.sqrt(sg)
-        val wi = wNew.getOrElse(name, 0.0) - eta * g / h
-        val shrink = eta * lambda / h
-        wNew(name) = math.signum(wi) * math.max(0.0, math.abs(wi) - shrink)
-      }
-      w = wNew.toMap
-      trace += ((ep, loss))
-    }
-    (w, trace.toSeq)
-  }
-
-  /** Fully-distributed sparse ranking trainer — the 10^9-feature scale path
-    * of [[trainSparseRanking]]: the model (weight + Adagrad accumulator per
-    * feature) lives in a DataFrame for the whole run; NOTHING per-feature
-    * ever reaches the driver (only the scalar epoch loss). The exploded
-    * feature table is pre-aggregated ONCE to pair granularity
-    * (`groupBy(pair).collect_list(f)` + the label join) — the pin then
-    * carries each pair's ids and label once instead of once per feature row
-    * (~3× fewer pinned bytes), and every epoch's pair-keyed work (windows,
-    * gradient attach) runs at PAIR cardinality, not feature-occurrence
-    * cardinality. Per epoch:
+    * the same objective and update rule as [[trainRanking]], over the
+    * EXPLODED string-feature space of [[graft.pipeline.SparseFeatures]]
+    * instead of the dense vector, at 10^9-feature scale: the model (weight +
+    * Adagrad accumulator per feature) lives in a DataFrame for the whole run;
+    * NOTHING per-feature ever reaches the driver (only the scalar epoch
+    * loss). The exploded feature table is pre-aggregated ONCE to pair
+    * granularity (`groupBy(pair).collect_list(f)` + the label join) — the
+    * pin then carries each pair's ids and label once instead of once per
+    * feature row (~3× fewer pinned bytes), and every epoch's pair-keyed work
+    * (windows, gradient attach) runs at PAIR cardinality, not
+    * feature-occurrence cardinality. Per epoch:
     *
     *  1. pair scores: `explode(fs) ⋈ weights` (LEFT) + `groupBy(pair).sum`
     *     — the model side is explicitly broadcast while it fits
@@ -255,26 +138,24 @@ object Trainer {
     *     output is clustered by pair (one array per pair), so partial
     *     aggregation collapses the re-group to one row per pair before the
     *     exchange — the shuffle carries pair rows, never feature rows;
-    *  2. the same per-mention softmax(-margin) residual windows as the
-    *     driver-side variant (label already on the row — no per-epoch
+    *  2. the per-mention softmax(-margin) residual windows
+    *     ([[rankingResiduals]]; label already on the row — no per-epoch
     *     label join);
     *  3. per-feature gradient: residuals joined back at PAIR granularity
     *     (pair ⋈ pair, both sides ~|pairs|), features exploded under the
     *     join, `groupBy(f).sum(resid)` with map-side combine, joined FULL
-    *     OUTER onto the model, Adagrad + L1 proximal applied as column
-    *     expressions, result pinned (localCheckpoint) as the next epoch's
-    *     model.
+    *     OUTER onto the model, [[Adagrad.columns]] applied, result pinned
+    *     (localCheckpoint) as the next epoch's model.
     *
-    * Same update rule as [[trainSparseRanking]] — the two differ only in
-    * float-sum association (distributed partial aggregation), so trained
-    * quality gates (not bitwise weights) are the equivalence check.
-    * Returns the final `(f, w)` weight table and the per-epoch loss trace. */
+    * Distributed partial aggregation fixes no float-sum association, so two
+    * runs agree to rounding, not bit for bit: trained quality gates are the
+    * equivalence check. Returns the final `(f, w)` weight table and the
+    * per-epoch loss trace. */
   def trainSparseRankingDistributed(feats: DataFrame, labeled: DataFrame,
       epochs: Int = 30, eta: Double = 0.5, lambda: Double = 1e-6,
       lossFn: LossFn = LossFn.Zero,
       epochSecondsOut: Option[scala.collection.mutable.ArrayBuffer[Double]] = None)
       : (DataFrame, Seq[(Int, Double)]) = {
-    import org.apache.spark.sql.expressions.Window
     val spark = feats.sparkSession
     val sc = spark.sparkContext
     // epoch-checkpoint hygiene (round-4 advice): each epoch pins a new withP
@@ -289,9 +170,7 @@ object Trainer {
     // a lazy (async) unpersist lets dead blocks overlap live ones — at the
     // sf0.1 bench scale that overlap OOMed an 8g driver heap. The blocking
     // free is once per epoch, noise-level next to the epoch's joins.
-    def pinnedIds(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+    //
     // ONE pair-granularity pin: features collected per pair (multiplicity
     // preserved — a feature firing twice still contributes its weight twice)
     // with the gold label attached. The exploded input's rows are clustered
@@ -300,13 +179,13 @@ object Trainer {
     // featurize chain is evaluated exactly once — everything below derives
     // from this pin.
     val lab = labeled.select(col("ant_id"), col("cur_id"), col("label")).localCheckpoint(true)
-    val preStr = pinnedIds()
+    val preStr = graft.Pins.ids(sc)
     val fAggS = feats.select(col("ant_id"), col("cur_id"), col("f"))
       .groupBy(col("ant_id"), col("cur_id"))
       .agg(collect_list(col("f")).as("fs"))
       .join(lab, Seq("ant_id", "cur_id"))
       .localCheckpoint(true)
-    val strPins = pinnedIds() -- preStr
+    val strPins = graft.Pins.ids(sc) -- preStr
     // Feature strings → dense long ids (the A6 Indexer move, exact — no
     // hashing): every per-epoch probe, the gradient exchange and the model
     // join then carry 8-byte ids instead of ~20–40-byte strings (measured
@@ -315,7 +194,9 @@ object Trainer {
     // (A single-row broadcast map + per-element `element_at` was tried and
     // abandoned: Spark's MapData lookup is a linear scan, O(|features|)
     // per probe — the hash-join probe below is constant-time.) The dict is
-    // joined back once at the end to restore the public `(f, w)` face.
+    // broadcast while it fits the engine-wide cutoff, like the model side
+    // below, and joined back once at the end to restore the public `(f, w)`
+    // face.
     //
     // The indexing is an INVESTMENT amortized over epochs (its build costs
     // roughly two steady epochs): single-epoch calls skip it and train on
@@ -324,16 +205,16 @@ object Trainer {
     val (fAgg, dictOpt): (DataFrame, Option[DataFrame]) =
       if (!useIds) (fAggS, None)
       else {
-        val dict = graft.pipeline.SparseFeatures
+        val dict = SparseFeatures
           .denseIdsByKey(fAggS.select(explode(col("fs")).as("f")), "f", "fid")
           .localCheckpoint(true)
         val idized = fAggS
           .select(col("ant_id"), col("cur_id"), col("label"), explode(col("fs")).as("f"))
-          .join(broadcast(dict), Seq("f"))
+          .join(SparseFeatures.broadcastWithin(dict, dict.count()), Seq("f"))
           .groupBy(col("ant_id"), col("cur_id"))
           .agg(collect_list(col("fid")).as("fs"), max(col("label")).as("label"))
           .localCheckpoint(true)
-        release(strPins) // the string-array pin is superseded by the id pin
+        graft.Pins.release(sc, strPins) // the string-array pin is superseded by the id pin
         (idized, Some(dict))
       }
     // model/gradient key column: dense long id when indexed, the feature
@@ -343,7 +224,6 @@ object Trainer {
       if (useIds) org.apache.spark.sql.types.LongType
       else org.apache.spark.sql.types.StringType
     val nCur = lab.select(col("cur_id")).distinct().count().toDouble
-    val wCur = Window.partitionBy(col("cur_id"))
     // model table: (key, w, sq) — starts empty; features enter on first
     // nonzero grad
     var model = spark.createDataFrame(
@@ -355,7 +235,8 @@ object Trainer {
     val trace = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
     var prevModelIds: Set[Int] = Set.empty
     // model cardinality (updated from the pinned model each epoch — one
-    // metadata-cheap job) gates the explicit broadcast of the weight side:
+    // metadata-cheap job) gates the explicit broadcast of the weight side
+    // (SparseFeatures.broadcastWithin):
     // a checkpointed model has no size statistics, so without the hint the
     // planner shuffles the full feature-occurrence table by `f` before AQE
     // can see the model is tiny. Over-cutoff models withhold the hint and
@@ -363,35 +244,14 @@ object Trainer {
     var nModel = 0L
     for (ep <- 0 until epochs) {
       val epT0 = System.nanoTime()
-      val beforeWithP = pinnedIds()
-      val wSide = model.select(col(kCol), col("w"))
-      val wJoin =
-        if (nModel <= graft.pipeline.SparseFeatures.BroadcastMaxFeatures) broadcast(wSide)
-        else wSide
+      val beforeWithP = graft.Pins.ids(sc)
       val scored = fAgg
         .select(col("ant_id"), col("cur_id"), col("label"), explode(col("fs")).as(kCol))
-        .join(wJoin, Seq(kCol), "left")
+        .join(SparseFeatures.broadcastWithin(model.select(col(kCol), col("w")), nModel),
+          Seq(kCol), "left")
         .groupBy(col("ant_id"), col("cur_id"))
         .agg(sum(coalesce(col("w"), lit(0.0))).as("s0"), max(col("label")).as("label"))
-      val withP = scored
-        .withColumn("anaph", max(col("label")).over(wCur) > 0.5)
-        .withColumn("lcost", when(col("label") === 1.0, 0.0)
-          .otherwise(when(col("anaph"), lossFn.wrongLink).otherwise(lossFn.falseLink)))
-        .withColumn("lnew", when(col("anaph"), lossFn.falseNew).otherwise(0.0))
-        .withColumn("s", col("s0") + col("lcost"))
-        .withColumn("mx", greatest(max(col("s")).over(wCur), col("lnew")))
-        .withColumn("e", exp(col("s") - col("mx")))
-        .withColumn("z", sum(col("e")).over(wCur) + exp(col("lnew") - col("mx")))
-        .withColumn("p", col("e") / col("z"))
-        .withColumn("ge", when(col("label") === 1.0, col("e")).otherwise(0.0))
-        .withColumn("gz", sum(col("ge")).over(wCur))
-        .withColumn("ptilde", when(col("gz") > 0, col("ge") / col("gz")).otherwise(0.0))
-        .withColumn("resid", col("p") - col("ptilde"))
-        .withColumn("l",
-          when(col("gz") > 0, -log(col("gz") / col("z")))
-            .otherwise(-log(exp(-col("mx")) / col("z"))) /
-            count(lit(1)).over(wCur))
-        .localCheckpoint(true)
+      val withP = rankingResiduals(scored, col("s0"), lossFn).localCheckpoint(true)
       val loss = withP.agg(sum(col("l"))).collect()(0).getDouble(0) / nCur
       // gradient attach at PAIR granularity: |pairs| ⋈ |pairs|, features
       // exploded under the join — the old shape re-joined the full
@@ -401,17 +261,10 @@ object Trainer {
           Seq("ant_id", "cur_id"))
         .select(col("resid"), explode(col("fs")).as(kCol))
         .groupBy(col(kCol)).agg((sum(col("resid")) / nCur).as("g"))
-      // Adagrad + L1 proximal as pure column arithmetic over the outer join
-      val sqN = coalesce(col("sq"), lit(0.0)) +
-        coalesce(col("g"), lit(0.0)) * coalesce(col("g"), lit(0.0))
-      val h = lit(1.0) + sqrt(sqN)
-      val wi = coalesce(col("w"), lit(0.0)) - lit(eta) * coalesce(col("g"), lit(0.0)) / h
-      val shrink = lit(eta * lambda) / h
-      val withPIds = pinnedIds() -- beforeWithP
+      val (wNext, sqNext) = Adagrad.columns(col("w"), col("sq"), col("g"), eta, lambda)
+      val withPIds = graft.Pins.ids(sc) -- beforeWithP
       model = model.join(grads, Seq(kCol), "full_outer")
-        .select(col(kCol),
-          (signum(wi) * greatest(abs(wi) - shrink, lit(0.0))).as("w"),
-          sqN.as("sq"))
+        .select(col(kCol), wNext.as("w"), sqNext.as("sq"))
         // dead-feature pruning (round-4 advice: the full_outer join otherwise
         // keeps every feature ever seen forever): drop rows whose weight is
         // L1-clamped to 0 AND whose squared-gradient history is below λ² —
@@ -422,8 +275,8 @@ object Trainer {
         .filter(!(col("w") === 0.0 && col("sq") < lit(lambda * lambda)))
         .localCheckpoint(true)
       // this epoch's intermediate and LAST epoch's model are now dead
-      release(withPIds ++ prevModelIds)
-      prevModelIds = pinnedIds() -- beforeWithP -- withPIds
+      graft.Pins.release(sc, withPIds ++ prevModelIds)
+      prevModelIds = graft.Pins.ids(sc) -- beforeWithP -- withPIds
       nModel = model.count()
       trace += ((ep, loss))
       // per-epoch wall seconds for callers that meter training cost (the
@@ -438,17 +291,6 @@ object Trainer {
       case None => model.select(col("f"), col("w"))
     }
     (out, trace.toSeq)
-  }
-
-  /** Score pairs with a sparse weight map (driver-side model → broadcast). */
-  def scoreSparseWith(feats: DataFrame, w: Map[String, Double]): DataFrame = {
-    val spark = feats.sparkSession
-    import spark.implicits._
-    val wDf = if (w.isEmpty) Seq.empty[(String, Double)].toDF("f", "w")
-      else w.toSeq.toDF("f", "w")
-    feats.join(broadcast(wDf), Seq("f"), "left")
-      .groupBy(col("ant_id"), col("cur_id"))
-      .agg(sum(coalesce(col("w"), lit(0.0))).as("score"))
   }
 
   /** B3/T3 k-fold pruning-model training (`CorefPruner.scala:100-153`):

@@ -65,11 +65,13 @@ class SparseSpec extends SparkSuite {
     // lexicalized space) vs the SAME objective on the dense 16-vector —
     // isolates the feature-space comparison (the hand-set default weights
     // are a fixture-tuned artifact, not a trained model)
-    val (sw, sTrace) = graft.train.Trainer.trainSparseRanking(
+    val (sw, sTrace) = graft.train.Trainer.trainSparseRankingDistributed(
       feats, labels, epochs = 30, eta = 1.0)
     assert(sTrace.last._2 < sTrace.head._2 * 0.5, "sparse training loss must decrease")
+    val sScored = SparseFeatures.scoreWithWeights(feats,
+      graft.train.ModelIO.sparseWeightsFromTrained(sw), Seq("ant_id", "cur_id"))
     val f1Sparse = f1Of(Clustering.cluster(spark, mentions,
-      Decode.backpointers(graft.train.Trainer.scoreSparseWith(feats, sw), 0.0)))
+      Decode.backpointers(sScored, 0.0)))
 
     val labeled = graft.train.Trainer.labeledPairs(universe, mentions, gold)
     val (dw, _) = graft.train.Trainer.trainRanking(labeled, epochs = 40, eta = 2.0)
@@ -399,8 +401,9 @@ class SparseSpec extends SparkSuite {
       Eval.pairwiseF1(universe.select("ant_id", "cur_id"), clusters, gold)
         .collect()(0).getAs[Double]("f1")
 
-    val (sw, _) = graft.train.Trainer.trainSparseRanking(feats, labels, epochs = 30, eta = 1.0)
-    val wTab = SparseFeatures.weightsTable(spark, sw).cache()
+    val (sw, _) = graft.train.Trainer.trainSparseRankingDistributed(
+      feats, labels, epochs = 30, eta = 1.0)
+    val wTab = graft.train.ModelIO.sparseWeightsFromTrained(sw).cache()
     val sparseRes = Pipeline.run(spark, transcripts, Pipeline.Config(
       mentionGenerator = "all", scoringMode = "sparse",
       sparseWeights = Some(wTab), sparseTag = "fixture-trained"))

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.fixtures.ErFixture
 import graft.pipeline._
-import graft.train.Trainer
+import graft.train.{Adagrad, Trainer}
 
-/** T1: the Adagrad+L1 logistic trainer learns weights on the fixture that
-  * match the hand-set default's cluster quality. */
+/** T1: the Adagrad+L1 ranking trainer learns weights on the fixture that
+  * match the hand-set default's cluster quality; the shared Adagrad step and
+  * the trainer's broadcast gate behave as specified. */
 class TrainerSpec extends SparkSuite {
   import ErFixture._
 
@@ -82,5 +83,74 @@ class TrainerSpec extends SparkSuite {
     assert(fA >= fP - 0.002,
       s"loss-augmented model must match plain ranking F1: $fA << $fP")
     assert(fA >= 0.975, s"loss-augmented model must hit the F1 gate: $fA")
+  }
+
+  // (w, sq, g) edge cases: zeros of both signs, negatives, magnitudes whose
+  // squares overflow or underflow, and steps the L1 shrink clamps to 0
+  private val adagradCases: Seq[(Double, Double, Double)] = Seq(
+    (0.0, 0.0, 0.0), (-0.0, 0.0, 0.0), (0.0, 0.0, 1e-9), (-0.0, 3.0, -0.0),
+    (1.5, 0.25, -0.75), (-2.0, 1.0, 0.5), (1e-4, 0.0, 1e-7),
+    (-3e-4, 4.0, -1e-6), (1e300, 1e10, -1e154), (-7.0, 1e308, 1e200),
+    (5e-324, 1e-320, -5e-324), (0.125, 16.0, 3.0))
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  test("Adagrad: scalar and column forms are bit-equal") {
+    import spark.implicits._
+    // repartitioned, so the step runs as generated code over rows rather
+    // than being folded into a local relation at optimization time
+    val table = adagradCases.zipWithIndex
+      .map { case ((w, sq, g), k) => (k, w, sq, g) }
+      .toDF("k", "w", "sq", "g").repartition(2)
+    // step sizes off the powers of two, so a reassociated product rounds
+    // differently and shows
+    for ((eta, lambda) <- Seq((1.0, 0.001), (0.3, 1e-6), (0.7, 0.0), (3.0, 10.0))) {
+      val (wCol, sqCol) = Adagrad.columns(col("w"), col("sq"), col("g"), eta, lambda)
+      val byCol = table.select(col("k"), wCol, sqCol).collect()
+        .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      adagradCases.zipWithIndex.foreach { case ((w0, sq0, g), k) =>
+        val w = Array(w0); val sq = Array(sq0)
+        Adagrad.step(w, sq, 0, g, eta, lambda)
+        val (wc, sqc) = byCol(k)
+        assert(bits(wc) == bits(w(0)) && bits(sqc) == bits(sq(0)),
+          s"case ($w0, $sq0, $g) at eta=$eta lambda=$lambda: " +
+            s"column ($wc, $sqc) != scalar (${w(0)}, ${sq(0)})")
+      }
+    }
+  }
+
+  test("Adagrad: lambda = 0 is the plain Adagrad step bit for bit") {
+    for (eta <- Seq(0.3, 0.5, 1.0, 3.0); (w0, sq0, g) <- adagradCases) {
+      // the unregularized Adagrad step
+      val sqPlain = sq0 + g * g
+      val wPlain = w0 - eta * g / (1.0 + math.sqrt(sqPlain))
+      val w = Array(w0); val sq = Array(sq0)
+      Adagrad.step(w, sq, 0, g, eta, lambda = 0.0)
+      assert(bits(w(0)) == bits(wPlain) && bits(sq(0)) == bits(sqPlain),
+        s"case ($w0, $sq0, $g) at eta=$eta: ${w(0)} != $wPlain")
+    }
+  }
+
+  test("broadcastWithin: an over-bound count withholds the broadcast hint") {
+    // planner-driven broadcasts off, so only the gate's hint can broadcast
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      val dict = spark.range(50).select(col("id").cast("string").as("f"), col("id").as("fid"))
+        .localCheckpoint(true)
+      val probe = spark.range(400).select((col("id") % 60).cast("string").as("f"))
+      def joined(rows: Long) =
+        probe.join(SparseFeatures.broadcastWithin(dict, rows), Seq("f"))
+      val over = joined(SparseFeatures.BroadcastMaxFeatures + 1L)
+      val overPlan = over.queryExecution.executedPlan.toString
+      assert(!overPlan.contains("Broadcast"),
+        s"an over-bound table must stay on the shuffle join plan:\n$overPlan")
+      val under = joined(dict.count())
+      assert(under.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "a within-bound table must be broadcast")
+      assert(over.count() == under.count() &&
+          over.count() == (0 until 400).count(_ % 60 < 50),
+        "both plans must join the same rows")
+    } finally spark.conf.set(key, prev)
   }
 }
