@@ -38,19 +38,19 @@ object Bench {
 
   /** Full ER pipeline, stage-timed. Returns (stage->sec, pairsScored).
     *
-    * `sparseWeights` switches the scoring legs to the sparse lexicalized
-    * model ([[SparseFeatures]]) — the flagship execution path; stage keys
+    * `model` switches the scoring legs to the sparse lexicalized model
+    * ([[SparseFeatures]]) — the flagship execution path; stage keys
     * then carry a `_sparse` suffix so both modes coexist in one artifact.
     * The surface table is built ONCE (inside the blocking timer, where the
     * pipeline proper builds it) and shared by the scoring stage — the old
     * shape re-aggregated it inside the scoring timer, inflating `er_scoring`
     * vs `Pipeline.run`'s cached plan. */
   private def benchPipeline(spark: SparkSession, sfDir: String,
-      sparseWeights: Option[org.apache.spark.sql.DataFrame] = None)
+      model: Option[SparseModel] = None)
       : (Map[String, Double], Long, Double) = {
     import org.apache.spark.sql.functions.{col, lit}
-    val cfg = Pipeline.Config(mentionGenerator = "identifier")
-    val sparse = sparseWeights.nonEmpty
+    val cfg = Pipeline.Config(mentionGenerator = "identifier", sparse = model)
+    val sparse = model.nonEmpty
     val sfx = if (sparse) "_sparse" else ""
     val transcripts = Transcripts.load(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism,
@@ -74,49 +74,13 @@ object Bench {
     // bridge per linked surface pair ∪ same-surface chains (linear — the
     // quadratic salted expansion is eval-universe-only, not benched here)
     val (scoredN, tS) = time {
-      lazy val counts = SparseFeatures.normCounts(mentions)
       // model load (collect-to-map for broadcast-size models) is timed as
       // part of the scoring stage — it's work the fast plan does that the
       // join plan doesn't
-      val wmap = sparseWeights.flatMap(SparseFeatures.collectWeights(_))
-      val sScored = ((sparseWeights, wmap) match {
-        case (_, Some(m)) =>
-          SparseFeatures.scoreSurfacePairsSparseFast(sPairs, surfaces, counts, m)
-        case (Some(w), _) =>
-          SparseFeatures.scoreSurfacePairsSparse(sPairs, surfaces, counts, w)
-        case _ => Scoring.scoreSurfacePairs(sPairs, surfaces, cfg.weights)
-      }).cache()
+      val scorer = Scorer(cfg, mentions)
+      val sScored = scorer.surface(sPairs, surfaces).cache()
       val nSurf = sScored.count()
-      val bandAttr = Blocking.convBandPairsAttr(mentions, cfg.blocking)
-      val band = ((sparseWeights, wmap) match {
-        case (_, Some(m)) =>
-          SparseFeatures.scoreAttachedSparseFast(bandAttr, counts, m)
-            .select(col("ant_id"), col("cur_id"), lit("conv").as("block_key"), col("score"))
-        case (Some(w), _) =>
-          SparseFeatures.scoreWithWeights(
-              SparseFeatures.featureStrings(bandAttr, counts), w,
-              Seq("ant_id", "cur_id"))
-            .select(col("ant_id"), col("cur_id"), lit("conv").as("block_key"), col("score"))
-        case _ => Scoring.scorePairsAttr(bandAttr, cfg.weights)
-          .select(col("ant_id"), col("cur_id"), col("block_key"), col("score"))
-      })
-      val linked = sScored.filter(col("score") > cfg.linkThreshold)
-        .select(col("norm_a"), col("norm_b"), col("block_key"), col("score"))
-      val bridge = Blocking.bridgePairs(linked, mentions, cfg.blocking,
-        extraCols = Seq("score"), keepInBand = sparseWeights.nonEmpty)
-        .select(col("ant_id"), col("cur_id"), col("block_key"), col("score"))
-      val selfSc = (sparseWeights, wmap) match {
-        case (_, Some(m)) => SparseFeatures.selfScoresSparseFast(surfaces, counts, m)
-          .select(col("norm"), col("score"))
-        case (Some(w), _) => SparseFeatures.selfScoresSparse(surfaces, counts, w)
-          .select(col("norm"), col("score"))
-        case _ => Scoring.selfScores(surfaces, cfg.weights)
-      }
-      val chains = Blocking.sameSurfaceChainPairs(mentions, cfg.blocking, Some(surfaces),
-          keepInBand = sparseWeights.nonEmpty)
-        .join(selfSc.hint("shuffle_hash"), "norm")
-        .select(col("ant_id"), col("cur_id"), lit("x:chain").as("block_key"), col("score"))
-      val sc = band.unionByName(bridge).unionByName(chains).cache()
+      val sc = Pipeline.arcs(mentions, surfaces, sScored, scorer, cfg).cache()
       val n = sc.count() + nSurf
       (sc, n, sScored)
     }
@@ -503,8 +467,9 @@ object Bench {
     val wSparse = sparseWeightsFor(spark, sfDir)
     val nSparseFeats = wSparse.count()
     log(s"sparse weight table: $nSparseFeats features")
-    val ((stagesS1, pairsSparse, _), tS1) = time(benchPipeline(spark, sfDir, Some(wSparse)))
-    val ((stagesS2, _, _), tS2) = time(benchPipeline(spark, sfDir, Some(wSparse)))
+    val model = Some(SparseModel(wSparse, "bench"))
+    val ((stagesS1, pairsSparse, _), tS1) = time(benchPipeline(spark, sfDir, model))
+    val ((stagesS2, _, _), tS2) = time(benchPipeline(spark, sfDir, model))
     stagesS1.toSeq.sortBy(_._1).foreach { case (k, v) =>
       log(f"pipeline stage $k: pass1 $v%.3f s, pass2 ${stagesS2(k)}%.3f s") }
     log(f"sparse pipeline wall: pass1 $tS1%.3f s, pass2 $tS2%.3f s")
@@ -530,16 +495,12 @@ object Bench {
       .select(col("ant_id"), col("cur_id"), col("score")).localCheckpoint(true)
     val labelsXp = labelsX.localCheckpoint(true)
     def min2(name: String)(body: => Long): Double = {
-      val sc = spark.sparkContext
-      def pass(i: Int): Double = {
-        val before = sc.getPersistentRDDs.keySet.toSet
+      // blocking release: the next pass re-pins the full feature table
+      // immediately — async frees let dead blocks overlap live ones and
+      // OOMed the 8g heap on a sf0.1 run
+      def pass(i: Int): Double = Pins.scoped(spark.sparkContext) {
         val (n, t) = time(body)
         log(f"op $name pass$i: $t%.3f s ($n rows)")
-        // blocking release: the next pass re-pins the full feature table
-        // immediately — async frees let dead blocks overlap live ones and
-        // OOMed the 8g heap on a sf0.1 run
-        (sc.getPersistentRDDs.keySet.toSet -- before)
-          .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
         t
       }
       math.min(pass(1), pass(2))
@@ -557,14 +518,10 @@ object Bench {
     // epoch 0 absorbs first-use warmup). One extra trainer invocation, same
     // peak-memory shape as a min2 pass — the previous 3-epoch-minus-1-epoch
     // subtraction both cost more and OOMed the 8g heap at sf0.1.
-    val tSteadyEp = {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet.toSet
+    val tSteadyEp = Pins.scoped(spark.sparkContext) {
       val epSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
       graft.train.Trainer.trainSparseRankingDistributed(
         featsX, labelsXp, epochs = 2, epochSecondsOut = Some(epSecs))._1.count()
-      (sc.getPersistentRDDs.keySet.toSet -- before)
-        .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
       epSecs.last
     }
     log(f"op er_train_steady_epoch_sparse: $tSteadyEp%.3f s (epoch 2 of a 2-epoch run)")

@@ -262,13 +262,13 @@ object Run {
   /** Train the sparse ranking model on the input's gold labels, commit the
     * packed snapshot to `modelDir`, and load it BACK from the store (the
     * committed artifact is what scores, not the in-memory table). Returns
-    * the loaded `(f, w_i)` table, its snapshot-derived lineage tag, and the
-    * metrics fragment. All RDD blocks pinned by the prep/trainer are
+    * the loaded model (snapshot-derived lineage tag) and the metrics
+    * fragment. All RDD blocks pinned by the prep/trainer are
     * released once the snapshot is committed (or the training fails) — the
     * loaded model reads from parquet and holds no reference to them. */
   private def trainAndCommit(spark: SparkSession, opt: Map[String, String],
       transcripts: DataFrame, generator: String, epochs: Int)
-      : (DataFrame, String, String) = {
+      : (SparseModel, String) = {
     require(epochs >= 1, s"--train needs at least 1 epoch, got $epochs")
     val modelDir = opt.getOrElse("model-dir",
       sys.error("--train requires --model-dir (where the packed model is committed)"))
@@ -305,7 +305,31 @@ object Run {
       f""""trained_epochs":$epochs,"train_loss_first":${trace.head._2}%.6f,""" +
       f""""train_loss_last":${trace.last._2}%.6f,"model_snapshot":$snap,""" +
       s""""model_token":"$token","model_features":$nFeats,"""
-    (w, tag, frag)
+    (SparseModel(w, tag), frag)
+  }
+
+  /** `--mode`, checked once for batch and streaming: true for sparse. An
+    * unknown value is rejected up front, never run as dense. */
+  private def sparseMode(opt: Map[String, String]): Boolean =
+    opt.getOrElse("mode", "dense") match {
+      case "dense" => false
+      case "sparse" => true
+      case other => throw new IllegalArgumentException(
+        s"--mode must be dense or sparse, got $other")
+    }
+
+  /** The committed packed model named by `--model-dir` / `--model-token`
+    * (S5b). Its tag is the SNAPSHOT-qualified identity from
+    * [[ModelIO.loadSparse]] (`<token>@<snap>`), not the raw --model-token: a
+    * retrain into the same store keeps the token but mints a new snapshot,
+    * and snapshots or state computed under the old one must not resume. */
+  private def loadModel(spark: SparkSession, opt: Map[String, String]): SparseModel = {
+    val dir = opt.getOrElse("model-dir",
+      sys.error("--mode sparse requires --model-dir (a committed packed model)"))
+    val token = opt.getOrElse("model-token",
+      sys.error("--mode sparse requires --model-token"))
+    val (w, tag) = ModelIO.loadSparse(spark, new TableIO(dir), token)
+    SparseModel(w, tag)
   }
 
   /** Evaluate the committed clusters against gold: pairwise link F1 (A8,
@@ -343,11 +367,10 @@ object Run {
     * arcs decoded so far after every fold (StreamingSpec), so the committed
     * `stream_clusters` snapshot is always a consistent entity table. */
   private def runStreaming(spark: SparkSession, opt: Map[String, String],
-      input: String, output: String): String = {
+      input: String, output: String, sparse: Boolean): String = {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.{StreamingAssembly, StreamingClusters}
     val t0 = System.nanoTime()
-    val mode = opt.getOrElse("mode", "dense")
     val linkThreshold = opt.get("link-threshold").map(_.toDouble).getOrElse(0.0)
     // band default MUST mirror the batch Blocking.Config default (30), not
     // streamingBandPairs' own signature default — a narrower stream band
@@ -359,25 +382,14 @@ object Run {
     // sparse mode: the MODEL IDENTITY is part of the state lineage — a
     // resume that loads state folded under model A and extends it with
     // arrivals scored by model B would commit silently mixed-model clusters
-    // under one tag (the batch path puts sparseTag in Pipeline.Config.token
-    // for exactly this reason). The identity is the SNAPSHOT-qualified tag
-    // from loadSparse (`<token>@<snap>`), not the raw --model-token: a
-    // retrain into the same store keeps the token but mints a new snapshot,
-    // and state folded under the old snapshot must not silently extend.
-    val sparseModel: Option[(graft.functions.SparseWeightMap, String)] =
-      if (mode != "sparse") None
-      else {
-        val dir = opt.getOrElse("model-dir",
-          sys.error("--mode sparse requires --model-dir (a committed packed model)"))
-        val tok = opt.getOrElse("model-token",
-          sys.error("--mode sparse requires --model-token"))
-        val (w, tag) = ModelIO.loadSparse(spark, new TableIO(dir), tok)
-        val wmap = SparseFeatures.collectWeights(w).getOrElse(sys.error(
-          "--streaming sparse needs a broadcast-size model (the stream-side " +
-          "scorer is a pure projection; a join-scale model has no stream plan)"))
-        Some((wmap, tag))
-      }
-    val modelFrag = sparseModel.map("-" + _._2).getOrElse("")
+    // under one tag (the batch path puts the model tag in
+    // Pipeline.Config.token for exactly this reason).
+    val model = if (sparse) Some(loadModel(spark, opt)) else None
+    val wmap = model.map(m => SparseFeatures.collectWeights(m.weights).getOrElse(sys.error(
+      "--streaming sparse needs a broadcast-size model (the stream-side " +
+      "scorer is a pure projection; a join-scale model has no stream plan)")))
+    val mode = if (sparse) "sparse" else "dense"
+    val modelFrag = model.map("-" + _.tag).getOrElse("")
     val token =
       s"stream-$mode-$linkThreshold-$band-${watermark.replace(' ', '_')}$modelFrag"
 
@@ -401,12 +413,11 @@ object Run {
     val mentionStream = StreamingAssembly.enrichMentions(
       StreamingAssembly.extractMentions(
         StreamingAssembly.streamTranscripts(spark, srcDir)))
-    val scores = mode match {
-      case "dense" =>
+    val scores = wmap match {
+      case None =>
         StreamingAssembly.streamingBandScores(spark, mentionStream,
           maxConvDist = band, watermark = watermark)
-      case "sparse" =>
-        val wmap = sparseModel.get._1
+      case Some(w) =>
         // F5 backoff counts are a STATIC table (training-corpus statistics)
         // and part of the state identity: computed ONCE from the corpus the
         // first run saw, committed under the state token, and reloaded on
@@ -424,8 +435,7 @@ object Run {
               .getOrElse(sys.error("stream_counts commit not readable back"))
           }
         StreamingAssembly.streamingBandScoresSparse(spark, mentionStream,
-          counts, wmap, maxConvDist = band, watermark = watermark)
-      case other => sys.error(s"--streaming supports --mode dense|sparse, got $other")
+          counts, w, maxConvDist = band, watermark = watermark)
     }
     // Two chained queries, NOT one: band pairing and running decode are both
     // stateful (flatMapGroupsWithState), and Spark's global-watermark
@@ -485,6 +495,7 @@ object Run {
   def runWith(spark: SparkSession, opt: Map[String, String]): String = {
     val input = opt.getOrElse("input", sys.error("--input is required"))
     val output = opt.getOrElse("output", sys.error("--output is required"))
+    val sparse = sparseMode(opt)
     if (opt.get("streaming").exists(_.toBoolean)) {
       // every option runStreaming does not read is rejected, not silently
       // ignored — including sub-options of rejected mains (--gold,
@@ -499,7 +510,7 @@ object Run {
         s"--streaming is the incremental-maintenance face; batch-only options " +
         s"given: ${batchOnly.map("--" + _).mkString(", ")} (train the model in " +
         "a batch run and pass it via --model-dir/--model-token)")
-      return runStreaming(spark, opt, input, output)
+      return runStreaming(spark, opt, input, output, sparse)
     }
     // joint-flag validation UP FRONT (before the pipeline runs), same
     // doctrine as KnownOpts and the streaming batch-only reject: an
@@ -511,6 +522,8 @@ object Run {
       opt.contains("joint-train")
     require(!(opt.contains("joint-train") && opt.get("joint").exists(!_.toBoolean)),
       "--joint false contradicts --joint-train (training implies the decode)")
+    require(!(opt.contains("train") && opt.get("mode").contains("dense")),
+      "--mode dense contradicts --train (the trained sparse model scores the run)")
     if (!jointOn) {
       val dangling = Seq("joint-coupling", "joint-iters", "joint-ner-coupling",
         "joint-wiki-coupling", "joint-wiki-nil").filter(opt.contains)
@@ -523,30 +536,22 @@ object Run {
       "--joint-wiki-nil is meaningless without --joint-wiki-coupling ≠ 0")
 
     val trainEpochs = opt.get("train").map(_.toInt)
-    val mode = if (trainEpochs.nonEmpty) "sparse" else opt.getOrElse("mode", "dense")
     val generator = opt.getOrElse("generator", "all")
     val transcripts = readTranscripts(spark, input)
 
-    val (sparseWeights, sparseTag, trainFrag) = trainEpochs match {
+    val (model, trainFrag) = trainEpochs match {
       case Some(ep) =>
-        trainAndCommit(spark, opt, transcripts, generator, ep)
-      case None if mode == "sparse" =>
-        val dir = opt.getOrElse("model-dir",
-          sys.error("--mode sparse requires --model-dir (a committed packed model)"))
-        val token = opt.getOrElse("model-token",
-          sys.error("--mode sparse requires --model-token"))
-        val (w, tag) = ModelIO.loadSparse(spark, new TableIO(dir), token)
-        (w, tag, "")
-      case None => (null, "", "")
+        val (m, frag) = trainAndCommit(spark, opt, transcripts, generator, ep)
+        (Some(m), frag)
+      case None => (if (sparse) Some(loadModel(spark, opt)) else None, "")
     }
+    val mode = if (model.nonEmpty) "sparse" else "dense"
 
     val cfg = Pipeline.Config(
       mentionGenerator = generator,
       linkThreshold = opt.get("link-threshold").map(_.toDouble).getOrElse(0.0),
       checkpointDir = opt.get("checkpoint"),
-      scoringMode = mode,
-      sparseWeights = Option(sparseWeights),
-      sparseTag = sparseTag,
+      sparse = model,
       // input identity in the lineage: the same --checkpoint dir pointed at
       // a different --input — or the SAME path with changed contents (the
       // nightly-append case) — must recompute, not resume stale snapshots

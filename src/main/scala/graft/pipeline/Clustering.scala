@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.annotation.tailrec
+import graft.Pins
 
 /** Transitive clustering (SURVEY.md §2.12).
   *
@@ -44,24 +45,21 @@ object Clustering {
     // and the release a no-op). `sym` is released when the loop ends; the
     // FINAL labels pin is the returned result and stays.
     val sc = nodes.sparkSession.sparkContext
-    def pinsNow(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
 
-    val preSym = pinsNow()
+    val preSym = Pins.ids(sc)
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    val symPins = pinsNow() -- preSym
+    val symPins = Pins.ids(sc) -- preSym
 
     // init: label(v) = min(v, min neighbor)
-    val preInit = pinsNow()
+    val preInit = Pins.ids(sc)
     var labels = nodes.select(col("id"), col("id").as("lbl"))
       .unionByName(sym.select(col("dst").as("id"), col("src").as("lbl")))
       .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
       .localCheckpoint(true)
-    var labelPins: Set[Int] = pinsNow() -- preInit
+    var labelPins: Set[Int] = Pins.ids(sc) -- preInit
 
     @tailrec
     def loop(iter: Int): Unit = {
@@ -75,19 +73,19 @@ object Clustering {
         .select(col("id"), col("lbl2").as("lbl"))
       val next = labels.unionByName(viaNbr).unionByName(viaJump)
         .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-      val preChk = pinsNow()
+      val preChk = Pins.ids(sc)
       val nextChk = checkpoint(iter, next)
-      val nextPins = pinsNow() -- preChk
+      val nextPins = Pins.ids(sc) -- preChk
       val changed = nextChk.join(labels.withColumnRenamed("lbl", "old"), "id")
         .filter(col("lbl") =!= col("old")).limit(1).count()
       // the superseded iteration is dead once the convergence check read it
-      release(labelPins)
+      Pins.release(sc, labelPins)
       labels = nextChk
       labelPins = nextPins
       if (changed > 0) loop(iter + 1)
     }
     loop(0)
-    release(symPins)
+    Pins.release(sc, symPins)
     labels.select(col("id").as("mention_id"), col("lbl").as("cluster_id"))
   }
 

@@ -20,19 +20,11 @@ object Pipeline {
       linkThreshold: Double = 0.0,
       mentionGenerator: String = "all", // "identifier" | "all"
       checkpointDir: Option[String] = None,
-      /** "dense" = the 16-feature codegen'd vector; "sparse" = the
-        * lexicalized string-feature model (P1/A6/P8 at full strength) over
-        * ALL THREE scoring legs — band pairs with the full conjunction axes,
-        * bridges/chains via surface-pure bare templates scored once per
-        * surface pair. Requires [[sparseWeights]]. */
-      scoringMode: String = "dense", // "dense" | "sparse"
-      /** Sparse weight table `(f, w_i)` (integer-scaled;
-        * [[graft.train.ModelIO.sparseWeightsFromTrained]] converts a
-        * trained `(f, w)` table). */
-      sparseWeights: Option[DataFrame] = None,
-      /** Caller-supplied stable tag identifying [[sparseWeights]] for the
-        * resume-lineage token (a DataFrame can't be hashed into it). */
-      sparseTag: String = "",
+      /** The sparse lexicalized model scoring ALL THREE legs — band pairs
+        * with the full conjunction axes, bridges/chains via surface-pure
+        * bare templates scored once per surface pair. `None` = the dense
+        * 16-feature codegen'd vector ([[weights]]). */
+      sparse: Option[SparseModel] = None,
       /** Caller-supplied stable identity of the INPUT data (source path /
         * table + snapshot id), folded into [[token]]: two runs over
         * different inputs against the same `checkpointDir` must not share
@@ -42,8 +34,9 @@ object Pipeline {
       inputTag: String = "") {
     /** Deterministic config token for lineage. */
     def token: String = {
+      val model = sparse.fold("dense|")(m => s"sparse|${m.tag}")
       val s = s"$blocking|${weights.values.mkString(",")}|$linkThreshold|" +
-        s"$mentionGenerator|$scoringMode|$sparseTag|$inputTag"
+        s"$mentionGenerator|$model|$inputTag"
       java.lang.Long.toHexString(
         scala.util.hashing.MurmurHash3.stringHash(s).toLong & 0xffffffffL)
     }
@@ -94,85 +87,11 @@ object Pipeline {
       else Mentions.extractAll(spread)
     }.cache()
     val surfaces = Blocking.surfaceTable(mentions).cache()
-    val sparse = cfg.scoringMode == "sparse"
-    require(!sparse || cfg.sparseWeights.nonEmpty,
-      "scoringMode=sparse requires Config.sparseWeights")
-    // F5 backoff counts — one cheap aggregation over the cached mentions
-    lazy val counts = SparseFeatures.normCounts(mentions)
-    // broadcast-size sparse models are collected ONCE and scored by
-    // in-projection lookup in all three legs; over-cutoff models stay on the
-    // weight-join plans (bit-identical scores either way)
-    lazy val wmap = if (sparse)
-      SparseFeatures.collectWeights(cfg.sparseWeights.get)
-    else None
+    val scorer = Scorer(cfg, mentions)
     val surfacePairs = stage("surface_pairs", tok)(
       Blocking.surfacePairs(surfaces, cfg.blocking))
-    val surfaceScores = stage("surface_scores", tok)(
-      if (sparse) wmap match {
-        case Some(m) =>
-          SparseFeatures.scoreSurfacePairsSparseFast(surfacePairs, surfaces, counts, m)
-        case None =>
-          SparseFeatures.scoreSurfacePairsSparse(surfacePairs, surfaces, counts,
-            cfg.sparseWeights.get)
-      }
-      else Scoring.scoreSurfacePairs(surfacePairs, surfaces, cfg.weights))
-    // mention-level scored pairs, three legs (all linear in mentions +
-    // linked surface pairs — no quadratic expansion anywhere):
-    //  - conversation band with full conversational features;
-    //  - same-surface chains (spanning tree per repeated surface, bucketed
-    //    for heavy surfaces) carrying the surface self-score;
-    //  - ONE bridge edge per *linked* surface pair (coarse-to-fine:
-    //    sub-threshold surface pairs never materialize at mention
-    //    granularity; a single bridge yields the same connected components
-    //    as the full clique because every clique edge would carry the
-    //    identical surface-level score).
-    val scored = stage("scores", tok) {
-      // the band leg carries both mentions' attrs through the ONE conv_id
-      // self-join (convBandPairsAttr) — the ids-only + attachAttrs shape
-      // shuffled the ~10×-larger pair table against mentions twice more
-      val bandAttr = Blocking.convBandPairsAttr(mentions, cfg.blocking)
-      val band =
-        if (sparse)
-          (wmap match {
-            case Some(m) =>
-              SparseFeatures.scoreAttachedSparseFast(bandAttr, counts, m)
-            case None =>
-              SparseFeatures.scoreWithWeights(
-                SparseFeatures.featureStrings(bandAttr, counts),
-                cfg.sparseWeights.get, Seq("ant_id", "cur_id"))
-          }).select(col("ant_id"), col("cur_id"),
-            lit("conv").as("block_key"), col("score"))
-        else Scoring.scorePairsAttr(bandAttr, cfg.weights)
-          .select(col("ant_id"), col("cur_id"), col("block_key"), col("score"))
-      val linked = surfaceScores.filter(col("score") > cfg.linkThreshold)
-        .select(col("norm_a"), col("norm_b"), col("block_key"), col("score"))
-      // sparse mode keeps in-band bridges for the same reason as the chain
-      // guard below: the coarse pass linked the two surface groups, and that
-      // connectivity must not depend on the sign of trained band weights
-      val bridge = Blocking.bridgePairs(linked, mentions, cfg.blocking,
-        extraCols = Seq("score"), keepInBand = sparse)
-      // surfaces (cached) already carries n_mentions — share it instead of
-      // re-aggregating the counts inside the chain leg
-      val selfSc =
-        if (sparse) wmap match {
-          case Some(m) => SparseFeatures.selfScoresSparseFast(surfaces, counts, m)
-          case None =>
-            SparseFeatures.selfScoresSparse(surfaces, counts, cfg.sparseWeights.get)
-        }
-        else Scoring.selfScores(surfaces, cfg.weights)
-      // sparse mode keeps in-band chain edges: the dense "band scores them
-      // strictly higher" argument doesn't survive trained conjunction
-      // weights, so the chain edge rides along at the surface self-score and
-      // the decode argmax picks greatest(band, self) per pair
-      val chains = Blocking.sameSurfaceChainPairs(mentions, cfg.blocking, Some(surfaces),
-          keepInBand = sparse)
-        .join(selfSc.hint("shuffle_hash"), "norm")
-        .select(col("ant_id"), col("cur_id"), col("block_key"), col("score"))
-      band
-        .unionByName(bridge.select(col("ant_id"), col("cur_id"),
-          col("block_key"), col("score")))
-        .unionByName(chains)
-    }
+    val surfaceScores = stage("surface_scores", tok)(scorer.surface(surfacePairs, surfaces))
+    val scored = stage("scores", tok)(arcs(mentions, surfaces, surfaceScores, scorer, cfg))
     val backptrs = stage("backptrs", tok)(Decode.backpointers(scored, cfg.linkThreshold))
     val clusters = stage("clusters", tok) {
       val ccCheckpoint: (Int, DataFrame) => DataFrame = io match {
@@ -191,5 +110,36 @@ object Pipeline {
       Clustering.cluster(spark, mentions, backptrs, ccCheckpoint)
     }
     Result(mentions, surfacePairs, surfaceScores, scored, backptrs, clusters, surfaces)
+  }
+
+  /** Mention-level scored arcs `(ant_id, cur_id, block_key, score)`, three
+    * legs (all linear in mentions + linked surface pairs — no quadratic
+    * expansion anywhere):
+    *  - conversation band with full conversational features;
+    *  - ONE bridge edge per *linked* surface pair (coarse-to-fine:
+    *    sub-threshold surface pairs never materialize at mention
+    *    granularity; a single bridge yields the same connected components
+    *    as the full clique because every clique edge would carry the
+    *    identical surface-level score);
+    *  - same-surface chains (spanning tree per repeated surface, bucketed
+    *    for heavy surfaces) carrying the surface self-score.
+    * `surfaceScores` is `scorer.surface` over the run's surface pairs. */
+  def arcs(mentions: DataFrame, surfaces: DataFrame, surfaceScores: DataFrame,
+      scorer: Scorer, cfg: Config): DataFrame = {
+    // the band leg carries both mentions' attrs through the ONE conv_id
+    // self-join (convBandPairsAttr) — the ids-only + attachAttrs shape
+    // shuffled the ~10×-larger pair table against mentions twice more
+    val band = scorer.band(Blocking.convBandPairsAttr(mentions, cfg.blocking))
+    val linked = surfaceScores.filter(col("score") > cfg.linkThreshold)
+      .select(col("norm_a"), col("norm_b"), col("block_key"), col("score"))
+    val bridge = Blocking.bridgePairs(linked, mentions, cfg.blocking,
+      extraCols = Seq("score"), keepInBand = scorer.keepInBand)
+    // surfaces (cached) already carries n_mentions — share it instead of
+    // re-aggregating the counts inside the chain leg
+    val chains = Blocking.sameSurfaceChainPairs(mentions, cfg.blocking, Some(surfaces),
+        keepInBand = scorer.keepInBand)
+      .join(scorer.self(surfaces).hint("shuffle_hash"), "norm")
+      .select(col("ant_id"), col("cur_id"), col("block_key"), col("score"))
+    band.unionByName(bridge).unionByName(chains)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Pins
 import graft.pipeline.Clustering
 
 /** Streaming cluster maintenance (ST × C1/C2).
@@ -92,15 +93,12 @@ object StreamingClusters {
     if (taken.length > maxDriverBatchEdits)
       return updateDistributed(spark, st, batchDecoded)
 
+    // Pins.release frees BLOCKING: the steady per-batch fold pins fresh
+    // checkpoint blocks immediately after releasing the previous fold's — an
+    // async free lets dead and live blocks overlap, the documented
+    // steady-epoch OOM class (SURVEY §11.2, same rule as the trainer)
     val sc = spark.sparkContext
-    def pinned(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    // BLOCKING frees: the steady per-batch fold pins fresh checkpoint blocks
-    // immediately after releasing the previous fold's — an async free lets
-    // dead and live blocks overlap, the documented steady-epoch OOM class
-    // (SURVEY §11.2, same rule as Run.releasePins / the trainer)
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
-    val before = pinned()
+    val before = Pins.ids(sc)
 
     // edits as a LocalRelation: statically broadcastable, nothing to pin
     val editPairs = taken.map(r => (r.getString(0), r.getString(1))).toSeq
@@ -144,7 +142,7 @@ object StreamingClusters {
     // next backpointer state AND the edge set the C2 kernel restricts to
     // touched members (passed as `premerged`).
     val freshLinks = editPairs.filterNot { case (c, _) => existingCur(c) }
-    val preMerge = pinned()
+    val preMerge = Pins.ids(sc)
     val backptrs2 = st.backptrs
       .join(broadcast(edits), Seq("cur_id"), "left")
       .select(col("cur_id"),
@@ -152,14 +150,14 @@ object StreamingClusters {
       .unionByName(freshLinks.toDF("cur_id", "ant_id"))
       .filter(col("ant_id") =!= col("cur_id"))
       .localCheckpoint(true)
-    val bp2Pins = pinned() -- preMerge
+    val bp2Pins = Pins.ids(sc) -- preMerge
     val edited = Clustering.editBackpointers(spark, registered, st.backptrs,
       edits, editsPinned = true, premerged = Some(backptrs2),
       knownTouched = Some(touched))
-    val interm = pinned() -- before -- bp2Pins
+    val interm = Pins.ids(sc) -- before -- bp2Pins
     val clusters2 = edited.localCheckpoint(true)
-    val pins2 = pinned() -- before -- interm
-    release(interm ++ st.pins)
+    val pins2 = Pins.ids(sc) -- before -- interm
+    Pins.release(sc, interm ++ st.pins)
     State(clusters2, backptrs2, pins2, st.batches + 1)
   }
 
@@ -168,11 +166,8 @@ object StreamingClusters {
   private def updateDistributed(spark: SparkSession, st: State,
       batchDecoded: DataFrame): State = {
     val sc = spark.sparkContext
-    def pinned(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
 
-    val before = pinned()
+    val before = Pins.ids(sc)
     val edits = finalLinks(batchDecoded).localCheckpoint(true)
     // every id the batch mentions that the state has never seen becomes a
     // singleton cluster first, so the C2 kernel always edits a complete
@@ -189,19 +184,19 @@ object StreamingClusters {
       .localCheckpoint(true)
     val registered = st.clusters.unionByName(newSingletons)
 
-    val preMerge = pinned()
+    val preMerge = Pins.ids(sc)
     val backptrs2 = Clustering.mergeBackpointers(st.backptrs, edits)
       .localCheckpoint(true)
-    val bp2Pins = pinned() -- preMerge
+    val bp2Pins = Pins.ids(sc) -- preMerge
     // editBackpointers pins its internals eagerly during the call; snapshot
     // the pin set before taking the new state pins so the internals (plus
     // `edits` and `newSingletons`) can be attributed and released afterwards
     val edited = Clustering.editBackpointers(spark, registered, st.backptrs,
       edits, editsPinned = true, premerged = Some(backptrs2))
-    val interm = pinned() -- before -- bp2Pins
+    val interm = Pins.ids(sc) -- before -- bp2Pins
     val clusters2 = edited.localCheckpoint(true)
-    val pins2 = pinned() -- before -- interm
-    release(interm ++ st.pins)
+    val pins2 = Pins.ids(sc) -- before -- interm
+    Pins.release(sc, interm ++ st.pins)
     State(clusters2, backptrs2, pins2, st.batches + 1)
   }
 

@@ -91,9 +91,8 @@ object ModelIO {
     io.commit(SparseStage, packSparse(weights), configToken)
 
   /** Load a committed sparse model snapshot as the `(f, w_i)` weight table
-    * [[graft.pipeline.Pipeline.Config.sparseWeights]] consumes, PLUS the
-    * snapshot-derived lineage tag (`<token>@<snap>`) for
-    * `Pipeline.Config.sparseTag` — the tag is now derived from the committed
+    * and the snapshot-derived lineage tag (`<token>@<snap>`) of a
+    * [[graft.pipeline.SparseModel]] — the tag is derived from the committed
     * snapshot rather than honor-system caller input. */
   def loadSparse(spark: SparkSession, io: TableIO, configToken: String,
       snap: Option[Int] = None): (DataFrame, String) = {

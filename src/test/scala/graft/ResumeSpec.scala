@@ -165,4 +165,12 @@ class ResumeSpec extends SparkSuite {
     assert(io.latestSnapshot("mentions").get === afterB,
       "an identical input identity must resume from the committed snapshot")
   }
+
+  test("Config.token is pinned: existing checkpoint directories keep resuming") {
+    // literal tokens: a change to the token's layout (field order, the
+    // dense/sparse model marker) would orphan every committed snapshot
+    assert(Pipeline.Config().token === "476a3f4c")
+    val model = SparseModel(spark.emptyDataFrame, "guard-spec")
+    assert(Pipeline.Config(sparse = Some(model)).token === "ca244956")
+  }
 }

@@ -19,6 +19,32 @@ class RunSpec extends SparkSuite {
     m.get.group(1)
   }
 
+  /** Spark jobs started while `body` runs, counted by a listener. The
+    * listener bus is asynchronous, so a marker job is run afterwards and
+    * awaited: once its start event arrives, every earlier one has too. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("runspec.marker") != null))
+          flushed.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("runspec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("runspec.marker", null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job never reached the listener")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("--train: trains, commits a packed model, evaluates, and a predict-only " +
       "run from the committed snapshot reproduces the clusters") {
     val tmp = java.nio.file.Files.createTempDirectory("runspec").toString
@@ -597,5 +623,22 @@ class RunSpec extends SparkSuite {
         "input" -> "/root/testdata/sf0.001", "output" -> s"$tmp/o5",
         "joint" -> "true", "joint-wiki-nil" -> "0.5"))
     }
+    // a typo'd --mode must not run dense and report the typo as the mode,
+    // batch or streaming; and --train scores with the model it trains, so
+    // an explicit --mode dense is a contradiction, not a silent sparse run.
+    // Both reject before any Spark job runs.
+    for ((extra, i) <- Seq(
+        Map("mode" -> "sprase"),
+        Map("mode" -> "sprase", "streaming" -> "true"),
+        Map("mode" -> "dense", "train" -> "1", "model-dir" -> s"$tmp/m")).zipWithIndex) {
+      val jobs = jobsDuring {
+        intercept[IllegalArgumentException] {
+          Run.runWith(spark, Map(
+            "input" -> s"$tmp/never-read", "output" -> s"$tmp/o6-$i") ++ extra)
+        }
+      }
+      assert(jobs == 0, s"$extra ran $jobs Spark jobs before rejecting")
+    }
+    assert(!new java.io.File(s"$tmp/m").exists(), "no model may be committed")
   }
 }

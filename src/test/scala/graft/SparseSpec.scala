@@ -165,8 +165,7 @@ class SparseSpec extends SparkSuite {
     val w = SparseFeatures.logOddsWeights(feats, labels).cache()
 
     val guarded = Pipeline.run(spark, transcripts, Pipeline.Config(
-      mentionGenerator = "all", scoringMode = "sparse",
-      sparseWeights = Some(w), sparseTag = "guard-spec")).backptrs
+      mentionGenerator = "all", sparse = Some(SparseModel(w, "guard-spec")))).backptrs
     val (band, bridge, chainsOut, dropped, surfaces) = sparseLegs(mentions, w)
     val boosted = band.join(dropped, Seq("ant_id", "cur_id"), "left")
       .select(col("ant_id"), col("cur_id"),
@@ -179,7 +178,27 @@ class SparseSpec extends SparkSuite {
       keyed(ref).except(keyed(guarded)).count() == 0,
       "guarded sparse decode must equal the greatest(band, self) reference decode")
     assert(dropped.count() > 0, "fixture must actually exercise in-band chain edges")
-    surfaces.unpersist()
+
+    // the same model forced over the collect bound: the shared arc assembly
+    // on the weight-join plans must reproduce the fast path's arcs and the
+    // pipeline's backpointers EXACTLY (integer-exact sums — no round())
+    val cfgS = Pipeline.Config(mentionGenerator = "all",
+      sparse = Some(SparseModel(w, "guard-spec")))
+    val sPairs = Blocking.surfacePairs(surfaces, cfgS.blocking).cache()
+    def arcsWith(scorer: Scorer) =
+      Pipeline.arcs(mentions, surfaces, scorer.surface(sPairs, surfaces), scorer, cfgS)
+    val arcsFast = arcsWith(Scorer(cfgS, mentions))
+    val arcsJoin = arcsWith(Scorer(cfgS, mentions, maxFeatures = 0))
+    def fastPlan(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.toLowerCase.contains("sparseweightsum")
+    assert(fastPlan(arcsFast) && !fastPlan(arcsJoin),
+      "maxFeatures = 0 must force every leg onto the weight-join plans")
+    def diff(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Long =
+      a.exceptAll(b).count() + b.exceptAll(a).count()
+    assert(diff(arcsJoin, arcsFast) == 0, "forced-join arcs must equal the fast path's")
+    assert(diff(Decode.backpointers(arcsJoin, 0.0), guarded) == 0,
+      "forced-join backpointers must equal the pipeline's fast-path backpointers")
+    surfaces.unpersist(); sPairs.unpersist()
   }
 
   test("sparse chain/band guard bites: adversarial negative conjunction weights break the unguarded chain") {
@@ -297,8 +316,7 @@ class SparseSpec extends SparkSuite {
       .select(col("ant_id"), col("cur_id"), (col("e_a") === col("e_c")).cast("double").as("label"))
     val w = SparseFeatures.logOddsWeights(feats, labels).cache()
     val guarded = Pipeline.run(spark, transcripts, Pipeline.Config(
-      mentionGenerator = "all", scoringMode = "sparse",
-      sparseWeights = Some(w), sparseTag = "guard-spec-sf0001")).backptrs
+      mentionGenerator = "all", sparse = Some(SparseModel(w, "guard-spec-sf0001")))).backptrs
     val (band, bridge, chainsOut, dropped, surfaces) = sparseLegs(mentions, w)
     val boosted = band.join(dropped, Seq("ant_id", "cur_id"), "left")
       .select(col("ant_id"), col("cur_id"),
@@ -405,8 +423,7 @@ class SparseSpec extends SparkSuite {
       feats, labels, epochs = 30, eta = 1.0)
     val wTab = graft.train.ModelIO.sparseWeightsFromTrained(sw).cache()
     val sparseRes = Pipeline.run(spark, transcripts, Pipeline.Config(
-      mentionGenerator = "all", scoringMode = "sparse",
-      sparseWeights = Some(wTab), sparseTag = "fixture-trained"))
+      mentionGenerator = "all", sparse = Some(SparseModel(wTab, "fixture-trained"))))
     val f1SparsePipe = f1Of(sparseRes.clusters)
 
     val labeled = graft.train.Trainer.labeledPairs(universe, mentions, gold)
