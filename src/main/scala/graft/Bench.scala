@@ -507,7 +507,7 @@ object Bench {
     }
     val tJoint = min2("er_joint_decode")(
       graft.joint.JointInference.infer(spark, priorsX, arcsX,
-        coupling = 1.0, iters = 6, algorithm = "bp").count())
+        coupling = 1.0, iters = 6).count())
     val tTrainEp = min2("er_train_epoch_sparse")(
       graft.train.Trainer.trainSparseRankingDistributed(
         featsX, labelsXp, epochs = 1)._1.count())

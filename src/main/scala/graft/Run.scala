@@ -426,14 +426,9 @@ object Run {
         // one state. Cold-start surfaces the table never saw back off to
         // their word shape (documented in streamingBandScoresSparse).
         val countsIo = new TableIO(output)
-        val counts = countsIo.readIfCurrent(spark, "stream_counts", token)
-          .getOrElse {
-            val c = SparseFeatures.normCounts(
-              Mentions.extractIdentifier(spark.read.parquet(srcDir)))
-            val snap = countsIo.commit("stream_counts", c, token)
-            countsIo.readIfCurrent(spark, "stream_counts", token, Some(snap))
-              .getOrElse(sys.error("stream_counts commit not readable back"))
-          }
+        val counts = countsIo.readOrCommit(spark, "stream_counts", token)(
+          SparseFeatures.normCounts(
+            Mentions.extractIdentifier(spark.read.parquet(srcDir))))
         StreamingAssembly.streamingBandScoresSparse(spark, mentionStream,
           counts, w, maxConvDist = band, watermark = watermark)
     }
@@ -754,7 +749,7 @@ object Run {
                 // gold-NIL" — false supervision perturbing the coref gradient.
                 // Wiki factors join at decode with their user-set couplings.
                 evidence = evidence, wikiScores = None,
-                trainWiki = false, algorithm = "bp")
+                trainWiki = false)
               (trained.coref, trained.ner,
                 f""""joint_trained_epochs":$ep,""" +
                 f""""joint_loss_first":${trace.head._2}%.6f,""" +
@@ -766,8 +761,7 @@ object Run {
           res.scored.select(col("ant_id"), col("cur_id"), col("score")),
           coupling = cplCoref, iters = iters,
           evidence = evidence, nerCoupling = cplNer,
-          wikiScores = wikiScores, wikiCoupling = wikiCpl, wikiNilScore = wikiNil,
-          algorithm = "bp")
+          wikiScores = wikiScores, wikiCoupling = wikiCpl, wikiNilScore = wikiNil)
           .localCheckpoint(true) // consumed twice: committed + flip-diffed
         // the joint table's lineage: pipeline token + everything the factor
         // graph depends on beyond the pipeline — the (possibly trained)

@@ -76,23 +76,20 @@ object VecOps {
     * more elements have bit b set than clear. Bit-identical to the 64
     * `aggregate(...)` sign-sum folds OR'd together — including the
     * null-array case, where every per-bit `when(null > 0, …).otherwise(0)`
-    * yielded 0 and the OR therefore 0. Null elements contribute nothing on
-    * either side of a bit (the fold's `acc + when(...)` would null the
-    * whole sum — but `transform(sh, xxhash64)` never produces null
-    * elements, so both paths only ever see non-null hashes). */
+    * yielded 0 and the OR therefore 0, and null elements, which the fold's
+    * `when(null === 1, 1).otherwise(-1)` counted as −1 on every bit: a null
+    * element counts as a 0 hash. */
   def simhash64(hashed: ArrayData): Long = {
     if (hashed == null) return 0L
     val n = hashed.numElements()
     val counts = new Array[Int](64)
     var i = 0
     while (i < n) {
-      if (!hashed.isNullAt(i)) {
-        val h = hashed.getLong(i)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
+      val h = if (hashed.isNullAt(i)) 0L else hashed.getLong(i)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
+        b += 1
       }
       i += 1
     }

@@ -158,7 +158,7 @@ object Queries {
     graft.joint.JointInference.infer(spark,
       graft.joint.JointInference.typePriors(r.mentions),
       r.scored.select(col("ant_id"), col("cur_id"), col("score")),
-      coupling = 1.0, iters = 6, algorithm = "bp")
+      coupling = 1.0, iters = 6)
       .select(col("mention_id"), col("ant_id"), col("type"),
         round(col("p_type"), 6).as("p_type_r"))
   }

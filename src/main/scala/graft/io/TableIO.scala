@@ -132,4 +132,17 @@ class TableIO(rootDir: String) {
       }
     }
   }
+
+  /** Resume-or-compute for one stage: the committed snapshot when its
+    * lineage is current, else `compute`, committed and read back. A
+    * just-committed snapshot that cannot be read back fails loudly, naming
+    * the stage, instead of recomputing silently on every run. */
+  def readOrCommit(spark: SparkSession, stage: String, lineage: String)(
+      compute: => DataFrame): DataFrame =
+    readIfCurrent(spark, stage, lineage).getOrElse {
+      val snap = commit(stage, compute, lineage)
+      readIfCurrent(spark, stage, lineage, Some(snap)).getOrElse(
+        throw new IllegalStateException(s"TableIO stage '$stage': snapshot " +
+          s"$snap was just committed under lineage '$lineage' but cannot be read back"))
+    }
 }

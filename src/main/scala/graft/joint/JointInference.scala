@@ -16,14 +16,13 @@ import org.apache.spark.sql.functions._
   *    `c` multiplies in `exp(coupling·[T_c = T_a])` — coref links pull the
   *    linked mentions' types together, and type (dis)agreement re-ranks
   *    antecedents;
-  *  - synchronous variational updates (mean-field-style: each update
-  *    marginalizes the equality factor in closed form against the CURRENT
-  *    beliefs — the type-belief dot products — rather than cavity messages;
-  *    same fixed point family as the reference's damped loopy BP), iterated
-  *    to a fixed round count — per-conversation, exactly the
+  *  - loopy sum-product BP ([[runConvBP]]), the reference's inference
+  *    algorithm (`bp/Node.scala:80-127`, `SimpleFactorGraph.scala:100-158`),
+  *    iterated to a fixed round count — per-conversation, exactly the
   *    reference's document-at-a-time inference unit: the graph NEVER crosses
   *    conversations, so the distributed shape is a keyed group, not a
-  *    distributed graph.
+  *    distributed graph. On tree-structured conversations its marginals
+  *    equal brute-force enumeration to 1e-9 (JointSpec).
   *
   * Round 4 added the reference's WIKI factor family
   * (`JointDocFactorGraphOnto.scala:149-172,230-237`): a latent denotation
@@ -34,23 +33,11 @@ import org.apache.spark.sql.functions._
   * every factor weight by BP-gradient Adagrad
   * (`JointComputerShared.scala:47-102`, `GeneralTrainer.scala:100-135`);
   * the scoped version optimizes the 4 coupling scalars against gold
-  * antecedent/type/title assignments — the smooth surrogate is the summed
-  * log-marginal of the gold assignment under the converged beliefs
+  * antecedent/type/title assignments — the smooth objective is the summed
+  * log-marginal of the gold assignment under the converged BP beliefs
   * ([[goldLogLik]]), its gradient taken by central finite differences and
   * fed through the engine's one Adagrad step ([[graft.train.Adagrad]],
   * λ = 0).
-  * Both the as-cur and as-ant message passes use a precomputed reverse
-  * adjacency (ant → arcs targeting it), so a mean-field iteration is
-  * O(total arcs × states), not O(mentions × total arcs).
-  *
-  * Round 5 also adds LOOPY SUM-PRODUCT BP ([[runConvBP]],
-  * `algorithm = "bp"` on [[infer]]/[[goldLogLik]]/[[trainCouplings]]) — the
-  * reference's actual inference algorithm (`bp/Node.scala:80-127`,
-  * `SimpleFactorGraph.scala:100-158`) over the same factor family; the
-  * mean-field kernel stays the production default (every existing gate
-  * pins it), and BP carries its own exactness gate: on tree-structured
-  * conversations its marginals equal brute-force enumeration to 1e-9
-  * (JointSpec), which mean-field provably cannot match.
   *
   * Output: per mention, the joint antecedent argmax (or none), the type
   * posterior argmax with its probability, and the denotation argmax (MBR
@@ -91,21 +78,39 @@ object JointInference {
       qWiki: Array[Array[Double]],
       wTitles: Array[Array[String]])
 
-  /** Variable domains + unaries shared by BOTH kernels — one definition, so
-    * the "same factor family" contract between mean-field and BP (and the
-    * zero-coupling bit-exact spec) cannot drift: the NER-boosted type
-    * unaries `prior(t)·exp(ner·p_ent·[t ≠ OTHER])`, the sorted-distinct
-    * denotation domains, and the `softmax(best dscore per title, NIL @
-    * wikiNil)` denotation unaries. */
-  private case class ConvDomains(effPrior: Array[Array[Double]],
-      wTitles: Array[Array[String]], wIdx: Array[Map[String, Int]],
-      wUnary: Array[Array[Double]])
-
-  private def convDomains(mentions: Array[MRow], cpl: Couplings): ConvDomains = {
+  /** Loopy sum-product BP kernel for ONE conversation — pure function of
+    * the mention rows, candidate arcs, and couplings; runs inside the
+    * cogroup on executors. The factors:
+    *
+    *  - per arc (c, j → a): a TYPE factor F(A_c, T_c, T_a) =
+    *    `exp(coref·[t_c = t_a])` when `A_c = j`, else 1;
+    *  - per arc where both ends carry titles: a WIKI factor
+    *    F'(A_c, W_c, W_a) = `exp(wiki·[w_c = w_a ≠ NIL])` when `A_c = j`;
+    *  - unaries: `exp(score)` / `exp(new_bias)` on A_c, the NER-boosted
+    *    prior `prior(t)·exp(ner·p_ent·[t ≠ OTHER])` on T_m, and
+    *    `softmax(best dscore per title, NIL @ wikiNil)` on W_m over its
+    *    sorted-distinct titles.
+    *
+    * Messages use CAVITY beliefs (belief divided by the receiving factor's
+    * own message), which buys exactness on tree-structured conversations
+    * (JointSpec pins BP == brute-force enumeration there). Synchronous
+    * flooding schedule, fixed iteration count, no damping (conversation
+    * graphs are small). Messages of the form `1 + q·(e^κ − 1)·τ` are
+    * bounded below by `min(1, e^κ) > 0`, so the divisions are safe for any
+    * finite coupling. */
+  private def runConvBP(mentions: Array[MRow],
+      cands: Map[Int, Array[(Int, Double)]], cpl: Couplings,
+      iters: Int): ConvBeliefs = {
     val k = Types.size
     val n = mentions.length
+    val expC = math.exp(cpl.coref)
+    val expW = math.exp(cpl.wiki)
+    val wikiOn = cpl.wiki != 0.0
+    // unaries: NER-boosted type priors; denotation domains (sorted distinct
+    // candidate titles, implicit NIL at index titles.length) and their
+    // softmax unaries
     val otherIdx = Types.indexOf("OTHER")
-    val eff = Array.tabulate(n) { i =>
+    val effPrior: Array[Array[Double]] = Array.tabulate(n) { i =>
       val boost = math.exp(cpl.ner * mentions(i).pEnt)
       Array.tabulate(k)(t =>
         mentions(i).prior(t) * (if (t == otherIdx) 1.0 else boost))
@@ -124,205 +129,6 @@ object JointInference {
         val e = raw.map(v => math.exp(v - mx)); val z = e.sum; e.map(_ / z)
       }
     }
-    ConvDomains(eff, wTitles, wIdx, wUnary)
-  }
-
-  /** The mean-field kernel for ONE conversation — pure function of the
-    * mention rows, candidate arcs, and couplings; runs inside the cogroup on
-    * executors. Message passes in both directions use `revAdj` (ant → arcs
-    * targeting it) so an iteration costs O(arcs × states). */
-  private def runConv(mentions: Array[MRow],
-      cands: Map[Int, Array[(Int, Double)]], cpl: Couplings,
-      iters: Int): ConvBeliefs = {
-    val k = Types.size
-    val n = mentions.length
-    val expC = math.exp(cpl.coref)
-    // NER-boosted type unaries + denotation domains/unaries (shared
-    // definition with the BP kernel — see [[convDomains]])
-    val dom = convDomains(mentions, cpl)
-    def effPrior(i: Int): Array[Double] = dom.effPrior(i)
-
-    // reverse adjacency: for each mention m, the arcs (c, j) with
-    // cands(c)(j) targeting m — computed ONCE (round-4 advice: the old
-    // as-antecedent pass rescanned every arc list per mention per iteration)
-    val revAdj: Map[Int, Array[(Int, Int)]] = {
-      val buf = scala.collection.mutable.HashMap
-        .empty[Int, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
-      cands.foreach { case (c, as) =>
-        var j = 0
-        while (j < as.length) {
-          buf.getOrElseUpdate(as(j)._1,
-            scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]) += ((c, j))
-          j += 1
-        }
-      }
-      buf.iterator.map { case (m, v) => m -> v.toArray }.toMap
-    }
-
-    // denotation domains (wiki nodes): sorted distinct candidate titles
-    // per mention; implicit NIL at index titles.length
-    val expW = math.exp(cpl.wiki)
-    val wikiOn = cpl.wiki != 0.0
-    val wTitles = dom.wTitles
-    val wIdx = dom.wIdx
-    val wUnary = dom.wUnary
-
-    // beliefs
-    val qType = Array.tabulate(n) { i =>
-      val p = effPrior(i); val z = p.sum; p.map(_ / z)
-    }
-    val qWiki: Array[Array[Double]] = Array.tabulate(n)(i => wUnary(i).clone())
-    // denotation agreement between two mentions under current beliefs:
-    // Σ over SHARED titles (NIL never counts as agreement)
-    def wikiDot(c: Int, a: Int): Double = {
-      val tc = wTitles(c)
-      if (tc.isEmpty || wTitles(a).isEmpty) 0.0
-      else {
-        var s = 0.0; var i = 0
-        while (i < tc.length) {
-          val j = wIdx(a).getOrElse(tc(i), -1)
-          if (j >= 0) s += qWiki(c)(i) * qWiki(a)(j)
-          i += 1
-        }
-        s
-      }
-    }
-    val pAnt = scala.collection.mutable.Map.empty[Int, Array[Double]]
-
-    var it = 0
-    while (it < iters) {
-      // A_c update: p(a) ∝ exp(score) · E_{T_c,T_a}[exp(coupling·[=])]
-      //            = exp(score) · (1 + (expC-1)·(q_c · q_a))
-      //            · (1 + (expW-1)·wikiDot) [denotation-agreement factor];
-      // the "new entity" arc weighs exp(new_bias) (anaphoricity unary)
-      cands.foreach { case (c, as) =>
-        val w = as.map { case (a, s) =>
-          val dot = (0 until k).map(t => qType(c)(t) * qType(a)(t)).sum
-          val wm = if (wikiOn) 1.0 + (expW - 1.0) * wikiDot(c, a) else 1.0
-          math.exp(s) * (1.0 + (expC - 1.0) * dot) * wm
-        }
-        val z = w.sum + math.exp(mentions(c).newBias)
-        pAnt(c) = w.map(_ / z)
-      }
-      // T_m update: prior × messages from every factor touching T_m
-      // μ(t) = Σ_a p(a)·(1 + (expC-1)·q_a(t)) + p(new)  (as cur)
-      //      × Π over (c with a=m): same with roles swapped (as ant)
-      val next = Array.tabulate(n) { m =>
-        val eff = effPrior(m)
-        val logq = Array.tabulate(k)(t => math.log(math.max(eff(t), 1e-12)))
-        cands.get(m).foreach { as =>
-          val pa = pAnt(m)
-          var t = 0
-          while (t < k) {
-            var msg = 1.0 - pa.sum // new-entity mass, type-flat
-            var j = 0
-            while (j < as.length) {
-              msg += pa(j) * (1.0 + (expC - 1.0) * qType(as(j)._1)(t))
-              j += 1
-            }
-            logq(t) += math.log(math.max(msg, 1e-12)); t += 1
-          }
-        }
-        revAdj.get(m).foreach(_.foreach { case (c, j) =>
-          val pa = pAnt(c)
-          var t = 0
-          while (t < k) {
-            val msg = (1.0 - pa(j)) + pa(j) * (1.0 + (expC - 1.0) * qType(c)(t))
-            logq(t) += math.log(math.max(msg, 1e-12)); t += 1
-          }
-        })
-        val mx = logq.max
-        val e = logq.map(v => math.exp(v - mx)); val z = e.sum
-        e.map(_ / z)
-      }
-      var i = 0
-      while (i < n) { qType(i) = next(i); i += 1 }
-      // W_m update (mirrors T_m): unary × link-factor messages — as cur,
-      // μ(t) = Σ_j p(a_j)·(1+(expW-1)·qW_{a_j}(t)) + p(new); as ant of c,
-      // μ(t) = (1−p) + p·(1+(expW-1)·qW_c(t)). NIL's message is exactly 1
-      // in both roles (agreement never fires on NIL), so it is skipped.
-      if (wikiOn) {
-        val nextW = Array.tabulate(n) { m =>
-          val ts = wTitles(m)
-          if (ts.isEmpty) qWiki(m)
-          else {
-            val u = wUnary(m)
-            val logq = Array.tabulate(ts.length + 1)(
-              t => math.log(math.max(u(t), 1e-12)))
-            cands.get(m).foreach { as =>
-              val pa = pAnt(m)
-              var t = 0
-              while (t < ts.length) {
-                var msg = 1.0 - pa.sum
-                var j = 0
-                while (j < as.length) {
-                  val a = as(j)._1
-                  val aj = wIdx(a).getOrElse(ts(t), -1)
-                  msg += pa(j) * (1.0 + (expW - 1.0) *
-                    (if (aj >= 0) qWiki(a)(aj) else 0.0))
-                  j += 1
-                }
-                logq(t) += math.log(math.max(msg, 1e-12)); t += 1
-              }
-            }
-            revAdj.get(m).foreach(_.foreach { case (c, j) =>
-              val pa = pAnt(c)
-              var t = 0
-              while (t < ts.length) {
-                val cj = wIdx(c).getOrElse(ts(t), -1)
-                val msg = (1.0 - pa(j)) + pa(j) * (1.0 + (expW - 1.0) *
-                  (if (cj >= 0) qWiki(c)(cj) else 0.0))
-                logq(t) += math.log(math.max(msg, 1e-12)); t += 1
-              }
-            })
-            val mx = logq.max
-            val e = logq.map(v => math.exp(v - mx)); val z = e.sum
-            e.map(_ / z)
-          }
-        }
-        var i2 = 0
-        while (i2 < n) { qWiki(i2) = nextW(i2); i2 += 1 }
-      }
-      it += 1
-    }
-    ConvBeliefs(mentions, cands, pAnt, qType, qWiki, wTitles)
-  }
-
-  /** Loopy sum-product BP kernel for ONE conversation — the reference's
-    * actual inference algorithm (`bp/Node.scala:80-127` message passes,
-    * `SimpleFactorGraph.scala:100-158`), where [[runConv]] is the mean-field
-    * approximation of the same fixed-point family. Factors are exactly the
-    * mean-field ones, now made explicit:
-    *
-    *  - per arc (c, j → a): a TYPE factor F(A_c, T_c, T_a) =
-    *    `exp(coref·[t_c = t_a])` when `A_c = j`, else 1;
-    *  - per arc where both ends carry titles: a WIKI factor
-    *    F'(A_c, W_c, W_a) = `exp(wiki·[w_c = w_a ≠ NIL])` when `A_c = j`;
-    *  - unaries: `exp(score)` / `exp(new_bias)` on A_c, the NER-boosted
-    *    prior on T_m, `softmax(dscore, NIL@wikiNil)` on W_m.
-    *
-    * Messages use CAVITY beliefs (belief divided by the receiving factor's
-    * own message) where mean-field uses full beliefs — that is the entire
-    * difference, and it buys exactness on tree-structured conversations
-    * (JointSpec pins BP == brute-force enumeration there; MF is provably
-    * approximate on the same fixture). Synchronous flooding schedule,
-    * fixed iteration count, no damping (conversation graphs are small).
-    * Messages of the form `1 + q·(e^κ − 1)·τ` are bounded below by
-    * `min(1, e^κ) > 0`, so the divisions are safe for any finite coupling. */
-  private def runConvBP(mentions: Array[MRow],
-      cands: Map[Int, Array[(Int, Double)]], cpl: Couplings,
-      iters: Int): ConvBeliefs = {
-    val k = Types.size
-    val n = mentions.length
-    val expC = math.exp(cpl.coref)
-    val expW = math.exp(cpl.wiki)
-    val wikiOn = cpl.wiki != 0.0
-    // shared domains/unaries — ONE definition with the mean-field kernel
-    val dom = convDomains(mentions, cpl)
-    def effPrior(i: Int): Array[Double] = dom.effPrior(i)
-    val wTitles = dom.wTitles
-    val wIdx = dom.wIdx
-    val wUnary = dom.wUnary
 
     // flat arc/factor table: arc f is (cur(f), j-within-cur, ant(f));
     // arcsByCur(m)(j) = f — array indexing in the hot loops, no tuple-keyed
@@ -473,7 +279,7 @@ object JointInference {
     }
 
     // final beliefs in the ConvBeliefs contract: pAnt excludes the implicit
-    // new-entity slot (its mass is 1 - sum, as in the mean-field kernel)
+    // new-entity slot (its mass is 1 - sum)
     val pAnt = scala.collection.mutable.Map.empty[Int, Array[Double]]
     cands.keysIterator.foreach { c =>
       val b = beliefA(c)
@@ -484,20 +290,6 @@ object JointInference {
       if (wTitles(m).isEmpty) wUnary(m).clone() else beliefW(m))
     ConvBeliefs(mentions, cands, pAnt, qType, qWiki, wTitles)
   }
-
-  /** Resolve the inference kernel ON THE DRIVER — an unknown algorithm
-    * string fails fast with a clear message before any job launches,
-    * instead of as repeated task-level exceptions inside the cogroup.
-    * `"meanfield"` is the default (the production path every oracle row
-    * and spec pins); `"bp"` is loopy sum-product ([[runConvBP]]). */
-  private def kernelFor(algorithm: String): (Array[MRow],
-      Map[Int, Array[(Int, Double)]], Couplings, Int) => ConvBeliefs =
-    algorithm match {
-      case "meanfield" => runConv
-      case "bp" => runConvBP
-      case other => throw new IllegalArgumentException(
-        s"unknown joint inference algorithm '$other' (meanfield | bp)")
-    }
 
   /** Assemble the per-conversation grouped Dataset the kernel consumes.
     * Gold columns (nullable) ride along when provided so the objective can
@@ -599,8 +391,8 @@ object JointInference {
     *                   (`corefWikiFactors`, `:230-237`) multiplies arc `a→c`
     *                   by `exp(wikiCoupling·[W_c = W_a ≠ NIL])` — linking
     *                   evidence re-ranks coref, and coref links pull
-    *                   denotations together (both marginalized mean-field
-    *                   style like the type factor).
+    *                   denotations together (both factors carry BP
+    *                   messages like the type factor).
     * @param wikiCoupling log-strength of the denotation-agreement factor
     * @param wikiNilScore unary score of the NIL denotation
     * @return (mention_id, ant_id nullable, p_ant, type, p_type,
@@ -610,18 +402,17 @@ object JointInference {
       coupling: Double = 1.0, iters: Int = 10,
       evidence: Option[DataFrame] = None, nerCoupling: Double = 0.0,
       wikiScores: Option[DataFrame] = None, wikiCoupling: Double = 0.0,
-      wikiNilScore: Double = 0.0, algorithm: String = "meanfield"): DataFrame = {
+      wikiNilScore: Double = 0.0): DataFrame = {
     import spark.implicits._
     val cpl = Couplings(coupling, nerCoupling, wikiCoupling, wikiNilScore)
     val (ments, pairs) = groupedInputs(spark, mentionPriors, scored,
       evidence, wikiScores, None)
     val k = Types.size
-    val kernel = kernelFor(algorithm) // fail fast on the driver
     val grouped = ments.groupByKey(_._1).cogroup(pairs.groupByKey(_._1)) {
       (conv, ms, ps) =>
         val mentions = toRows(ms)
         val cands = toCands(mentions, ps)
-        val b = kernel(mentions, cands, cpl, iters)
+        val b = runConvBP(mentions, cands, cpl, iters)
         mentions.indices.iterator.map { m =>
           val (antId, pA) = b.cands.get(m) match {
             case Some(as) if as.nonEmpty =>
@@ -662,8 +453,8 @@ object JointInference {
   }
 
   /** The coupling-training objective: Σ over mentions of the log-marginal of
-    * the GOLD assignment under the converged beliefs — the mean-field
-    * surrogate of the reference's BP log-likelihood
+    * the GOLD assignment under the converged BP beliefs — the per-variable
+    * marginal form of the reference's BP log-likelihood
     * (`JointComputerShared.computeLogLikelihood`). Smooth in the couplings
     * (unlike decode accuracy), so finite differences are well-posed.
     *
@@ -675,19 +466,17 @@ object JointInference {
   def goldLogLik(spark: SparkSession, mentionPriors: DataFrame,
       scored: DataFrame, gold: DataFrame, cpl: Couplings, iters: Int = 10,
       evidence: Option[DataFrame] = None,
-      wikiScores: Option[DataFrame] = None,
-      algorithm: String = "meanfield"): Double = {
+      wikiScores: Option[DataFrame] = None): Double = {
     import spark.implicits._
     val (ments, pairs) = groupedInputs(spark, mentionPriors, scored,
       evidence, wikiScores, Some(gold))
     val eps = 1e-12
-    val kernel = kernelFor(algorithm) // fail fast on the driver
     val perConv = ments.groupByKey(_._1).cogroup(pairs.groupByKey(_._1)) {
       (conv, ms, ps) =>
         val mentions = toRows(ms)
         val idx = mentions.iterator.map(_.id).zipWithIndex.toMap
         val cands = toCands(mentions, ps)
-        val b = kernel(mentions, cands, cpl, iters)
+        val b = runConvBP(mentions, cands, cpl, iters)
         var ll = 0.0
         mentions.indices.foreach { m =>
           val mr = mentions(m)
@@ -747,8 +536,7 @@ object JointInference {
       h: Double = 0.05, iters: Int = 6, init: Couplings = Couplings(0, 0, 0, 0),
       evidence: Option[DataFrame] = None,
       wikiScores: Option[DataFrame] = None,
-      trainWiki: Boolean = true,
-      algorithm: String = "meanfield"): (Couplings, Seq[(Int, Double)]) = {
+      trainWiki: Boolean = true): (Couplings, Seq[(Int, Double)]) = {
     // pin ALL the inputs (including the optional evidence/wiki tables):
     // every objective evaluation re-runs the kernel only, never the inputs'
     // upstream plans — with 4 dims and 8 epochs the objective runs
@@ -762,7 +550,7 @@ object JointInference {
       val ev = evidence.map(_.localCheckpoint(true))
       val ws = wikiScores.map(_.localCheckpoint(true))
       def obj(c: Array[Double]): Double = goldLogLik(spark, mp, sc, g,
-        Couplings(c(0), c(1), c(2), c(3)), iters, ev, ws, algorithm)
+        Couplings(c(0), c(1), c(2), c(3)), iters, ev, ws)
       // per-dimension activity, not a prefix count: each coupling's gradient
       // is provably zero when its factor has no inputs (no evidence table →
       // p_entity = 0 everywhere → the objective is constant in `ner`), and a

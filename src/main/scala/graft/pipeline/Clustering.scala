@@ -293,9 +293,9 @@ object Clustering {
     * cluster (removal can only split the former; the new edge can only merge
     * into the latter), so re-run connected components on the touched members
     * with the edited edge set and union with the untouched rows. Work is
-    * proportional to the touched clusters, never the corpus — the touched-id
-    * set is broadcast and untouched rows pass through an anti-join unscanned
-    * by the CC loop.
+    * proportional to the touched clusters, never the corpus — a touched-id
+    * set within [[maxDriverEditEdges]] is broadcast, and untouched rows pass
+    * through an anti-join unscanned by the CC loop.
     *
     * `edits` rows are `(cur_id, new_ant_id)`; `new_ant_id == cur_id`
     * detaches the mention (reference: `backpointers(i) == i`). An edit for a
@@ -329,66 +329,53 @@ object Clustering {
       df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
     val e0 = edits.select(col("cur_id"), col("new_ant_id"))
     val e = if (editsPinned) e0 else e0.localCheckpoint(true)
+    val ids = e.select(col("cur_id").as("mention_id"))
+      .unionByName(e.select(col("new_ant_id").as("mention_id")))
+      .distinct()
+    val sparkSes = spark
+    import sparkSes.implicits._
     // Touched-cluster ids, driver-side and bounded: in the steady
-    // incremental regime the touched set is a handful of clusters, so the
-    // old shape (pin touched, pin members, broadcast the pins) paid three
-    // checkpoint jobs per edit where ONE bounded take suffices — the
-    // clusterTouched discipline applied one level up. The take doubles as
-    // the size probe; an over-bound touched set falls back to the pinned
-    // distributed shape below. The ids join streams `clusters` against the
+    // incremental regime the touched set is a handful of clusters, so ONE
+    // bounded take of the edit ids and ONE of their clusters replace the
+    // pinned shape's checkpoint jobs. Both takes are the cardinality gate:
+    // only a set already held within [[maxDriverEditEdges]] is broadcast,
+    // and an over-bound edit-id or touched set falls back to the pinned
+    // distributed shape below. The probe streams `clusters` against the
     // broadcast edit ids — no shuffle of the state table.
-    val touchedSeq: Option[Seq[String]] = knownTouched.orElse {
-      val sparkSes = spark
-      import sparkSes.implicits._
-      val ids = e.select(col("cur_id").as("mention_id"))
-        .unionByName(e.select(col("new_ant_id").as("mention_id")))
-        .distinct()
-      val probe = graft.functions.fetchBounded(
-        clusters.join(broadcast(ids), Seq("mention_id"))
-          .select(col("cluster_id")).distinct(), maxDriverEditEdges + 1)
-      if (probe.length <= maxDriverEditEdges) Some(probe.map(_.getString(0)).toSeq)
+    def bounded(df: DataFrame): Option[Seq[String]] = {
+      val rows = graft.functions.fetchBounded(df, maxDriverEditEdges + 1)
+      if (rows.length <= maxDriverEditEdges) Some(rows.map(_.getString(0)).toSeq)
       else None
     }
-    touchedSeq match {
-      case Some(ts) =>
-        val sparkSes = spark
-        import sparkSes.implicits._
-        // LocalRelation: known-size, statically broadcast — every consumer
-        // below is a narrow scan of `clusters`, no pins, no state shuffles
-        val touchedDf = ts.toDF("cluster_id")
-        val members = refresh(clusters.join(broadcast(touchedDf), Seq("cluster_id"))
-          .select(col("mention_id")))
-        val edited = premerged.map(refresh).getOrElse(mergeBackpointers(backptrs, e))
-        val subEdges = edited.join(
-          members.select(col("mention_id").as("cur_id")), "cur_id")
-        val recomputed = clusterTouched(spark, members, subEdges)
-        clusters.join(broadcast(touchedDf), Seq("cluster_id"), "left_anti")
-          .select(col("mention_id"), col("cluster_id"))
-          .unionByName(recomputed.select(col("mention_id"), col("cluster_id")))
-      case None =>
-        // distributed fallback (over-bound touched set): the pinned shape
-        val touched = refresh(e.select(col("cur_id").as("mention_id"))
-          .unionByName(e.select(col("new_ant_id").as("mention_id")))
-          .distinct()
-          .join(clusters, "mention_id")
-          .select(col("cluster_id")).distinct()
-          .localCheckpoint(true))
-        val members = refresh(clusters.join(broadcast(touched), Seq("cluster_id"))
-          .select(col("mention_id")).localCheckpoint(true))
-        // edited backpointers restricted to touched members (refresh a caller-
-        // pinned premerged table: pinned LogicalRDDs keep their source exprIds)
-        val edited = premerged.map(refresh).getOrElse(mergeBackpointers(backptrs, e))
-        // membership filter on the cur side only: an unedited edge's ant shares
-        // cur's component, and an edited edge's ant is touched by construction.
-        // No forced broadcast — a large edit batch makes `members` large, and
-        // AQE picks the broadcast side when it is in fact small.
-        val subEdges = edited.join(
-          members.select(col("mention_id").as("cur_id")), "cur_id")
-        val recomputed = clusterTouched(spark, members, subEdges)
-        clusters.join(broadcast(touched), Seq("cluster_id"), "left_anti")
-          .select(col("mention_id"), col("cluster_id"))
-          .unionByName(recomputed.select(col("mention_id"), col("cluster_id")))
+    val touchedSeq: Option[Seq[String]] = knownTouched.orElse {
+      bounded(ids).flatMap(is => bounded(
+        clusters.join(broadcast(is.toDF("mention_id")), Seq("mention_id"))
+          .select(col("cluster_id")).distinct()))
     }
+    // driver-held: a LocalRelation, known-size and statically broadcast, so
+    // every consumer below is a narrow scan of `clusters` with no pins and
+    // no state shuffles. Over-bound: the pinned touched and members sets,
+    // with no broadcast hint — AQE picks the broadcast side only when it is
+    // in fact small.
+    val (touched, driverHeld) = touchedSeq match {
+      case Some(ts) => (broadcast(ts.toDF("cluster_id")), true)
+      case None => (refresh(ids.join(clusters, "mention_id")
+        .select(col("cluster_id")).distinct()
+        .localCheckpoint(true)), false)
+    }
+    val members0 = clusters.join(touched, Seq("cluster_id")).select(col("mention_id"))
+    val members = refresh(if (driverHeld) members0 else members0.localCheckpoint(true))
+    // edited backpointers restricted to touched members (refresh a caller-
+    // pinned premerged table: pinned LogicalRDDs keep their source exprIds).
+    // Membership filter on the cur side only: an unedited edge's ant shares
+    // cur's component, and an edited edge's ant is touched by construction.
+    val edited = premerged.map(refresh).getOrElse(mergeBackpointers(backptrs, e))
+    val subEdges = edited.join(
+      members.select(col("mention_id").as("cur_id")), "cur_id")
+    val recomputed = clusterTouched(spark, members, subEdges)
+    clusters.join(touched, Seq("cluster_id"), "left_anti")
+      .select(col("mention_id"), col("cluster_id"))
+      .unionByName(recomputed.select(col("mention_id"), col("cluster_id")))
   }
 
   /** Edge-count bound for solving the TOUCHED subgraph of an incremental

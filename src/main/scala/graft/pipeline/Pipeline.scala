@@ -63,12 +63,7 @@ object Pipeline {
 
     def stage(name: String, lineage: String)(compute: => DataFrame): DataFrame =
       io match {
-        case Some(t) =>
-          t.readIfCurrent(spark, name, lineage).getOrElse {
-            val df = compute
-            val snap = t.commit(name, df, lineage)
-            t.readIfCurrent(spark, name, lineage, Some(snap)).get
-          }
+        case Some(t) => t.readOrCommit(spark, name, lineage)(compute)
         case None => compute
       }
 
@@ -95,16 +90,11 @@ object Pipeline {
     val backptrs = stage("backptrs", tok)(Decode.backpointers(scored, cfg.linkThreshold))
     val clusters = stage("clusters", tok) {
       val ccCheckpoint: (Int, DataFrame) => DataFrame = io match {
-        case Some(t) => (i, df) => {
-          // one stage per iteration, PROBED before computing: a re-run that
-          // crashed mid-loop reuses every committed iteration (the loop is
-          // deterministic in backptrs + config, both in the lineage) instead
-          // of recomputing all of them and appending duplicate snapshots
-          t.readIfCurrent(spark, s"cc-iter-$i", s"$tok-iter$i").getOrElse {
-            val snap = t.commit(s"cc-iter-$i", df, s"$tok-iter$i")
-            t.readIfCurrent(spark, s"cc-iter-$i", s"$tok-iter$i", Some(snap)).get
-          }
-        }
+        // one stage per iteration, PROBED before computing: a re-run that
+        // crashed mid-loop reuses every committed iteration (the loop is
+        // deterministic in backptrs + config, both in the lineage) instead
+        // of recomputing all of them and appending duplicate snapshots
+        case Some(t) => (i, df) => t.readOrCommit(spark, s"cc-iter-$i", s"$tok-iter$i")(df)
         case None => (_, df) => df.localCheckpoint(true)
       }
       Clustering.cluster(spark, mentions, backptrs, ccCheckpoint)

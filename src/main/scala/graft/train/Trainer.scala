@@ -100,19 +100,23 @@ object Trainer {
     val sqGrad = Array.fill(dim)(0.0)
     val trace = scala.collection.mutable.ArrayBuffer.empty[Epoch]
 
-    val cached = labeled.localCheckpoint(true)
-    val nCur = cached.select(col("cur_id")).distinct().count().toDouble
+    // the result is driver-held weights and a trace, so the input pin is
+    // released on return (every kFoldModels fold included) and on failure
+    graft.Pins.scoped(labeled.sparkSession.sparkContext) {
+      val cached = labeled.localCheckpoint(true)
+      val nCur = cached.select(col("cur_id")).distinct().count().toDouble
 
-    for (ep <- 0 until epochs) {
-      val linear = feats.zipWithIndex.map { case ((_, c), i) => c * w(i) }.reduce(_ + _)
-      val withP = rankingResiduals(cached, linear, lossFn)
-      val aggs = feats.map { case (name, c) => sum(col("resid") * c).as(s"g_$name") } :+
-        sum(col("l")).as("loss")
-      val row = withP.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val grad = (0 until dim).map(i => row.getDouble(i) / nCur).toArray
-      val loss = row.getDouble(dim) / nCur
-      Adagrad.update(w, sqGrad, grad, eta, lambda)
-      trace += Epoch(ep, loss, w.clone())
+      for (ep <- 0 until epochs) {
+        val linear = feats.zipWithIndex.map { case ((_, c), i) => c * w(i) }.reduce(_ + _)
+        val withP = rankingResiduals(cached, linear, lossFn)
+        val aggs = feats.map { case (name, c) => sum(col("resid") * c).as(s"g_$name") } :+
+          sum(col("l")).as("loss")
+        val row = withP.agg(aggs.head, aggs.tail: _*).collect()(0)
+        val grad = (0 until dim).map(i => row.getDouble(i) / nCur).toArray
+        val loss = row.getDouble(dim) / nCur
+        Adagrad.update(w, sqGrad, grad, eta, lambda)
+        trace += Epoch(ep, loss, w.clone())
+      }
     }
     (Scoring.Weights(w), trace.toSeq)
   }

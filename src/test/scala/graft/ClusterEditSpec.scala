@@ -19,6 +19,38 @@ class ClusterEditSpec extends SparkSuite {
   private def toSet(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
+  /** `body`'s result, and the output columns of every broadcast-hinted
+    * subplan in the queries it runs (probes, pins and collects alike), read
+    * from a query listener; a sentinel query flushes the listener bus before
+    * returning. */
+  private def broadcastHinted[A](body: => A): (A, Seq[Seq[String]]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val sentinel = "broadcast_hint_sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == sentinel)) flushed.countDown()
+        else qe.analyzed.foreach {
+          case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
+            seen.add(h.child.output.map(_.name))
+          case _ =>
+        }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = body
+      spark.range(1).toDF(sentinel).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    (result, seen.asScala.toSeq)
+  }
+
   test("incremental edit == full recompute (re-point, detach, fresh link)") {
     val ids = Seq(
       mid("cA", 0, 0), mid("cA", 0, 5), mid("cA", 1, 2), // chain A
@@ -77,17 +109,21 @@ class ClusterEditSpec extends SparkSuite {
     val edits = Seq((mid("cA", 1, 2), mid("cB", 0, 0))).toDF("cur_id", "new_ant_id")
     val fast = Clustering.editBackpointers(spark, clusters0, bp, edits)
     val saved = Clustering.maxDriverEditEdges
-    val slow = try {
+    val (slowSet, hinted) = try {
       Clustering.maxDriverEditEdges = 0
-      Clustering.editBackpointers(spark, clusters0, bp, edits)
+      broadcastHinted(toSet(Clustering.editBackpointers(spark, clusters0, bp, edits)))
     } finally Clustering.maxDriverEditEdges = saved
-    assert(toSet(slow) == toSet(fast))
+    // the edit-id set (mention_id) and the touched set (cluster_id) are over
+    // the bound here by construction: neither may carry a broadcast hint
+    assert(!hinted.exists(c => c == Seq("mention_id") || c == Seq("cluster_id")),
+      s"over-bound set broadcast-hinted in the fallback: $hinted")
+    assert(slowSet == toSet(fast))
     val full = Clustering.cluster(spark, mentions,
       Seq((mid("cA", 0, 5), mid("cA", 0, 0)),
         (mid("cA", 1, 2), mid("cB", 0, 0)),
         (mid("cB", 0, 7), mid("cB", 0, 0)),
         (mid("cD", 0, 9), mid("cD", 0, 0))).toDF("cur_id", "ant_id"))
-    assert(toSet(slow) == toSet(full))
+    assert(slowSet == toSet(full))
   }
 
   test("empty edit batch is the identity") {

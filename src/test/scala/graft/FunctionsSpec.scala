@@ -153,6 +153,13 @@ class FunctionsSpec extends SparkSuite {
         lshBandKeysDirect(col("sh"), 6, 2, "xxhash64").as("k_new"))
     assert(dcmp.filter(col("h_old") =!= col("h_new") ||
       col("k_old") =!= col("k_new")).count() === 0)
+    // null hash elements: the fold counts one as -1 on every bit (a 0 hash);
+    // [3, null] ties bits 0-1, so skipping the null would set them
+    val nullHv = Seq(Seq(Some(3L), None), Seq(None), Seq(Some(5L), None, Some(-1L)))
+      .map(Tuple1(_)).toDF("hv")
+      .select(simhashChain(col("hv")).as("h_old"),
+        simhash64FromHashes(col("hv")).as("h_new"))
+    assert(nullHv.filter(col("h_old") =!= col("h_new")).count() === 0)
 
     // edge shapes: empty-ish arrays, nulls
     val edge = Seq(

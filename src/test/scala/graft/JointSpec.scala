@@ -145,8 +145,10 @@ class JointSpec extends SparkSuite {
         (Option(r.getString(1)), r.getString(3), Option(r.getString(5)))).toMap
 
   test("trainCouplings: trained type coupling beats the zero-coupling start on decode accuracy") {
-    // gold: m2 links to m0 (ORG side), m3 links to m1 (IDENT side) — only a
-    // positive type-agreement coupling can rescue m3 from the id tie-break
+    // the reference trains factor weights against the BP log-likelihood
+    // (joint/JointComputerShared.scala:47-102). Gold: m2 links to m0 (ORG
+    // side), m3 links to m1 (IDENT side) — only a positive type-agreement
+    // coupling can rescue m3 from the id tie-break
     val gold = Seq(
       ("m0", null: String, "ORG", null: String),
       ("m1", null: String, "IDENT", null: String),
@@ -171,6 +173,11 @@ class JointSpec extends SparkSuite {
       "trained couplings must not decode worse than the hand-set start")
     assert(acc(trained) === 1.0,
       "on this fixture the trained coupling must fix the m3 tie")
+    val d = decodeWith(trained)
+    assert(d("m2")._1 === Some("m0"))
+    assert(d("m3")._1 === Some("m1"),
+      "the trained coupling must fix the m3 tie under BP decode")
+    assert(d("m2")._2 === "ORG" && d("m3")._2 === "IDENT")
     // T2 cadence table for the joint objective
     val t = JointInference.couplingTraceDF(spark, trace)
     assert(t.count() === 8L)
@@ -217,8 +224,7 @@ class JointSpec extends SparkSuite {
     assert(c === JointInference.Couplings(0, 0, 0, 0))
   }
 
-  // ---- loopy sum-product BP (the reference's actual inference; the
-  // ---- mean-field kernel is its approximation) ---------------------------
+  // ---- loopy sum-product BP: exact on trees, a no-op at zero couplings --
 
   test("BP is EXACT on a tree-structured conversation (brute-force enumeration)") {
     // chain w0 <- w1 <- w2: factors F(A1,T1,T0), F(A2,T2,T1) and (wiki part)
@@ -264,7 +270,7 @@ class JointSpec extends SparkSuite {
 
     val out = JointInference.infer(spark, priors, sc, coupling = kap,
       iters = 30, wikiScores = Some(grid), wikiCoupling = kapW,
-      wikiNilScore = nil, algorithm = "bp")
+      wikiNilScore = nil)
       .collect().map(r => r.getString(0) ->
         (Option(r.getString(1)), r.getDouble(2), r.getString(3), r.getDouble(4),
           Option(r.getString(5)), r.getDouble(6))).toMap
@@ -291,65 +297,33 @@ class JointSpec extends SparkSuite {
     assert(out("w2")._5 === Some("T_A"))
     assert(math.abs(out("w2")._6 - exW(0)) < 1e-9,
       s"P(W2=T_A): bp=${out("w2")._6} exact=${exW(0)}")
-
-    // the mean-field kernel is APPROXIMATE on the same tree — BP's
-    // exactness is a real fidelity upgrade, not a relabeling
-    val mf = JointInference.infer(spark, priors, sc, coupling = kap,
-      iters = 30, wikiScores = Some(grid), wikiCoupling = kapW,
-      wikiNilScore = nil).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(math.abs(mf("w2") - exact._2(0)) > 1e-6,
-      "mean-field should differ measurably from the exact marginal here")
   }
 
-  test("BP with zero couplings is a bit-exact no-op, and flips the same tie MF flips") {
-    // zero couplings: every factor is constant 1, so BP beliefs are exactly
-    // the unaries — identical to the mean-field zero-coupling result
-    val mfZero = JointInference.infer(spark, priors, scored, coupling = 0.0, iters = 4)
-      .collect().map(r => (r.getString(0), Option(r.getString(1)), r.getDouble(2),
-        r.getString(3), r.getDouble(4))).sortBy(_._1).toSeq
-    val bpZero = JointInference.infer(spark, priors, scored, coupling = 0.0, iters = 4,
-      algorithm = "bp")
-      .collect().map(r => (r.getString(0), Option(r.getString(1)), r.getDouble(2),
-        r.getString(3), r.getDouble(4))).sortBy(_._1).toSeq
-    assert(bpZero === mfZero)
-    // the m3 tie the type-agreement coupling resolves under MF resolves the
-    // same way under BP (same factor family, same fixed-point direction)
-    val bp = JointInference.infer(spark, priors, scored, coupling = 1.5,
-      iters = 10, algorithm = "bp")
-      .collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(bp("m2") === Some("m0"))
-    assert(bp("m3") === Some("m1"),
-      "type agreement must rescue m3 from the id tie-break under BP too")
-  }
-
-  test("trainCouplings under the BP kernel: the reference's training regime") {
-    // The reference trains factor weights against the BP log-likelihood
-    // (joint/JointComputerShared.scala:47-102); the mean-field training
-    // test above uses the MF surrogate. Same gold, same fixture — the BP
-    // objective must also learn a positive type coupling, decrease its
-    // -loglik, and fix the m3 tie when decoding WITH the BP kernel.
-    val gold = Seq(
-      ("m0", null: String, "ORG", null: String),
-      ("m1", null: String, "IDENT", null: String),
-      ("m2", "m0", "ORG", null: String),
-      ("m3", "m1", "IDENT", null: String))
-      .toDF("mention_id", "g_ant", "g_type", "g_wiki")
-    val (trained, trace) = JointInference.trainCouplings(spark, priors, scored,
-      gold, epochs = 8, eta = 1.0, iters = 10, algorithm = "bp")
-    info(s"bp-trained couplings: $trained  trace: ${trace.map(_._2).map(l => f"$l%.3f")}")
-    assert(trained.coref > 0.0,
-      "gold agreement evidence must push the coupling up under the BP objective")
-    assert(trace.last._2 < trace.head._2, "BP -loglik must decrease")
-    val d = JointInference.infer(spark, priors, scored, coupling = trained.coref,
-      nerCoupling = trained.ner, wikiCoupling = trained.wiki,
-      wikiNilScore = trained.wikiNil, iters = 10, algorithm = "bp")
+  test("BP with zero couplings is a no-op: the beliefs are the unaries") {
+    // zero couplings: every factor is constant 1, so every message is 1 and
+    // the beliefs are the normalized unaries — exp(score) per arc against
+    // exp(new_bias) = 1 for the antecedent, the prior for the type
+    val zero = JointInference.infer(spark, priors, scored, coupling = 0.0, iters = 4)
       .collect().map(r => r.getString(0) ->
-        (Option(r.getString(1)), r.getString(3))).toMap
-    assert(d("m2")._1 === Some("m0"))
-    assert(d("m3")._1 === Some("m1"),
-      "BP-trained coupling must fix the m3 tie under BP decode")
-    assert(d("m2")._2 === "ORG" && d("m3")._2 === "IDENT")
+        (Option(r.getString(1)), r.getDouble(2), r.getString(3), r.getDouble(4))).toMap
+    val e1 = math.exp(1.0); val e3 = math.exp(3.0)
+    val pr = priors.collect().map(r => r.getString(1) -> r.getSeq[Double](2)).toMap
+    val expected = Map(
+      // m2: one arc (score 3) against the new-entity arc
+      "m2" -> (Some("m0"), e3 / (e3 + 1.0)),
+      // m3: two tied arcs (score 1): the lowest antecedent id wins the tie
+      "m3" -> (Some("m0"), e1 / (2 * e1 + 1.0)),
+      // m0, m1: no candidates
+      "m0" -> (None, 1.0), "m1" -> (None, 1.0))
+    expected.foreach { case (id, (ant, pAnt)) =>
+      val (gotAnt, gotP, tpe, pType) = zero(id)
+      assert(gotAnt === ant, s"antecedent of $id")
+      assert(math.abs(gotP - pAnt) < 1e-12, s"p_ant of $id: $gotP vs $pAnt")
+      val p = pr(id); val z = p.sum
+      val bt = p.indices.maxBy(t => (p(t), -t))
+      assert(tpe === JointInference.Types(bt), s"type of $id")
+      assert(math.abs(pType - p(bt) / z) < 1e-12, s"p_type of $id: $pType")
+    }
   }
 
   test("typePriors derive from surface sem-class") {

@@ -54,6 +54,23 @@ class ResumeSpec extends SparkSuite {
     assert(io.readIfCurrent(spark, "t", "other").isEmpty, "lineage mismatch must miss")
   }
 
+  test("readOrCommit resumes a current snapshot and fails loudly, naming the " +
+      "stage, when a fresh commit cannot be read back") {
+    import spark.implicits._
+    val io = new TableIO(freshDir("readorcommit"))
+    var computed = 0
+    def rows = { computed += 1; Seq(("a", 1L), ("b", 2L)).toDF("k", "v") }
+    assert(io.readOrCommit(spark, "t", "lin-1")(rows).count() === 2L)
+    assert(io.readOrCommit(spark, "t", "lin-1")(rows).count() === 2L)
+    assert(computed === 1, "a current snapshot must resume, not recompute")
+    // a double quote in the token cuts the manifest's lineage field short, so
+    // the snapshot commits but never reads back as current
+    val e = intercept[IllegalStateException] {
+      io.readOrCommit(spark, "u", "lin\"2")(rows)
+    }
+    assert(e.getMessage.contains("'u'"), e.getMessage)
+  }
+
   test("re-run resumes from snapshots (no recompute) and is identical") {
     val dir = freshDir("b")
     val cfg = Pipeline.Config(mentionGenerator = "all", checkpointDir = Some(dir))

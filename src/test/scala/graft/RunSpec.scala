@@ -216,7 +216,7 @@ class RunSpec extends SparkSuite {
         graft.joint.JointInference.typePriors(res.mentions),
         res.scored.select(col("ant_id"), col("cur_id"), col("score")),
         coupling = 1.0, iters = 6,
-        evidence = Some(ev), nerCoupling = 1.5, algorithm = "bp")
+        evidence = Some(ev), nerCoupling = 1.5)
     }
     def diffs(a: org.apache.spark.sql.DataFrame): Long = joint.alias("x")
       .join(a.alias("y"), "mention_id")

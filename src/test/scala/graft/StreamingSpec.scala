@@ -550,6 +550,11 @@ class StreamingSpec extends SparkSuite {
     var best = Map.empty[String, (String, Double)]
     var seen = Set.empty[String]
     var st = StreamingClusters.empty(spark)
+    // the same emissions folded again with the driver edit bound at 0: every
+    // non-empty batch takes the distributed fold (updateDistributed)
+    var stDist = StreamingClusters.empty(spark)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
     var repoints = 0
     for (slice <- slices) {
       // streamingDecode emits at most ONE row per mention per microbatch —
@@ -567,17 +572,25 @@ class StreamingSpec extends SparkSuite {
         .map { case (c, (a, s)) => (c, a, s) }.toSeq
       repoints += emissions.count(e => preBest.contains(e._1))
       seen ++= emissions.iterator.flatMap(e => Seq(e._1, e._2))
-      st = StreamingClusters.update(spark, st,
-        emissions.toSeq.toDF("cur_id", "ant_id", "score"))
+      val batch = emissions.toSeq.toDF("cur_id", "ant_id", "score")
+      st = StreamingClusters.update(spark, st, batch)
+      val savedBound = Clustering.maxDriverEditEdges
+      stDist = try {
+        Clustering.maxDriverEditEdges = 0
+        StreamingClusters.update(spark, stDist, batch)
+      } finally Clustering.maxDriverEditEdges = savedBound
       // exactness after EVERY batch: incremental == full recompute over
       // everything decoded so far (including ants a later wave superseded)
       val expected = Clustering.cluster(spark,
           seen.toSeq.toDF("mention_id"),
           best.toSeq.map { case (c, (a, _)) => (c, a) }.toDF("cur_id", "ant_id"))
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val got = st.clusters.collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
+      val got = pairs(st.clusters)
       assert(got === expected, s"divergence after microbatch ${st.batches}")
+      assert(pairs(stDist.clusters) === got,
+        s"distributed fold clusters diverge after microbatch ${st.batches}")
+      assert(pairs(stDist.backptrs) === pairs(st.backptrs),
+        s"distributed fold backptrs diverge after microbatch ${st.batches}")
     }
     assert(repoints > 0, "the replay must exercise at least one C2 re-point")
     assert(st.batches === slices.length.toLong)

@@ -21,7 +21,11 @@ class TrainerSpec extends SparkSuite {
       .select(col("mention_id"), col("entity_id").cast("string").as("entity_id")).cache()
 
     val labeled = Trainer.labeledPairs(Blocking.candidatePairs(mentions), mentions, gold)
+    val sc = spark.sparkContext
+    val pinsBefore = Pins.ids(sc)
     val (learned, trace) = Trainer.trainRanking(labeled, epochs = 40, eta = 2.0)
+    assert((Pins.ids(sc) -- pinsBefore).isEmpty,
+      "trainRanking must release every pin it takes (one leaked per kFoldModels fold)")
     info(s"loss: first=${trace.head.loss} last=${trace.last.loss}")
     info(s"weights: ${Scoring.FeatureNames.zip(learned.values).mkString(", ")}")
     assert(trace.last.loss < trace.head.loss * 0.5, "loss must decrease substantially")
