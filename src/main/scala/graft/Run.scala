@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.TableIO
+import graft.io.{Json, TableIO}
 import graft.pipeline._
 import graft.sources.Transcripts
 import graft.train.{ModelIO, Trainer}
@@ -304,7 +304,7 @@ object Run {
     val frag =
       f""""trained_epochs":$epochs,"train_loss_first":${trace.head._2}%.6f,""" +
       f""""train_loss_last":${trace.last._2}%.6f,"model_snapshot":$snap,""" +
-      s""""model_token":"$token","model_features":$nFeats,"""
+      s""""model_token":${Json.quote(token)},"model_features":$nFeats,"""
     (SparseModel(w, tag), frag)
   }
 
@@ -372,10 +372,10 @@ object Run {
     import graft.streaming.{StreamingAssembly, StreamingClusters}
     val t0 = System.nanoTime()
     val linkThreshold = opt.get("link-threshold").map(_.toDouble).getOrElse(0.0)
-    // band default MUST mirror the batch Blocking.Config default (30), not
-    // streamingBandPairs' own signature default — a narrower stream band
-    // silently drops far-antecedent arcs the batch pipeline scores, and the
-    // maintained clusters stop equalling the batch decode (found by RunSpec)
+    // band default: the batch Blocking.Config width, as in
+    // streamingBandPairs' own signature — a narrower stream band drops
+    // far-antecedent arcs the batch pipeline scores, and the maintained
+    // clusters stop equalling the batch decode (found by RunSpec)
     val band = opt.get("band").map(_.toInt).getOrElse(Blocking.Config().maxConvDist)
     val watermark = opt.getOrElse("watermark", "10 minutes")
     val cadence = opt.get("commit-cadence").map(_.toInt).getOrElse(1)
@@ -475,8 +475,9 @@ object Run {
       if (nLive == 0) 0L
       else st.clusters.agg(countDistinct(col("cluster_id"))).head.getLong(0)
     val wallSec = (System.nanoTime() - t0) / 1e9
-    val metrics = s"""{"input":"$input","mode":"$mode","streaming":true,""" +
-      s""""config":"$token","folds":${st.batches},""" +
+    val metrics =
+      s"""{"input":${Json.quote(input)},"mode":${Json.quote(mode)},"streaming":true,""" +
+      s""""config":${Json.quote(token)},"folds":${st.batches},""" +
       s""""resumed_from_fold":$initialBatches,""" +
       s""""linked_mentions":$nLive,"clusters":$nClusters,""" +
       f""""wall_sec":$wallSec%.3f}"""
@@ -647,7 +648,7 @@ object Run {
           val f1 = Ner.chunkF1(chunks, properExtents).collect()(0)
           f""""ner_chunk_f1":${f1.getAs[Double]("f1")}%.6f,"""
         } else ""
-        (trainNerFrag + s""""ner_config":"$nerToken","ner_chunks":$nChunks,""" +
+        (trainNerFrag + s""""ner_config":${Json.quote(nerToken)},"ner_chunks":$nChunks,""" +
           f1Frag, wOpt)
       }
     } else ("", None)
@@ -790,7 +791,7 @@ object Run {
         } else ""
         val nerCplFrag =
           if (cplNer != 0.0) s""""joint_ner_coupling":$cplNer,""" else ""
-        trainJointFrag + s""""joint_config":"$jointToken",""" +
+        trainJointFrag + s""""joint_config":${Json.quote(jointToken)},""" +
           s""""joint_coupling":$cplCoref,"joint_iters":$iters,""" +
           nerCplFrag + wikiFrag + s""""joint_flips":$flips,"""
       }
@@ -819,7 +820,7 @@ object Run {
           s"${optId("link-aux")}|$choose")
         out.commit("links", links, linkToken)
         val nLinked = links.count()
-        s""""link_config":"$linkToken","linked_mentions":$nLinked,"""
+        s""""link_config":${Json.quote(linkToken)},"linked_mentions":$nLinked,"""
       }
     } else ""
     // S4 operational face: the reference predict driver's actual output
@@ -831,13 +832,14 @@ object Run {
       graft.io.ConllWriter.write(
         graft.io.ConllWriter.formatLines(transcripts, res.mentions, res.clusters),
         dir)
-      s""""conll_out":"$dir","""
+      s""""conll_out":${Json.quote(dir)},"""
     }.getOrElse("")
     val evalFrag = if (opt.get("evaluate").exists(_.toBoolean))
       evaluateFragment(spark, opt, cfg, res) else ""
     val nMentions = res.mentions.count()
     val nClusters = res.clusters.agg(countDistinct(col("cluster_id"))).head.getLong(0)
-    val metrics = s"""{"input":"$input","mode":"$mode","config":"${cfg.token}",""" +
+    val metrics = s"""{"input":${Json.quote(input)},"mode":${Json.quote(mode)},""" +
+      s""""config":${Json.quote(cfg.token)},""" +
       trainFrag + jointFrag + nerFrag + linkFrag + conllFrag + evalFrag +
       s""""mentions":$nMentions,"clusters":$nClusters,""" +
       f""""wall_sec":$wallSec%.3f}"""

@@ -64,19 +64,10 @@ package object functions {
     id.substr(lit(1), length(id) - lit(MentionIdSuffixLen))
 
   /** Word shape, run-length compressed (F2 analog:
-    * `/root/reference/.../ner/NerFeaturizer.scala:171-188`):
-    * uppercase→X, lowercase→x, digit→d, other kept; runs >2 collapsed. */
-  def wordShape(s: Column): Column = {
-    val mapped = regexp_replace(regexp_replace(regexp_replace(s,
-      "[A-Z]", "X"), "[a-z]", "x"), "[0-9]", "d")
-    // collapse runs of length >= 3 to two chars + 'e' marker
-    regexp_replace(mapped, "(.)\\1{2,}", "$1$1e")
-  }
-
-  /** RE2-portable word shape: like [[wordShape]] but collapses only X/x/d
-    * runs (per-class `{3,}` quantifiers instead of a backreference, which
-    * RE2 — and therefore the DuckDB oracle — cannot express). Identical to
-    * [[wordShape]] on alphanumeric tokens. */
+    * `/root/reference/.../ner/NerFeaturizer.scala:171-188`): uppercase→X,
+    * lowercase→x, digit→d, other kept; X/x/d runs >2 collapse to two chars +
+    * an 'e' marker. Per-class `{3,}` quantifiers instead of a backreference,
+    * so the expression is RE2-portable (the DuckDB oracle runs it too). */
   def wordShapePortable(s: Column): Column = {
     val mapped = regexp_replace(regexp_replace(regexp_replace(s,
       "[A-Z]", "X"), "[a-z]", "x"), "[0-9]", "d")
@@ -115,18 +106,9 @@ package object functions {
       concat_ws(":", lit(s"b$b") +: parts.map(_.cast("string")): _*)
     }: _*)
 
-  /** Portable (DuckDB-reproducible) MinHash over shingles: lexicographic min
-    * of seeded md5 hex digests. Slower than the xxhash64 path — used by the
-    * oracle-checked harness queries; the engine path uses
-    * [[minhashSignature]]. */
-  def minhashSignatureMd5(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingles, sh => md5(concat(lit(s"$seed:"), sh))))
-    }: _*)
-
   /** One minhash slot (seeded min over shingle hashes), engine ("xxhash64")
     * or oracle-portable ("md5") implementation. Slot `seed` here equals
-    * signature element `seed+1` of [[minhashSignature]]/[[minhashSignatureMd5]]. */
+    * signature element `seed+1` of [[minhashSignature]]. */
   def minhashOne(shingles: Column, seed: Int, impl: String): Column =
     if (impl == "md5")
       array_min(transform(shingles, sh => md5(concat(lit(s"$seed:"), sh))))
@@ -249,18 +231,6 @@ package object functions {
       .otherwise("OTHER")
   }
 
-  /** F5 frequency-backoff token (`PairwiseIndexingFeaturizerJoint.scala:478-486`
-    * backs rare words off to their POS; parse-free analog: rare tokens back
-    * off to their word shape). Relational: join the lexical count table,
-    * keep the token when frequent enough. */
-  def withLexicalBackoff(df: DataFrame, tok: Column, counts: DataFrame,
-      cutoff: Int = 20): DataFrame =
-    df.join(counts.select(col("tok").as("__bk_tok"), col("n").as("__bk_n")),
-        tok === col("__bk_tok"), "left")
-      .withColumn("backed_tok",
-        when(col("__bk_n") >= cutoff, tok).otherwise(wordShape(tok)))
-      .drop("__bk_tok", "__bk_n")
-
   /** Bounded driver fetch in ONE job: `df.take(n)` escalates incrementally
     * (`spark.sql.limit.initialNumPartitions` = 1, ×4 per retry — up to 4
     * sequential jobs on a 32-partition input) which is right when a few
@@ -281,12 +251,4 @@ package object functions {
       case None => conf.unset(k)
     }
   }
-
-  /** W2 deterministic shuffle: content-derived, seed-stable global order (the
-    * reference shuffles training docs with a fixed-seed RNG,
-    * `/root/reference/.../coref/CorefSystem.scala:128`). A seeded-hash sort
-    * key gives the same pseudo-random order on any cluster size or
-    * partitioning; the id tie-break makes it total. */
-  def deterministicShuffle(df: DataFrame, id: Column, seed: Long = 0L): DataFrame =
-    df.orderBy(xxhash64(lit(seed), id), id)
 }

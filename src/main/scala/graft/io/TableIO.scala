@@ -11,9 +11,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (`/opt/spark/jars`, offline coursier), so this seam provides the Iceberg
   * properties the pipeline actually relies on — atomic snapshot commit,
   * resume-by-snapshot, per-partition counters + lineage in a manifest — over
-  * Parquet + a JSON commit log. A real Iceberg catalog binding drops in behind
-  * the same four methods when the runtime jar is on the spark-submit
-  * classpath.
+  * Parquet + a JSON commit log, written and parsed by [[Json]]. A real
+  * Iceberg catalog binding drops in behind the same four methods when the
+  * runtime jar is on the spark-submit classpath.
   *
   * All path operations go through the Hadoop FileSystem API (not java.nio):
   * the entry point documents spark-submit against a cluster, where `rootDir`
@@ -83,19 +83,16 @@ class TableIO(rootDir: String) {
       .collect()
       .map(r => (r.getString(0).split('/').last, r.getLong(1)))
       .sortBy(_._1)
-    val counters = stats
-      .map { case (f, n) => s"""{"file":"$f","rows":$n}""" }
-      .mkString("[", ",", "]")
-    val rowCount = stats.map(_._2).sum
-    val m =
-      s"""{"stage":"${stage}","snapshot":$snap,"lineage":"${lineage}",
-         |"rowCount":$rowCount,"partitionCounters":$counters}""".stripMargin.replace("\n", "")
+    val m = Json.obj().put("stage", stage).put("snapshot", snap)
+      .put("lineage", lineage).put("rowCount", stats.map(_._2).sum)
+    val counters = m.putArray("partitionCounters")
+    stats.foreach { case (file, n) => counters.addObject().put("file", file).put("rows", n) }
     val dir = stageDir(stage)
     val f = fs(dir)
     f.mkdirs(dir)
     val tmp = new Path(dir, s".snap-$snap.json.tmp")
     val out = f.create(tmp, true)
-    try out.write(m.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(Json.write(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val dst = new Path(dir, s"snap-$snap.json")
     if (!f.rename(tmp, dst))
@@ -103,8 +100,15 @@ class TableIO(rootDir: String) {
     snap
   }
 
-  private val LineageRe = """"lineage":"([^"]*)"""".r
-  private val RowCountRe = """"rowCount":(\d+)""".r
+  private def manifestJson(stage: String, snap: Int) =
+    manifest(stage, snap).flatMap(Json.parse)
+
+  private def lineageOf(m: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+    Option(m.get("lineage")).filter(_.isTextual).map(_.asText)
+
+  /** The lineage token a committed snapshot's manifest records. */
+  def lineage(stage: String, snap: Int): Option[String] =
+    manifestJson(stage, snap).flatMap(lineageOf)
 
   /** Read a committed snapshot (latest when `snap` is None); None when the
     * stage has no committed snapshot, the lineage token does not match, or
@@ -121,9 +125,9 @@ class TableIO(rootDir: String) {
       snap: Option[Int] = None): Option[DataFrame] = {
     val s = snap.orElse(latestSnapshot(stage))
     s.flatMap { k =>
-      manifest(stage, k) match {
-        case Some(m) if LineageRe.findFirstMatchIn(m).exists(_.group(1) == lineage) =>
-          val expected = RowCountRe.findFirstMatchIn(m).map(_.group(1).toLong)
+      manifestJson(stage, k) match {
+        case Some(m) if lineageOf(m).contains(lineage) =>
+          val expected = Option(m.get("rowCount")).map(_.asLong)
           try {
             val df = spark.read.parquet(new Path(stageDir(stage), s"snap-$k").toString)
             if (expected.forall(_ == df.count())) Some(df) else None

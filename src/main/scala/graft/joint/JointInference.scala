@@ -529,8 +529,7 @@ object JointInference {
     * `GeneralTrainer.trainAdagrad` driving BP factor-weight gradients
     * (`JointComputerShared.addUnregularizedStochasticGradient`).
     *
-    * @return (trained couplings, per-epoch (epoch, -loglik) trace — a T2
-    *         cadence table via [[couplingTraceDF]]) */
+    * @return (trained couplings, per-epoch (epoch, -loglik) trace) */
   def trainCouplings(spark: SparkSession, mentionPriors: DataFrame,
       scored: DataFrame, gold: DataFrame, epochs: Int = 8, eta: Double = 0.5,
       h: Double = 0.05, iters: Int = 6, init: Couplings = Couplings(0, 0, 0, 0),
@@ -577,11 +576,5 @@ object JointInference {
       }
       (Couplings(w(0), w(1), w(2), w(3)), trace.toSeq)
     }
-  }
-
-  /** T2 cadence table for the joint objective: `(epoch, loss)` relation. */
-  def couplingTraceDF(spark: SparkSession, trace: Seq[(Int, Double)]): DataFrame = {
-    import spark.implicits._
-    trace.toDF("epoch", "loss")
   }
 }

@@ -1,7 +1,6 @@
 package graft.linking
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Entity linking (SURVEY.md §2.9, L1-L4 + F12) — the reference's `wiki/`
@@ -141,15 +140,6 @@ object Linking {
         coalesce(col("dst"), col("title")).as("title"), col("dscore"))
       .groupBy(col("mention_id"), col("title"))
       .agg(max(col("dscore")).as("dscore"))
-  }
-
-  /** W5: top-k titles per surface from the dictionary (the reference's
-    * per-surface candidate shortlist, `WikipediaTitleGivenSurfaceDB:34-60`)
-    * — count-descending, name tie-break. */
-  def topTitlesPerSurface(dict: DataFrame, k: Int = 3): DataFrame = {
-    val w = Window.partitionBy(col("surface"))
-      .orderBy(col("cnt").desc, col("title").asc)
-    dict.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** A12 wikification eval (`wiki/WikificationEvaluator.scala`): accuracy of

@@ -178,8 +178,7 @@ object Ner {
   /** B6 marginal-threshold pruning (`ner/NerPruner.scala:1-98`, default −9):
     * per-token label domain = labels whose LOG posterior is within
     * `logThreshold` of the best label's — the domain the joint factor graph
-    * searches. Supersedes the emission-margin heuristic of [[labelDomains]]
-    * (kept as the cheap no-inference variant). */
+    * searches. */
   def marginalDomains(fb: DataFrame, logThreshold: Double = -9.0): DataFrame = {
     val best = greatest(col("m_o"), col("m_b"), col("m_i"))
     val cut = best * math.exp(logThreshold)
@@ -205,14 +204,4 @@ object Ner {
     * — one aggregation, no driver-side counts (shared with A7). */
   def chunkF1(pred: DataFrame, gold: DataFrame): DataFrame =
     graft.pipeline.Eval.extentPRF(pred, gold)
-
-  /** B6 label-domain pruning: per-token labels within `margin` of the best
-    * emission — the factor-graph domain the joint model would search. */
-  def labelDomains(emissions: DataFrame, margin: Double = 3.0): DataFrame = {
-    val best = greatest(col("e_o"), col("e_b"), col("e_i"))
-    emissions.withColumn("domain", filter(array(
-      when(col("e_o") >= best - margin, "O"),
-      when(col("e_b") >= best - margin, "B"),
-      when(col("e_i") >= best - margin, "I")), _.isNotNull))
-  }
 }

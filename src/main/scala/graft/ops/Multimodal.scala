@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
-  * metadata, decoded/feature-extracted by a batch kernel.
-  *
-  * No image/audio codecs exist in this container, so [[decodeStub]] is a
-  * clearly-marked deterministic FAKE decoder — the Spark-side plumbing
-  * (schema, batch iteration shape, partition behavior) is real and tested;
-  * swapping in a real codec only changes the function body.
+  * metadata. No image/audio codecs exist in this build, so the payload is a
+  * deterministic stand-in; a real codec reads the same columns.
   */
 object Multimodal {
 
@@ -23,31 +19,5 @@ object Multimodal {
       (lit(16) + ascii(substring(hexCol, 1, 1))).as("width"),
       (lit(16) + ascii(substring(hexCol, 2, 1))).as("height"),
       lit("fake/rgb8").as("media_type"))
-  }
-
-  case class MediaRow(doc_id: Long, payload: Array[Byte], width: Int, height: Int)
-  case class MediaFeatures(doc_id: Long, mean_byte: Double, resized_w: Int,
-      resized_h: Int, frame_count: Int)
-
-  /** STUB decode / feature-extract / resize / frame-sample kernel.
-    * Deterministic fake: features derive from the payload bytes. The
-    * `mapPartitions` shape (iterator-in/iterator-out, batch-friendly,
-    * constant memory) is exactly where a Pandas-UDF/ONNX decoder would sit
-    * on a real cluster. */
-  def decodeStub(spark: SparkSession, media: DataFrame,
-      targetW: Int = 32, targetH: Int = 32): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"), col("width"), col("height"))
-      .as[MediaRow]
-      .mapPartitions { rows =>
-        rows.map { r =>
-          // ??? real codec goes here; deterministic fake below
-          val mean = if (r.payload.isEmpty) 0.0
-            else r.payload.map(b => (b & 0xff).toDouble).sum / r.payload.length
-          MediaFeatures(r.doc_id, math.rint(mean * 1e6) / 1e6,
-            math.min(r.width, targetW), math.min(r.height, targetH),
-            1 + (r.payload.headOption.map(b => (b & 0xff) % 4).getOrElse(0)))
-        }
-      }
   }
 }

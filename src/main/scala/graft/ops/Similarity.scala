@@ -41,9 +41,6 @@ object Similarity {
       org.apache.spark.sql.graft.ColumnBridge.expression(a),
       org.apache.spark.sql.graft.ColumnBridge.expression(b)))
 
-  def cosine(a: Column, b: Column): Column =
-    dot64(a, b) / (sqrt(dot64(a, a)) * sqrt(dot64(b, b)))
-
   private def cosPre(a: Column, b: Column, na: Column, nb: Column): Column =
     dot64(a, b) / (na * nb)
 
@@ -141,46 +138,8 @@ object Similarity {
       .select(col("vec_id").as("cell_id"), col("emb").as("c_emb"),
         col("nrm").as("c_nrm"))
 
-  /** IVF with Lloyd-refined centroids — the quality upgrade of [[annIvf]]'s
-    * sampled quantizer (spec-gated; the sampled variant stays the
-    * oracle-checked baseline, k-means being iterative): `iters` rounds of
-    * assign (nearest centroid by cosine, centroids broadcast) +
-    * re-estimate (element-wise mean per cell via `posexplode` +
-    * `groupBy(cell, pos)` — map-side combined). Each round is one broadcast
-    * join and two hash aggregations: the textbook distributed k-means
-    * shape, no driver-side data. Cells that lose all members drop out
-    * (the probe list just gets shorter). */
-  def annIvfKmeans(corpus: DataFrame, k: Int = 5, queryMod: Int = 50,
-      cells: Int = 16, probes: Int = 2, iters: Int = 3): DataFrame =
-    ivfSearch(corpus, kmeansCentroids(corpus, cells, iters), k, queryMod, probes)
-
-  /** Lloyd refinement of [[sampledCentroids]]. */
-  def kmeansCentroids(corpus: DataFrame, cells: Int, iters: Int): DataFrame = {
-    var cents = sampledCentroids(corpus, cells).localCheckpoint(true)
-    for (_ <- 0 until iters) {
-      val assigned = corpus.select(col("vec_id"), col("emb"), col("nrm"))
-        .crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("emb"), col("cell_id"),
-          cosPre(col("emb"), col("c_emb"), col("nrm"), col("c_nrm")).as("sim"))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("cell_id"), col("emb")),
-          struct(negate(col("sim")), col("cell_id"))).as("b"))
-        .select(col("b.cell_id").as("cell_id"), col("b.emb").as("emb"))
-      cents = assigned
-        .select(col("cell_id"), posexplode(col("emb")).as(Seq("pos", "v")))
-        .groupBy(col("cell_id"), col("pos")).agg(avg(col("v")).as("m"))
-        .groupBy(col("cell_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("c_emb"))
-        .withColumn("c_nrm", sqrt(dot64(col("c_emb"), col("c_emb"))))
-        .localCheckpoint(true)
-    }
-    cents
-  }
-
-  private def ivfSearch(corpus: DataFrame, cents0: DataFrame, k: Int,
+  private def ivfSearch(corpus: DataFrame, cents: DataFrame, k: Int,
       queryMod: Int, probes: Int): DataFrame = {
-    val cents = cents0
     val wAssign = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cell_id").asc)
     val assigned = corpus.select(col("vec_id"), col("emb"), col("nrm"))

@@ -17,9 +17,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Transcripts {
 
-  /** Number of turns per conversation in the derived view. */
-  val TurnsPerConv = 20
-
   /** Common-dialect SQL (valid in both Spark SQL and DuckDB) defining the
     * `transcripts` CTE over `events` and `customer`. Turn 0 of every
     * conversation is always a named-entity template so that pronoun chains
@@ -63,17 +60,6 @@ object Transcripts {
   def load(spark: SparkSession, sfDir: String): DataFrame = {
     registerBase(spark, sfDir)
     spark.sql(withCte("SELECT * FROM transcripts"))
-  }
-
-  /** W6: size-capped read — a deterministic hash sample of `num`/`denom`
-    * conversations (the reference's `-trainSize`/`-testSize` caps,
-    * `Driver.java:84-90`, re-expressed scale-safely: a content-derived
-    * conversation filter pushes into the scan, unlike `limit` which is a
-    * global single-task barrier and row-order-dependent). */
-  def loadCapped(spark: SparkSession, sfDir: String, num: Int, denom: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(num >= 0 && num <= denom && denom > 0)
-    load(spark, sfDir).filter(pmod(xxhash64(col("conv_id")), lit(denom)) < num)
   }
 
   /** Register every driver parquet table that the harness queries use.

@@ -10,12 +10,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * writer (`ConllDocReader.readConllDocsProcessStreaming`,
   * `EntitySystem.scala:205-214`). Spark-natively:
   *
-  *  - mention extraction is stateless per turn → runs unchanged on a stream;
-  *  - conversation assembly is a session window on `ts` keyed by `conv_id`
-  *    with a watermark for late turns;
-  *  - per-conversation running state (dense mention sequence numbers, the
-  *    stream analog of the canonical-order window) is
-  *    `flatMapGroupsWithState`.
+  *  - mention extraction and property enrichment are stateless per turn →
+  *    they run unchanged on a stream;
+  *  - band pairing keeps per-conversation running state (the band window and
+  *    dense mention sequence numbers, the stream analog of the
+  *    canonical-order window) in `flatMapGroupsWithState`;
+  *  - scoring is the batch expressions, stateless on the pair stream, and
+  *    decode is a running per-mention argmax, again keyed state.
   */
 object StreamingAssembly {
 
@@ -43,119 +44,6 @@ object StreamingAssembly {
         graft.functions.mentionId(col("conv_id"), col("turn_idx"), col("pos"))
           .as("mention_id"),
         col("role"), col("ts"))
-  }
-
-  /** Conversation sessions: watermarked session window per conv_id —
-    * (conv_id, session start/end, n_turns, n_chars). */
-  def conversationSessions(stream: DataFrame, gap: String = "30 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .groupBy(col("conv_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_turns"), sum(length(col("text"))).as("n_chars"))
-      .select(col("conv_id"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n_turns"), col("n_chars"))
-
-  /** Streaming exact dedup: first-seen wins per content hash, late
-    * duplicates dropped with watermark-bounded state — the streaming face of
-    * the batch hash-groupBy dedup (graft.ops.Dedup.exact). At scale the
-    * state store is hash-partitioned by the content key and the watermark
-    * bounds it to the dedup horizon. */
-  def streamingExactDedup(stream: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withColumn("text_md5", org.apache.spark.sql.functions.md5(col("text").cast("binary")))
-      .withWatermark("ts", watermark)
-      // dropDuplicatesWithinWatermark (not dropDuplicates): with the plain
-      // variant the event-time column is absent from the key set, so the
-      // watermark is ignored for state cleanup and the store grows without
-      // bound; the WithinWatermark variant keeps first-seen-wins semantics
-      // while actually evicting state past the watermark horizon.
-      .dropDuplicatesWithinWatermark("text_md5")
-
-  case class BandDoc(bk: String, doc_id: Long, sh: Seq[String], ts: java.sql.Timestamp)
-  /** Per-doc event time (ms) rides along so hot buckets can be pruned by
-    * watermark on every update, not only by the whole-bucket timeout. */
-  case class BucketState(docs: List[(Long, Seq[String], Long)])
-  case class NearDupHit(doc_a: Long, doc_b: Long, jacc_r: Double)
-
-  /** Streaming MinHash-LSH near-dup — the streaming face of
-    * [[graft.ops.Dedup.minhashLsh]]: shingle → band keys (same
-    * `lshBandKeysDirect` expressions as batch) → per-band-bucket keyed state
-    * (`flatMapGroupsWithState`) holding the bucket's recent docs; each
-    * arriving doc is exact-Jaccard-verified against the bucket state and
-    * emits `(doc_a, doc_b, jacc_r)` for hits above the threshold. A pair
-    * colliding in several bands emits once per band — consumers `distinct`
-    * (the batch operator dedups candidates the same way, just pre-verify).
-    *
-    * State is bounded two ways: (1) on every update, docs whose event time
-    * has fallen more than one horizon behind the current watermark are
-    * dropped from the bucket BEFORE the new rows append — so a hot bucket
-    * receiving continuous traffic holds at most one horizon's worth of docs
-    * and the per-record Jaccard verify stays O(docs-per-horizon), not
-    * O(bucket lifetime); (2) a whole-bucket EVENT-TIME TIMEOUT evicts
-    * buckets that stop receiving rows entirely. */
-  def streamingMinhashNearDup(spark: SparkSession, docs: DataFrame,
-      threshold: Double = 0.7, minhashes: Int = 12, bands: Int = 6,
-      watermark: String = "10 minutes", horizonMs: Long = 600000L) = {
-    import spark.implicits._
-    val keyed = docs
-      .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        graft.ops.Dedup.wordShingles(col("text")).as("sh"))
-      .select(explode(graft.functions.lshBandKeysDirect(col("sh"), bands,
-        minhashes / bands, "xxhash64")).as("bk"),
-        col("doc_id"), col("sh"), col("ts"))
-      .as[BandDoc]
-    keyed.groupByKey(_.bk)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: String, rows: Iterator[BandDoc], state: GroupState[BucketState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty[NearDupHit] }
-          else {
-            // prune docs that have aged past the watermark horizon FIRST —
-            // this is what bounds hot buckets that never stop receiving rows
-            // (the timeout below only fires on buckets that go quiet)
-            val cutoffMs = state.getCurrentWatermarkMs() - horizonMs
-            var cur = state.getOption.map(_.docs).getOrElse(Nil)
-              .filter(_._3 >= cutoffMs)
-            val out = scala.collection.mutable.ArrayBuffer.empty[NearDupHit]
-            var maxTsMs = 0L
-            val batch = rows.toSeq.sortBy(_.doc_id)
-            // null-ts docs are stamped at the batch's max observed event time
-            // (falling back to the current watermark), NOT at epoch 0 —
-            // otherwise they would silently age out of candidacy the moment
-            // the watermark passes one horizon. Retention for ts-less rows is
-            // thus deliberate: they live exactly one horizon from when they
-            // were seen, like any on-time row.
-            val nullStampMs = batch.iterator.filter(_.ts != null).map(_.ts.getTime)
-              .foldLeft(math.max(state.getCurrentWatermarkMs(), 0L))(math.max)
-            batch.foreach { d =>
-              val tsMs = if (d.ts != null) d.ts.getTime else nullStampMs
-              maxTsMs = math.max(maxTsMs, tsMs)
-              if (!cur.exists(_._1 == d.doc_id)) {
-                val shD = d.sh.toSet
-                cur.foreach { case (id, sh0, _) =>
-                  val s0 = sh0.toSet
-                  val inter = s0.intersect(shD).size
-                  val uni = s0.size + shD.size - inter
-                  val j = if (uni == 0) 0.0 else inter.toDouble / uni
-                  if (j >= threshold)
-                    out += NearDupHit(math.min(id, d.doc_id), math.max(id, d.doc_id),
-                      BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-                }
-                cur = (d.doc_id, d.sh, tsMs) :: cur
-              }
-            }
-            state.update(BucketState(cur))
-            // eviction must be armed on EVERY update: on the first micro-batch
-            // the watermark is still 0, and band-key buckets are mostly
-            // singletons that never see another row — skipping the timeout
-            // there would leak their state forever. Anchor on max(event time,
-            // watermark) + horizon (always > current watermark, as required).
-            state.setTimeoutTimestamp(
-              math.max(state.getCurrentWatermarkMs(), maxTsMs) + horizonMs)
-            out.iterator
-          }
-        })
   }
 
   // ---- streaming band scoring + decode (the streaming face of the
@@ -189,15 +77,25 @@ object StreamingAssembly {
 
   /** Streaming B1 band-pair emission: per-conversation keyed state holding
     * the last `maxConvDist` mentions (the band window) plus the running
-    * canonical sequence counter (W1's streaming analog — turns must arrive
-    * in order per conversation). Each arriving mention emits one candidate
-    * pair per in-band buffered antecedent, with both mentions' attributes
-    * attached (so downstream featurize+score is stateless).
+    * canonical sequence counter (W1's streaming analog). Each arriving
+    * mention emits one candidate pair per in-band buffered antecedent, with
+    * both mentions' attributes attached (so downstream featurize+score is
+    * stateless).
+    *
+    * Arrival contract: a conversation's mentions arrive in `(turn_idx,
+    * start)` order — within a micro-batch they are sorted, but across
+    * micro-batches the sequence number is the arrival rank. A file source
+    * that receives each conversation's turns in order keeps the contract.
+    * A violation does not fail: a mention that arrives after a later
+    * position of its conversation takes the next `m_seq`, so it pairs with
+    * the band before it in arrival order, not in position order, and the
+    * arcs differ from the batch band leg.
     *
     * State is bounded two ways: the buffer is trimmed to the band width on
     * every update (≤ maxConvDist mentions per live conversation), and whole
     * conversations are evicted by event-time timeout one horizon past the
-    * watermark. */
+    * watermark; a conversation that resumes after eviction restarts at
+    * `m_seq` 0, with no antecedents. */
   def streamingBandPairs(spark: SparkSession, mentionStream: DataFrame,
       maxConvDist: Int = graft.pipeline.Blocking.Config().maxConvDist,
       watermark: String = "10 minutes",
@@ -342,204 +240,5 @@ object StreamingAssembly {
           }
         })
       .toDF("cur_id", "ant_id", "score")
-  }
-
-  case class OooBandState(nextSeq: Int, lastTurn: Int, lastStart: Int,
-      band: List[BufM], pending: List[MIn])
-
-  /** Stamp for a null event time in the ordered operators: the batch's max
-    * observed ts, floored strictly past the current watermark. The floor
-    * matters — a batch containing ONLY null-ts rows has `maxTsMs = 0`, and
-    * an epoch-0 stamp is `<= wm` forever, so the row would release
-    * instantly and jump ahead of a held earlier position (the exact defect
-    * the stamping exists to prevent). Floored rows wait for the next
-    * watermark advance, or the conversation timeout. Single definition for
-    * [[streamingBandPairsOrdered]] and [[sequenceTurnsOrdered]]. */
-  private def nullTsStamp(maxTsMs: Long, wm: Long): java.sql.Timestamp =
-    new java.sql.Timestamp(math.max(maxTsMs, wm + 1L))
-
-  /** Position-sorted PREFIX release shared by the ordered operators: rows
-    * leave only while the head of the position order is past the
-    * watermark, so a ready row never overtakes a still-held earlier
-    * position — the release frontier is monotone and sequence order equals
-    * position order. Returns (ready-in-order, still-held). */
-  private def releasePrefix[T](pending: List[T], wm: Long,
-      ts: T => java.sql.Timestamp, pos: Ordering[T]): (List[T], List[T]) = {
-    val sorted = pending.sorted(pos)
-    val ready = sorted.takeWhile(t => ts(t).getTime <= wm)
-    (ready, sorted.drop(ready.length))
-  }
-
-  /** Out-of-order-tolerant streaming band pairing (round-4 verdict #6):
-    * same contract as [[streamingBandPairs]], but arrivals are BUFFERED in
-    * per-conversation state and released in `(turn_idx, start)` order only
-    * once the watermark has passed their event time — so a turn that arrives
-    * before an earlier turn of its conversation no longer steals that turn's
-    * `m_seq`. A mention that arrives AFTER the release frontier has moved
-    * past its position (late beyond the watermark) is emitted on a side
-    * channel (`block_key = "late"`, `cur_id` = its mention id, seqs = -1)
-    * instead of being mis-sequenced; consumers filter `block_key === "conv"`
-    * for the pair stream. Conversations that go quiet flush their remaining
-    * buffer in order on the event-time timeout (conversation end).
-    *
-    * State is bounded: the band buffer is trimmed to the band width as
-    * before, and the pending buffer holds mentions until the watermark
-    * passes the event time of every earlier POSITION still held (release is
-    * a position-sorted prefix, so a ready row never overtakes a held
-    * earlier turn; null event times are stamped with the batch max ts) —
-    * at most one watermark horizon beyond what any watermarked operator
-    * retains, and the conversation-end timeout flushes the remainder. */
-  def streamingBandPairsOrdered(spark: SparkSession, mentionStream: DataFrame,
-      maxConvDist: Int = graft.pipeline.Blocking.Config().maxConvDist,
-      watermark: String = "10 minutes",
-      horizonMs: Long = 600000L) = {
-    import spark.implicits._
-    val in = mentionStream
-      .withWatermark("ts", watermark)
-      .select(col("conv_id"), col("mention_id"), col("turn_idx"), col("start"),
-        col("norm"), col("head_key"), col("toks"), col("mtype"),
-        col("closed_class"), col("role"), col("number"), col("gender"), col("ts"))
-      .as[MIn]
-    in.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (conv: String, rows: Iterator[MIn], state: GroupState[OooBandState]) => {
-          val out = scala.collection.mutable.ArrayBuffer.empty[BandPair]
-          var st = state.getOption.getOrElse(OooBandState(0, -1, -1, Nil, Nil))
-          def release(m: MIn): Unit = {
-            val seq = st.nextSeq
-            st.band.foreach { a =>
-              if (seq - a.m_seq <= maxConvDist)
-                out += BandPair(a.mention_id, m.mention_id, "conv",
-                  conv, conv, a.m_seq, seq,
-                  a.norm, m.norm, a.head_key, m.head_key, a.toks, m.toks,
-                  a.mtype, m.mtype, a.closed_class, m.closed_class,
-                  a.role, m.role, a.number, m.number, a.gender, m.gender, m.ts)
-            }
-            st = st.copy(nextSeq = seq + 1, lastTurn = m.turn_idx, lastStart = m.start,
-              band = BufM(m.mention_id, seq, m.norm, m.head_key, m.toks, m.mtype,
-                m.closed_class, m.role, m.number, m.gender) ::
-                st.band.filter(a => seq + 1 - a.m_seq <= maxConvDist))
-          }
-          if (state.hasTimedOut) {
-            // conversation end: flush whatever is still buffered, in order
-            st.pending.sortBy(m => (m.turn_idx, m.start)).foreach(release)
-            state.remove()
-            out.iterator
-          } else {
-            val wm = state.getCurrentWatermarkMs()
-            val incoming = rows.toSeq
-            val maxTsMs = incoming.iterator.filter(_.ts != null)
-              .map(_.ts.getTime).foldLeft(0L)(math.max)
-            incoming.foreach { m =>
-              if (m.turn_idx < st.lastTurn ||
-                (m.turn_idx == st.lastTurn && m.start <= st.lastStart)) {
-                // beyond-watermark late: the frontier already released past
-                // this position — side channel, never a wrong m_seq
-                out += BandPair("", m.mention_id, "late", conv, conv, -1, -1,
-                  m.norm, m.norm, m.head_key, m.head_key, m.toks, m.toks,
-                  m.mtype, m.mtype, m.closed_class, m.closed_class,
-                  m.role, m.role, m.number, m.number, m.gender, m.gender, m.ts)
-              } else {
-                // null event time: stamped, never released ahead of the queue
-                val s = if (m.ts != null) m
-                  else m.copy(ts = nullTsStamp(maxTsMs, wm))
-                st = st.copy(pending = s :: st.pending)
-              }
-            }
-            val (ready, held) = releasePrefix[MIn](st.pending, wm,
-              _.ts, Ordering.by(m => (m.turn_idx, m.start)))
-            st = st.copy(pending = held)
-            ready.foreach(release)
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(wm, maxTsMs) + horizonMs)
-            out.iterator
-          }
-        })
-  }
-
-  /** [[streamingBandScores]] over the out-of-order-tolerant pairer — late
-    * side-channel rows are filtered before the stateless scoring leg. */
-  def streamingBandScoresOrdered(spark: SparkSession, mentionStream: DataFrame,
-      weights: graft.pipeline.Scoring.Weights = graft.pipeline.Scoring.DefaultWeights,
-      maxConvDist: Int = graft.pipeline.Blocking.Config().maxConvDist,
-      watermark: String = "10 minutes",
-      horizonMs: Long = 600000L): DataFrame =
-    graft.pipeline.Scoring.score(graft.pipeline.Scoring.featurize(
-      streamingBandPairsOrdered(spark, mentionStream, maxConvDist, watermark,
-        horizonMs).toDF().filter(col("block_key") === "conv")), weights)
-      .select(col("ant_id"), col("cur_id"), col("block_key"), col("score"), col("ts"))
-
-  case class TurnEvent(conv_id: String, turn_idx: Int, text: String)
-  case class SeqState(nextSeq: Int)
-  case class SequencedTurn(conv_id: String, turn_idx: Int, m_seq: Int)
-
-  case class TurnEventTs(conv_id: String, turn_idx: Int, text: String,
-      ts: java.sql.Timestamp)
-  case class OooSeqState(nextSeq: Int, lastTurn: Int, pending: List[TurnEventTs])
-
-  /** Out-of-order-tolerant [[sequenceTurns]]: arrivals buffer in state and
-    * are released in `turn_idx` order once the watermark passes their event
-    * time; quiet conversations flush in order on event-time timeout. A turn
-    * arriving after the frontier passed its index is emitted with
-    * `m_seq = -1` (side channel) instead of stealing a sequence number. */
-  def sequenceTurnsOrdered(spark: SparkSession, stream: DataFrame,
-      watermark: String = "10 minutes", horizonMs: Long = 600000L) = {
-    import spark.implicits._
-    stream.select(col("conv_id"), col("turn_idx"), col("text"), col("ts"))
-      .withWatermark("ts", watermark).as[TurnEventTs]
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (convId: String, turns: Iterator[TurnEventTs], state: GroupState[OooSeqState]) => {
-          val out = scala.collection.mutable.ArrayBuffer.empty[SequencedTurn]
-          var st = state.getOption.getOrElse(OooSeqState(0, -1, Nil))
-          def release(t: TurnEventTs): Unit = {
-            out += SequencedTurn(convId, t.turn_idx, st.nextSeq)
-            st = st.copy(nextSeq = st.nextSeq + 1, lastTurn = t.turn_idx)
-          }
-          if (state.hasTimedOut) {
-            st.pending.sortBy(_.turn_idx).foreach(release)
-            state.remove(); out.iterator
-          } else {
-            val wm = state.getCurrentWatermarkMs()
-            val incoming = turns.toSeq
-            val maxTsMs = incoming.iterator.filter(_.ts != null)
-              .map(_.ts.getTime).foldLeft(0L)(math.max)
-            incoming.foreach { t =>
-              if (t.turn_idx <= st.lastTurn) out += SequencedTurn(convId, t.turn_idx, -1)
-              else {
-                // null event time: stamped, never released ahead of the queue
-                val s = if (t.ts != null) t
-                  else t.copy(ts = nullTsStamp(maxTsMs, wm))
-                st = st.copy(pending = s :: st.pending)
-              }
-            }
-            val (ready, held) = releasePrefix[TurnEventTs](st.pending, wm,
-              _.ts, Ordering.by(_.turn_idx))
-            st = st.copy(pending = held)
-            ready.foreach(release)
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(wm, maxTsMs) + horizonMs)
-            out.iterator
-          }
-        })
-  }
-
-  /** Per-conversation running sequence numbers via flatMapGroupsWithState —
-    * the streaming analog of the canonical-order window (W1). Turns must
-    * arrive in order per conversation (file source preserves batch order);
-    * [[sequenceTurnsOrdered]] is the out-of-order-tolerant variant. */
-  def sequenceTurns(spark: SparkSession, stream: DataFrame) = {
-    import spark.implicits._
-    stream.select(col("conv_id"), col("turn_idx"), col("text")).as[TurnEvent]
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (convId: String, turns: Iterator[TurnEvent], state: GroupState[SeqState]) => {
-          var next = state.getOption.map(_.nextSeq).getOrElse(0)
-          val out = turns.toSeq.sortBy(_.turn_idx).map { t =>
-            val s = SequencedTurn(convId, t.turn_idx, next); next += 1; s
-          }
-          state.update(SeqState(next))
-          out.iterator
-        })
   }
 }

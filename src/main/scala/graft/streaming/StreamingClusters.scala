@@ -222,9 +222,7 @@ object StreamingClusters {
     val Lin = (java.util.regex.Pattern.quote(tag) + "@batch-(\\d+)").r
     def committed(stage: String): Map[Long, Int] =
       (0 to io.latestSnapshot(stage).getOrElse(-1)).flatMap { k =>
-        io.manifest(stage, k).flatMap { m =>
-          """"lineage":"([^"]*)"""".r.findFirstMatchIn(m).map(_.group(1))
-        }.collect { case Lin(n) => n.toLong -> k }
+        io.lineage(stage, k).collect { case Lin(n) => n.toLong -> k }
       }.toMap // later snapshots win per batch id
     val c = committed("stream_clusters")
     val b = committed("stream_backptrs")

@@ -11,14 +11,13 @@ import graft.pipeline.Scoring
   * The reference persists a trained `PairwiseScorer` as a gzip Java-serialized
   * blob (`GUtil.scala:26-40`) and compacts it by dropping zero-weight features
   * and re-indexing (`PairwiseScorer.pack:37-47`, `GUtil.scala:463-482`). Here
-  * the model is a *versioned parquet table* `(feature:string, index:int,
-  * weight:double)` committed through [[TableIO]] (atomic snapshot + lineage
+  * the dense weights are a `(feature, index, weight)` table ([[weightsDF]],
+  * compacted by [[pack]]), and the sparse lexicalized model is a *versioned
+  * parquet table* committed through [[TableIO]] (atomic snapshot + lineage
   * manifest) — readable by any engine, no JVM serialization pinning; the
   * lineage token doubles as the model config record.
   */
 object ModelIO {
-
-  val Stage = "model"
 
   /** Dense weight table in [[Scoring.FeatureNames]] order. */
   def weightsDF(spark: SparkSession, w: Scoring.Weights): DataFrame = {
@@ -36,29 +35,11 @@ object ModelIO {
       .withColumn("index",
         (row_number().over(Window.orderBy(col("index"))) - 1).cast("int"))
 
-  /** Commit a model snapshot; `configToken` becomes the manifest lineage. */
-  def save(spark: SparkSession, io: TableIO, w: Scoring.Weights,
-      configToken: String, packed: Boolean = true): Int = {
-    val df = if (packed) pack(weightsDF(spark, w)) else weightsDF(spark, w)
-    io.commit(Stage, df, configToken)
-  }
-
   /** A14 top-weights report (`CorefEvaluator` weight dumps /
     * `keepTopNKeys`): the k heaviest features by |weight|, deterministic
     * tie-break on the feature name. */
   def topWeights(weights: DataFrame, k: Int = 10): DataFrame =
     weights.orderBy(abs(col("weight")).desc, col("feature").asc).limit(k)
-
-  /** T2 training-cadence table: the per-epoch trace as a relation
-    * `(epoch, loss, feature, weight)` — the reference prints this per
-    * iteration (`CorefFeaturizerTrainer.scala:156-193`); as a table it joins
-    * against eval slices for learning-curve analysis. */
-  def traceDF(spark: SparkSession, trace: Seq[graft.train.Trainer.Epoch]): DataFrame = {
-    import spark.implicits._
-    trace.flatMap(e => Scoring.FeatureNames.zipWithIndex.map { case (f, i) =>
-      (e.epoch, e.loss, f, e.weights(i))
-    }).toDF("epoch", "loss", "feature", "weight")
-  }
 
   // ---- sparse model persistence (S5 at the lexicalized model's scale) ----
 
@@ -103,21 +84,5 @@ object ModelIO {
       throw new IllegalStateException(
         s"sparse model snapshot $k does not carry lineage $configToken"))
     (df.select(col("f"), col("w_i")), s"$configToken@$k")
-  }
-
-  /** Load a model snapshot back into dense [[Scoring.Weights]]: features
-    * absent from the (packed) table are zero; unknown feature names fail
-    * fast (a packed model from a different feature space must not silently
-    * half-apply). */
-  def load(spark: SparkSession, io: TableIO, configToken: String,
-      snap: Option[Int] = None): Scoring.Weights = {
-    val df = io.readIfCurrent(spark, Stage, configToken, snap)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed model snapshot for lineage $configToken"))
-    val byName = df.select("feature", "weight").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val unknown = byName.keySet -- Scoring.FeatureNames.toSet
-    require(unknown.isEmpty, s"model has unknown features: $unknown")
-    Scoring.Weights(Scoring.FeatureNames.map(n => byName.getOrElse(n, 0.0)).toArray)
   }
 }

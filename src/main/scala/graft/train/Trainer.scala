@@ -37,8 +37,6 @@ object Trainer {
   object LossFn {
     /** No augmentation: plain gold-marginal softmax likelihood. */
     val Zero: LossFn = LossFn(0.0, 0.0, 0.0)
-    /** The reference's default `customLoss-0.1-3-1`. */
-    val Custom: LossFn = LossFn(0.1, 3.0, 1.0)
   }
 
   /** The ranking objective's per-arc terms (`DocumentInferencerBasic.
@@ -101,7 +99,7 @@ object Trainer {
     val trace = scala.collection.mutable.ArrayBuffer.empty[Epoch]
 
     // the result is driver-held weights and a trace, so the input pin is
-    // released on return (every kFoldModels fold included) and on failure
+    // released on return and on failure
     graft.Pins.scoped(labeled.sparkSession.sparkContext) {
       val cached = labeled.localCheckpoint(true)
       val nCur = cached.select(col("cur_id")).distinct().count().toDouble
@@ -297,11 +295,6 @@ object Trainer {
     (out, trace.toSeq)
   }
 
-  /** B3/T3 k-fold pruning-model training (`CorefPruner.scala:100-153`):
-    * deterministic fold per conversation (hash of the current mention's
-    * conv), one ranking model per fold trained on the OTHER folds — every
-    * mention is then scored by a model that never saw its conversation
-    * (unbiased coarse scores for pruning). */
   /** U2 fold assignment: deterministic conversation-hash fold.
     * `impl = "xxhash64"` is the engine fast path; `"md5"` is the portable
     * face (identical in Spark and DuckDB — same md5-nibble formula as the
@@ -310,25 +303,6 @@ object Trainer {
     case "md5" => pmod(call_function("instr", lit("0123456789abcdef"),
       substring(md5(conv.cast("binary")), 1, 1)) - 1, lit(k)).cast("int")
     case _ => pmod(xxhash64(conv), lit(k)).cast("int")
-  }
-
-  def kFoldModels(labeled: DataFrame, k: Int = 4, epochs: Int = 20,
-      eta: Double = 1.0, lossFn: LossFn = LossFn.Zero): Seq[(Int, Scoring.Weights)] = {
-    val withFold = labeled.withColumn("fold", foldOf(col("conv_id_c"), k))
-    (0 until k).map { f =>
-      f -> trainRanking(withFold.filter(col("fold") =!= f), epochs, eta,
-        lossFn = lossFn)._1
-    }
-  }
-
-  /** Score every pair with its conversation's out-of-fold model; the union
-    * covers all pairs exactly once. */
-  def scoreOutOfFold(labeled: DataFrame, models: Seq[(Int, Scoring.Weights)]): DataFrame = {
-    val k = models.size
-    val withFold = labeled.withColumn("fold", foldOf(col("conv_id_c"), k))
-    models.map { case (f, w) =>
-      Scoring.score(withFold.filter(col("fold") === f), w)
-    }.reduce(_ unionByName _)
   }
 
   /** Assemble labeled training pairs from a pipeline run + gold labels. */

@@ -83,7 +83,7 @@ class FunctionsSpec extends SparkSuite {
 
   test("wordShape / wordClass") {
     val df = Seq("Customer#000000007", "ADS", "acme", "A0-b")
-      .toDF("s").select($"s", wordShape($"s").as("sh"), wordClass($"s").as("cl"))
+      .toDF("s").select($"s", wordShapePortable($"s").as("sh"), wordClass($"s").as("cl"))
     val m = df.collect().map(r => (r.getString(0), (r.getString(1), r.getString(2)))).toMap
     assert(m("ADS") === (("XXe", "CAPS"))) // run of 3 X collapses to XXe
     assert(m("acme")._2 === "LC")
@@ -219,20 +219,6 @@ class FunctionsSpec extends SparkSuite {
     assert(sc("they") === "PRON" && sc("vendor") === "ORG")
     assert(sc("Systems") === "ORG" && sc("hello") === "OTHER")
   }
-
-  test("F5: frequency backoff keeps frequent tokens, shapes rare ones") {
-    val counts = Seq(("acme", 25L), ("rare", 3L)).toDF("tok", "n")
-    val df = Seq("acme", "rare", "Unseen7").toDF("t")
-    val out = withLexicalBackoff(df, col("t"), counts)
-      .select(col("t"), col("backed_tok"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out("acme") === "acme")
-    assert(out("rare") === wordShapeOf("rare"))
-    assert(out("Unseen7") === wordShapeOf("Unseen7"))
-  }
-
-  private def wordShapeOf(s: String): String =
-    Seq(s).toDF("x").select(wordShape(col("x"))).collect()(0).getString(0)
 
   test("F6: pronoun canonicalization + person sets") {
     val rows = Seq("them", "him", "hers", "its", "me", "us", "your", "acme")

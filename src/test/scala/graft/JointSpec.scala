@@ -178,10 +178,6 @@ class JointSpec extends SparkSuite {
     assert(d("m3")._1 === Some("m1"),
       "the trained coupling must fix the m3 tie under BP decode")
     assert(d("m2")._2 === "ORG" && d("m3")._2 === "IDENT")
-    // T2 cadence table for the joint objective
-    val t = JointInference.couplingTraceDF(spark, trace)
-    assert(t.count() === 8L)
-    assert(t.columns.toSeq === Seq("epoch", "loss"))
   }
 
   test("trainCouplings: wiki coupling learns to flip the co-linked antecedent") {

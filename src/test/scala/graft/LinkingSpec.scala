@@ -95,13 +95,6 @@ class LinkingSpec extends SparkSuite {
     assert(e2.getAs[Double]("acc_all_r") === 0.0)
   }
 
-  test("W5: top-k titles per surface") {
-    val top = Linking.topTitlesPerSurface(dict, k = 1)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(top("acme data") === "Acme_Data_B") // highest count
-    assert(top("tiekey") === "A_Title")        // tie -> lexicographic
-  }
-
   test("L4+L5: aux purge restores the accuracy junk entries destroy; " +
       "chooser trades priority against count evidence") {
     // poison: a huge-count disambiguation page on m1's surfaces

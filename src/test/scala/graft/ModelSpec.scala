@@ -5,35 +5,9 @@ import graft.io.TableIO
 import graft.pipeline.Scoring
 import graft.train.ModelIO
 
-/** S5 model serde + pack: weights round-trip through a versioned parquet
-  * snapshot; pack drops zero weights and re-indexes densely; W2 deterministic
-  * shuffle is stable. */
+/** S5 model serde + pack: the sparse model round-trips through a versioned
+  * parquet snapshot; pack drops zero weights and re-indexes densely. */
 class ModelSpec extends SparkSuite {
-
-  test("model serde: save / pack / load round-trips weights") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
-    val io = new TableIO(dir)
-    val vals = Scoring.DefaultWeights.values.clone()
-    vals(Scoring.FeatureNames.indexOf("gender_match")) = 0.0 // pack must drop it
-    val w = Scoring.Weights(vals)
-
-    val snap = ModelIO.save(spark, io, w, configToken = "cfg-1")
-    val loaded = ModelIO.load(spark, io, "cfg-1", Some(snap))
-    assert(loaded.values.toSeq === vals.toSeq,
-      "round-trip through disk must reproduce the dense weights exactly")
-
-    val packed = io.readIfCurrent(spark, ModelIO.Stage, "cfg-1", Some(snap)).get
-    val nonZero = vals.count(_ != 0.0)
-    assert(packed.count() === nonZero.toLong)
-    assert(packed.agg(max(col("index"))).collect()(0).getInt(0) === nonZero - 1,
-      "packed indices must be dense 0..n-1")
-    assert(packed.filter(col("feature") === "gender_match").count() === 0L)
-
-    // a second save versions rather than overwrites
-    val snap2 = ModelIO.save(spark, io, Scoring.DefaultWeights, configToken = "cfg-2")
-    assert(snap2 === snap + 1)
-    assert(ModelIO.load(spark, io, "cfg-1", Some(snap)).values.toSeq === vals.toSeq)
-  }
 
   test("S5b sparse model: pack / save / load round-trips a distributed-trained table") {
     import spark.implicits._
@@ -80,30 +54,19 @@ class ModelSpec extends SparkSuite {
     assert(s1 === s2, "loaded snapshot must score identically to the trained table")
   }
 
-  test("W2: deterministic shuffle is identical across runs and partitionings") {
-    import spark.implicits._
-    val ids = (0 until 500).map(i => s"id-$i").toDF("id")
-    val a = graft.functions.deterministicShuffle(ids, col("id"), 7L)
-      .collect().map(_.getString(0)).toSeq
-    val b = graft.functions.deterministicShuffle(ids.repartition(13), col("id"), 7L)
-      .collect().map(_.getString(0)).toSeq
-    assert(a === b, "order must not depend on partitioning")
-    assert(a !== ids.collect().map(_.getString(0)).toSeq, "order must actually shuffle")
-    val c = graft.functions.deterministicShuffle(ids, col("id"), 8L)
-      .collect().map(_.getString(0)).toSeq
-    assert(a !== c, "different seeds give different orders")
-  }
-
-  test("A14 top-weights + T2 cadence table") {
+  test("A14 top-weights + pack compaction") {
     val w = ModelIO.weightsDF(spark, Scoring.DefaultWeights)
     val top = ModelIO.topWeights(w, 3).collect().map(_.getString(0)).toSeq
     assert(top.head === "anaphoric_close") // |6.0| is the heaviest default
     assert(top.size === 3)
-    val trace = Seq(
-      graft.train.Trainer.Epoch(0, 0.7, Scoring.DefaultWeights.values),
-      graft.train.Trainer.Epoch(1, 0.5, Scoring.DefaultWeights.values))
-    val t = ModelIO.traceDF(spark, trace)
-    assert(t.count() === 2L * Scoring.FeatureNames.size)
-    assert(t.filter(col("epoch") === 1 && col("loss") =!= 0.5).count() === 0L)
+
+    val vals = Scoring.DefaultWeights.values.clone()
+    vals(Scoring.FeatureNames.indexOf("gender_match")) = 0.0 // pack must drop it
+    val packed = ModelIO.pack(ModelIO.weightsDF(spark, Scoring.Weights(vals)))
+    val nonZero = vals.count(_ != 0.0)
+    assert(packed.count() === nonZero.toLong)
+    assert(packed.agg(max(col("index"))).collect()(0).getInt(0) === nonZero - 1,
+      "packed indices must be dense 0..n-1")
+    assert(packed.filter(col("feature") === "gender_match").count() === 0L)
   }
 }

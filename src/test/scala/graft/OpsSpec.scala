@@ -126,26 +126,6 @@ class OpsSpec extends SparkSuite {
       brute.count()
     info(s"IVF recall@5 (16 cells, 2 probes): $recall")
     assert(recall >= 0.9, s"IVF ANN recall gate failed: $recall")
-
-    // Lloyd-refined quantizer: recall holds, and the quantization objective
-    // (mean best-centroid cosine) must not degrade vs the sampled seed
-    def qObj(cents: org.apache.spark.sql.DataFrame): Double =
-      annCorpus.crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-          (Similarity.dot64(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm"))).as("sim"))
-        .groupBy("vec_id").agg(max("sim").as("best"))
-        .agg(avg("best")).collect()(0).getDouble(0)
-    val qSampled = qObj(Similarity.sampledCentroids(annCorpus, 16))
-    val qKmeans = qObj(Similarity.kmeansCentroids(annCorpus, 16, 3))
-    info(s"quantization objective: sampled=$qSampled kmeans=$qKmeans")
-    assert(qKmeans >= qSampled - 1e-9,
-      "Lloyd refinement must not degrade the quantizer")
-    val ivfK = Similarity.annIvfKmeans(annCorpus, k = 5)
-      .select(col("q_id"), col("nb_id"))
-    val recallK = brute.join(ivfK, Seq("q_id", "nb_id"), "left_semi").count().toDouble /
-      brute.count()
-    info(s"IVF-kmeans recall@5: $recallK")
-    assert(recallK >= 0.9, s"IVF-kmeans recall gate failed: $recallK")
   }
 
   test("portable simhash matches the engine path's planted-dup detection") {
@@ -162,18 +142,9 @@ class OpsSpec extends SparkSuite {
     assert(hitNear.toDouble / nearPlanted.count() >= 0.5)
   }
 
-  test("multimodal: payload schema + decode stub batch kernel") {
+  test("multimodal: payload schema") {
     val media = Multimodal.withPayload(documents)
     assert(media.schema("payload").dataType.typeName === "binary")
-    val feats = Multimodal.decodeStub(spark, media).cache()
-    assert(feats.count() === documents.count())
-    val f = feats.filter(col("doc_id") === 0L).collect()(0)
-    assert(f.resized_w <= 32 && f.resized_h <= 32)
-    assert(f.frame_count >= 1 && f.frame_count <= 4)
-    assert(f.mean_byte > 0.0 && f.mean_byte < 255.0)
-    // deterministic: re-run yields identical features
-    val again = Multimodal.decodeStub(spark, media).collect().toSet
-    assert(again === feats.collect().toSet)
   }
 
   test("text analysis: shapes and determinism") {

@@ -18,6 +18,12 @@ class ResumeSpec extends SparkSuite {
     d
   }
 
+  private def deleteLargestPart(snap: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    Files.delete(Files.list(snap).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).maxBy(Files.size))
+  }
+
   lazy val g = generate(entities = 10, convs = 20, seed = 7L)
   lazy val transcripts = transcriptsDF(spark, g).cache()
 
@@ -63,10 +69,27 @@ class ResumeSpec extends SparkSuite {
     assert(io.readOrCommit(spark, "t", "lin-1")(rows).count() === 2L)
     assert(io.readOrCommit(spark, "t", "lin-1")(rows).count() === 2L)
     assert(computed === 1, "a current snapshot must resume, not recompute")
-    // a double quote in the token cuts the manifest's lineage field short, so
-    // the snapshot commits but never reads back as current
+    // any token resumes: quotes, backslashes, newlines and non-ASCII text
+    // round-trip through the manifest
+    for (tok <- Seq("lin\"2", "C:\\data\\x", "line1\nline2", "käse-Ω-日本", "\"\\\n\t")) {
+      val before = computed
+      assert(io.readOrCommit(spark, "u", tok)(rows).count() === 2L)
+      assert(io.lineage("u", io.latestSnapshot("u").get) === Some(tok))
+      assert(io.readOrCommit(spark, "u", tok)(rows).count() === 2L)
+      assert(computed === before + 1, s"token ${tok.map(_.toInt)} must resume")
+    }
+    // a commit that loses a part file under its manifest never reads back
+    val tornDir = freshDir("readorcommit-torn")
+    val torn = new TableIO(tornDir) {
+      override def commit(stage: String, df: org.apache.spark.sql.DataFrame,
+          lineage: String): Int = {
+        val snap = super.commit(stage, df, lineage)
+        deleteLargestPart(Paths.get(tornDir, stage, s"snap-$snap"))
+        snap
+      }
+    }
     val e = intercept[IllegalStateException] {
-      io.readOrCommit(spark, "u", "lin\"2")(rows)
+      torn.readOrCommit(spark, "u", "lin-2")(rows)
     }
     assert(e.getMessage.contains("'u'"), e.getMessage)
   }
@@ -189,5 +212,25 @@ class ResumeSpec extends SparkSuite {
     assert(Pipeline.Config().token === "476a3f4c")
     val model = SparseModel(spark.emptyDataFrame, "guard-spec")
     assert(Pipeline.Config(sparse = Some(model)).token === "ca244956")
+
+    // the manifest's byte layout is pinned too: a commit writes exactly this
+    // literal, and a manifest in it (as older commits left it) resumes
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = freshDir("layout")
+    val io = new TableIO(dir)
+    val snap = io.commit("t", Seq(("a", 1L), ("b", 2L)).toDF("k", "v").coalesce(1), "lin-1")
+    val part = Files.list(Paths.get(dir, "t", s"snap-$snap")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq.sorted.head
+    val literal = s"""{"stage":"t","snapshot":$snap,"lineage":"lin-1","rowCount":2,""" +
+      s""""partitionCounters":[{"file":"$part","rows":2}]}"""
+    assert(io.manifest("t", snap) === Some(literal))
+    val m = Paths.get(dir, "t", s"snap-$snap.json")
+    Files.writeString(m, literal.replace("lin-1", "lin-old"))
+    // the local Hadoop FS checksums the files it writes; this one has none
+    Files.delete(Paths.get(dir, "t", s".snap-$snap.json.crc"))
+    assert(io.lineage("t", snap) === Some("lin-old"))
+    assert(io.readIfCurrent(spark, "t", "lin-old").map(_.count()) === Some(2L))
+    assert(io.readIfCurrent(spark, "t", "lin-1").isEmpty)
   }
 }

@@ -446,14 +446,18 @@ class RunSpec extends SparkSuite {
     import graft.io.ConllWriter
     val tmp = java.nio.file.Files.createTempDirectory("runspec_conll").toString
     val out = s"$tmp/out"
-    val conll = s"$tmp/conll"
+    // a quote and non-ASCII text in the path must still give valid JSON
+    val conll = s"$tmp/con" + "\"ll-é日"
     val metrics = Run.runWith(spark, Map(
       "input" -> "/root/testdata/sf0.001",
       "output" -> out,
       "generator" -> "identifier",
       "conll-out" -> conll))
     info(metrics)
-    assert(field(metrics, "conll_out") === conll)
+    val onDisk = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(out, "metrics.json")))
+    assert(onDisk.get("conll_out").asText === conll)
+    assert(onDisk.get("config").asText === field(metrics, "config"))
     val committed = new TableIO(out)
       .readIfCurrent(spark, "clusters", field(metrics, "config"))
       .getOrElse(fail("clusters not committed under the config token"))

@@ -64,46 +64,6 @@ class SinksSpec extends SparkSuite {
     assert(got === Set((0, 2), (2, 4)), s"round-trip must keep both extents: $got")
   }
 
-  test("W6: size-capped read is a deterministic conversation sample") {
-    val full = graft.sources.Transcripts.load(spark, "/root/testdata/sf0.001")
-    val half = graft.sources.Transcripts.loadCapped(spark, "/root/testdata/sf0.001", 1, 2)
-    val nFull = full.select("conv_id").distinct().count()
-    val nHalf = half.select("conv_id").distinct().count()
-    assert(nHalf > 0 && nHalf < nFull, s"sample must be a strict subset: $nHalf of $nFull")
-    // deterministic: same sample on re-read; conversations stay whole
-    assert(graft.sources.Transcripts.loadCapped(spark, "/root/testdata/sf0.001", 1, 2)
-      .exceptAll(half).isEmpty)
-    // conversations stay whole: every sampled conversation carries exactly
-    // its full-read turn count (the base data has partial tail convs)
-    val split = half.groupBy("conv_id").count()
-      .join(full.groupBy("conv_id").count().withColumnRenamed("count", "full_count"),
-        "conv_id")
-      .filter(col("count") =!= col("full_count"))
-    assert(split.count() === 0, "capping must never split a conversation")
-  }
-
-  test("S7: wiki standoff annotations round-trip through disk") {
-    import spark.implicits._
-    val dict = Seq(("acme data systems", "Acme_Data_Systems", 5))
-      .toDF("surface", "title", "cnt")
-    val red = Seq.empty[(String, String)].toDF("src", "dst")
-    val links = graft.linking.Linking.link(res.mentions, dict, red).cache()
-    val lines = graft.io.WikiStandoff.formatLines(res.mentions, links).cache()
-    assert(lines.count() === links.count(), "one standoff line per linked mention")
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-standoff").toString
-    graft.io.WikiStandoff.write(lines, dir)
-    val back = graft.io.WikiStandoff.parse(spark.read.text(dir))
-    val orig = lines.select("conv_id", "turn_idx", "start", "end", "title")
-    assert(back.exceptAll(orig).isEmpty && orig.exceptAll(back).isEmpty,
-      "standoff read must invert the write")
-    // re-joining the annotations to mentions reproduces the links
-    val rejoined = back.join(res.mentions, Seq("conv_id", "turn_idx", "start", "end"))
-      .select(col("mention_id"), col("title"))
-    val origLinks = links.select(col("mention_id"), col("title"))
-    assert(rejoined.exceptAll(origLinks).isEmpty && origLinks.exceptAll(rejoined).isEmpty)
-  }
-
   test("P7: auxiliary featurizer extends the linear model") {
     val pairs = Scoring.featurize(Scoring.attachAttrs(
       Blocking.convBandPairs(res.mentions), res.mentions)).cache()

@@ -7,8 +7,8 @@ import graft.fixtures.ErFixture
 import graft.streaming.StreamingAssembly
 
 /** Streaming ingest: the stream path must agree with the batch path on the
-  * same data (micro-batch equivalence), and session windows / stateful
-  * sequencing must behave. */
+  * same data (micro-batch equivalence), and the maintained cluster state
+  * must commit and resume. */
 class StreamingSpec extends SparkSuite {
 
   private lazy val dir: String = {
@@ -30,62 +30,6 @@ class StreamingSpec extends SparkSuite {
       .select("mention_id", "surface", "mtype").orderBy("mention_id").collect().toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty)
-  }
-
-  test("session windows assemble conversations with watermark") {
-    val stream = StreamingAssembly.streamTranscripts(spark, dir)
-    // complete mode: emit every session at end-of-stream (append would hold
-    // back sessions the watermark has not yet closed)
-    val q = StreamingAssembly.conversationSessions(stream, gap = "1 hour")
-      .writeStream.format("memory").queryName("stream_sessions")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val sessions = spark.table("stream_sessions")
-    // every conversation appears; session turn counts sum to the turn count
-    val total = sessions.agg(sum("n_turns")).collect()(0).getLong(0)
-    val expected = spark.read.parquet(dir).count()
-    assert(total === expected)
-  }
-
-  test("stateful per-conversation sequencing (flatMapGroupsWithState)") {
-    val stream = StreamingAssembly.streamTranscripts(spark, dir)
-    val q = StreamingAssembly.sequenceTurns(spark, stream)
-      .writeStream.format("memory").queryName("stream_seq")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val seqd = spark.table("stream_seq")
-    val bad = seqd.groupBy("conv_id")
-      .agg(count(lit(1)).as("n"), countDistinct("m_seq").as("d"),
-        min("m_seq").as("mn"), max("m_seq").as("mx"))
-      .filter(col("n") =!= col("d") || col("mn") =!= 0 || col("mx") =!= col("n") - 1)
-    assert(bad.count() === 0, "m_seq must be dense 0..n-1 per conversation")
-  }
-
-  test("streaming minhash near-dup == batch minhashLsh pair set") {
-    // corpus with planted near/exact dups (same generator as the batch op)
-    val corpus = graft.ops.Dedup.corpus(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-      .withColumn("ts", timestamp_millis(lit(1700000000000L) + col("doc_id") * 1000))
-      .select("doc_id", "text", "ts")
-    val d = Files.createTempDirectory("graft-neardup").toString
-    corpus.repartition(3).write.mode("overwrite").parquet(d)
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ts TIMESTAMP").parquet(d)
-    val q = StreamingAssembly.streamingMinhashNearDup(spark, stream)
-      .writeStream.format("memory").queryName("stream_neardup")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(180000)
-    val streamed = spark.table("stream_neardup")
-      .select("doc_a", "doc_b", "jacc_r").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val batch = graft.ops.Dedup.minhashLsh(
-      graft.ops.Dedup.corpus(spark.read.parquet("/root/testdata/sf0.001/documents.parquet")))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(streamed.keySet === batch.keySet,
-      s"streamed pair set must equal batch (streamed ${streamed.size}, batch ${batch.size})")
-    assert(batch.nonEmpty)
-    streamed.foreach { case (k, j) =>
-      assert(math.abs(j - batch(k)) < 1e-9, s"jaccard mismatch on $k") }
   }
 
   test("streaming band scoring + decode == batch band + decode on replay") {
@@ -220,189 +164,6 @@ class StreamingSpec extends SparkSuite {
     Files.delete(doomed)
   }
 
-  /** Write `df` as one new file into `dir` with a strictly later mtime than
-    * any file already there, so the file stream processes waves in write
-    * order (FileStreamSource orders by modification time). */
-  private def writeWave(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
-    df.coalesce(1).write.mode("append").parquet(dir)
-    Thread.sleep(1100) // parquet mtime granularity can be 1s
-  }
-
-  test("OUT-OF-ORDER replay: ordered band pairing == batch on within-conversation shuffled waves") {
-    import graft.pipeline.{Mentions, Blocking, Scoring}
-    val transcripts = spark.read.parquet(dir)
-    val m = Mentions.extractIdentifier(transcripts).cache()
-    val cfg = Blocking.Config()
-    val batchScores = Scoring.scorePairs(Blocking.convBandPairs(m, cfg), m)
-      .select(col("ant_id"), col("cur_id"), round(col("score"), 9).as("score"))
-      .cache()
-    val cols = m.select("conv_id", "mention_id", "turn_idx", "start", "norm",
-      "head_key", "toks", "mtype", "closed_class", "role", "number", "gender", "ts")
-    val md = Files.createTempDirectory("graft-ooo-band").toString
-    // three waves, mentions assigned by hash — within a conversation the
-    // arrival order across micro-batches is now scrambled w.r.t. turn order
-    (0 until 3).foreach { wv =>
-      writeWave(cols.filter(pmod(xxhash64(col("mention_id")), lit(3)) === wv), md)
-    }
-    // flush wave: one far-future dummy mention pushes the watermark past all
-    // real data so quiet conversations flush their buffers via the timeout
-    val flushTs = m.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime +
-      45L * 24 * 3600 * 1000
-    writeWave(cols.limit(1)
-      .withColumn("conv_id", lit("zzz-flush"))
-      .withColumn("mention_id", lit("zzz-flush#000000000000"))
-      .withColumn("ts", timestamp_millis(lit(flushTs))), md)
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("conv_id STRING, mention_id STRING, turn_idx INT, start INT, norm STRING, " +
-        "head_key STRING, toks ARRAY<STRING>, mtype STRING, closed_class BOOLEAN, " +
-        "role STRING, number STRING, gender STRING, ts TIMESTAMP").parquet(md)
-    // watermark delay wider than the fixture's whole time range: nothing is
-    // engine-dropped as late, everything buffers and flushes in order
-    val q = StreamingAssembly.streamingBandScoresOrdered(spark, stream,
-      maxConvDist = cfg.maxConvDist, watermark = "30 days")
-      .writeStream.format("memory").queryName("stream_ooo_band")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000)
-    val streamed = spark.table("stream_ooo_band")
-      .filter(col("cur_id") =!= "zzz-flush#000000000000")
-      .select(col("ant_id"), col("cur_id"), round(col("score"), 9).as("score"))
-    assert(batchScores.count() > 0)
-    assert(streamed.count() === batchScores.count(),
-      s"ordered pairer must emit the batch pair count (${streamed.count()} vs ${batchScores.count()})")
-    assert(streamed.exceptAll(batchScores).count() === 0L,
-      "out-of-order replayed band scores must equal the batch band scores exactly")
-  }
-
-  test("OUT-OF-ORDER: position-late mention goes to the late side channel, never a wrong m_seq") {
-    val md = Files.createTempDirectory("graft-ooo-late").toString
-    val base = 1700000000000L
-    def mrow(id: String, turn: Int, tsMs: Long) =
-      (("cX", id, turn, 0, id.toLowerCase, id.toLowerCase, Seq(id), "PROPER",
-        false, "user", "unknown", "unknown", new java.sql.Timestamp(tsMs)))
-    import spark.implicits._
-    def wave(rows: Seq[(String, String, Int, Int, String, String, Seq[String],
-        String, Boolean, String, String, String, java.sql.Timestamp)]): Unit =
-      writeWave(rows.toDF("conv_id", "mention_id", "turn_idx", "start", "norm",
-        "head_key", "toks", "mtype", "closed_class", "role", "number", "gender", "ts"), md)
-    val delayMs = 600000L // 10 min watermark delay
-    // wave 1: turn 1 at ts=base (turn 0 has NOT arrived yet)
-    wave(Seq(mrow("M1", 1, base)))
-    // wave 2: unrelated conv advances the watermark just past base
-    wave(Seq(mrow("M9", 0, base + delayMs + 1000).copy(_1 = "cOther",
-      _2 = "M9")))
-    // wave 3: turn 2 arrives on time -> conv cX is invoked, watermark has
-    // passed base, so turn 1 releases as m_seq 0 and turn 2 buffers
-    wave(Seq(mrow("M2", 2, base + delayMs + 2000)))
-    // wave 4: turn 0 finally arrives — ts above the watermark (not engine-
-    // dropped) but its POSITION is behind the release frontier: side channel
-    wave(Seq(mrow("M0", 0, base + delayMs + 3000)))
-    // flush wave: far future, times out cX and flushes turn 2 as m_seq 1
-    wave(Seq(mrow("MF", 0, base + 45L * 24 * 3600 * 1000).copy(_1 = "cFlush", _2 = "MF")))
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema("conv_id STRING, mention_id STRING, turn_idx INT, start INT, norm STRING, " +
-        "head_key STRING, toks ARRAY<STRING>, mtype STRING, closed_class BOOLEAN, " +
-        "role STRING, number STRING, gender STRING, ts TIMESTAMP").parquet(md)
-    val q = StreamingAssembly.streamingBandPairsOrdered(spark, stream,
-      maxConvDist = 10, watermark = "10 minutes").toDF()
-      .writeStream.format("memory").queryName("stream_ooo_late")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000)
-    val outRows = spark.table("stream_ooo_late").filter(col("conv_id_a") === "cX")
-    val late = outRows.filter(col("block_key") === "late")
-      .select("cur_id").collect().map(_.getString(0)).toSeq
-    assert(late === Seq("M0"), s"turn 0 must land on the late side channel, got $late")
-    val pairs = outRows.filter(col("block_key") === "conv")
-      .select("ant_id", "cur_id", "m_seq_a", "m_seq_c").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSeq
-    assert(pairs === Seq(("M1", "M2", 0, 1)),
-      s"M1/M2 must sequence 0/1 with M0 excluded, got $pairs")
-  }
-
-  test("OUT-OF-ORDER: a null-ts later turn never overtakes a held earlier turn") {
-    val md = Files.createTempDirectory("graft-ooo-nullts").toString
-    val base = 1700000000000L
-    import spark.implicits._
-    def mrow(conv: String, id: String, turn: Int, ts: java.sql.Timestamp) =
-      ((conv, id, turn, 0, id.toLowerCase, id.toLowerCase, Seq(id), "PROPER",
-        false, "user", "unknown", "unknown", ts))
-    def wave(rows: Seq[(String, String, Int, Int, String, String, Seq[String],
-        String, Boolean, String, String, String, java.sql.Timestamp)]): Unit =
-      writeWave(rows.toDF("conv_id", "mention_id", "turn_idx", "start", "norm",
-        "head_key", "toks", "mtype", "closed_class", "role", "number", "gender", "ts"), md)
-    val delayMs = 600000L
-    // wave 1: turn 2 arrives, watermark has NOT passed its ts -> held
-    wave(Seq(mrow("cY", "M2", 2, new java.sql.Timestamp(base + 60000))))
-    // wave 2: turn 4 with a NULL event time — pre-fix it released instantly
-    // (m_seq 0, ahead of the held turn 2, regressing the frontier); now it
-    // must queue BEHIND the held earlier position
-    wave(Seq(mrow("cY", "M4", 4, null)))
-    // wave 3: watermark passes turn 2; a held turn 5 invokes the group
-    wave(Seq(mrow("cOther", "M9", 0, new java.sql.Timestamp(base + 60000 + delayMs + 1000))))
-    wave(Seq(mrow("cY", "M5", 5, new java.sql.Timestamp(base + delayMs + 2000))))
-    // flush: far-future row times cY out, releasing the held tail in order
-    wave(Seq(mrow("cFlush", "MF", 0, new java.sql.Timestamp(base + 45L * 24 * 3600 * 1000))))
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema("conv_id STRING, mention_id STRING, turn_idx INT, start INT, norm STRING, " +
-        "head_key STRING, toks ARRAY<STRING>, mtype STRING, closed_class BOOLEAN, " +
-        "role STRING, number STRING, gender STRING, ts TIMESTAMP").parquet(md)
-    val q = StreamingAssembly.streamingBandPairsOrdered(spark, stream,
-      maxConvDist = 10, watermark = "10 minutes").toDF()
-      .writeStream.format("memory").queryName("stream_ooo_nullts")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000)
-    val outRows = spark.table("stream_ooo_nullts").filter(col("conv_id_a") === "cY")
-    assert(outRows.filter(col("block_key") === "late").count() === 0L,
-      "nothing here is position-late; the null-ts row must buffer, not mis-release")
-    val pairs = outRows.filter(col("block_key") === "conv")
-      .select("ant_id", "cur_id", "m_seq_a", "m_seq_c").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
-    assert(pairs === Set(("M2", "M4", 0, 1), ("M2", "M5", 0, 2), ("M4", "M5", 1, 2)),
-      s"release order must follow turn order 2,4,5 regardless of the null ts, got $pairs")
-  }
-
-  test("OUT-OF-ORDER: a batch of ONLY null-ts rows holds (no epoch-0 release)") {
-    val md = Files.createTempDirectory("graft-ooo-allnull").toString
-    val base = 1700000000000L
-    import spark.implicits._
-    def mrow(conv: String, id: String, turn: Int, ts: java.sql.Timestamp) =
-      ((conv, id, turn, 0, id.toLowerCase, id.toLowerCase, Seq(id), "PROPER",
-        false, "user", "unknown", "unknown", ts))
-    def wave(rows: Seq[(String, String, Int, Int, String, String, Seq[String],
-        String, Boolean, String, String, String, java.sql.Timestamp)]): Unit =
-      writeWave(rows.toDF("conv_id", "mention_id", "turn_idx", "start", "norm",
-        "head_key", "toks", "mtype", "closed_class", "role", "number", "gender", "ts"), md)
-    // wave 1: a LONE null-ts turn 4 — the batch max ts is 0, so a stamp of
-    // 0 would be <= every watermark and release instantly with m_seq 0,
-    // advancing the frontier to turn 4 and forcing the later turn 2 onto
-    // the late channel (the pre-fix behavior)
-    wave(Seq(mrow("cZ", "M4", 4, null)))
-    // wave 2: the genuinely earlier turn 2 arrives with a real event time
-    wave(Seq(mrow("cZ", "M2", 2, new java.sql.Timestamp(base + 60000))))
-    // wave 3: watermark passes everything buffered; a held turn 5 invokes cZ
-    wave(Seq(mrow("cOther", "M9", 0, new java.sql.Timestamp(base + 60000 + 600000 + 1000))))
-    wave(Seq(mrow("cZ", "M5", 5, new java.sql.Timestamp(base + 600000 + 2000))))
-    // flush: far-future row times cZ out
-    wave(Seq(mrow("cFlush", "MF", 0, new java.sql.Timestamp(base + 45L * 24 * 3600 * 1000))))
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema("conv_id STRING, mention_id STRING, turn_idx INT, start INT, norm STRING, " +
-        "head_key STRING, toks ARRAY<STRING>, mtype STRING, closed_class BOOLEAN, " +
-        "role STRING, number STRING, gender STRING, ts TIMESTAMP").parquet(md)
-    val q = StreamingAssembly.streamingBandPairsOrdered(spark, stream,
-      maxConvDist = 10, watermark = "10 minutes").toDF()
-      .writeStream.format("memory").queryName("stream_ooo_allnull")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000)
-    val outRows = spark.table("stream_ooo_allnull").filter(col("conv_id_a") === "cZ")
-    assert(outRows.filter(col("block_key") === "late").count() === 0L,
-      "turn 2 must NOT be forced late by an instantly-released null-ts turn 4")
-    val pairs = outRows.filter(col("block_key") === "conv")
-      .select("ant_id", "cur_id", "m_seq_a", "m_seq_c").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
-    assert(pairs === Set(("M2", "M4", 0, 1), ("M2", "M5", 0, 2), ("M4", "M5", 1, 2)),
-      s"release order must be 2,4,5 even when turn 4's batch had no event times, got $pairs")
-  }
-
   test("maintain FAILS loudly when the loaded state diverges from the engine checkpoint") {
     import graft.streaming.StreamingClusters
     import graft.io.TableIO
@@ -442,84 +203,6 @@ class StreamingSpec extends SparkSuite {
     assert(ex.getMessage.contains("diverge") ||
       Option(ex.getCause).exists(_.getMessage.contains("diverge")),
       s"divergent resume must fail with the alignment error, got: ${ex.getMessage}")
-  }
-
-  test("OUT-OF-ORDER: ordered turn sequencer matches turn order on shuffled waves") {
-    val transcripts = spark.read.parquet(dir).cache()
-    val md = Files.createTempDirectory("graft-ooo-seq").toString
-    (0 until 3).foreach { wv =>
-      writeWave(transcripts.filter(
-        pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(3)) === wv), md)
-    }
-    val flushTs = transcripts.agg(max(col("ts"))).collect()(0)
-      .getTimestamp(0).getTime + 45L * 24 * 3600 * 1000
-    writeWave(transcripts.limit(1).withColumn("conv_id", lit("zzz-flush"))
-      .withColumn("ts", timestamp_millis(lit(flushTs))), md)
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema(StreamingAssembly.transcriptSchema).parquet(md)
-    val q = StreamingAssembly.sequenceTurnsOrdered(spark, stream,
-      watermark = "30 days")
-      .writeStream.format("memory").queryName("stream_ooo_seq")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000)
-    val seqd = spark.table("stream_ooo_seq").filter(col("conv_id") =!= "zzz-flush")
-    assert(seqd.filter(col("m_seq") === -1).count() === 0, "no spurious late rows")
-    // m_seq must equal the batch turn rank (turns arrive shuffled, release ordered)
-    val expected = transcripts.select(col("conv_id"), col("turn_idx"),
-      (row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("conv_id").orderBy("turn_idx")) - 1).as("m_seq"))
-    assert(seqd.count() === expected.count())
-    assert(seqd.exceptAll(expected.select("conv_id", "turn_idx", "m_seq")).count() === 0L,
-      "ordered sequencer must reproduce the batch canonical order exactly")
-  }
-
-  test("streaming near-dup retains null-ts docs for one horizon (not epoch-0 aged out)") {
-    import spark.implicits._
-    val md = Files.createTempDirectory("graft-nullts").toString
-    val base = 1700000000000L
-    val text = "the quick brown fox jumps over the lazy dog again and again today"
-    // wave 0: docB anchors the watermark at base - 10min
-    writeWave(Seq(
-      (2L, "completely unrelated content with no shingle overlap whatsoever here",
-        new java.sql.Timestamp(base)))
-      .toDF("doc_id", "text", "ts"), md)
-    // wave 1: docA has NULL ts — stamped at the current watermark (base-10min)
-    writeWave(Seq(
-      (1L, text, null.asInstanceOf[java.sql.Timestamp]))
-      .toDF("doc_id", "text", "ts"), md)
-    // wave 2: docC is a near-dup of docA, 15 min later — the prune cutoff is
-    // base - 20min; with the old epoch-0 stamp docA would be pruned
-    // (0 < cutoff) and the hit lost
-    writeWave(Seq(
-      (3L, text + " x", new java.sql.Timestamp(base + 15 * 60000L)))
-      .toDF("doc_id", "text", "ts"), md)
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema("doc_id LONG, text STRING, ts TIMESTAMP").parquet(md)
-    val q = StreamingAssembly.streamingMinhashNearDup(spark, stream,
-      watermark = "10 minutes", horizonMs = 600000L)
-      .writeStream.format("memory").queryName("stream_nullts")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000)
-    val hits = spark.table("stream_nullts").select("doc_a", "doc_b").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(hits.contains((1L, 3L)),
-      s"null-ts docA must still be a near-dup candidate one horizon on, got $hits")
-  }
-
-  test("streaming exact dedup == batch exact dedup survivor set") {
-    val stream = StreamingAssembly.streamTranscripts(spark, dir)
-    val q = StreamingAssembly.streamingExactDedup(stream)
-      .writeStream.format("memory").queryName("stream_dedup")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamedHashes = spark.table("stream_dedup")
-      .select("text_md5").distinct().collect().map(_.getString(0)).toSet
-    val batchHashes = spark.read.parquet(dir)
-      .select(md5(col("text").cast("binary")).as("h")).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(streamedHashes === batchHashes,
-      "streaming dedup must keep exactly one row per distinct text")
-    assert(spark.table("stream_dedup").count() === batchHashes.size.toLong)
   }
 
   test("streaming cluster maintenance == batch clustering after EVERY microbatch") {

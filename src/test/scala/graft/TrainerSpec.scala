@@ -25,7 +25,7 @@ class TrainerSpec extends SparkSuite {
     val pinsBefore = Pins.ids(sc)
     val (learned, trace) = Trainer.trainRanking(labeled, epochs = 40, eta = 2.0)
     assert((Pins.ids(sc) -- pinsBefore).isEmpty,
-      "trainRanking must release every pin it takes (one leaked per kFoldModels fold)")
+      "trainRanking must release every pin it takes")
     info(s"loss: first=${trace.head.loss} last=${trace.last.loss}")
     info(s"weights: ${Scoring.FeatureNames.zip(learned.values).mkString(", ")}")
     assert(trace.last.loss < trace.head.loss * 0.5, "loss must decrease substantially")
@@ -55,7 +55,7 @@ class TrainerSpec extends SparkSuite {
     // schedule to reach its optimum (underfit at 40x2 it is dominated;
     // at 120x4 it dominates plain on both P and R)
     val (aug, augTrace) = Trainer.trainRanking(labeled, epochs = 120, eta = 4.0,
-      lossFn = Trainer.LossFn.Custom)
+      lossFn = Trainer.LossFn(0.1, 3.0, 1.0)) // the reference's customLoss-0.1-3-1
     val (plain, plainTrace) = Trainer.trainRanking(labeled, epochs = 40, eta = 2.0)
     info(s"augmented loss: first=${augTrace.head.loss} last=${augTrace.last.loss}")
     // the softmax-margin objective genuinely changes the optimum
