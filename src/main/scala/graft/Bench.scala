@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.pipeline._
+import graft.io.Json
 import graft.sources.Transcripts
 
 /** Benchmark main (driver contract): prints ONE JSON line.
@@ -108,8 +109,7 @@ object Bench {
             pmod(xxhash64(graft.functions.convOfMentionId(col("cur_id"))), lit(4)) === w)
             .select(col("cur_id"), col("ant_id"), col("score")))
       }
-      st.pins.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(false)))
+      Pins.release(spark.sparkContext, st.pins)
     }._2
     if (!sparse) log("stream cluster fold done")
     transcripts.unpersist(); mentions.unpersist(); sPairs.unpersist()
@@ -543,7 +543,7 @@ object Bench {
       levelTimes(c).map(t => f"$t%.3f").mkString("[", ",", "]")
     val line =
       s"""{"metric":"candidate_pairs_scored_per_sec","value":${f"$pairsPerSec%.1f"},"unit":"pairs/sec",""" +
-      s""""queries":$allQ,"sf":"$sfDir","total_sec":${f"$tStageSum%.3f"},""" +
+      s""""queries":$allQ,"sf":${Json.quote(sfDir)},"total_sec":${f"$tStageSum%.3f"},""" +
       s""""total_sparse_sec":${f"$tSparseSum%.3f"},"sparse_features":$nSparseFeats,""" +
       s""""pairs_scored_sparse":$pairsSparse,""" +
       s""""untimed_overhead_sec":${f"$tOverhead%.3f"},"wall_sec":${f"$tWall%.3f"},""" +

@@ -555,10 +555,11 @@ object Run {
 
     val t0 = System.nanoTime()
     val res = Pipeline.run(spark, transcripts, cfg)
-    // one atomic commit per output table, lineage = the pipeline config token
+    // one atomic commit per output table, lineage = the pipeline config token;
+    // a re-run whose latest snapshot already carries the token commits nothing
     val out = new TableIO(output)
-    out.commit("clusters", res.clusters, cfg.token)
-    out.commit("backptrs", res.backptrs, cfg.token)
+    for ((stage, df) <- Seq("clusters" -> res.clusters, "backptrs" -> res.backptrs))
+      if (out.readIfCurrent(spark, stage, cfg.token).isEmpty) out.commit(stage, df, cfg.token)
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     // shared loader for the linking inputs (consumed by the joint wiki

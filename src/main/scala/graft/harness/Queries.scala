@@ -381,8 +381,7 @@ object Queries {
           lit(4)) === w))
     }
     val folded = st.clusters.localCheckpoint(true)
-    st.pins.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-      .foreach(_.unpersist(false)))
+    graft.Pins.release(spark.sparkContext, st.pins)
     r.mentions.select(col("mention_id"))
       .join(folded, Seq("mention_id"), "left_anti")
       .select(col("mention_id"), col("mention_id").as("cluster_id"))

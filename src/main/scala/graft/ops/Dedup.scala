@@ -107,24 +107,25 @@ object Dedup {
     * connected components over the verified near-dup pairs, canonical doc =
     * component minimum, output `(doc_id, canonical_id)` for every doc that
     * belongs to a non-trivial component (drop-list = rows with
-    * `doc_id != canonical_id`). Reuses the pipeline's HYBRID components
-    * solver ([[graft.pipeline.Clustering.hybridComponents]]): near-dup
-    * graphs after verification are tiny relative to the corpus, so they
-    * almost always take the bounded driver union-find (skipping the
-    * checkpointed loop's per-iteration action overhead entirely); an
-    * over-threshold graph falls back to the distributed hash-to-min loop.
-    * Ids stay longs end to end; canonical id = component minimum either
-    * way (oracle `dd_canonical` pins the equality). */
+    * `doc_id != canonical_id`). Reuses the clustering layer's components
+    * solver ([[graft.pipeline.Clustering.components]]): near-dup graphs
+    * after verification are tiny relative to the corpus, so they almost
+    * always take the bounded driver union-find (skipping the checkpointed
+    * loop's per-iteration action overhead entirely); a graph over
+    * [[graft.pipeline.Clustering.maxDriverEdges]] falls back to the
+    * distributed hash-to-min loop. Ids stay longs end to end; canonical id
+    * = component minimum either way (oracle `dd_canonical` pins the
+    * equality). */
   def canonicalize(pairs: DataFrame): DataFrame = {
-    // pin the verified pair list ONCE: the hybrid solver's size probe, the
-    // driver collect and the node derivation each consume it, and without
+    // pin the verified pair list ONCE: the solver's bounded fetch, the
+    // fallback loop and the node derivation each consume it, and without
     // the checkpoint every consumer re-runs the (expensive) upstream
     // candidate+verify chain. The pair list is tiny by construction.
     val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
     val nodes = p.select(col("doc_a").as("id"))
       .unionByName(p.select(col("doc_b").as("id"))).distinct()
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    graft.pipeline.Clustering.hybridComponents(p.sparkSession, nodes, edges)
+    graft.pipeline.Clustering.components(nodes, edges)
       .select(col("mention_id").as("doc_id"), col("cluster_id").as("canonical_id"))
   }
 

@@ -3,7 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import scala.annotation.tailrec
+import scala.reflect.runtime.universe.TypeTag
 import graft.Pins
 
 /** Transitive clustering (SURVEY.md §2.12).
@@ -11,24 +13,26 @@ import graft.Pins
   * The reference forms clusters by sequential union over backpointers
   * (`OrderedClustering.createFromBackpointers`,
   * `OrderedClustering.scala:83-99`) — i.e. connected components of the
-  * backpointer forest. Spark-natively this is:
+  * backpointer forest. Here that is one bounded solver with one bound,
+  * [[maxDriverEdges]]:
   *
-  *  1. a per-conversation union-find fast path (`mapGroups` — conversations
-  *     are bounded, the bulk of the edges never enter a distributed loop);
-  *  2. a DataFrame-native hash-to-min connected-components loop (min-label
-  *     propagation + pointer jumping, O(log diameter) rounds) over the
-  *     *contracted* cross-conversation graph, with per-iteration
-  *     checkpointing (north rule).
+  *  1. a backpointer set within the bound is fetched once and solved on the
+  *     driver by union-by-min;
+  *  2. over it, a per-conversation union-find (`mapGroups` — conversations
+  *     are bounded) contracts the graph, and the contracted
+  *     cross-conversation graph takes the same bounded solve, else a
+  *     DataFrame-native hash-to-min loop (min-label propagation + pointer
+  *     jumping, O(log diameter) rounds, checkpointed per iteration).
   *
-  * Cluster id = min mention_id (string) in the component — deterministic,
-  * content-derived, retry/order-independent.
+  * Cluster id = min mention_id (string) in the component on every path —
+  * deterministic, content-derived, retry/order-independent.
   */
 object Clustering {
 
-  /** One hash-to-min CC over edges `(src, dst)` (string ids). `checkpoint` is
-    * invoked with (iteration, labels) after each round — TableIO hooks in
-    * there for resumable per-iteration commits. Returns `(id, cluster_id)`
-    * for every node appearing in `nodes`. */
+  /** One hash-to-min CC over edges `(src, dst)` (String or Long ids).
+    * `checkpoint` is invoked with (iteration, labels) after each round —
+    * TableIO hooks in there for resumable per-iteration commits. Returns
+    * `(mention_id, cluster_id)` for every node appearing in `nodes`. */
   def connectedComponents(
       nodes: DataFrame, // single col "id"
       edges: DataFrame, // cols "src", "dst"
@@ -92,10 +96,9 @@ object Clustering {
   /** Union-find with path compression and union-by-MIN root — the single
     * definition of the kernel behind the "cluster id = component minimum"
     * contract, shared by the per-conversation contraction (executor-side,
-    * String ids), [[hybridComponents]]'s driver fast path (Long ids), and
-    * the C2 touched-subgraph solver (String ids); one place to fix means
-    * the three call sites cannot drift. `find` registers unseen keys as
-    * their own root. */
+    * String ids) and the bounded driver solve (String or Long ids); one
+    * place to fix means the call sites cannot drift. `find` registers
+    * unseen keys as their own root. */
   private[pipeline] final class UnionFindMin[K](implicit ord: Ordering[K]) {
     private val parent = scala.collection.mutable.HashMap.empty[K, K]
     def find(x: K): K = {
@@ -138,9 +141,12 @@ object Clustering {
       .toDF("id", "local_root")
   }
 
-  /** Full clustering: union-find contraction within conversations, then
-    * distributed CC on the contracted cross-conversation graph, then expand.
-    */
+  /** Full clustering, `(mention_id, cluster_id)` for every mention
+    * (`mentions` holds each id once). A backpointer set within
+    * [[maxDriverEdges]] is solved in one bounded fetch on the driver. Over
+    * the bound, union-find contracts each conversation, and [[components]]
+    * solves the contracted cross-conversation graph; then every mention
+    * takes its local root's label. */
   def cluster(
       spark: SparkSession,
       mentions: DataFrame,
@@ -150,126 +156,75 @@ object Clustering {
 
     val nodes = mentions.select(col("mention_id").as("id"))
     val edges = backptrs.select(col("ant_id").as("src"), col("cur_id").as("dst"))
+    boundedRoots(edges).map(labelled(nodes, _)).getOrElse {
+      val local = localRoots(spark, nodes, edges).localCheckpoint(true)
 
-    val local = localRoots(spark, nodes, edges).localCheckpoint(true)
-
-    // contract: cross-conversation edges between local roots
-    val cross = edges.filter(
-      graft.functions.convOfMentionId(col("src")) =!=
-        graft.functions.convOfMentionId(col("dst")))
-    // materialize the contracted edge set ONCE: the size probe, the driver
-    // collect, and the distributed loop's first iteration all consume it —
-    // without the checkpoint each recomputes the two root joins (measured
-    // ~2x clustering wall-clock at sf0.1). The contracted graph is orders of
-    // magnitude smaller than the mention set, so this is cheap by design.
-    val crossRoots = cross
-      .join(local.withColumnRenamed("id", "src").withColumnRenamed("local_root", "src_root"), "src")
-      .join(local.withColumnRenamed("id", "dst").withColumnRenamed("local_root", "dst_root"), "dst")
-      .select(col("src_root").as("src"), col("dst_root").as("dst"))
-      .localCheckpoint(true)
-
-    // string-id driver fast path (r06): when the contracted graph fits the
-    // (tighter, string-id) driver bound, solve it directly with union-by-min
-    // and map every local root through ONE broadcast join — the integer
-    // encode/decode below exists to shrink the DISTRIBUTED loop's shuffles
-    // and the larger long-id driver collect, which a graph this small never
-    // reaches. The take doubles as the size probe (clusterTouched
-    // discipline); labels are bit-identical (component-min mention-id string
-    // either way — denseIdsByKey assigns long ids in string sort order, so
-    // the encoded path's min-long decodes to the same min-string).
-    val takenCross = graft.functions.fetchBounded(crossRoots, maxDriverContractedEdges + 1)
-    if (takenCross.length <= maxDriverContractedEdges) {
-      val uf = new UnionFindMin[String]
-      takenCross.foreach(r => uf.union(r.getString(0), r.getString(1)))
-      val sparkSes = spark
-      import sparkSes.implicits._
-      val mapped = uf.roots.toSeq.toDF("local_root", "root_cluster")
-      return local.join(broadcast(mapped), Seq("local_root"), "left")
-        .select(col("id").as("mention_id"),
-          coalesce(col("root_cluster"), col("local_root")).as("cluster_id"))
+      // contract: cross-conversation edges between local roots
+      val cross = edges.filter(
+        graft.functions.convOfMentionId(col("src")) =!=
+          graft.functions.convOfMentionId(col("dst")))
+      // materialize the contracted edge set ONCE: the bounded fetch and the
+      // distributed loop's first iteration both consume it — without the
+      // checkpoint each recomputes the two root joins (measured ~2x
+      // clustering wall-clock at sf0.1). The contracted graph is orders of
+      // magnitude smaller than the mention set, so this is cheap by design.
+      val crossRoots = cross
+        .join(local.withColumnRenamed("id", "src").withColumnRenamed("local_root", "src_root"), "src")
+        .join(local.withColumnRenamed("id", "dst").withColumnRenamed("local_root", "dst_root"), "dst")
+        .select(col("src_root").as("src"), col("dst_root").as("dst"))
+        .localCheckpoint(true)
+      val rootNodes = local.select(col("local_root").as("id")).distinct()
+      val rootClusters = components(rootNodes, crossRoots, checkpoint)
+      local.join(rootClusters.withColumnRenamed("mention_id", "local_root"), "local_root")
+        .select(col("id").as("mention_id"), col("cluster_id"))
     }
-
-    val rootNodes = local.select(col("local_root").as("id")).distinct()
-
-    // integer-encode the contracted graph (round-3 advice, two rounds
-    // running): the CC loop's shuffles and the driver collect then carry
-    // 8-byte longs instead of ~25-char mention-id strings — real money at
-    // 10^9 mentions. denseIdsByKey assigns dense longs in STRING SORT ORDER,
-    // so min-long == min-string and the decoded component minimum is
-    // bit-identical to the string loop's cluster ids. The encode/decode
-    // joins run at contracted-graph size (orders of magnitude below the
-    // mention count), so the encoding cost is negligible by construction.
-    val enc = SparseFeatures.denseIdsByKey(rootNodes, "id", "nid")
-      .localCheckpoint(true)
-    val encEdges = crossRoots
-      .join(enc.withColumnRenamed("id", "src").withColumnRenamed("nid", "src_n"), "src")
-      .join(enc.withColumnRenamed("id", "dst").withColumnRenamed("nid", "dst_n"), "dst")
-      .select(col("src_n").as("src"), col("dst_n").as("dst"))
-      .localCheckpoint(true)
-    val encNodes = enc.select(col("nid").as("id"))
-
-    val rootClustersN = hybridComponents(spark, encNodes, encEdges, checkpoint)
-
-    // decode nid → mention-id string for both the member and its label
-    val dec = enc.select(col("nid"), col("id"))
-    val rootClusters = rootClustersN
-      .join(dec.withColumnRenamed("nid", "mention_id").withColumnRenamed("id", "mid"),
-        "mention_id")
-      .join(dec.withColumnRenamed("nid", "cluster_id").withColumnRenamed("id", "cid"),
-        "cluster_id")
-      .select(col("mid").as("mention_id"), col("cid").as("cluster_id"))
-
-    local.join(rootClusters.withColumnRenamed("mention_id", "local_root"), "local_root")
-      .select(col("id").as("mention_id"), col("cluster_id"))
   }
 
-  /** Edge-count threshold under which the contracted cross-conversation
-    * graph is solved driver-side instead of by the distributed loop. With
-    * integer-encoded ids, 500k long edges is ≤ ~30 MB of driver heap
-    * (bounded, with the distributed loop as the over-threshold fallback).
-    * `private[graft] var` (r06) so the forced-distributed bench evidence
-    * and specs can zero it to exercise the checkpointed loop in anger. */
-  private[graft] var maxDriverEdges: Int = 500000
+  /** The one bound on every driver-side fetch in the clustering layer: the
+    * bounded solve, [[editBackpointers]]' two probes and the streaming
+    * fold's edit take. 200k string edges is at most ~20 MB of driver heap.
+    * Mutable so specs can force the distributed fallbacks on small
+    * fixtures. */
+  private[graft] var maxDriverEdges: Int = 200000
 
-  /** Edge-count bound for [[cluster]]'s STRING-id driver fast path (skips
-    * the integer encode/decode stages outright). String ids are ~25-40
-    * bytes vs 8-byte longs, so the bound is tighter — same memory class as
-    * [[maxDriverEditEdges]]. `private[graft] var` so specs can force the
-    * encoded/distributed paths on small fixtures. */
-  private[graft] var maxDriverContractedEdges: Int = 200000
+  /** The bounded solve: ONE `take(max+1)` of `edges` (two columns, String
+    * or Long ids) doubles as the size probe and the driver fetch; within
+    * the bound, union-by-min gives `(id, root)` for every endpoint, where
+    * root is its component minimum. None over the bound. */
+  private def boundedRoots(edges: DataFrame): Option[DataFrame] = {
+    val taken = graft.functions.fetchBounded(edges, maxDriverEdges + 1)
+    def solve[K: Ordering: TypeTag]: DataFrame = {
+      val uf = new UnionFindMin[K]
+      taken.foreach(r => uf.union(r.getAs[K](0), r.getAs[K](1)))
+      val spark = edges.sparkSession
+      import spark.implicits._
+      uf.roots.toSeq.toDF("id", "root")
+    }
+    if (taken.length > maxDriverEdges) None
+    else Some(edges.schema.head.dataType match {
+      case LongType => solve[Long]
+      case _ => solve[String]
+    })
+  }
 
-  /** Hybrid connected components over a LONG-id graph: below
-    * [[maxDriverEdges]] the graph is solved driver-side with union-by-min
-    * (identical result to the hash-to-min loop: cluster id = component
-    * minimum) and the iterative rounds are skipped entirely; above it, the
-    * distributed checkpointed loop runs. The size probe is a single
-    * `take(max+1)` that doubles as the driver fetch, so an over-threshold
-    * graph costs one bounded scan, never a full count, and an
-    * under-threshold graph executes its edge plan exactly once.
-    * Shared by the ER clustering stage (contracted
-    * cross-conversation graph) and near-dup canonicalization
-    * ([[graft.ops.Dedup.canonicalize]] — near-dup components are tiny, so
-    * the driver path removes ~6-8 s of per-iteration action overhead there).
-    * Returns `(mention_id, cluster_id)` like [[connectedComponents]]. */
-  def hybridComponents(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
+  /** `nodes` (col "id") labelled through a driver-held roots table: one
+    * broadcast left join, and a node on no edge is its own root. */
+  private def labelled(nodes: DataFrame, roots: DataFrame): DataFrame =
+    nodes.join(broadcast(roots), Seq("id"), "left")
+      .select(col("id").as("mention_id"), coalesce(col("root"), col("id")).as("cluster_id"))
+
+  /** Connected components of `edges` `(src, dst)` over `nodes` (col "id"),
+    * String or Long ids: the bounded solve within [[maxDriverEdges]], else
+    * the distributed checkpointed loop. Cluster id = component minimum
+    * either way. Backs [[cluster]]'s contracted graph and near-dup
+    * canonicalization ([[graft.ops.Dedup.canonicalize]]). Returns
+    * `(mention_id, cluster_id)` like [[connectedComponents]]. */
+  def components(nodes: DataFrame, edges: DataFrame,
       checkpoint: (Int, DataFrame) => DataFrame = (_, df) => df.localCheckpoint(true))
-    : DataFrame = {
-    // ONE take(max+1) doubles as the size probe and the driver fetch (the
-    // clusterTouched shape) — a separate limit().count() probe executed the
-    // edge plan twice for every under-threshold graph, the common case
-    val es0 = graft.functions.fetchBounded(
-      edges.select(col("src"), col("dst")), maxDriverEdges + 1)
-    if (es0.length <= maxDriverEdges) {
-      val uf = new UnionFindMin[Long]
-      es0.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
-      val sparkSes = spark
-      import sparkSes.implicits._
-      val mapped = uf.roots.toSeq.toDF("id", "cluster_id")
-      nodes.join(broadcast(mapped), Seq("id"), "left")
-        .select(col("id").as("mention_id"),
-          coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-    } else connectedComponents(nodes, edges, checkpoint = checkpoint)
-  }
+    : DataFrame =
+    boundedRoots(edges.select(col("src"), col("dst")))
+      .map(labelled(nodes, _))
+      .getOrElse(connectedComponents(nodes, edges, checkpoint = checkpoint))
 
   /** The backpointer table after applying `edits`: existing rows re-pointed,
     * detaches (`new_ant_id == cur_id`) dropped, brand-new links kept via the
@@ -292,10 +247,11 @@ object Clustering {
     * exactly the edited mention's current cluster and the new antecedent's
     * cluster (removal can only split the former; the new edge can only merge
     * into the latter), so re-run connected components on the touched members
-    * with the edited edge set and union with the untouched rows. Work is
-    * proportional to the touched clusters, never the corpus — a touched-id
-    * set within [[maxDriverEditEdges]] is broadcast, and untouched rows pass
-    * through an anti-join unscanned by the CC loop.
+    * with the edited edge set ([[cluster]], so a touched subgraph within
+    * [[maxDriverEdges]] is one bounded fetch) and union with the untouched
+    * rows. Work is proportional to the touched clusters, never the corpus —
+    * a touched-id set within [[maxDriverEdges]] is broadcast, and untouched
+    * rows pass through an anti-join unscanned by the CC loop.
     *
     * `edits` rows are `(cur_id, new_ant_id)`; `new_ant_id == cur_id`
     * detaches the mention (reference: `backpointers(i) == i`). An edit for a
@@ -338,13 +294,13 @@ object Clustering {
     // incremental regime the touched set is a handful of clusters, so ONE
     // bounded take of the edit ids and ONE of their clusters replace the
     // pinned shape's checkpoint jobs. Both takes are the cardinality gate:
-    // only a set already held within [[maxDriverEditEdges]] is broadcast,
+    // only a set already held within [[maxDriverEdges]] is broadcast,
     // and an over-bound edit-id or touched set falls back to the pinned
     // distributed shape below. The probe streams `clusters` against the
     // broadcast edit ids — no shuffle of the state table.
     def bounded(df: DataFrame): Option[Seq[String]] = {
-      val rows = graft.functions.fetchBounded(df, maxDriverEditEdges + 1)
-      if (rows.length <= maxDriverEditEdges) Some(rows.map(_.getString(0)).toSeq)
+      val rows = graft.functions.fetchBounded(df, maxDriverEdges + 1)
+      if (rows.length <= maxDriverEdges) Some(rows.map(_.getString(0)).toSeq)
       else None
     }
     val touchedSeq: Option[Seq[String]] = knownTouched.orElse {
@@ -372,44 +328,10 @@ object Clustering {
     val edited = premerged.map(refresh).getOrElse(mergeBackpointers(backptrs, e))
     val subEdges = edited.join(
       members.select(col("mention_id").as("cur_id")), "cur_id")
-    val recomputed = clusterTouched(spark, members, subEdges)
+    val recomputed = cluster(spark, members, subEdges)
     clusters.join(touched, Seq("cluster_id"), "left_anti")
       .select(col("mention_id"), col("cluster_id"))
       .unionByName(recomputed.select(col("mention_id"), col("cluster_id")))
-  }
-
-  /** Edge-count bound for solving the TOUCHED subgraph of an incremental
-    * edit driver-side. String ids are ~25-40 bytes vs the 8-byte longs of
-    * [[maxDriverEdges]], so the bound is tighter; 200k string edges is
-    * ≤ ~20 MB of driver heap. `private[graft] var` so the spec can force
-    * the over-bound fallback (the full contraction pipeline) on a small
-    * fixture. */
-  private[graft] var maxDriverEditEdges: Int = 200000
-
-  /** CC over the touched-members subgraph of [[editBackpointers]]. In the
-    * steady incremental regime the touched set is a handful of clusters, so
-    * the full [[cluster]] machinery (per-conversation union-find →
-    * contraction → integer encode → hybrid loop ≈ 6 pinned stages) is pure
-    * fixed overhead; a single bounded `take` + driver union-by-min replaces
-    * it with ONE job. `take` doubles as the size probe — if the fetch
-    * overflows [[maxDriverEditEdges]], fall back to the full contraction
-    * pipeline (bit-identical labels either way: cluster id = component-min
-    * mention_id string, which union-by-min preserves). */
-  private def clusterTouched(spark: SparkSession, members: DataFrame,
-      subEdges: DataFrame): DataFrame = {
-    val taken = graft.functions.fetchBounded(
-      subEdges.select(col("ant_id"), col("cur_id")), maxDriverEditEdges + 1)
-    if (taken.length > maxDriverEditEdges) cluster(spark, members, subEdges)
-    else {
-      val uf = new UnionFindMin[String]
-      taken.foreach(row => uf.union(row.getString(0), row.getString(1)))
-      val sparkSes = spark
-      import sparkSes.implicits._
-      val mapped = uf.roots.toSeq.toDF("mention_id", "cluster_id")
-      members.join(broadcast(mapped), Seq("mention_id"), "left")
-        .select(col("mention_id"),
-          coalesce(col("cluster_id"), col("mention_id")).as("cluster_id"))
-    }
   }
 
   /** C3: drop singleton clusters (CoNLL postprocessing,

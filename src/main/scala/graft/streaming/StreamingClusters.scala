@@ -70,14 +70,6 @@ object StreamingClusters {
       .select(col("cur_id"), col("ant_id").as("new_ant_id"))
   }
 
-  /** Edit-count bound for the driver fast path of [[update]]: batches whose
-    * final link set fits are folded with driver-held edit/touched sets (ONE
-    * bounded take replaces three checkpoint pins + an emptiness probe —
-    * the [[Clustering.clusterTouched]] discipline applied to the fold);
-    * larger batches take the fully distributed shape. Same memory class as
-    * [[Clustering.maxDriverEditEdges]]. */
-  private def maxDriverBatchEdits: Int = Clustering.maxDriverEditEdges
-
   /** One microbatch fold (pure batch function): register unseen ids as
     * singletons, then apply the batch's links as one C2 edit. */
   def update(spark: SparkSession, st: State, batchDecoded: DataFrame): State = {
@@ -85,20 +77,16 @@ object StreamingClusters {
     import sparkSes.implicits._
     // ONE bounded take doubles as the emptiness probe, the edit fetch and
     // the singleton-registration input: the steady fold regime is
-    // touched-proportional by contract, so the final link set is small; an
-    // over-bound batch falls back to the fully distributed shape.
+    // touched-proportional by contract, so the final link set is small; a
+    // batch over [[Clustering.maxDriverEdges]] (the clustering layer's one
+    // driver bound) falls back to the fully distributed shape.
     val taken = graft.functions.fetchBounded(
-      finalLinks(batchDecoded), maxDriverBatchEdits + 1)
+      finalLinks(batchDecoded), Clustering.maxDriverEdges + 1)
     if (taken.isEmpty) return st.copy(batches = st.batches + 1)
-    if (taken.length > maxDriverBatchEdits)
+    if (taken.length > Clustering.maxDriverEdges)
       return updateDistributed(spark, st, batchDecoded)
 
-    // Pins.release frees BLOCKING: the steady per-batch fold pins fresh
-    // checkpoint blocks immediately after releasing the previous fold's — an
-    // async free lets dead and live blocks overlap, the documented
-    // steady-epoch OOM class (SURVEY §11.2, same rule as the trainer)
-    val sc = spark.sparkContext
-    val before = Pins.ids(sc)
+    val before = Pins.ids(spark.sparkContext)
 
     // edits as a LocalRelation: statically broadcastable, nothing to pin
     val editPairs = taken.map(r => (r.getString(0), r.getString(1))).toSeq
@@ -138,36 +126,22 @@ object StreamingClusters {
     // the state has no backpointer for] (resolved by one more bounded
     // probe). Value-identical to Clustering.mergeBackpointers (edits are
     // unique per cur_id by finalLinks), with the state table streamed once
-    // instead of sort-merge-shuffled every batch. The merged table IS the
-    // next backpointer state AND the edge set the C2 kernel restricts to
-    // touched members (passed as `premerged`).
+    // instead of sort-merge-shuffled every batch.
     val freshLinks = editPairs.filterNot { case (c, _) => existingCur(c) }
-    val preMerge = Pins.ids(sc)
-    val backptrs2 = st.backptrs
+    val merged = st.backptrs
       .join(broadcast(edits), Seq("cur_id"), "left")
       .select(col("cur_id"),
         coalesce(col("new_ant_id"), col("ant_id")).as("ant_id"))
       .unionByName(freshLinks.toDF("cur_id", "ant_id"))
       .filter(col("ant_id") =!= col("cur_id"))
-      .localCheckpoint(true)
-    val bp2Pins = Pins.ids(sc) -- preMerge
-    val edited = Clustering.editBackpointers(spark, registered, st.backptrs,
-      edits, editsPinned = true, premerged = Some(backptrs2),
-      knownTouched = Some(touched))
-    val interm = Pins.ids(sc) -- before -- bp2Pins
-    val clusters2 = edited.localCheckpoint(true)
-    val pins2 = Pins.ids(sc) -- before -- interm
-    Pins.release(sc, interm ++ st.pins)
-    State(clusters2, backptrs2, pins2, st.batches + 1)
+    foldTail(spark, st, before, registered, edits, merged, Some(touched))
   }
 
   /** The fully distributed fold — the over-bound branch of [[update]]
     * (edit set too large to hold driver-side): the pinned shape. */
   private def updateDistributed(spark: SparkSession, st: State,
       batchDecoded: DataFrame): State = {
-    val sc = spark.sparkContext
-
-    val before = Pins.ids(sc)
+    val before = Pins.ids(spark.sparkContext)
     val edits = finalLinks(batchDecoded).localCheckpoint(true)
     // every id the batch mentions that the state has never seen becomes a
     // singleton cluster first, so the C2 kernel always edits a complete
@@ -184,18 +158,36 @@ object StreamingClusters {
       .localCheckpoint(true)
     val registered = st.clusters.unionByName(newSingletons)
 
+    foldTail(spark, st, before, registered, edits,
+      Clustering.mergeBackpointers(st.backptrs, edits), None)
+  }
+
+  /** The tail both fold shapes share: pin the merged backpointer table (the
+    * next backpointer state AND the edge set the C2 kernel restricts to
+    * touched members), apply the batch as ONE C2 edit, pin the new clusters
+    * and release every pin taken since `before` that the new state does not
+    * hold, plus the previous state's. `knownTouched` is the touched-cluster
+    * set the driver-held fold already probed. */
+  private def foldTail(spark: SparkSession, st: State, before: Set[Int],
+      registered: DataFrame, edits: DataFrame, merged: DataFrame,
+      knownTouched: Option[Seq[String]]): State = {
+    val sc = spark.sparkContext
     val preMerge = Pins.ids(sc)
-    val backptrs2 = Clustering.mergeBackpointers(st.backptrs, edits)
-      .localCheckpoint(true)
+    val backptrs2 = merged.localCheckpoint(true)
     val bp2Pins = Pins.ids(sc) -- preMerge
     // editBackpointers pins its internals eagerly during the call; snapshot
     // the pin set before taking the new state pins so the internals (plus
-    // `edits` and `newSingletons`) can be attributed and released afterwards
+    // the caller's edits and singletons) can be attributed and released
     val edited = Clustering.editBackpointers(spark, registered, st.backptrs,
-      edits, editsPinned = true, premerged = Some(backptrs2))
+      edits, editsPinned = true, premerged = Some(backptrs2),
+      knownTouched = knownTouched)
     val interm = Pins.ids(sc) -- before -- bp2Pins
     val clusters2 = edited.localCheckpoint(true)
     val pins2 = Pins.ids(sc) -- before -- interm
+    // Pins.release frees BLOCKING: the steady per-batch fold pins fresh
+    // checkpoint blocks immediately after releasing the previous fold's — an
+    // async free lets dead and live blocks overlap, the documented
+    // steady-epoch OOM class (SURVEY §11.2, same rule as the trainer)
     Pins.release(sc, interm ++ st.pins)
     State(clusters2, backptrs2, pins2, st.batches + 1)
   }

@@ -93,8 +93,9 @@ class ClusterEditSpec extends SparkSuite {
   }
 
   test("over-bound edit batch falls back to the full contraction pipeline, same labels") {
-    // force clusterTouched's take() to overflow so the distributed fallback
-    // runs on the same fixture; labels must match the driver fast path
+    // force the driver bound to 0 so the edit probes and the touched
+    // subgraph's clustering all take their distributed fallbacks on the
+    // same fixture; labels must match the driver fast path
     val ids = Seq(
       mid("cA", 0, 0), mid("cA", 0, 5), mid("cA", 1, 2),
       mid("cB", 0, 0), mid("cB", 0, 7),
@@ -108,11 +109,11 @@ class ClusterEditSpec extends SparkSuite {
     val clusters0 = Clustering.cluster(spark, mentions, bp).localCheckpoint(true)
     val edits = Seq((mid("cA", 1, 2), mid("cB", 0, 0))).toDF("cur_id", "new_ant_id")
     val fast = Clustering.editBackpointers(spark, clusters0, bp, edits)
-    val saved = Clustering.maxDriverEditEdges
+    val saved = Clustering.maxDriverEdges
     val (slowSet, hinted) = try {
-      Clustering.maxDriverEditEdges = 0
+      Clustering.maxDriverEdges = 0
       broadcastHinted(toSet(Clustering.editBackpointers(spark, clusters0, bp, edits)))
-    } finally Clustering.maxDriverEditEdges = saved
+    } finally Clustering.maxDriverEdges = saved
     // the edit-id set (mention_id) and the touched set (cluster_id) are over
     // the bound here by construction: neither may carry a broadcast hint
     assert(!hinted.exists(c => c == Seq("mention_id") || c == Seq("cluster_id")),
@@ -140,32 +141,64 @@ class ClusterEditSpec extends SparkSuite {
     // loop; the r06 pin hygiene must release each superseded iteration's
     // checkpoint blocks, so the persistent-RDD count after the run is
     // bounded by a constant (the result + its inputs), not the iteration
-    // count. Both driver fast paths disabled to force the loop.
+    // count. The driver bound at 0 forces the loop.
     val n = 40
     val ids = (0 until n).map(i => mid(f"c$i%02d", 0, 0))
     val mentions = ids.toDF("mention_id")
     val bp = (1 until n).map(i => (ids(i), ids(i - 1))).toDF("cur_id", "ant_id")
     val expected = Clustering.cluster(spark, mentions, bp)
-    val savedC = Clustering.maxDriverContractedEdges
-    val savedD = Clustering.maxDriverEdges
+    val saved = Clustering.maxDriverEdges
     val sc = spark.sparkContext
     val (dist, pinsAfter) = try {
-      Clustering.maxDriverContractedEdges = 0
       Clustering.maxDriverEdges = 0
       val before = sc.getPersistentRDDs.size
       val d = Clustering.cluster(spark, mentions, bp).localCheckpoint(true)
       (d, sc.getPersistentRDDs.size - before)
-    } finally {
-      Clustering.maxDriverContractedEdges = savedC
-      Clustering.maxDriverEdges = savedD
-    }
+    } finally Clustering.maxDriverEdges = saved
     // chain of 40 conversations -> O(log n) CC iterations; without the
     // release each iteration leaked one labels checkpoint. Allow the
     // result pin + the loop's live labels + a small constant of pinned
-    // inputs (local roots, contracted edges, encode table), NOT one per
-    // iteration beyond that.
+    // inputs (local roots, contracted edges), NOT one per iteration beyond
+    // that.
     assert(pinsAfter <= 8, s"persistent RDDs grew by $pinsAfter — superseded " +
       "CC iterations are not being released")
     assert(toSet(dist) == toSet(expected))
+  }
+
+  test("one driver bound: 0, small and default give equal labels; pins show the branch") {
+    // 6 conversations, each a 4-mention chain (18 within-conversation
+    // edges), joined by 3 cross-conversation links: the bound 5 is below
+    // the 21 backpointers but above the 3 contracted edges
+    val convs = (0 until 6).map(c => f"c$c%02d")
+    val chains = convs.map(c => (0 until 4).map(t => mid(c, t, t)))
+    val mentions = (chains.flatten :+ mid("c99", 0, 0)).toDF("mention_id")
+    val within = chains.flatMap(ch => (1 until ch.length).map(i => (ch(i), ch(i - 1))))
+    val cross = Seq((chains(1)(2), chains(0)(3)), (chains(3)(0), chains(2)(1)),
+      (chains(4)(1), chains(3)(3)))
+    val bp = (within ++ cross).toDF("cur_id", "ant_id")
+    val sc = spark.sparkContext
+    val saved = Clustering.maxDriverEdges
+    def run(bound: Int): (Set[(String, String)], Int) = try {
+      Clustering.maxDriverEdges = bound
+      val before = Pins.ids(sc)
+      val out = Clustering.cluster(spark, mentions, bp)
+      val pinned = Pins.ids(sc) -- before
+      val labels = toSet(out)
+      Pins.release(sc, pinned)
+      (labels, pinned.size)
+    } finally Clustering.maxDriverEdges = saved
+    val (dflt, dfltPins) = run(saved)
+    val (small, smallPins) = run(5)
+    val (dist, _) = run(0)
+    // components: {c00,c01}, {c02,c03,c04}, {c05}, the isolated c99
+    assert(dflt.map(_._2).size === 4)
+    assert(dflt.filter(_._1.startsWith("c01")).map(_._2) === Set(mid("c00", 0, 0)))
+    assert(small === dflt)
+    assert(dist === dflt)
+    // the top-level solve pins nothing; the small bound pins exactly the
+    // contraction tables (local roots, contracted edges) and then solves
+    // the contracted graph on the driver
+    assert(dfltPins === 0, s"top-level solve pinned $dfltPins RDDs")
+    assert(smallPins === 2, s"contraction + driver solve pinned $smallPins RDDs")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.ops._
 
 /** Training-data pipeline operators: dedup family, similarity search,
@@ -140,6 +141,30 @@ class OpsSpec extends SparkSuite {
     val hitNear = nearPlanted.join(found, Seq("doc_a", "doc_b"), "left_semi").count()
     info(s"portable simhash near-dup recall: $hitNear/${nearPlanted.count()}")
     assert(hitNear.toDouble / nearPlanted.count() >= 0.5)
+  }
+
+  test("near-dup canonicalize: distributed loop == driver solve, canonical_id stays long") {
+    import spark.implicits._
+    import graft.pipeline.Clustering
+    // two chains (one over ids beyond Int range) and a plain pair:
+    // canonical id = component minimum, and a long-id graph must not pass
+    // through string ids on either branch
+    val big = 5000000000L
+    val pairs = Seq((big + 3, big + 1), (big + 2, big + 3), (7L, 9L), (9L, 12L),
+      (4L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
+    val saved = Clustering.maxDriverEdges
+    def run(bound: Int) = try {
+      Clustering.maxDriverEdges = bound
+      val out = Dedup.canonicalize(pairs)
+      (out.schema("canonical_id").dataType, out.schema("doc_id").dataType,
+        out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    } finally Clustering.maxDriverEdges = saved
+    val (dType, dIdType, driver) = run(saved)
+    val (lType, lIdType, loop) = run(0)
+    assert(Seq(dType, dIdType, lType, lIdType).forall(_ == LongType))
+    assert(loop === driver)
+    assert(driver === Set((big + 1, big + 1), (big + 2, big + 1), (big + 3, big + 1),
+      (4L, 4L), (7L, 4L), (9L, 4L), (12L, 4L), (20L, 20L), (21L, 20L)))
   }
 
   test("multimodal: payload schema") {

@@ -560,6 +560,12 @@ class RunSpec extends SparkSuite {
     run(s"$tmp/out2")
     assert(io.latestSnapshot("clusters").get === snap1,
       "unchanged input must resume the committed snapshots")
+    // a re-run into the same output commits no identical snapshot there
+    run(s"$tmp/out1")
+    val out1 = new TableIO(s"$tmp/out1")
+    assert(out1.latestSnapshot("clusters") === Some(0),
+      "a re-run with the same config must not append an identical snapshot")
+    assert(out1.latestSnapshot("backptrs") === Some(0))
 
     // nightly-append: new files under the SAME path — every stage must
     // recompute under a new lineage token, not serve yesterday's clusters

@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSuite {
     var best = Map.empty[String, (String, Double)]
     var seen = Set.empty[String]
     var st = StreamingClusters.empty(spark)
-    // the same emissions folded again with the driver edit bound at 0: every
+    // the same emissions folded again with the driver bound at 0: every
     // non-empty batch takes the distributed fold (updateDistributed)
     var stDist = StreamingClusters.empty(spark)
     def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -257,11 +257,11 @@ class StreamingSpec extends SparkSuite {
       seen ++= emissions.iterator.flatMap(e => Seq(e._1, e._2))
       val batch = emissions.toSeq.toDF("cur_id", "ant_id", "score")
       st = StreamingClusters.update(spark, st, batch)
-      val savedBound = Clustering.maxDriverEditEdges
+      val savedBound = Clustering.maxDriverEdges
       stDist = try {
-        Clustering.maxDriverEditEdges = 0
+        Clustering.maxDriverEdges = 0
         StreamingClusters.update(spark, stDist, batch)
-      } finally Clustering.maxDriverEditEdges = savedBound
+      } finally Clustering.maxDriverEdges = savedBound
       // exactness after EVERY batch: incremental == full recompute over
       // everything decoded so far (including ants a later wave superseded)
       val expected = Clustering.cluster(spark,
