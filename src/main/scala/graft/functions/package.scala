@@ -231,24 +231,15 @@ package object functions {
       .otherwise("OTHER")
   }
 
-  /** Bounded driver fetch in ONE job: `df.take(n)` escalates incrementally
-    * (`spark.sql.limit.initialNumPartitions` = 1, ×4 per retry — up to 4
-    * sequential jobs on a 32-partition input) which is right when a few
-    * rows suffice, and pure waste for the engine's bounded PROBES, which
-    * by design fetch (nearly) the whole small result and only use the
-    * bound as an overflow guard. Scanning all partitions in one pass is
-    * scale-independent: the probe inputs are contracted/touched/candidate
-    * sets orders of magnitude below the data, and an over-bound result
-    * still stops at n rows collected per the limit semantics. */
-  def fetchBounded(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] = {
-    val conf = df.sparkSession.conf
-    val k = "spark.sql.limit.initialNumPartitions"
-    val old = conf.getOption(k)
-    conf.set(k, Int.MaxValue.toString)
-    try df.take(n)
-    finally old match {
-      case Some(v) => conf.set(k, v)
-      case None => conf.unset(k)
-    }
-  }
+  /** Bounded driver fetch: at most `n` rows of `df`, and at most `n` rows
+    * ever reach the driver. `limit(n)` keeps n rows per partition and one
+    * single-partition exchange cuts them to n before the collect — one
+    * derivation of `df`, whatever its size. `df.take(n)` is either up to
+    * ~log4(partitions) sequential jobs (`spark.sql.limit.initialNumPartitions`
+    * escalation) or, scanning every partition in one job, ships up to n rows
+    * PER PARTITION to the driver: on an over-bound input that is the very
+    * driver memory the bound exists to cap. Callers pass their bound + 1, so
+    * a full result means "over the bound". */
+  def fetchBounded(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] =
+    df.limit(n).rdd.collect()
 }

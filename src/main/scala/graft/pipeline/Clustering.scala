@@ -157,10 +157,17 @@ object Clustering {
     val nodes = mentions.select(col("mention_id").as("id"))
     val edges = backptrs.select(col("ant_id").as("src"), col("cur_id").as("dst"))
     boundedRoots(edges).map(labelled(nodes, _)).getOrElse {
-      val local = localRoots(spark, nodes, edges).localCheckpoint(true)
+      // over the bound: pin the edge set ONCE for the contraction's two
+      // legs, or each re-derives it (the whole scoring + decode chain when
+      // the caller's backpointers are lazy); dead once both legs are pinned
+      val sc = spark.sparkContext
+      val preEdges = Pins.ids(sc)
+      val pinned = edges.localCheckpoint(true)
+      val edgePins = Pins.ids(sc) -- preEdges
+      val local = localRoots(spark, nodes, pinned).localCheckpoint(true)
 
       // contract: cross-conversation edges between local roots
-      val cross = edges.filter(
+      val cross = pinned.filter(
         graft.functions.convOfMentionId(col("src")) =!=
           graft.functions.convOfMentionId(col("dst")))
       // materialize the contracted edge set ONCE: the bounded fetch and the
@@ -173,6 +180,7 @@ object Clustering {
         .join(local.withColumnRenamed("id", "dst").withColumnRenamed("local_root", "dst_root"), "dst")
         .select(col("src_root").as("src"), col("dst_root").as("dst"))
         .localCheckpoint(true)
+      Pins.release(sc, edgePins)
       val rootNodes = local.select(col("local_root").as("id")).distinct()
       val rootClusters = components(rootNodes, crossRoots, checkpoint)
       local.join(rootClusters.withColumnRenamed("mention_id", "local_root"), "local_root")
@@ -187,8 +195,9 @@ object Clustering {
     * fixtures. */
   private[graft] var maxDriverEdges: Int = 200000
 
-  /** The bounded solve: ONE `take(max+1)` of `edges` (two columns, String
-    * or Long ids) doubles as the size probe and the driver fetch; within
+  /** The bounded solve: ONE bounded fetch of `edges` (two columns, String
+    * or Long ids; [[graft.functions.fetchBounded]], so at most max+1 rows
+    * reach the driver) doubles as the size probe and the edge set; within
     * the bound, union-by-min gives `(id, root)` for every endpoint, where
     * root is its component minimum. None over the bound. */
   private def boundedRoots(edges: DataFrame): Option[DataFrame] = {
@@ -292,8 +301,8 @@ object Clustering {
     import sparkSes.implicits._
     // Touched-cluster ids, driver-side and bounded: in the steady
     // incremental regime the touched set is a handful of clusters, so ONE
-    // bounded take of the edit ids and ONE of their clusters replace the
-    // pinned shape's checkpoint jobs. Both takes are the cardinality gate:
+    // bounded fetch of the edit ids and ONE of their clusters replace the
+    // pinned shape's checkpoint jobs. Both fetches are the cardinality gate:
     // only a set already held within [[maxDriverEdges]] is broadcast,
     // and an over-bound edit-id or touched set falls back to the pinned
     // distributed shape below. The probe streams `clusters` against the

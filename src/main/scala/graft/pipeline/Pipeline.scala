@@ -93,8 +93,10 @@ object Pipeline {
         // one stage per iteration, PROBED before computing: a re-run that
         // crashed mid-loop reuses every committed iteration (the loop is
         // deterministic in backptrs + config, both in the lineage) instead
-        // of recomputing all of them and appending duplicate snapshots
-        case Some(t) => (i, df) => t.readOrCommit(spark, s"cc-iter-$i", s"$tok-iter$i")(df)
+        // of recomputing all of them and appending duplicate snapshots.
+        // `-str` tags the label format (String mention ids): iterations
+        // committed with the retired Long-encoded labels read as stale
+        case Some(t) => (i, df) => t.readOrCommit(spark, s"cc-iter-$i", s"$tok-iter$i-str")(df)
         case None => (_, df) => df.localCheckpoint(true)
       }
       Clustering.cluster(spark, mentions, backptrs, ccCheckpoint)

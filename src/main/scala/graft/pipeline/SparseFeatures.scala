@@ -383,13 +383,13 @@ object SparseFeatures {
 
   /** Collect a weight table `(f, w_i)` into a [[graft.functions.SparseWeightMap]]
     * when it is small enough to broadcast; `None` (→ caller stays on the join
-    * plan) otherwise. The size probe is `limit(max+1).count()` so an
-    * over-limit table costs one bounded scan, not a full count. */
+    * plan) otherwise. One bounded fetch of max+1 rows is the size probe,
+    * so an over-limit table costs one bounded scan, not a full count. */
   def collectWeights(weights: DataFrame,
       maxFeatures: Int = BroadcastMaxFeatures): Option[graft.functions.SparseWeightMap] = {
-    // ONE take(max+1) is both the size probe and the fetch — a separate
-    // limit().count() probe would execute a derived (unpinned) weights plan
-    // twice; take stops early on over-cutoff tables just like limit did
+    // ONE bounded fetch of max+1 rows is both the size probe and the fetch —
+    // a separate limit().count() probe would execute a derived (unpinned)
+    // weights plan twice
     val rows = graft.functions.fetchBounded(
       weights.select(col("f"), col("w_i")), maxFeatures + 1)
     if (rows.length > maxFeatures) None

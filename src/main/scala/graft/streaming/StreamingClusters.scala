@@ -75,7 +75,7 @@ object StreamingClusters {
   def update(spark: SparkSession, st: State, batchDecoded: DataFrame): State = {
     val sparkSes = spark
     import sparkSes.implicits._
-    // ONE bounded take doubles as the emptiness probe, the edit fetch and
+    // ONE bounded fetch doubles as the emptiness probe, the edit fetch and
     // the singleton-registration input: the steady fold regime is
     // touched-proportional by contract, so the final link set is small; a
     // batch over [[Clustering.maxDriverEdges]] (the clustering layer's one
