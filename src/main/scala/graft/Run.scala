@@ -470,10 +470,7 @@ object Run {
     // or when nothing folded, leaving the loaded state current)
     if (st.batches > initialBatches && st.batches % cadence != 0)
       StreamingClusters.commitState(io, st, token)
-    val nLive = st.clusters.count()
-    val nClusters =
-      if (nLive == 0) 0L
-      else st.clusters.agg(countDistinct(col("cluster_id"))).head.getLong(0)
+    val (nLive, nClusters) = rowsAndClusters(st.clusters)
     val wallSec = (System.nanoTime() - t0) / 1e9
     val metrics =
       s"""{"input":${Json.quote(input)},"mode":${Json.quote(mode)},"streaming":true,""" +
@@ -483,6 +480,13 @@ object Run {
       f""""wall_sec":$wallSec%.3f}"""
     writeText(spark, s"$output/metrics.json", metrics)
     metrics
+  }
+
+  /** Rows and distinct `cluster_id`s of a `(mention_id, cluster_id)` table,
+    * in one aggregate; (0, 0) when it is empty. */
+  private def rowsAndClusters(clusters: DataFrame): (Long, Long) = {
+    val r = clusters.agg(count(lit(1)), countDistinct(col("cluster_id"))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** The job body, session-lifecycle-free so a test can drive it on a shared
@@ -837,8 +841,8 @@ object Run {
     }.getOrElse("")
     val evalFrag = if (opt.get("evaluate").exists(_.toBoolean))
       evaluateFragment(spark, opt, cfg, res) else ""
-    val nMentions = res.mentions.count()
-    val nClusters = res.clusters.agg(countDistinct(col("cluster_id"))).head.getLong(0)
+    // `clusters` holds one row per mention (Clustering.cluster's contract)
+    val (nMentions, nClusters) = rowsAndClusters(res.clusters)
     val metrics = s"""{"input":${Json.quote(input)},"mode":${Json.quote(mode)},""" +
       s""""config":${Json.quote(cfg.token)},""" +
       trainFrag + jointFrag + nerFrag + linkFrag + conllFrag + evalFrag +

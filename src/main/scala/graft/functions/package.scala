@@ -28,6 +28,19 @@ package object functions {
     * split — `/root/reference/.../preprocess/Tokenizer.scala:11-69`). */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** A turn text's mentions, one generated row `(start, end, surface,
+    * mtype)` each ([[TurnMentions]]); use in a `select` with
+    * `.as(Seq(...))`. */
+  def turnMentions(text: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      TurnMentions(org.apache.spark.sql.graft.ColumnBridge.expression(text)))
+
+  /** `c` with its nullability widened to nullable, value unchanged. */
+  def knownNullable(c: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.KnownNullable(
+        org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+
   /** Lowercased normalized form of a mention surface (F1 analog:
     * `/root/reference/.../coref/Mention.scala:32-51`). */
   def normSurface(s: Column): Column = lower(trim(s))

@@ -1,9 +1,13 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Snapshot-committing table seam (SURVEY.md §7.0).
   *
@@ -31,6 +35,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * per-partition checkpoint with lineage + counters persisted per partition").
   */
 class TableIO(rootDir: String) {
+  /** The footer key under which Spark's parquet writer stores the row
+    * schema it wrote. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
   private def hadoopConf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
@@ -75,14 +83,10 @@ class TableIO(rootDir: String) {
     val dataPath = new Path(stageDir(stage), s"snap-$snap").toString
     df.write.mode("overwrite").parquet(dataPath)
     // per-partition counters tied to the COMMITTED FILES (not read-time scan
-    // splits, which shift with split sizing): one scan computes both the
-    // per-file counters and the total row count
-    val spark = df.sparkSession
-    val stats = spark.read.parquet(dataPath)
-      .groupBy(input_file_name().as("file")).agg(count(lit(1)).as("rows"))
-      .collect()
-      .map(r => (r.getString(0).split('/').last, r.getLong(1)))
-      .sortBy(_._1)
+    // splits, which shift with split sizing), from the footers just written;
+    // an empty part file carries no counter
+    val stats = footers(new Path(dataPath)).map { case (st, meta) =>
+      (st.getPath.getName, rowsOf(meta)) }.filter(_._2 > 0)
     val m = Json.obj().put("stage", stage).put("snapshot", snap)
       .put("lineage", lineage).put("rowCount", stats.map(_._2).sum)
     val counters = m.putArray("partitionCounters")
@@ -99,6 +103,22 @@ class TableIO(rootDir: String) {
       throw new java.io.IOException(s"manifest commit rename failed: $tmp -> $dst")
     snap
   }
+
+  /** The data files of a snapshot directory (what `spark.read.parquet`
+    * lists: no `_`- or `.`-prefixed names), name-sorted, each with its
+    * parquet footer — read on the driver, no Spark job. */
+  private def footers(dir: Path): Seq[(FileStatus, ParquetMetadata)] =
+    fs(dir).listStatus(dir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hadoopConf))
+        try (st, r.getFooter) finally r.close()
+      }
+
+  private def rowsOf(meta: ParquetMetadata): Long =
+    meta.getBlocks.asScala.map(_.getRowCount).sum
 
   private def manifestJson(stage: String, snap: Int) =
     manifest(stage, snap).flatMap(Json.parse)
@@ -119,8 +139,10 @@ class TableIO(rootDir: String) {
     * a substring scan — a token that is a prefix of another can never
     * false-match. The row-count check makes a torn / tampered snapshot
     * (e.g. a lost part file under a surviving manifest) fail loudly into a
-    * recompute instead of a silent short read; it is a parquet-footer-only
-    * count, cheap relative to any recompute it guards. */
+    * recompute instead of a silent short read: the manifest's `rowCount`
+    * against the sum of the data files' footers, read on the driver. The
+    * read takes its schema from the same footers (the Spark schema Spark
+    * writes into each), so neither check nor read starts a Spark job. */
   def readIfCurrent(spark: SparkSession, stage: String, lineage: String,
       snap: Option[Int] = None): Option[DataFrame] = {
     val s = snap.orElse(latestSnapshot(stage))
@@ -129,8 +151,16 @@ class TableIO(rootDir: String) {
         case Some(m) if lineageOf(m).contains(lineage) =>
           val expected = Option(m.get("rowCount")).map(_.asLong)
           try {
-            val df = spark.read.parquet(new Path(stageDir(stage), s"snap-$k").toString)
-            if (expected.forall(_ == df.count())) Some(df) else None
+            val dir = new Path(stageDir(stage), s"snap-$k")
+            val files = footers(dir)
+            if (!expected.forall(_ == files.map(f => rowsOf(f._2)).sum)) None
+            else {
+              val schema = files.headOption.flatMap(f => Option(f._2.getFileMetaData
+                .getKeyValueMetaData.get(SparkSchemaKey)))
+              val reader = schema.fold(spark.read)(s =>
+                spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
+              Some(reader.parquet(dir.toString))
+            }
           } catch { case _: Exception => None } // unreadable data = torn write
         case _ => None
       }

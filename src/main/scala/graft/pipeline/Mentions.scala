@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,6 +18,12 @@ import graft.functions.{headKey, mentionId, normSurface}
   *  - `pronoun` + `nominal`: closed-class mentions from small dictionaries
   *    (`PronounDictionary.scala:4-21`; nominal descriptors after a
   *    determiner).
+  *
+  * The identifier path ([[extractIdentifier]]) is plain SQL over posexploded
+  * tokens. The all-generators path ([[extractAll]]) runs every generator
+  * and the three dedup rules in one pass per turn ([[turnMentions]]); the
+  * relational formulation it replaced is kept as the reference in
+  * MentionKernelSpec, and `ErOracle.mentionsAllSql` is its DuckDB mirror.
   *
   * Mention identity is positional and deterministic: `mention_id =
   * conv_id#<turn,6><start,6>` sorts lexicographically in the reference's
@@ -37,15 +44,11 @@ object Mentions {
     Seq("vendor", "company", "client", "supplier", "firm", "organization")
   val IdentifierRe = "^(?:[A-Za-z]+[#-])?[0-9]+$"
 
-  /** Tokens with positions for each turn. */
-  private def toks(transcripts: DataFrame): DataFrame =
-    transcripts
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-
   /** Identifier + pronoun mentions (single-token; harness path). */
   def extractIdentifier(transcripts: DataFrame): DataFrame = {
-    val t = toks(transcripts)
+    val t = transcripts
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
+        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
     val cands = t.filter(
       col("tok").rlike(IdentifierRe) ||
         lower(col("tok")).isin(Pronouns: _*))
@@ -60,68 +63,74 @@ object Mentions {
   /** All three generators union'd (fixture/ER path): capitalized runs,
     * pronouns, determiner+nominal. Sentence-initial capitalized tokens are
     * only kept if they look like identifiers or pronouns (avoids treating
-    * every sentence opener as a name). */
+    * every sentence opener as a name). Every rule is local to one turn, so
+    * the candidates come from ONE pass of [[turnMentions]] per turn (a
+    * generator, [[graft.functions.TurnMentions]]) instead of posexploded
+    * legs, an aggregate and turn-keyed windows; [[finish]] then adds the
+    * properties, `m_seq` and `mention_id`. */
   def extractAll(transcripts: DataFrame): DataFrame = {
-    val t = toks(transcripts)
-    val wTurn = Window.partitionBy(col("conv_id"), col("turn_idx")).orderBy(col("pos"))
-
-    val isCap = col("tok").rlike("^[A-Z0-9][A-Za-z0-9#-]*$") &&
-      !lower(col("tok")).isin(Pronouns: _*) &&
-      (col("pos") > 0 || col("tok").rlike(IdentifierRe))
-    val capToks = t.withColumn("is_cap", isCap)
-      .filter(col("is_cap"))
-      .withColumn("grp", col("pos") - row_number().over(wTurn))
-    val capRuns = capToks
-      .groupBy(col("conv_id"), col("turn_idx"), col("grp"))
-      .agg(
-        min(col("pos")).as("start"), max(col("pos")).as("end"),
-        concat_ws(" ", transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-          s => s.getField("tok"))).as("surface"),
-        first(col("role")).as("role"), first(col("ts")).as("ts"))
-      .withColumn("mtype", lit("PROPER"))
-      .drop("grp")
-
-    val prons = t.filter(lower(col("tok")).isin(Pronouns: _*))
-      .select(col("conv_id"), col("turn_idx"), col("pos").as("start"),
-        col("pos").as("end"), col("tok").as("surface"), lit("PRONOMINAL").as("mtype"),
-        col("role"), col("ts"))
-
-    val prevTok = lag(lower(col("tok")), 1).over(wTurn)
-    val noms = t.withColumn("prev", prevTok)
-      .filter(lower(col("tok")).isin(NominalHeads: _*) &&
-        col("prev").isin("the", "that", "this"))
-      .select(col("conv_id"), col("turn_idx"), (col("pos") - 1).as("start"),
-        col("pos").as("end"),
-        concat(col("prev"), lit(" "), col("tok")).as("surface"),
-        lit("NOMINAL").as("mtype"), col("role"), col("ts"))
-
-    val all = capRuns.select(prons.columns.map(col): _*)
-      .unionByName(prons).unionByName(noms)
-      // A15 dedup: one mention per extent (mtype-ascending tie-break)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("conv_id"), col("turn_idx"), col("start"), col("end"))
-          .orderBy(col("mtype"))))
-      .filter(col("rk") === 1).drop("rk")
-    // M2 non-maximal filter (`CorefDocAssembler.scala:157-189`): the parse-free
-    // head is the last token (position = end), so per head position keep only
-    // the largest span — nested spans sharing a head never double-emit.
-    val m2 = all
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("conv_id"), col("turn_idx"), col("end"))
-          .orderBy(col("start").asc, col("mtype"))))
-      .filter(col("rk") === 1).drop("rk")
-    // id-safety: mention_id is (turn, start)-derived, so keep one mention per
-    // start (longest span wins) — guarantees id uniqueness across generators
-    val uniq = m2
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("conv_id"), col("turn_idx"), col("start"))
-          .orderBy(col("end").desc, col("mtype"))))
-      .filter(col("rk") === 1).drop("rk")
-    finish(uniq)
+    // the union of the per-generator legs this replaces took role/ts from
+    // `first` (nullable) — keep that schema whatever the input's nullability
+    def nullable(c: String) = graft.functions.knownNullable(col(c)).as(c)
+    val cands = transcripts
+      .select(col("conv_id"), col("turn_idx"), nullable("role"), nullable("ts"),
+        graft.functions.turnMentions(col("text")).as(Seq("start", "end", "surface", "mtype")))
+      .select(col("conv_id"), col("turn_idx"), col("start"), col("end"),
+        col("surface"), col("mtype"), col("role"), col("ts"))
+    finish(cands)
   }
 
+  private val CapRe = Pattern.compile("^[A-Z0-9][A-Za-z0-9#-]*$")
+  private val IdentifierPattern = Pattern.compile(IdentifierRe)
+  private val PronounSet = Pronouns.toSet
+  private val NominalHeadSet = NominalHeads.toSet
+  private val Determiners = Set("the", "that", "this")
+
+  /** The mentions of one turn's text as `(start, end, surface, mtype)`, in
+    * start order; none for a null text. Tokens are `split(text, " ", -1)`
+    * and positions index them, as Spark's `split` + `posexplode` do; the
+    * patterns match with `find()`, as `rlike` does (so a token's trailing
+    * `\n` passes a `$`-anchored pattern); lowercasing only feeds membership
+    * in the ASCII word lists. Candidates:
+    *  - `PROPER`: maximal runs of capitalized non-pronoun tokens, a
+    *    sentence-initial token only when it is an identifier;
+    *  - `PRONOMINAL`: each pronoun;
+    *  - `NOMINAL`: a nominal head after the/that/this, surfaced as the
+    *    lowercased determiner + the head.
+    * Then, in this order: A15 one mention per extent (smallest mtype); M2
+    * (`CorefDocAssembler.scala:157-189`) per end position — the parse-free
+    * head — only the longest span (smallest start, then mtype); id safety
+    * (`mention_id` is `(turn, start)`-derived) per start only the longest
+    * span (largest end, then mtype). */
+  def turnMentions(text: String): Seq[(Int, Int, String, String)] =
+    if (text == null) Nil
+    else {
+      val toks = text.split(" ", -1)
+      val low = toks.map(_.toLowerCase(java.util.Locale.ROOT))
+      def isCap(i: Int) = CapRe.matcher(toks(i)).find() && !PronounSet(low(i)) &&
+        (i > 0 || IdentifierPattern.matcher(toks(i)).find())
+      val cands = Seq.newBuilder[(Int, Int, String, String)]
+      var i = 0
+      while (i < toks.length) {
+        if (isCap(i)) {
+          val s = i
+          while (i + 1 < toks.length && isCap(i + 1)) i += 1
+          cands += ((s, i, toks.slice(s, i + 1).mkString(" "), "PROPER"))
+        }
+        i += 1
+      }
+      for (i <- toks.indices) {
+        if (PronounSet(low(i))) cands += ((i, i, toks(i), "PRONOMINAL"))
+        if (i > 0 && NominalHeadSet(low(i)) && Determiners(low(i - 1)))
+          cands += ((i - 1, i, low(i - 1) + " " + toks(i), "NOMINAL"))
+      }
+      val extents = cands.result().groupBy(m => (m._1, m._2)).values.map(_.minBy(_._4))
+      val maximal = extents.groupBy(_._2).values.map(_.minBy(m => (m._1, m._4)))
+      maximal.groupBy(_._1).values.map(_.minBy(m => (-m._2, m._4))).toSeq.sortBy(_._1)
+    }
+
   /** Shared property computation + canonical ids (M3/M5/W1). */
-  private def finish(cands: DataFrame): DataFrame = {
+  private[graft] def finish(cands: DataFrame): DataFrame = {
     val wConv = Window.partitionBy(col("conv_id"))
       .orderBy(col("turn_idx"), col("start"), col("end"))
     properties(cands)

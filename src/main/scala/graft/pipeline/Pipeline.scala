@@ -50,11 +50,13 @@ object Pipeline {
       backptrs: DataFrame,
       clusters: DataFrame,
       surfaces: DataFrame) {
-    /** Release the pipeline's internal caches (mentions + surfaces). Call
-      * once the outputs you need are materialized or persisted elsewhere —
-      * otherwise back-to-back `run`s in a long-lived session accumulate
-      * cacheManager entries (CacheSpec pins this). */
-    def unpersist(): Unit = { mentions.unpersist(); surfaces.unpersist() }
+    /** Release the pipeline's internal caches (mentions, surfaces and
+      * backptrs). Call once the outputs you need are materialized or
+      * persisted elsewhere — otherwise back-to-back `run`s in a long-lived
+      * session accumulate cacheManager entries (CacheSpec pins this). */
+    def unpersist(): Unit = {
+      mentions.unpersist(); surfaces.unpersist(); backptrs.unpersist()
+    }
   }
 
   def run(spark: SparkSession, transcripts: DataFrame, cfg: Config = Config()): Result = {
@@ -74,20 +76,29 @@ object Pipeline {
     // inherits real parallelism.
     val par = spark.sparkContext.defaultParallelism
     val spread = transcripts.repartition(par, col("conv_id"))
-    // mentions and surfaces fan out into many downstream legs (5 block-key
-    // families + stats + scoring attach); cache them or each leg re-derives
-    // the whole extraction chain
+    // Pinned tables, each derived once per run:
+    //  - mentions and surfaces fan out into many downstream legs (5
+    //    block-key families + stats + scoring attach), so each leg would
+    //    re-derive the whole extraction chain. Both are built by ONE action
+    //    here, before surfacePairs plans against them: left lazy, AQE plans
+    //    each of the self-join's cache scans (12) as a query stage of its
+    //    own, and every one starts its own materialization job.
+    //  - backptrs is read by clustering's bounded fetch and again by the
+    //    caller's commit; lazy, each read re-runs scoring + decode.
+    // Result.unpersist() releases all three.
     val mentions = stage("mentions", tok) {
       if (cfg.mentionGenerator == "identifier") Mentions.extractIdentifier(spread)
       else Mentions.extractAll(spread)
     }.cache()
     val surfaces = Blocking.surfaceTable(mentions).cache()
+    surfaces.count()
     val scorer = Scorer(cfg, mentions)
     val surfacePairs = stage("surface_pairs", tok)(
       Blocking.surfacePairs(surfaces, cfg.blocking))
     val surfaceScores = stage("surface_scores", tok)(scorer.surface(surfacePairs, surfaces))
     val scored = stage("scores", tok)(arcs(mentions, surfaces, surfaceScores, scorer, cfg))
     val backptrs = stage("backptrs", tok)(Decode.backpointers(scored, cfg.linkThreshold))
+      .cache()
     val clusters = stage("clusters", tok) {
       val ccCheckpoint: (Int, DataFrame) => DataFrame = io match {
         // one stage per iteration, PROBED before computing: a re-run that

@@ -5,8 +5,9 @@ import graft.pipeline._
 /** Cache hygiene: a long-lived session running the pipeline repeatedly must
   * not accumulate cacheManager entries (round-3 advice — `surfacePairs`
   * leaked one cached Dataset per invocation). `Pipeline.run` caches only
-  * mentions + surfaces, released by `Result.unpersist()`; everything else is
-  * eager localCheckpoint (freed by the ContextCleaner, never in the
+  * mentions, surfaces and backptrs (read by clustering's fetch and by the
+  * caller's commit), all released by `Result.unpersist()`; everything else
+  * is eager localCheckpoint (freed by the ContextCleaner, never in the
   * cacheManager). */
 class CacheSpec extends SparkSuite {
   import graft.fixtures.ErFixture._

@@ -13,6 +13,11 @@ import graft.train.ModelIO
   * (reference `EntitySystem.scala:226-266`). */
 class RunSpec extends SparkSuite {
 
+  /** Spark jobs of one dense batch `Run` on the 30-conversation fixture:
+    * measured 37 (67 before the stages were pinned and built once), plus
+    * slack for AQE's plan choices. */
+  private val RunJobBound = 40
+
   private def field(json: String, key: String): String = {
     val m = (s""""$key":"?([^",}]+)"?""").r.findFirstMatchIn(json)
     assert(m.nonEmpty, s"metrics line missing $key: $json")
@@ -574,6 +579,23 @@ class RunSpec extends SparkSuite {
     run(s"$tmp/out3")
     assert(io.latestSnapshot("clusters").get > snap1,
       "appended input files must invalidate the checkpointed lineage")
+  }
+
+  test("a batch Run derives each stage once: its Spark job count stays under the bound") {
+    // every pinned table (mentions, surfaces, backptrs) built by one action,
+    // TableIO counters from footers, one closing aggregate: a stage that is
+    // lazily re-derived again adds 5-15 jobs and trips the bound
+    val fx = graft.fixtures.ErFixture
+    val tmp = java.nio.file.Files.createTempDirectory("runspec_jobs").toString
+    fx.transcriptsDF(spark, fx.generate(entities = 10, convs = 30, seed = 7L))
+      .write.parquet(s"$tmp/in")
+    var metrics = ""
+    val jobs = jobsDuring {
+      metrics = Run.runWith(spark, Map("input" -> s"$tmp/in", "output" -> s"$tmp/out"))
+    }
+    info(s"$jobs Spark jobs: $metrics")
+    assert(field(metrics, "clusters").toInt > 0)
+    assert(jobs <= RunJobBound, s"a batch Run took $jobs Spark jobs (bound $RunJobBound)")
   }
 
   test("--train without --model-dir fails loudly; --mode sparse without a model fails loudly") {
