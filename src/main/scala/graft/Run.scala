@@ -124,8 +124,9 @@ import graft.train.{ModelIO, Trainer}
   *                                    arriving transcript file stream
   *                                    (Trigger.AvailableNow) through mention
   *                                    extraction → stateful band pairing →
-  *                                    scoring → running decode → live
-  *                                    cluster maintenance; the maintained
+  *                                    scoring → per-microbatch decode in
+  *                                    the live cluster-maintenance fold;
+  *                                    the maintained
   *                                    state commits through TableIO every
   *                                    --commit-cadence folds and a re-run
   *                                    with the same --output RESUMES (durable
@@ -356,13 +357,20 @@ object Run {
     * the ST chain — transcript file stream → stateless mention extraction +
     * property enrichment → stateful band pairing (B1's streaming analog) →
     * the batch scoring expressions, stateless → a DURABLE scored-arc parquet
-    * sink → (second query) running per-mention argmax decode (W4/A2) →
-    * [[graft.streaming.StreamingClusters.maintain]] with a DURABLE engine
-    * checkpoint and TableIO state commits every `--commit-cadence` folds. `Trigger.AvailableNow` drains whatever has
-    * arrived and terminates — the warehouse incremental-maintenance shape: a
-    * re-run with the same `--output` loads the committed state, the engine
-    * checkpoint skips already-folded files, and only new arrivals fold
-    * (cadence 1 = exactly-once resume; see `maintain`'s resume contract).
+    * sink → (second query, stateless) the threshold filter and, per
+    * microbatch, the per-mention argmax decode (W4/A2) inside
+    * [[graft.streaming.StreamingClusters.maintain]], with a DURABLE engine
+    * checkpoint and TableIO state commits every `--commit-cadence` folds.
+    * `Trigger.AvailableNow` drains whatever has arrived and terminates — the
+    * warehouse incremental-maintenance shape: a re-run with the same
+    * `--output` loads the committed state, the engine checkpoint skips
+    * already-folded files, and only new arrivals fold — one fold and one
+    * state commit per run that brings new arcs, none for a run that brings
+    * none (cadence 1 = exactly-once resume; see `maintain`'s resume
+    * contract). Outputs written when the decode was a stateful query hold
+    * its operator state under `stream_checkpoint/state/`; it is deleted
+    * before the fold starts, since the stateless fold query cannot start
+    * over a checkpoint that records a stateful operator.
     * The maintained cluster table equals the batch clustering of the band
     * arcs decoded so far after every fold (StreamingSpec), so the committed
     * `stream_clusters` snapshot is always a consistent entity table. */
@@ -432,13 +440,16 @@ object Run {
         StreamingAssembly.streamingBandScoresSparse(spark, mentionStream,
           counts, w, maxConvDist = band, watermark = watermark)
     }
-    // Two chained queries, NOT one: band pairing and running decode are both
-    // stateful (flatMapGroupsWithState), and Spark's global-watermark
-    // correctness rule forbids stacking them in a single query (the first
-    // may emit rows the second's watermark already passed). The durable arc
-    // table between them is the warehouse topology anyway — each stage has
-    // its own checkpoint, the parquet file sink is exactly-once per batch
-    // (file-sink log), and the scored-arc stream is independently queryable.
+    // Two chained queries, NOT one: band pairing keeps event-time state, so
+    // after each drain Spark runs one more, empty microbatch to advance the
+    // watermark and evict idle conversations. In one query that batch would
+    // reach foreachBatch as an empty fold with its own state commit; here it
+    // ends in the arc sink, and the fold query — stateless, so it never
+    // runs a no-data microbatch — folds once per run that brings new arcs.
+    // The durable arc table between them is the warehouse topology anyway:
+    // each stage has its own checkpoint, the parquet file sink is
+    // exactly-once per batch (file-sink log), and the fold reads whole sink
+    // batches, so all of a mention's arcs reach the same fold.
     val arcDir = s"$output/band_scores"
     val q1 = scores.writeStream
       .format("parquet")
@@ -452,9 +463,17 @@ object Run {
       .schema("ant_id STRING, cur_id STRING, block_key STRING, " +
         "score DOUBLE, ts TIMESTAMP")
       .parquet(arcDir)
-    val decoded = StreamingAssembly.streamingDecode(spark, arcStream,
-      linkThreshold, watermark = watermark)
+    val decoded = StreamingAssembly.streamingDecode(spark, arcStream, linkThreshold)
 
+    val foldCkpt = s"$output/stream_checkpoint"
+    // only the retired stateful decode ever wrote operator state here
+    val retiredState = new org.apache.hadoop.fs.Path(s"$foldCkpt/state")
+    val ckptFs = retiredState.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (ckptFs.exists(retiredState)) {
+      ckptFs.delete(retiredState, true)
+      System.err.println(s"[run] deleted the retired decode's operator state " +
+        s"$retiredState (the fold query holds no state)")
+    }
     val io = new TableIO(output)
     val initial = StreamingClusters.loadState(spark, io, token)
     val initialBatches = initial.map(_.batches).getOrElse(0L)
@@ -462,7 +481,7 @@ object Run {
       trigger = Some(Trigger.AvailableNow()),
       initial = initial,
       commitCadence = Some((io, token, cadence)),
-      checkpointLocation = Some(s"$output/stream_checkpoint"))
+      checkpointLocation = Some(foldCkpt))
     q.awaitTermination()
     val st = ref.get()
     // the cadence committed every n-th fold; seal the tail so the final

@@ -15,10 +15,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - band pairing keeps per-conversation running state (the band window and
   *    dense mention sequence numbers, the stream analog of the
   *    canonical-order window) in `flatMapGroupsWithState`;
-  *  - scoring is the batch expressions, stateless on the pair stream, and
-  *    decode is a running per-mention argmax, again keyed state.
+  *  - scoring is the batch expressions, stateless on the pair stream;
+  *  - decode is stateless too: [[streamingDecode]] keeps the arcs above the
+  *    link threshold, and the fold takes the per-mention argmax of each
+  *    microbatch ([[StreamingClusters.update]]). The band pairer emits all
+  *    of a mention's arcs in the microbatch where the mention arrives, so
+  *    that argmax is the whole decode of the mention — one decode per
+  *    mention, as in the reference's per-document inferencer
+  *    (`DocumentInferencerBasic.scala:112-128`).
   */
 object StreamingAssembly {
+
+  /** How long, in event time past the watermark, a conversation may sit
+    * idle before the band pairer evicts its buffer: 7 days. A harness
+    * conversation spans hours, so only a conversation that has ended is
+    * evicted, and appending a corpus in event-time slices pairs exactly as
+    * a one-shot drain of the same files does unless a conversation falls
+    * silent for longer than this between two of its turns. A conversation
+    * that resumes after eviction restarts at `m_seq` 0, with no
+    * antecedents. State stays bounded by the band width per live
+    * conversation. */
+  val IdleHorizonMs: Long = 7L * 24 * 60 * 60 * 1000
 
   val transcriptSchema: StructType = StructType(Seq(
     StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
@@ -93,13 +110,13 @@ object StreamingAssembly {
     *
     * State is bounded two ways: the buffer is trimmed to the band width on
     * every update (≤ maxConvDist mentions per live conversation), and whole
-    * conversations are evicted by event-time timeout one horizon past the
-    * watermark; a conversation that resumes after eviction restarts at
-    * `m_seq` 0, with no antecedents. */
+    * conversations are evicted by event-time timeout one idle horizon
+    * ([[IdleHorizonMs]] by default) past the watermark; a conversation that
+    * resumes after eviction restarts at `m_seq` 0, with no antecedents. */
   def streamingBandPairs(spark: SparkSession, mentionStream: DataFrame,
       maxConvDist: Int = graft.pipeline.Blocking.Config().maxConvDist,
       watermark: String = "10 minutes",
-      horizonMs: Long = 600000L) = {
+      horizonMs: Long = IdleHorizonMs) = {
     import spark.implicits._
     val in = mentionStream
       .withWatermark("ts", watermark)
@@ -148,7 +165,7 @@ object StreamingAssembly {
       weights: graft.pipeline.Scoring.Weights = graft.pipeline.Scoring.DefaultWeights,
       maxConvDist: Int = graft.pipeline.Blocking.Config().maxConvDist,
       watermark: String = "10 minutes",
-      horizonMs: Long = 600000L): DataFrame =
+      horizonMs: Long = IdleHorizonMs): DataFrame =
     graft.pipeline.Scoring.score(graft.pipeline.Scoring.featurize(
       streamingBandPairs(spark, mentionStream, maxConvDist, watermark,
         horizonMs).toDF()), weights)
@@ -167,7 +184,7 @@ object StreamingAssembly {
       counts: DataFrame, wmap: graft.functions.SparseWeightMap,
       maxConvDist: Int = graft.pipeline.Blocking.Config().maxConvDist,
       watermark: String = "10 minutes",
-      horizonMs: Long = 600000L): DataFrame = {
+      horizonMs: Long = IdleHorizonMs): DataFrame = {
     val cb = graft.pipeline.SparseFeatures.surfaceSideCols(counts)
     def cold(side: String): DataFrame => DataFrame = df => df
       // cold-start fallbacks for surfaces the static table never saw: count
@@ -197,48 +214,17 @@ object StreamingAssembly {
         graft.pipeline.SparseFeatures.sparseScoreCol(wmap).as("score"), col("ts"))
   }
 
-  case class ScoredArc(cur_id: String, ant_id: String, score: Double,
-      ts: java.sql.Timestamp)
-  case class BestArc(ant_id: String, score: Double)
-
-  /** Streaming W4/A2 decode: running per-mention argmax over the scored arc
-    * stream — same semantics as [[graft.pipeline.Decode.backpointers]] (best
-    * score wins, ties to the LOWEST antecedent id, sub-threshold arcs never
-    * link). Emits the current best `(cur_id, ant_id, score)` whenever it
-    * improves; the latest emission per cur_id is the decode. State is one
-    * (ant, score) pair per live mention, evicted by event-time timeout one
-    * horizon past the watermark. */
+  /** Streaming W4/A2 decode, the stateless half: keeps the arcs that can
+    * link, `score > threshold` — the same Spark-SQL comparison as
+    * [[graft.pipeline.Decode.backpointers]]. The argmax (best score, ties to
+    * the lowest antecedent id) runs per microbatch in the fold
+    * ([[StreamingClusters.update]]); it is the whole decode of a mention
+    * because the band pairer emits all of that mention's arcs in one
+    * microbatch. The query therefore holds no state and runs no empty
+    * no-data microbatch. `watermark` is unused and kept for callers that
+    * name it. Output `(cur_id, ant_id, score)`. */
   def streamingDecode(spark: SparkSession, scoredArcs: DataFrame,
-      threshold: Double = 0.0, watermark: String = "10 minutes",
-      horizonMs: Long = 600000L) = {
-    import spark.implicits._
-    val in = scoredArcs
-      .withWatermark("ts", watermark)
-      .select(col("cur_id"), col("ant_id"), col("score"), col("ts"))
-      .as[ScoredArc]
-    in.groupByKey(_.cur_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (cur: String, rows: Iterator[ScoredArc], state: GroupState[BestArc]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty[(String, String, Double)] }
-          else {
-            var best = state.getOption
-            var maxTsMs = 0L
-            var improved = false
-            rows.foreach { r =>
-              if (r.ts != null) maxTsMs = math.max(maxTsMs, r.ts.getTime)
-              if (r.score > threshold &&
-                (best.isEmpty || r.score > best.get.score ||
-                  (r.score == best.get.score && r.ant_id < best.get.ant_id))) {
-                best = Some(BestArc(r.ant_id, r.score)); improved = true
-              }
-            }
-            best.foreach(state.update)
-            state.setTimeoutTimestamp(
-              math.max(state.getCurrentWatermarkMs(), maxTsMs) + horizonMs)
-            if (improved) Iterator.single((cur, best.get.ant_id, best.get.score))
-            else Iterator.empty
-          }
-        })
-      .toDF("cur_id", "ant_id", "score")
-  }
+      threshold: Double = 0.0, watermark: String = "10 minutes"): DataFrame =
+    scoredArcs.filter(col("score") > threshold)
+      .select(col("cur_id"), col("ant_id"), col("score"))
 }

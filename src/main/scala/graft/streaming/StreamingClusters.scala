@@ -12,22 +12,28 @@ import graft.pipeline.Clustering
 
 /** Streaming cluster maintenance (ST × C1/C2).
   *
-  * Folds the [[StreamingAssembly.streamingDecode]] emission stream into a
-  * live `(mention_id, cluster_id)` table one microbatch at a time. The
-  * reference's incremental cluster edit (`OrderedClustering.scala:102-143`)
-  * is the kernel: each microbatch reduces to (1) registering ids never seen
-  * before as singleton clusters and (2) ONE [[Clustering.editBackpointers]]
-  * call carrying the batch's final per-mention links. A decode re-emission
-  * (a better antecedent arriving in a later batch) is exactly a C2
-  * re-point; a first-time emission is a C2 fresh link.
+  * Folds the [[StreamingAssembly.streamingDecode]] arc stream (the arcs
+  * above the link threshold) into a live `(mention_id, cluster_id)` table
+  * one microbatch at a time, and is where the stream decodes: each
+  * microbatch's per-mention argmax ([[finalLinks]], the
+  * [[graft.pipeline.Decode.backpointers]] rule) gives its links. The band
+  * pairer emits all of a mention's arcs in one microbatch and the fold reads
+  * whole arc-sink batches, so on the shipped path that argmax is the
+  * mention's whole decode. The reference's incremental cluster edit
+  * (`OrderedClustering.scala:102-143`) is the kernel: each microbatch
+  * reduces to (1) registering ids never seen before as singleton clusters
+  * and (2) ONE [[Clustering.editBackpointers]] call carrying the batch's
+  * final per-mention links. A link for a mention that already has one (a
+  * later batch re-pointing it) is exactly a C2 re-point; a first link is a
+  * C2 fresh link.
   *
   * Exactness: the backpointer graph is a forest — every mention carries at
   * most one out-edge — so arrivals that don't re-point can only append to a
   * component or lower its min-id label, never merge two pre-existing
   * clusters; re-points go through the C2 kernel, which is spec- and
   * oracle-pinned (`c2_incremental_edit`) bit-identical to a full recompute.
-  * The streaming table therefore equals the batch clustering of the arcs
-  * decoded so far after EVERY microbatch, not only at end of stream
+  * The streaming table therefore equals the batch clustering of the links
+  * folded so far after EVERY microbatch, not only at end of stream
   * (StreamingSpec asserts per-batch).
   *
   * Scale: per-batch work is proportional to the touched clusters (the C2
@@ -57,10 +63,10 @@ object StreamingClusters {
       Set.empty, 0L)
   }
 
-  /** Collapse one microbatch of decode emissions to its final link per
-    * mention: best score, ties to the lowest antecedent id — the decode
-    * rule itself, so folding emissions is insensitive to their order
-    * within the batch. */
+  /** The per-microbatch decode: one link per mention, best score, ties to
+    * the lowest antecedent id — the [[graft.pipeline.Decode.backpointers]]
+    * rule, so the fold is insensitive to the order of arcs within the
+    * batch. Callers pass arcs that can link (`score > threshold`). */
   private def finalLinks(batch: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cur_id"))
       .orderBy(col("score").desc, col("ant_id").asc)
@@ -70,8 +76,10 @@ object StreamingClusters {
       .select(col("cur_id"), col("ant_id").as("new_ant_id"))
   }
 
-  /** One microbatch fold (pure batch function): register unseen ids as
-    * singletons, then apply the batch's links as one C2 edit. */
+  /** One microbatch fold (pure batch function): decode the batch's arcs
+    * ([[finalLinks]]), register unseen ids as singletons, then apply the
+    * links as one C2 edit. A batch with no arcs still counts as a fold, so
+    * `batches` tracks the engine's batch ids. */
   def update(spark: SparkSession, st: State, batchDecoded: DataFrame): State = {
     val sparkSes = spark
     import sparkSes.implicits._
@@ -231,8 +239,8 @@ object StreamingClusters {
     }.nextOption()
   }
 
-  /** Attach the fold to a (streaming) decode emission DataFrame via
-    * `foreachBatch`. Returns the started query and a live handle to the
+  /** Attach the fold to a (streaming) `(cur_id, ant_id, score)` arc
+    * DataFrame via `foreachBatch`. Returns the started query and a live handle to the
     * current state; `onBatch` fires after each fold (metrics, extra
     * assertions in tests). `commitCadence = Some((io, tag, n))` commits the
     * state through [[commitState]] every n-th fold — the built-in
@@ -241,12 +249,12 @@ object StreamingClusters {
     * Resume contract: restart with `initial = loadState(spark, io, tag)`
     * AND the same durable `checkpointLocation`. The engine's checkpoint
     * stops the source replaying already-folded data from scratch (a temp
-    * checkpoint would re-deliver every past emission ON TOP of the loaded
+    * checkpoint would re-deliver every past arc ON TOP of the loaded
     * state, re-pointing mentions back to stale antecedents); the batch-id
     * guard below absorbs the one in-flight batch foreachBatch re-delivers
     * at-least-once. Exactly-once resume needs cadence 1 — with cadence n a
     * crash strands up to n-1 folds whose source offsets the engine already
-    * committed (their emissions will not be re-delivered); the alignment
+    * committed (their arcs will not be re-delivered); the alignment
     * guard detects any such divergence — including a loadState walk-back
     * past folds the checkpoint considers done — and FAILS the query rather
     * than resuming into silent data loss. */
@@ -273,13 +281,13 @@ object StreamingClusters {
         //   anything else → this state and this checkpoint do not belong
         //     together (fresh checkpoint over an old state, loadState
         //     walked back past folds whose offsets the engine already
-        //     committed, foreign tag …). Those emissions will never be
+        //     committed, foreign tag …). Those arcs will never be
         //     re-delivered; resuming would silently diverge — fail loudly.
         val fold = checkpointLocation.isEmpty || batchId == st.batches
         if (checkpointLocation.isDefined && (batchId < st.batches - 1 || batchId > st.batches))
           throw new IllegalStateException(
             s"maintain(): engine batch $batchId vs state fold count ${st.batches} — " +
-            "the checkpoint and the loaded state diverge (emissions between them " +
+            "the checkpoint and the loaded state diverge (arcs between them " +
             "are gone); restore a newer state commit or restart with a fresh " +
             "checkpoint AND no initial state to refold from scratch")
         if (fold) {

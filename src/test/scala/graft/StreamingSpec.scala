@@ -68,7 +68,8 @@ class StreamingSpec extends SparkSuite {
     assert(streamedScores.exceptAll(batchScores).count() === 0L,
       "streamed band scores must equal the batch band scores exactly")
 
-    // decode phase: stream the scored arcs through the running argmax
+    // decode phase: stream the scored arcs through the threshold filter,
+    // then take the per-mention argmax the fold takes per microbatch
     val sd = Files.createTempDirectory("graft-banddec").toString
     spark.table("stream_band").coalesce(1).write.mode("overwrite").parquet(sd)
     val arcStream = spark.readStream.schema(
@@ -78,7 +79,7 @@ class StreamingSpec extends SparkSuite {
       .writeStream.format("memory").queryName("stream_decode")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q2.awaitTermination(180000)
-    // one emission per improvement; the LAST per cur is the decode
+    // every arc above the threshold; the best per cur is the decode
     val streamedBptr = spark.table("stream_decode")
       .groupBy(col("cur_id"))
       .agg(min_by(col("ant_id"), struct(negate(col("score")), col("ant_id"))).as("ant_id"))
@@ -227,8 +228,9 @@ class StreamingSpec extends SparkSuite {
       .sortBy(t => (t._3, t._1, t._2))
     assert(arcs.length > 30)
 
-    // drive the fold with the decode emission contract (emit on improvement,
-    // score > threshold, ties to the lowest ant — streamingDecode's rule)
+    // drive the fold with one link per changed mention per wave (score >
+    // threshold, ties to the lowest ant — the decode rule): waves that
+    // re-point mentions exercise the C2 edit path
     val slices = arcs.grouped((arcs.length + 3) / 4).toSeq
     var best = Map.empty[String, (String, Double)]
     var seen = Set.empty[String]
@@ -240,8 +242,8 @@ class StreamingSpec extends SparkSuite {
       df.collect().map(r => (r.getString(0), r.getString(1))).toSet
     var repoints = 0
     for (slice <- slices) {
-      // streamingDecode emits at most ONE row per mention per microbatch —
-      // the batch-final best — never the intra-batch superseded links
+      // at most ONE row per mention per wave — the wave-final best — never
+      // the intra-wave superseded links
       val preBest = best
       for ((ant, cur, score) <- slice) {
         val better = score > 0.0 && (best.get(cur) match {
@@ -458,5 +460,269 @@ class StreamingSpec extends SparkSuite {
     val bp = fin.backptrs.collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(bp === Set(("x", "a"), ("b", "a"), ("c", "b"), ("y", "x")))
+  }
+
+  // ---- Run --streaming over time-ordered appends --------------------------
+
+  private val Sf = "/root/testdata/sf0.001"
+  /** `Run --streaming`'s state token under the default options. */
+  private val DenseToken =
+    s"stream-dense-0.0-${graft.pipeline.Blocking.Config().maxConvDist}-10_minutes"
+
+  /** sf0.001's transcripts as three parquet slices of consecutive event-time
+    * ranges — the order an arriving stream delivers them in. */
+  private lazy val sfSlices: Seq[String] = {
+    import org.apache.spark.sql.expressions.Window
+    val d = Files.createTempDirectory("graft-stream-slices").toString
+    graft.sources.Transcripts.load(spark, Sf)
+      .withColumn("slice", ntile(3).over(
+        Window.orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
+      .repartition(3, col("slice"))
+      .write.mode("overwrite").partitionBy("slice").parquet(d)
+    (1 to 3).map(k => s"$d/slice=$k")
+  }
+
+  /** Copy slice `k`'s parquet files into the input directory `input`. */
+  private def appendSlice(k: Int, input: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val in = java.nio.file.Paths.get(input)
+    Files.createDirectories(in)
+    Files.list(java.nio.file.Paths.get(sfSlices(k))).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(f => Files.copy(f, in.resolve(s"slice-$k-${f.getFileName}")))
+  }
+
+  private def field(json: String, key: String): String = {
+    val m = (s""""$key":"?([^",}]+)"?""").r.findFirstMatchIn(json)
+    assert(m.nonEmpty, s"metrics line missing $key: $json")
+    m.get.group(1)
+  }
+
+  private def runStream(input: String, output: String): String =
+    Run.runWith(spark, Map("input" -> input, "output" -> output,
+      "streaming" -> "true"))
+
+  /** Runs `body` and returns its result with the progress of every
+    * microbatch the `foreachBatch` fold query ran meanwhile. The listener
+    * bus is asynchronous, so it waits until every query started during
+    * `body` has reported its termination. */
+  private def withFoldProgress[T](body: => T)
+    : (T, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.sink.description.contains("ForeachBatch") &&
+            e.progress.durationMs.containsKey("addBatch"))
+          progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.incrementAndGet()
+    }
+    spark.streams.addListener(l)
+    try {
+      val r = body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (ended.get < started.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(ended.get === started.get, "a streaming query never reported its end")
+      import scala.jdk.CollectionConverters._
+      (r, progress.asScala.toSeq)
+    } finally spark.streams.removeListener(l)
+  }
+
+  private type Links = (Set[(String, String)], Set[(String, String)])
+
+  private def idPairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  /** The committed `(backpointers, clusters)` under `token`. */
+  private def committedState(io: graft.io.TableIO, token: String = DenseToken): Links = {
+    val st = graft.streaming.StreamingClusters.loadState(spark, io, token)
+      .getOrElse(fail(s"no committed stream state under $token"))
+    (idPairs(st.backptrs.select("cur_id", "ant_id")),
+      idPairs(st.clusters.select("mention_id", "cluster_id")))
+  }
+
+  /** The batch `(backpointers, clusters)` of `arcs`: `Decode.backpointers`,
+    * then `Clustering.cluster` over the linked mentions. */
+  private def batchDecode(arcs: org.apache.spark.sql.DataFrame, threshold: Double): Links = {
+    import graft.pipeline.{Clustering, Decode}
+    val bp = Decode.backpointers(arcs, threshold).select(col("cur_id"), col("ant_id"))
+    val nodes = bp.select(col("cur_id").as("mention_id"))
+      .union(bp.select(col("ant_id").as("mention_id"))).distinct()
+    (idPairs(bp), idPairs(Clustering.cluster(spark, nodes, bp)))
+  }
+
+  /** The committed state equals the batch decode and clustering of the
+    * committed `band_scores` arcs. */
+  private def assertStateIsBatchDecode(out: String): Unit = {
+    val st = committedState(new graft.io.TableIO(out))
+    assert(st._1.nonEmpty)
+    assert(st === batchDecode(spark.read.parquet(s"$out/band_scores"), 0.0),
+      "committed state must equal the batch decode and clustering")
+  }
+
+  test("--streaming: N time-ordered appends == one drain; each run folds and " +
+      "commits once, with no state in the fold query") {
+    val tmp = Files.createTempDirectory("graft-stream-append").toString
+    val (appIn, appOut) = (s"$tmp/app/in", s"$tmp/app/out")
+    val io = new graft.io.TableIO(appOut)
+    for (k <- sfSlices.indices) {
+      appendSlice(k, appIn)
+      val (m, folds) = withFoldProgress(runStream(appIn, appOut))
+      info(m)
+      assert(field(m, "folds").toLong === k + 1L, "one fold per appended slice")
+      assert(io.latestSnapshot("stream_clusters") === Some(k),
+        "one state commit per appended slice")
+      assert(io.latestSnapshot("stream_backptrs") === Some(k))
+      assert(folds.size === 1, s"one fold microbatch per run, got ${folds.size}")
+      assert(folds.forall(_.stateOperators.isEmpty), "the fold query holds no state")
+    }
+    // a re-run with no new files neither folds nor commits
+    val (m, folds) = withFoldProgress(runStream(appIn, appOut))
+    assert(field(m, "folds") === sfSlices.size.toString)
+    assert(io.latestSnapshot("stream_clusters") === Some(sfSlices.size - 1))
+    assert(folds.isEmpty)
+
+    val (drainIn, drainOut) = (s"$tmp/drain/in", s"$tmp/drain/out")
+    sfSlices.indices.foreach(appendSlice(_, drainIn))
+    assert(field(runStream(drainIn, drainOut), "folds") === "1")
+    assertStateIsBatchDecode(drainOut)
+    val (appBp, appCl) = committedState(io)
+    val (drainBp, drainCl) = committedState(new graft.io.TableIO(drainOut))
+    assert(appBp === drainBp, "appends and a drain must decode the same backpointers")
+    assert(appCl === drainCl, "appends and a drain must commit the same clusters")
+  }
+
+  test("one fold microbatch with several arcs per mention commits exactly " +
+      "Decode.backpointers of those arcs") {
+    import graft.streaming.StreamingClusters
+    import spark.implicits._
+    val threshold = 0.5
+    val arcs = Seq(
+      ("a", "b", 0.9), ("c", "b", 0.9),                   // tie: lowest ant wins
+      ("a", "c", 0.6), ("b", "c", 0.7), ("x", "c", 0.1),  // best + a sub-threshold arc
+      ("a", "d", 0.3), ("b", "d", 0.5),                   // all at or below: no link
+      ("b", "g", 0.8), ("a", "g", 0.8), ("c", "g", 0.6),  // tie past a lower arc
+      ("d", "h", 0.55))                                   // single arc
+      .toDF("ant_id", "cur_id", "score")
+      .withColumn("block_key", lit("conv"))
+      .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
+    val in = Files.createTempDirectory("graft-fold-arcs").toString
+    arcs.coalesce(1).write.mode("overwrite").parquet(in)
+    val root = Files.createTempDirectory("graft-fold-multi").toString
+    val io = new graft.io.TableIO(root)
+    val stream = spark.readStream.schema(
+      "ant_id STRING, cur_id STRING, block_key STRING, score DOUBLE, ts TIMESTAMP")
+      .parquet(in)
+    val (q, ref) = StreamingClusters.maintain(spark,
+      StreamingAssembly.streamingDecode(spark, stream, threshold),
+      trigger = Some(Trigger.AvailableNow()),
+      commitCadence = Some((io, "multi", 1)),
+      checkpointLocation = Some(s"$root/ckpt"))
+    q.awaitTermination(180000)
+    assert(ref.get().batches === 1L)
+    val batch = batchDecode(arcs, threshold)
+    assert(batch._1 === Set(("b", "a"), ("c", "b"), ("g", "a"), ("h", "d")))
+    assert(committedState(io, "multi") === batch)
+  }
+
+  test("--streaming resumes an output whose fold checkpoint holds the retired " +
+      "stateful decode's operator state") {
+    import graft.streaming.StreamingClusters
+    val tmp = Files.createTempDirectory("graft-stream-retired").toString
+    val (in, out) = (s"$tmp/in", s"$tmp/out")
+    val io = new graft.io.TableIO(out)
+    val arcSchema = "ant_id STRING, cur_id STRING, block_key STRING, " +
+      "score DOUBLE, ts TIMESTAMP"
+    // the layout the stateful decode left: band pairer (10-minute horizon)
+    // → arc sink → stateful running decode → fold, committed every fold
+    var folds = 0L
+    for (k <- 0 until 2) {
+      appendSlice(k, in)
+      StreamingAssembly.streamingBandScores(spark,
+          StreamingAssembly.enrichMentions(StreamingAssembly.extractMentions(
+            StreamingAssembly.streamTranscripts(spark, in))),
+          horizonMs = StreamingSpec.RetiredHorizonMs)
+        .writeStream.format("parquet")
+        .option("path", s"$out/band_scores")
+        .option("checkpointLocation", s"$out/ckpt_scores")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      val arcStream = spark.readStream.schema(arcSchema).parquet(s"$out/band_scores")
+      val (q, ref) = StreamingClusters.maintain(spark,
+        StreamingSpec.retiredDecode(spark, arcStream, 0.0),
+        trigger = Some(Trigger.AvailableNow()),
+        initial = StreamingClusters.loadState(spark, io, DenseToken),
+        commitCadence = Some((io, DenseToken, 1)),
+        checkpointLocation = Some(s"$out/stream_checkpoint"))
+      q.awaitTermination()
+      folds = ref.get().batches
+    }
+    val stateDir = java.nio.file.Paths.get(out, "stream_checkpoint", "state")
+    assert(Files.isDirectory(stateDir), "the retired decode keeps operator state")
+
+    appendSlice(2, in)
+    val m = runStream(in, out)
+    info(m)
+    assert(!Files.exists(stateDir))
+    assert(field(m, "resumed_from_fold") === folds.toString)
+    assert(field(m, "folds") === (folds + 1).toString)
+    assertStateIsBatchDecode(out)
+  }
+}
+
+object StreamingSpec {
+
+  /** The band pairer's eviction horizon before it became
+    * [[StreamingAssembly.IdleHorizonMs]]: 10 minutes of event time. */
+  val RetiredHorizonMs: Long = 600000L
+
+  case class ScoredArc(cur_id: String, ant_id: String, score: Double,
+      ts: java.sql.Timestamp)
+  case class BestArc(ant_id: String, score: Double)
+
+  /** The stateful decode `Run --streaming` ran before the decode moved into
+    * the fold, kept as the reference copy that builds an output in its
+    * layout: a running per-mention argmax in keyed state (best score, ties
+    * to the lowest antecedent id, sub-threshold arcs never link) that emits
+    * the current best whenever it improves, with event-time eviction. Its
+    * state makes Spark run an empty no-data microbatch after every drain. */
+  def retiredDecode(spark: org.apache.spark.sql.SparkSession,
+      scoredArcs: org.apache.spark.sql.DataFrame, threshold: Double,
+      watermark: String = "10 minutes",
+      horizonMs: Long = RetiredHorizonMs): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import spark.implicits._
+    scoredArcs
+      .withWatermark("ts", watermark)
+      .select(col("cur_id"), col("ant_id"), col("score"), col("ts"))
+      .as[ScoredArc]
+      .groupByKey(_.cur_id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (cur: String, rows: Iterator[ScoredArc], state: GroupState[BestArc]) => {
+          if (state.hasTimedOut) { state.remove(); Iterator.empty[(String, String, Double)] }
+          else {
+            var best = state.getOption
+            var maxTsMs = 0L
+            var improved = false
+            rows.foreach { r =>
+              if (r.ts != null) maxTsMs = math.max(maxTsMs, r.ts.getTime)
+              if (r.score > threshold &&
+                (best.isEmpty || r.score > best.get.score ||
+                  (r.score == best.get.score && r.ant_id < best.get.ant_id))) {
+                best = Some(BestArc(r.ant_id, r.score)); improved = true
+              }
+            }
+            best.foreach(state.update)
+            state.setTimeoutTimestamp(
+              math.max(state.getCurrentWatermarkMs(), maxTsMs) + horizonMs)
+            if (improved) Iterator.single((cur, best.get.ant_id, best.get.score))
+            else Iterator.empty
+          }
+        })
+      .toDF("cur_id", "ant_id", "score")
   }
 }
