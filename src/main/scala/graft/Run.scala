@@ -371,9 +371,15 @@ object Run {
     * its operator state under `stream_checkpoint/state/`; it is deleted
     * before the fold starts, since the stateless fold query cannot start
     * over a checkpoint that records a stateful operator.
-    * The maintained cluster table equals the batch clustering of the band
-    * arcs decoded so far after every fold (StreamingSpec), so the committed
-    * `stream_clusters` snapshot is always a consistent entity table. */
+    * The fold keeps one state table `(mention_id, cluster_id, ant_id)`
+    * and edits it on the driver within `Clustering.maxDriverEdges`; a
+    * committing fold writes it once as the `stream_state` snapshot. Its
+    * clusters equal the batch clustering of the band arcs decoded so far
+    * after every fold (StreamingSpec), so every committed snapshot is a
+    * consistent entity table. Outputs committed in the older two-table
+    * layout (`stream_clusters` + `stream_backptrs`) resume from it.
+    * The engine checkpoints record files by absolute path, so an output is
+    * bound to the path it was first written at ([[checkOutputPath]]). */
   private def runStreaming(spark: SparkSession, opt: Map[String, String],
       input: String, output: String, sparse: Boolean): String = {
     import org.apache.spark.sql.streaming.Trigger
@@ -400,6 +406,7 @@ object Run {
     val modelFrag = model.map("-" + _.tag).getOrElse("")
     val token =
       s"stream-$mode-$linkThreshold-$band-${watermark.replace(' ', '_')}$modelFrag"
+    checkOutputPath(spark, output)
 
     // Source dir: a harness sf dir derives transcripts relationally — they
     // have no parquet on disk to stream, so materialize them ONCE into the
@@ -501,10 +508,36 @@ object Run {
     metrics
   }
 
-  /** Rows and distinct `cluster_id`s of a `(mention_id, cluster_id)` table,
-    * in one aggregate; (0, 0) when it is empty. */
-  private def rowsAndClusters(clusters: DataFrame): (Long, Long) = {
-    val r = clusters.agg(count(lit(1)), countDistinct(col("cluster_id"))).head()
+  /** A streaming `--output` is bound to the path it was first written at:
+    * the engine checkpoints record the arc and transcript files by absolute
+    * path, so after a move or copy every file looks new and would be folded
+    * again on top of the loaded state. The first run (or the first run of
+    * an output that has no marker yet) records the qualified path in
+    * `stream_checkpoint`; a run from any other path fails, naming both. */
+  private def checkOutputPath(spark: SparkSession, output: String): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$output/stream_checkpoint/output_path")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val here = fs.makeQualified(new org.apache.hadoop.fs.Path(output)).toString
+    if (!fs.exists(marker)) writeText(spark, marker.toString, here)
+    else {
+      val in = fs.open(marker)
+      val recorded = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        finally in.close()
+      if (recorded != here)
+        throw new IllegalStateException(s"--output $here was written as $recorded: " +
+          "its stream checkpoints record files by absolute path, so resuming a " +
+          "moved or copied output would fold every input file again on top of " +
+          s"the committed state; resume it at $recorded, or start a new --output")
+    }
+  }
+
+  /** Rows and clusters of a `(mention_id, cluster_id)` table, in one narrow
+    * aggregate; (0, 0) when it is empty. A cluster's id is its minimum
+    * member, which is in the table, so the clusters are the rows whose
+    * `mention_id` is their `cluster_id`. */
+  private[graft] def rowsAndClusters(clusters: DataFrame): (Long, Long) = {
+    val r = clusters.agg(count(lit(1)),
+      count(when(col("mention_id") === col("cluster_id"), true))).head()
     (r.getLong(0), r.getLong(1))
   }
 

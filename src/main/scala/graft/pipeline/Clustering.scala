@@ -93,13 +93,36 @@ object Clustering {
     labels.select(col("id").as("mention_id"), col("lbl").as("cluster_id"))
   }
 
+  /** Spark's string order: `UTF8String` byte order, which is code point
+    * order. `String.compareTo` compares UTF-16 code units instead, and the
+    * two disagree between U+E000–U+FFFF and the supplementary characters
+    * (surrogate pairs), so every driver- or executor-side minimum over ids
+    * compares with this one, as the distributed loop's `min` does. The
+    * remap is the standard code-unit fix-up: surrogates move above
+    * U+E000–U+FFFF; within the BMP and within surrogates order is kept. */
+  private[graft] object SparkStringOrder extends Ordering[String] {
+    private def fix(c: Char): Int =
+      if (c < 0xD800) c else if (c >= 0xE000) c - 0x800 else c + 0x2000
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val x = a.charAt(i); val y = b.charAt(i)
+        if (x != y) return fix(x) - fix(y)
+        i += 1
+      }
+      a.length - b.length
+    }
+  }
+
   /** Union-find with path compression and union-by-MIN root — the single
     * definition of the kernel behind the "cluster id = component minimum"
     * contract, shared by the per-conversation contraction (executor-side,
-    * String ids) and the bounded driver solve (String or Long ids); one
-    * place to fix means the call sites cannot drift. `find` registers
-    * unseen keys as their own root. */
-  private[pipeline] final class UnionFindMin[K](implicit ord: Ordering[K]) {
+    * String ids), the bounded driver solve (String or Long ids) and the
+    * streaming fold's driver-side edit; one place to fix means the call
+    * sites cannot drift. String ids take [[SparkStringOrder]]. `find`
+    * registers unseen keys as their own root. */
+  private[graft] final class UnionFindMin[K](ord: Ordering[K]) {
     private val parent = scala.collection.mutable.HashMap.empty[K, K]
     def find(x: K): K = {
       var r = parent.getOrElseUpdate(x, x)
@@ -134,7 +157,7 @@ object Clustering {
     nodeByConv.union(edgeByConv)
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
-        val uf = new UnionFindMin[String]
+        val uf = new UnionFindMin[String](SparkStringOrder)
         it.foreach { case (_, a, b) => if (a == b) uf.find(a) else uf.union(a, b) }
         uf.roots.toSeq
       }
@@ -151,12 +174,13 @@ object Clustering {
       spark: SparkSession,
       mentions: DataFrame,
       backptrs: DataFrame, // (cur_id, ant_id)
-      checkpoint: (Int, DataFrame) => DataFrame = (_, df) => df.localCheckpoint(true))
+      checkpoint: (Int, DataFrame) => DataFrame = (_, df) => df.localCheckpoint(true),
+      maxEdges: Int = maxDriverEdges)
     : DataFrame = {
 
     val nodes = mentions.select(col("mention_id").as("id"))
     val edges = backptrs.select(col("ant_id").as("src"), col("cur_id").as("dst"))
-    boundedRoots(edges).map(labelled(nodes, _)).getOrElse {
+    boundedRoots(edges, maxEdges).map(labelled(nodes, _)).getOrElse {
       // over the bound: pin the edge set ONCE for the contraction's two
       // legs, or each re-derives it (the whole scoring + decode chain when
       // the caller's backpointers are lazy); dead once both legs are pinned
@@ -182,7 +206,7 @@ object Clustering {
         .localCheckpoint(true)
       Pins.release(sc, edgePins)
       val rootNodes = local.select(col("local_root").as("id")).distinct()
-      val rootClusters = components(rootNodes, crossRoots, checkpoint)
+      val rootClusters = components(rootNodes, crossRoots, checkpoint, maxEdges)
       local.join(rootClusters.withColumnRenamed("mention_id", "local_root"), "local_root")
         .select(col("id").as("mention_id"), col("cluster_id"))
     }
@@ -190,9 +214,10 @@ object Clustering {
 
   /** The one bound on every driver-side fetch in the clustering layer: the
     * bounded solve, [[editBackpointers]]' two probes and the streaming
-    * fold's edit take. 200k string edges is at most ~20 MB of driver heap.
-    * Mutable so specs can force the distributed fallbacks on small
-    * fixtures. */
+    * fold's arc and touched-cluster fetches; each takes it as the default
+    * of a `maxEdges` parameter. 200k string edges is at most ~20 MB of
+    * driver heap. Mutable so specs can force the distributed fallbacks on
+    * small fixtures. */
   private[graft] var maxDriverEdges: Int = 200000
 
   /** The bounded solve: ONE bounded fetch of `edges` (two columns, String
@@ -200,19 +225,19 @@ object Clustering {
     * reach the driver) doubles as the size probe and the edge set; within
     * the bound, union-by-min gives `(id, root)` for every endpoint, where
     * root is its component minimum. None over the bound. */
-  private def boundedRoots(edges: DataFrame): Option[DataFrame] = {
-    val taken = graft.functions.fetchBounded(edges, maxDriverEdges + 1)
-    def solve[K: Ordering: TypeTag]: DataFrame = {
-      val uf = new UnionFindMin[K]
+  private def boundedRoots(edges: DataFrame, maxEdges: Int): Option[DataFrame] = {
+    val taken = graft.functions.fetchBounded(edges, maxEdges + 1)
+    def solve[K: TypeTag](ord: Ordering[K]): DataFrame = {
+      val uf = new UnionFindMin[K](ord)
       taken.foreach(r => uf.union(r.getAs[K](0), r.getAs[K](1)))
       val spark = edges.sparkSession
       import spark.implicits._
       uf.roots.toSeq.toDF("id", "root")
     }
-    if (taken.length > maxDriverEdges) None
+    if (taken.length > maxEdges) None
     else Some(edges.schema.head.dataType match {
-      case LongType => solve[Long]
-      case _ => solve[String]
+      case LongType => solve[Long](Ordering.Long)
+      case _ => solve[String](SparkStringOrder)
     })
   }
 
@@ -229,9 +254,10 @@ object Clustering {
     * canonicalization ([[graft.ops.Dedup.canonicalize]]). Returns
     * `(mention_id, cluster_id)` like [[connectedComponents]]. */
   def components(nodes: DataFrame, edges: DataFrame,
-      checkpoint: (Int, DataFrame) => DataFrame = (_, df) => df.localCheckpoint(true))
+      checkpoint: (Int, DataFrame) => DataFrame = (_, df) => df.localCheckpoint(true),
+      maxEdges: Int = maxDriverEdges)
     : DataFrame =
-    boundedRoots(edges.select(col("src"), col("dst")))
+    boundedRoots(edges.select(col("src"), col("dst")), maxEdges)
       .map(labelled(nodes, _))
       .getOrElse(connectedComponents(nodes, edges, checkpoint = checkpoint))
 
@@ -279,10 +305,7 @@ object Clustering {
       // via [[mergeBackpointers]] — avoids running the O(state) full_outer
       // merge twice when the caller also keeps the merged table as state
       premerged: Option[DataFrame] = None,
-      // touched-cluster ids the caller already probed driver-side (the
-      // streaming fold's singleton registration collects them anyway) —
-      // skips this kernel's own bounded probe
-      knownTouched: Option[Seq[String]] = None)
+      maxEdges: Int = maxDriverEdges)
     : DataFrame = {
     // fresh exprIds on every intermediate that derives FROM `clusters` and
     // joins straight back against it: a pinned LogicalRDD keeps its source
@@ -308,15 +331,14 @@ object Clustering {
     // distributed shape below. The probe streams `clusters` against the
     // broadcast edit ids — no shuffle of the state table.
     def bounded(df: DataFrame): Option[Seq[String]] = {
-      val rows = graft.functions.fetchBounded(df, maxDriverEdges + 1)
-      if (rows.length <= maxDriverEdges) Some(rows.map(_.getString(0)).toSeq)
+      val rows = graft.functions.fetchBounded(df, maxEdges + 1)
+      if (rows.length <= maxEdges) Some(rows.map(_.getString(0)).toSeq)
       else None
     }
-    val touchedSeq: Option[Seq[String]] = knownTouched.orElse {
+    val touchedSeq: Option[Seq[String]] =
       bounded(ids).flatMap(is => bounded(
         clusters.join(broadcast(is.toDF("mention_id")), Seq("mention_id"))
           .select(col("cluster_id")).distinct()))
-    }
     // driver-held: a LocalRelation, known-size and statically broadcast, so
     // every consumer below is a narrow scan of `clusters` with no pins and
     // no state shuffles. Over-bound: the pinned touched and members sets,
@@ -337,7 +359,7 @@ object Clustering {
     val edited = premerged.map(refresh).getOrElse(mergeBackpointers(backptrs, e))
     val subEdges = edited.join(
       members.select(col("mention_id").as("cur_id")), "cur_id")
-    val recomputed = cluster(spark, members, subEdges)
+    val recomputed = cluster(spark, members, subEdges, maxEdges = maxEdges)
     clusters.join(touched, Seq("cluster_id"), "left_anti")
       .select(col("mention_id"), col("cluster_id"))
       .unionByName(recomputed.select(col("mention_id"), col("cluster_id")))

@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -13,60 +15,80 @@ import graft.pipeline.Clustering
 /** Streaming cluster maintenance (ST × C1/C2).
   *
   * Folds the [[StreamingAssembly.streamingDecode]] arc stream (the arcs
-  * above the link threshold) into a live `(mention_id, cluster_id)` table
-  * one microbatch at a time, and is where the stream decodes: each
-  * microbatch's per-mention argmax ([[finalLinks]], the
-  * [[graft.pipeline.Decode.backpointers]] rule) gives its links. The band
-  * pairer emits all of a mention's arcs in one microbatch and the fold reads
-  * whole arc-sink batches, so on the shipped path that argmax is the
-  * mention's whole decode. The reference's incremental cluster edit
-  * (`OrderedClustering.scala:102-143`) is the kernel: each microbatch
-  * reduces to (1) registering ids never seen before as singleton clusters
-  * and (2) ONE [[Clustering.editBackpointers]] call carrying the batch's
-  * final per-mention links. A link for a mention that already has one (a
-  * later batch re-pointing it) is exactly a C2 re-point; a first link is a
-  * C2 fresh link.
+  * above the link threshold) into one live state table
+  * `(mention_id, cluster_id, ant_id)`, one microbatch at a time: every
+  * mention seen so far, its cluster, and its backpointer (`ant_id` null for
+  * a mention with no link). It is also where the stream decodes: each
+  * microbatch's per-mention argmax (best score, ties to the lowest
+  * antecedent id — the [[graft.pipeline.Decode.backpointers]] rule) gives
+  * its links. The band pairer emits all of a mention's arcs in one
+  * microbatch and the fold reads whole arc-sink batches, so on the shipped
+  * path that argmax is the mention's whole decode.
+  *
+  * The kernel is the reference's incremental cluster edit
+  * (`OrderedClustering.scala:102-143`): a link for a mention that already
+  * has one is a C2 re-point, a first link a C2 fresh link, and an id never
+  * seen before a new singleton. The touched clusters are those of the
+  * batch's ids; they are closed under the backpointers (an unedited edge
+  * stays inside its cluster, an edited one points at a batch id), so
+  * re-clustering their rows with the batch's links is exact. Within
+  * [[Clustering.maxDriverEdges]] the whole edit runs on the driver: one
+  * bounded fetch of the arcs, one probe of the state for the batch ids'
+  * clusters, one bounded fetch of those clusters' rows, a union-by-min
+  * ([[Clustering.UnionFindMin]]), and the new state is the untouched rows
+  * (one narrow filter of the state) ∪ the recomputed rows (a
+  * LocalRelation).
+  * Over the bound the fold runs distributed: [[Clustering.editBackpointers]]
+  * over the state's two projections, joined back into one table.
   *
   * Exactness: the backpointer graph is a forest — every mention carries at
-  * most one out-edge — so arrivals that don't re-point can only append to a
-  * component or lower its min-id label, never merge two pre-existing
-  * clusters; re-points go through the C2 kernel, which is spec- and
-  * oracle-pinned (`c2_incremental_edit`) bit-identical to a full recompute.
-  * The streaming table therefore equals the batch clustering of the links
-  * folded so far after EVERY microbatch, not only at end of stream
-  * (StreamingSpec asserts per-batch).
+  * most one out-edge — and the touched clusters are recomputed whole, so
+  * the state equals the batch clustering of the links folded so far after
+  * EVERY microbatch, not only at end of stream (StreamingSpec asserts it
+  * per batch, on both branches).
   *
-  * Scale: per-batch work is proportional to the touched clusters (the C2
-  * contract) — untouched rows pass through an anti-join unscanned by the CC
-  * loop. State is two id-pair tables pinned via localCheckpoint, with the
-  * previous batch's blocks released once the new pins materialize (the
-  * distributed trainer's hygiene pattern — state storage is O(corpus), not
-  * O(corpus × batches)). At warehouse scale the same fold writes through
-  * [[graft.io.TableIO]] (`commit` per batch or every N batches), so the
-  * maintenance job resumes from the last committed snapshot with lineage;
-  * like the trainer, an update owns the session's persistent-RDD set while
-  * it runs (single-writer maintenance job).
+  * Storage: a fold that [[maintain]] commits writes its new state once,
+  * through [[graft.io.TableIO]] (stage `stream_state`), and the next fold
+  * reads that snapshot back from its footers — nothing is pinned. Other
+  * folds pin the new table via localCheckpoint and release the previous
+  * state's blocks (the trainer's hygiene pattern), so pinned storage is
+  * O(state), not O(state × batches). Every written table is capped at one
+  * partition per core, so a snapshot's file count stays bounded across
+  * folds. Like the trainer, an update owns the session's persistent-RDD set
+  * while it runs (single-writer maintenance job).
   */
 object StreamingClusters {
 
-  /** Live state: `clusters` = (mention_id, cluster_id), `backptrs` =
-    * (cur_id, ant_id), both localCheckpoint-pinned; `pins` = the RDD ids
-    * backing them (released when the next update supersedes this state). */
-  case class State(clusters: DataFrame, backptrs: DataFrame,
-      pins: Set[Int], batches: Long)
+  /** The TableIO stage of the committed state. */
+  private val Stage = "stream_state"
+
+  /** The two stages the state was committed as before it was one table,
+    * `(mention_id, cluster_id)` and `(cur_id, ant_id)` under the same
+    * lineage; [[loadState]] still resumes them. */
+  private val LegacyStages = ("stream_clusters", "stream_backptrs")
+
+  /** Live state: `table` = (mention_id, cluster_id, ant_id), one row per
+    * mention seen; `pins` = the RDD ids backing it (empty when it is read
+    * from a committed snapshot), released when the next fold supersedes it. */
+  case class State(table: DataFrame, pins: Set[Int], batches: Long) {
+    /** `(mention_id, cluster_id)` for every mention seen. */
+    def clusters: DataFrame = table.select(col("mention_id"), col("cluster_id"))
+    /** `(cur_id, ant_id)` for every linked mention. */
+    def backptrs: DataFrame = table.filter(col("ant_id").isNotNull)
+      .select(col("mention_id").as("cur_id"), col("ant_id"))
+  }
 
   def empty(spark: SparkSession): State = {
     import spark.implicits._
-    State(
-      Seq.empty[(String, String)].toDF("mention_id", "cluster_id"),
-      Seq.empty[(String, String)].toDF("cur_id", "ant_id"),
+    State(Seq.empty[(String, String, String)].toDF("mention_id", "cluster_id", "ant_id"),
       Set.empty, 0L)
   }
 
-  /** The per-microbatch decode: one link per mention, best score, ties to
-    * the lowest antecedent id — the [[graft.pipeline.Decode.backpointers]]
-    * rule, so the fold is insensitive to the order of arcs within the
-    * batch. Callers pass arcs that can link (`score > threshold`). */
+  /** The per-microbatch decode, distributed: one link per mention, best
+    * score, ties to the lowest antecedent id — the
+    * [[graft.pipeline.Decode.backpointers]] rule, so the fold is insensitive
+    * to the order of arcs within the batch. Callers pass arcs that can link
+    * (`score > threshold`). */
   private def finalLinks(batch: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cur_id"))
       .orderBy(col("score").desc, col("ant_id").asc)
@@ -76,175 +98,206 @@ object StreamingClusters {
       .select(col("cur_id"), col("ant_id").as("new_ant_id"))
   }
 
-  /** One microbatch fold (pure batch function): decode the batch's arcs
-    * ([[finalLinks]]), register unseen ids as singletons, then apply the
-    * links as one C2 edit. A batch with no arcs still counts as a fold, so
-    * `batches` tracks the engine's batch ids. */
-  def update(spark: SparkSession, st: State, batchDecoded: DataFrame): State = {
-    val sparkSes = spark
-    import sparkSes.implicits._
-    // ONE bounded fetch doubles as the emptiness probe, the edit fetch and
-    // the singleton-registration input: the steady fold regime is
-    // touched-proportional by contract, so the final link set is small; a
-    // batch over [[Clustering.maxDriverEdges]] (the clustering layer's one
-    // driver bound) falls back to the fully distributed shape.
-    val taken = graft.functions.fetchBounded(
-      finalLinks(batchDecoded), Clustering.maxDriverEdges + 1)
-    if (taken.isEmpty) return st.copy(batches = st.batches + 1)
-    if (taken.length > Clustering.maxDriverEdges)
-      return updateDistributed(spark, st, batchDecoded)
-
-    val before = Pins.ids(spark.sparkContext)
-
-    // edits as a LocalRelation: statically broadcastable, nothing to pin
-    val editPairs = taken.map(r => (r.getString(0), r.getString(1))).toSeq
-    val edits = editPairs.toDF("cur_id", "new_ant_id")
-    val idsArr = (editPairs.map(_._1) ++ editPairs.map(_._2)).distinct
-    // every id the batch mentions that the state has never seen becomes a
-    // singleton cluster first, so the C2 kernel always edits a complete
-    // universe. ONE narrow scan of the state (broadcast ids, no shuffle)
-    // resolves the batch ids' current clusters; ids it misses are the new
-    // singletons — and the touched-cluster set falls out of the same probe
-    // (existing clusters hit + the new ids themselves), so the C2 kernel
-    // skips its own probe (`knownTouched`).
-    // ONE probe job over BOTH state tables (unioned, tagged): resolves the
-    // batch ids' current clusters AND which cur_ids already hold a
-    // backpointer row — two narrow broadcast-join scans in a single action
-    val curIds = editPairs.map(_._1).distinct
-    val probed = st.clusters
-      .join(broadcast(idsArr.toDF("mention_id")), Seq("mention_id"))
-      .select(col("mention_id"), col("cluster_id"), lit("c").as("src"))
-      .unionByName(st.backptrs
-        .join(broadcast(curIds.toDF("cur_id")), Seq("cur_id"))
-        .select(col("cur_id").as("mention_id"),
-          col("cur_id").as("cluster_id"), lit("b").as("src")))
-      .collect() // ≤ |idsArr| + |curIds| rows — bounded by construction
-    val matched = probed.filter(_.getString(2) == "c")
-    val existingCur = probed.collect {
-      case r if r.getString(2) == "b" => r.getString(0) }.toSet
-    val matchedIds = matched.map(_.getString(0)).toSet
-    val newIds = idsArr.filterNot(matchedIds)
-    val touched = (matched.map(_.getString(1)).toSeq ++ newIds).distinct
-    val newSingletons = newIds.map(id => (id, id)).toDF("mention_id", "cluster_id")
-    val registered = st.clusters.unionByName(newSingletons)
-
-    // ONE O(state) merge per batch — as a SCAN, not a shuffle: with the
-    // edits driver-held, the full_outer decomposes into [state rows
-    // broadcast-LEFT-joined against the edits] ∪ [edit rows whose cur_id
-    // the state has no backpointer for] (resolved by one more bounded
-    // probe). Value-identical to Clustering.mergeBackpointers (edits are
-    // unique per cur_id by finalLinks), with the state table streamed once
-    // instead of sort-merge-shuffled every batch.
-    val freshLinks = editPairs.filterNot { case (c, _) => existingCur(c) }
-    val merged = st.backptrs
-      .join(broadcast(edits), Seq("cur_id"), "left")
-      .select(col("cur_id"),
-        coalesce(col("new_ant_id"), col("ant_id")).as("ant_id"))
-      .unionByName(freshLinks.toDF("cur_id", "ant_id"))
-      .filter(col("ant_id") =!= col("cur_id"))
-    foldTail(spark, st, before, registered, edits, merged, Some(touched))
+  /** [[finalLinks]] over driver-held `(cur_id, ant_id, score)` rows, with
+    * Spark's string order for the tie-break. */
+  private def argmax(arcs: Array[Row]): Map[String, String] = {
+    val best = mutable.HashMap.empty[String, (String, Double)]
+    arcs.foreach { r =>
+      val (cur, ant, s) = (r.getString(0), r.getString(1), r.getDouble(2))
+      val better = best.get(cur).forall { case (bAnt, bS) =>
+        s > bS || (s == bS && Clustering.SparkStringOrder.lt(ant, bAnt)) }
+      if (better) best(cur) = (ant, s)
+    }
+    best.iterator.map { case (cur, (ant, _)) => cur -> ant }.toMap
   }
 
-  /** The fully distributed fold — the over-bound branch of [[update]]
-    * (edit set too large to hold driver-side): the pinned shape. */
-  private def updateDistributed(spark: SparkSession, st: State,
-      batchDecoded: DataFrame): State = {
-    val before = Pins.ids(spark.sparkContext)
-    val edits = finalLinks(batchDecoded).localCheckpoint(true)
+  /** One fold's new state table, lazy over the previous state and over
+    * `dead`, the pins taken while deriving it (the distributed fold's),
+    * which are released once the table is materialized. */
+  private case class Next(table: DataFrame, dead: Set[Int])
+
+  /** One microbatch fold (pure batch function): decode the batch's arcs,
+    * register unseen ids as singletons, then apply the links as one C2
+    * edit; the new state is pinned. A batch with no arcs still counts as a
+    * fold, so `batches` tracks the engine's batch ids. `maxEdges` bounds
+    * every driver-side fetch; over it the fold runs distributed. */
+  def update(spark: SparkSession, st: State, batchDecoded: DataFrame,
+      maxEdges: Int = Clustering.maxDriverEdges): State =
+    next(spark, st, batchDecoded, maxEdges) match {
+      case None => st.copy(batches = st.batches + 1)
+      case Some(n) =>
+        val sc = spark.sparkContext
+        val before = Pins.ids(sc)
+        val table = n.table.localCheckpoint(true)
+        val pins = Pins.ids(sc) -- before
+        // Pins.release frees BLOCKING: the steady per-batch fold pins fresh
+        // checkpoint blocks right after releasing the previous fold's — an
+        // async free lets dead and live blocks overlap, the documented
+        // steady-epoch OOM class (SURVEY §11.2, same rule as the trainer)
+        Pins.release(sc, n.dead ++ st.pins)
+        State(table, pins, st.batches + 1)
+    }
+
+  /** One microbatch fold whose new state is committed: the commit is the
+    * fold's one write, and the new state is that snapshot read back from
+    * its footers (no Spark job, nothing pinned). */
+  private def commitFold(spark: SparkSession, st: State, batchDecoded: DataFrame,
+      io: graft.io.TableIO, tag: String): State = {
+    val n = next(spark, st, batchDecoded, Clustering.maxDriverEdges)
+      .getOrElse(Next(st.table, Set.empty))
+    val batches = st.batches + 1
+    // always commit: reusing an existing snapshot of the same lineage would
+    // put a refold from batch 0 back onto the old run's state
+    val lin = lineage(tag, batches)
+    val snap = io.commit(Stage, n.table, lin)
+    val table = io.readIfCurrent(spark, Stage, lin, Some(snap)).getOrElse(
+      throw new IllegalStateException(s"$Stage snapshot $snap was just committed " +
+        s"under lineage '$lin' but cannot be read back"))
+    Pins.release(spark.sparkContext, n.dead ++ st.pins)
+    State(table, Set.empty, batches)
+  }
+
+  /** The new state table of one fold; None for a batch with no arcs. */
+  private def next(spark: SparkSession, st: State, batchDecoded: DataFrame,
+      maxEdges: Int): Option[Next] = {
+    val sparkSes = spark
+    import sparkSes.implicits._
+    val arcs = graft.functions.fetchBounded(
+      batchDecoded.select(col("cur_id"), col("ant_id"), col("score")), maxEdges + 1)
+    if (arcs.isEmpty) return None
+    if (arcs.length > maxEdges)
+      return Some(distributed(spark, st, finalLinks(batchDecoded), maxEdges))
+    val links = argmax(arcs)
+    val ids = (links.keysIterator ++ links.valuesIterator).toSet
+    // ONE narrow probe (a scan of the state) gives the touched clusters;
+    // at most |ids| rows come back
+    val touched = st.table.filter(memberOf(col("mention_id"), ids))
+      .select(col("cluster_id")).collect().map(_.getString(0)).toSet
+    val isTouched = memberOf(col("cluster_id"), touched)
+    // the touched clusters' rows: members and their backpointers at once
+    val rows =
+      if (touched.isEmpty) Array.empty[Row]
+      else graft.functions.fetchBounded(st.table.filter(isTouched)
+        .select(col("mention_id"), col("ant_id")), maxEdges + 1)
+    if (rows.length > maxEdges)
+      return Some(distributed(spark, st, links.toSeq.toDF("cur_id", "new_ant_id"), maxEdges))
+
+    // member → backpointer (null = none): the touched rows, the batch's new
+    // ids as singletons, then the batch's links (a self-link detaches)
+    val ant = mutable.HashMap.empty[String, String]
+    rows.foreach(r => ant(r.getString(0)) = r.getString(1))
+    ids.foreach(id => if (!ant.contains(id)) ant(id) = null)
+    links.foreach { case (cur, a) => ant(cur) = if (a == cur) null else a }
+    val uf = new Clustering.UnionFindMin[String](Clustering.SparkStringOrder)
+    ant.foreach { case (m, a) => if (a == null) uf.find(m) else uf.union(m, a) }
+    val recomputed = ant.iterator.map { case (m, a) => (m, uf.find(m), a) }.toSeq
+      .toDF("mention_id", "cluster_id", "ant_id")
+    val table = st.table.filter(!isTouched)
+      .select(col("mention_id"), col("cluster_id"), col("ant_id"))
+      .unionByName(recomputed)
+    Some(Next(capFiles(spark, table), Set.empty))
+  }
+
+  /** `c` is in the driver-held set `ids`, as one UDF over the set: unlike a
+    * broadcast join it starts no job of its own, and unlike `isin` its plan
+    * stays one node at any size (a filter of a 50k-row table at local[4]
+    * took 0.12–0.36 s at 1k–100k ids, against 0.2–0.7 s for a broadcast
+    * join and 0.18–4.2 s for `isin`). */
+  private def memberOf(c: Column, ids: Set[String]): Column =
+    udf((s: String) => ids.contains(s)).apply(c)
+
+  /** At most one partition per core: the union adds the recomputed rows'
+    * partitions to the state's on every fold, so without the cap a
+    * snapshot's file count would grow with the fold count. */
+  private def capFiles(spark: SparkSession, table: DataFrame): DataFrame =
+    table.coalesce(spark.sparkContext.defaultParallelism)
+
+  /** The fully distributed fold — the over-bound branch of [[next]]:
+    * register the new singletons, apply `edits` `(cur_id, new_ant_id)` as
+    * one [[Clustering.editBackpointers]] over the state's projections, and
+    * join the edited clusters and backpointers back into one table. */
+  private def distributed(spark: SparkSession, st: State, edits: DataFrame,
+      maxEdges: Int): Next = {
+    val sc = spark.sparkContext
+    val before = Pins.ids(sc)
+    val e = edits.localCheckpoint(true)
     // every id the batch mentions that the state has never seen becomes a
     // singleton cluster first, so the C2 kernel always edits a complete
-    // universe (its touched-set lookup joins against `clusters`)
-    val ids = edits.select(col("cur_id").as("mention_id"))
-      .unionByName(edits.select(col("new_ant_id").as("mention_id")))
+    // universe (its touched-set lookup joins against `clusters`); pin ONLY
+    // the new singletons (batch-sized), the registered view stays lazy
+    val ids = e.select(col("cur_id").as("mention_id"))
+      .unionByName(e.select(col("new_ant_id").as("mention_id")))
       .distinct()
-    // pin ONLY the new singletons (batch-sized); the registered view is a
-    // lazy union of two pinned tables — the C2 kernel's several reads scan
-    // checkpoint blocks either way, and the O(state) write that used to
-    // re-materialize the whole cluster table every batch is gone
     val newSingletons = ids.join(st.clusters, Seq("mention_id"), "left_anti")
       .select(col("mention_id"), col("mention_id").as("cluster_id"))
       .localCheckpoint(true)
     val registered = st.clusters.unionByName(newSingletons)
-
-    foldTail(spark, st, before, registered, edits,
-      Clustering.mergeBackpointers(st.backptrs, edits), None)
+    // the merged backpointers: the new state's links AND the edge set the
+    // C2 kernel restricts to touched members, pinned for both reads
+    val merged = Clustering.mergeBackpointers(st.backptrs, e).localCheckpoint(true)
+    val edited = Clustering.editBackpointers(spark, registered, st.backptrs, e,
+      editsPinned = true, premerged = Some(merged), maxEdges = maxEdges)
+    val table = edited
+      .join(merged.select(col("cur_id").as("mention_id"), col("ant_id")),
+        Seq("mention_id"), "left")
+      .select(col("mention_id"), col("cluster_id"), col("ant_id"))
+    Next(capFiles(spark, table), Pins.ids(sc) -- before)
   }
 
-  /** The tail both fold shapes share: pin the merged backpointer table (the
-    * next backpointer state AND the edge set the C2 kernel restricts to
-    * touched members), apply the batch as ONE C2 edit, pin the new clusters
-    * and release every pin taken since `before` that the new state does not
-    * hold, plus the previous state's. `knownTouched` is the touched-cluster
-    * set the driver-held fold already probed. */
-  private def foldTail(spark: SparkSession, st: State, before: Set[Int],
-      registered: DataFrame, edits: DataFrame, merged: DataFrame,
-      knownTouched: Option[Seq[String]]): State = {
-    val sc = spark.sparkContext
-    val preMerge = Pins.ids(sc)
-    val backptrs2 = merged.localCheckpoint(true)
-    val bp2Pins = Pins.ids(sc) -- preMerge
-    // editBackpointers pins its internals eagerly during the call; snapshot
-    // the pin set before taking the new state pins so the internals (plus
-    // the caller's edits and singletons) can be attributed and released
-    val edited = Clustering.editBackpointers(spark, registered, st.backptrs,
-      edits, editsPinned = true, premerged = Some(backptrs2),
-      knownTouched = knownTouched)
-    val interm = Pins.ids(sc) -- before -- bp2Pins
-    val clusters2 = edited.localCheckpoint(true)
-    val pins2 = Pins.ids(sc) -- before -- interm
-    // Pins.release frees BLOCKING: the steady per-batch fold pins fresh
-    // checkpoint blocks immediately after releasing the previous fold's — an
-    // async free lets dead and live blocks overlap, the documented
-    // steady-epoch OOM class (SURVEY §11.2, same rule as the trainer)
-    Pins.release(sc, interm ++ st.pins)
-    State(clusters2, backptrs2, pins2, st.batches + 1)
-  }
+  private def lineage(tag: String, batches: Long): String = s"$tag@batch-$batches"
 
   /** Commit the state through [[graft.io.TableIO]] — the Iceberg-shaped
     * seam, so the maintenance job is resumable with per-partition lineage +
-    * counters (north rule). Both tables carry the SAME lineage token
-    * `<tag>@batch-<n>`: a crash between the two commits leaves the stages'
-    * latest lineages disagreeing, and [[loadState]] walks back to the
-    * newest batch present in BOTH — a torn commit resumes one batch
-    * earlier instead of pairing a clusters table with a foreign
-    * backpointer table. */
+    * counters (north rule) — as ONE snapshot of the `stream_state` stage
+    * under the lineage token `<tag>@batch-<n>`, which it returns. One table
+    * means one commit, so no crash can leave half a state behind. */
   def commitState(io: graft.io.TableIO, st: State, tag: String): String = {
-    val lin = s"$tag@batch-${st.batches}"
-    io.commit("stream_clusters", st.clusters, lin)
-    io.commit("stream_backptrs", st.backptrs, lin)
+    val lin = lineage(tag, st.batches)
+    io.commit(Stage, st.table, lin)
     lin
   }
 
-  /** Load the newest consistent committed state: the largest batch id whose
-    * lineage token (under `tag`) is committed in BOTH stages, row counts
-    * verified against their manifests (TableIO resume semantics). */
+  /** Load the newest committed state under `tag`: the newest `stream_state`
+    * snapshot whose rows verify against its manifest (TableIO resume
+    * semantics), walking back past torn or corrupt ones. An output with no
+    * such snapshot resumes from the two-table layout: the newest batch
+    * committed and intact in BOTH legacy stages, joined into one table. */
   def loadState(spark: SparkSession, io: graft.io.TableIO, tag: String): Option[State] = {
     val Lin = (java.util.regex.Pattern.quote(tag) + "@batch-(\\d+)").r
     def committed(stage: String): Map[Long, Int] =
       (0 to io.latestSnapshot(stage).getOrElse(-1)).flatMap { k =>
         io.lineage(stage, k).collect { case Lin(n) => n.toLong -> k }
       }.toMap // later snapshots win per batch id
-    val c = committed("stream_clusters")
-    val b = committed("stream_backptrs")
-    // walk back through every batch committed in BOTH stages, newest first:
-    // a pair whose snapshot fails row-count verification (torn/corrupt files)
-    // falls through to the next-older intact pair instead of failing the
-    // whole load and recomputing from batch 0
-    (c.keySet intersect b.keySet).toSeq.sortBy(-_).iterator.flatMap { n =>
-      val lin = s"$tag@batch-$n"
-      (for {
-        cl <- io.readIfCurrent(spark, "stream_clusters", lin, Some(c(n)))
-        bp <- io.readIfCurrent(spark, "stream_backptrs", lin, Some(b(n)))
-      } yield State(cl, bp, Set.empty, n)).iterator
-    }.nextOption()
+    def read(stage: String, n: Long, snap: Int): Option[DataFrame] =
+      io.readIfCurrent(spark, stage, lineage(tag, n), Some(snap))
+    val current = {
+      val s = committed(Stage)
+      s.keys.toSeq.sortBy(-_).iterator.flatMap { n =>
+        read(Stage, n, s(n)).map(State(_, Set.empty, n)) }
+    }
+    def legacy = {
+      val (cs, bs) = LegacyStages
+      val (c, b) = (committed(cs), committed(bs))
+      (c.keySet intersect b.keySet).toSeq.sortBy(-_).iterator.flatMap { n =>
+        (for {
+          cl <- read(cs, n, c(n))
+          bp <- read(bs, n, b(n))
+        } yield State(cl.join(bp.withColumnRenamed("cur_id", "mention_id"),
+            Seq("mention_id"), "left")
+          .select(col("mention_id"), col("cluster_id"), col("ant_id")),
+          Set.empty, n)).iterator
+      }
+    }
+    current.nextOption().orElse(legacy.nextOption())
   }
 
   /** Attach the fold to a (streaming) `(cur_id, ant_id, score)` arc
     * DataFrame via `foreachBatch`. Returns the started query and a live handle to the
     * current state; `onBatch` fires after each fold (metrics, extra
     * assertions in tests). `commitCadence = Some((io, tag, n))` commits the
-    * state through [[commitState]] every n-th fold — the built-in
-    * warehouse-scale checkpoint.
+    * state every n-th fold — the built-in warehouse-scale checkpoint: that
+    * fold writes its new state as the `stream_state` snapshot instead of
+    * pinning it, and the next fold reads it back.
     *
     * Resume contract: restart with `initial = loadState(spark, io, tag)`
     * AND the same durable `checkpointLocation`. The engine's checkpoint
@@ -291,11 +344,12 @@ object StreamingClusters {
             "are gone); restore a newer state commit or restart with a fresh " +
             "checkpoint AND no initial state to refold from scratch")
         if (fold) {
-          val next = update(spark, st, batch)
-          ref.set(next)
-          commitCadence.foreach { case (io, tag, n) =>
-            if (n > 0 && next.batches % n == 0) commitState(io, next, tag)
+          val next = commitCadence match {
+            case Some((io, tag, n)) if n > 0 && (st.batches + 1) % n == 0 =>
+              commitFold(spark, st, batch, io, tag)
+            case _ => update(spark, st, batch)
           }
+          ref.set(next)
           onBatch(next)
         }
       }

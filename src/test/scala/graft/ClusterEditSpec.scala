@@ -201,4 +201,46 @@ class ClusterEditSpec extends SparkSuite {
     assert(dfltPins === 0, s"top-level solve pinned $dfltPins RDDs")
     assert(smallPins === 2, s"contraction + driver solve pinned $smallPins RDDs")
   }
+  test("ids mixing U+E000–U+FFFF and supplementary characters take Spark's " +
+      "string order on every branch") {
+    // "c\uFFFD" < "c\uD83D\uDE00" (U+1F600) in Spark's UTF-8 byte order, but
+    // String.compareTo (UTF-16 code units) orders them the other way: the
+    // component minimum, the fold's tie-break and the cluster count must
+    // all follow Spark's `min`
+    val (rep, emoji, pua) = ("c\uFFFD", "c\uD83D\uDE00", "c\uE000")
+    val mentions = Seq(mid(rep, 0, 0), mid(rep, 0, 3), mid(emoji, 0, 0),
+      mid(emoji, 1, 1), mid(pua, 0, 0), mid("cz", 0, 0)).toDF("mention_id")
+    val bp = Seq(
+      (mid(rep, 0, 3), mid(rep, 0, 0)),
+      (mid(emoji, 0, 0), mid(rep, 0, 3)),   // joins the two conversations
+      (mid(emoji, 1, 1), mid(emoji, 0, 0)),
+      (mid("cz", 0, 0), mid(pua, 0, 0))).toDF("cur_id", "ant_id")
+    val dflt = toSet(Clustering.cluster(spark, mentions, bp))
+    val overBound = Clustering.cluster(spark, mentions, bp, maxEdges = 0)
+    assert(toSet(overBound) === dflt)
+    val sparkMin = mentions.filter(!col("mention_id").startsWith("cz") &&
+        !col("mention_id").startsWith(pua))
+      .agg(min(col("mention_id"))).head().getString(0)
+    assert(sparkMin === mid(rep, 0, 0))
+    assert(dflt.filter(_._1.startsWith(emoji)).map(_._2) === Set(sparkMin))
+    // the closing count over an over-bound clustering
+    val r = overBound.agg(count(lit(1)), countDistinct(col("cluster_id"))).head()
+    assert(Run.rowsAndClusters(overBound) === ((r.getLong(0), r.getLong(1))))
+
+    // the fold: a tie between the two antecedents goes to Spark's lower id,
+    // driver-held and distributed alike
+    import graft.streaming.StreamingClusters
+    val arcs = Seq((mid("cz", 1, 0), mid(emoji, 0, 0), 1.0),
+      (mid("cz", 1, 0), mid(rep, 0, 0), 1.0), (mid(rep, 0, 3), mid(rep, 0, 0), 1.0))
+      .toDF("cur_id", "ant_id", "score")
+    def fold(bound: Int) = {
+      val st = StreamingClusters.update(spark, StreamingClusters.empty(spark), arcs, bound)
+      val out = (toSet(st.backptrs), toSet(st.clusters))
+      Pins.release(spark.sparkContext, st.pins)
+      out
+    }
+    val (bpDriver, clDriver) = fold(Clustering.maxDriverEdges)
+    assert(bpDriver(mid("cz", 1, 0) -> mid(rep, 0, 0)))
+    assert(fold(0) === ((bpDriver, clDriver)))
+  }
 }

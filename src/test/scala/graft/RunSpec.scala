@@ -24,32 +24,6 @@ class RunSpec extends SparkSuite {
     m.get.group(1)
   }
 
-  /** Spark jobs started while `body` runs, counted by a listener. The
-    * listener bus is asynchronous, so a marker job is run afterwards and
-    * awaited: once its start event arrives, every earlier one has too. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("runspec.marker") != null))
-          flushed.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("runspec.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("runspec.marker", null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job never reached the listener")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("--train: trains, commits a packed model, evaluates, and a predict-only " +
       "run from the committed snapshot reproduces the clusters") {
     val tmp = java.nio.file.Files.createTempDirectory("runspec").toString
@@ -394,6 +368,34 @@ class RunSpec extends SparkSuite {
     assert(field(metrics2, "folds") === field(metrics, "folds"),
       "no new arrivals => no new folds")
     assert(field(metrics2, "clusters") === field(metrics, "clusters"))
+    assertClosingCounts(st.clusters)
+
+    // a copy of the output records its files under the ORIGINAL path: a
+    // resume from the copy would fold every file again, so it must fail
+    val copy = s"$tmp/copy"
+    copyTree(java.nio.file.Paths.get(out), java.nio.file.Paths.get(copy))
+    val ex = intercept[IllegalStateException] {
+      Run.runWith(spark, Map("input" -> field(metrics, "input"), "output" -> copy,
+        "streaming" -> "true"))
+    }
+    assert(ex.getMessage.contains(s"$tmp/copy") && ex.getMessage.contains(s"$tmp/out"),
+      s"the error must name both paths: ${ex.getMessage}")
+  }
+
+  /** Copy the directory tree `from` to `to`. */
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val all = java.nio.file.Files.walk(from)
+    try all.iterator().asScala.toSeq.foreach(p =>
+      java.nio.file.Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally all.close()
+  }
+
+  /** [[Run.rowsAndClusters]] equals `count` and `countDistinct(cluster_id)`
+    * over a `(mention_id, cluster_id)` table. */
+  private def assertClosingCounts(clusters: org.apache.spark.sql.DataFrame): Unit = {
+    val r = clusters.agg(count(lit(1)), countDistinct(col("cluster_id"))).head()
+    assert(Run.rowsAndClusters(clusters) === ((r.getLong(0), r.getLong(1))))
   }
 
   test("--link: wikifies the mentions against a dictionary and commits the links") {
@@ -596,6 +598,10 @@ class RunSpec extends SparkSuite {
     info(s"$jobs Spark jobs: $metrics")
     assert(field(metrics, "clusters").toInt > 0)
     assert(jobs <= RunJobBound, s"a batch Run took $jobs Spark jobs (bound $RunJobBound)")
+    val committed = new TableIO(s"$tmp/out").readIfCurrent(spark, "clusters",
+      field(metrics, "config")).getOrElse(fail("clusters not committed"))
+    assertClosingCounts(committed)
+    assert(Run.rowsAndClusters(committed)._2 === field(metrics, "clusters").toLong)
   }
 
   test("--train without --model-dir fails loudly; --mode sparse without a model fails loudly") {

@@ -186,10 +186,10 @@ class StreamingSpec extends SparkSuite {
       commitCadence = Some((io, "div", 1)),
       checkpointLocation = Some(ckpt))
     q1.awaitTermination(180000)
-    // corrupt the NEWEST committed pair: loadState walks back to batch 1,
-    // but the engine checkpoint has batch 1's offsets committed — the folds
-    // between them are unrecoverable from the stream
-    deleteLargestPart(java.nio.file.Paths.get(ioRoot, "stream_clusters", "snap-1"))
+    // corrupt the NEWEST committed snapshot: loadState walks back to batch
+    // 1, but the engine checkpoint has batch 1's offsets committed — the
+    // folds between them are unrecoverable from the stream
+    deleteLargestPart(java.nio.file.Paths.get(ioRoot, "stream_state", "snap-1"))
     val loaded = StreamingClusters.loadState(spark, io, "div")
     assert(loaded.isDefined && loaded.get.batches === 1L)
     addFile(Seq(("e", "d", 1.0))) // new data → engine batch 2 vs state fold 1
@@ -259,11 +259,7 @@ class StreamingSpec extends SparkSuite {
       seen ++= emissions.iterator.flatMap(e => Seq(e._1, e._2))
       val batch = emissions.toSeq.toDF("cur_id", "ant_id", "score")
       st = StreamingClusters.update(spark, st, batch)
-      val savedBound = Clustering.maxDriverEdges
-      stDist = try {
-        Clustering.maxDriverEdges = 0
-        StreamingClusters.update(spark, stDist, batch)
-      } finally Clustering.maxDriverEdges = savedBound
+      stDist = StreamingClusters.update(spark, stDist, batch, maxEdges = 0)
       // exactness after EVERY batch: incremental == full recompute over
       // everything decoded so far (including ants a later wave superseded)
       val expected = Clustering.cluster(spark,
@@ -319,7 +315,8 @@ class StreamingSpec extends SparkSuite {
     val b1 = Seq(("b", "a", 1.0), ("c", "b", 1.0))   // {a,b,c}
     val b2 = Seq(("e", "d", 1.0))                     // {d,e}
     val b3 = Seq(("d", "c", 2.0))                     // merge via C2 fresh link
-    val io = new TableIO(Files.createTempDirectory("graft-sclust-io").toString)
+    val ioRoot = Files.createTempDirectory("graft-sclust-io").toString
+    val io = new TableIO(ioRoot)
 
     var st = StreamingClusters.empty(spark)
     st = fold(st, b1); st = fold(st, b2)
@@ -338,12 +335,13 @@ class StreamingSpec extends SparkSuite {
     assert(resumedSet === inMemSet,
       "resume from the committed state + replay must equal the uninterrupted fold")
 
-    // torn commit: only ONE stage advances to batch 3 — loadState must walk
-    // back to the newest batch committed in BOTH stages
-    io.commit("stream_clusters", inMem.clusters, "t1@batch-3")
+    // torn commit: batch 3's data is written but its manifest (the commit
+    // marker) never is — loadState must resume the last committed batch
+    inMem.table.write.parquet(s"$ioRoot/stream_state/snap-1")
     val afterTorn = StreamingClusters.loadState(spark, io, "t1")
     assert(afterTorn.isDefined && afterTorn.get.batches === 2L,
-      "a torn commit must resume one batch earlier, not pair mismatched tables")
+      "a torn commit must resume one batch earlier")
+    assert(io.latestSnapshot("stream_state") === Some(0))
 
     // a foreign tag never resolves
     assert(StreamingClusters.loadState(spark, io, "t2").isEmpty)
@@ -372,9 +370,11 @@ class StreamingSpec extends SparkSuite {
       commitCadence = Some((io, "cad", 2)))
     q.awaitTermination(180000)
     assert(ref.get().batches === 4L)
-    // cadence 2 over 4 folds → exactly two committed snapshots per stage
-    assert(io.latestSnapshot("stream_clusters") === Some(1))
-    assert(io.latestSnapshot("stream_backptrs") === Some(1))
+    // cadence 2 over 4 folds → exactly two committed snapshots of the one
+    // state table, and nothing in the two-table layout
+    assert(io.latestSnapshot("stream_state") === Some(1))
+    assert(io.latestSnapshot("stream_clusters").isEmpty)
+    assert(io.latestSnapshot("stream_backptrs").isEmpty)
     val loaded = StreamingClusters.loadState(spark, io, "cad")
     assert(loaded.isDefined && loaded.get.batches === 4L)
     val set = loaded.get.clusters.collect()
@@ -383,6 +383,8 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("loadState walks back past a corrupt newest snapshot pair") {
+    // the two-table layout: a pair committed under one lineage, resumed as
+    // the one state table
     import graft.streaming.StreamingClusters
     import graft.io.TableIO
     import spark.implicits._
@@ -394,10 +396,10 @@ class StreamingSpec extends SparkSuite {
     var st = StreamingClusters.empty(spark)
     st = fold(st, Seq(("b", "a", 1.0)))
     st = fold(st, Seq(("c", "b", 1.0)))
-    StreamingClusters.commitState(io, st, "t1") // batch-2, intact
+    StreamingSpec.retiredCommitState(io, st, "t1") // batch-2, intact
     st = fold(st, Seq(("e", "d", 1.0)))
     st = fold(st, Seq(("d", "c", 2.0)))
-    StreamingClusters.commitState(io, st, "t1") // batch-4, about to corrupt
+    StreamingSpec.retiredCommitState(io, st, "t1") // batch-4, about to corrupt
 
     // lose a part file under the batch-4 clusters snapshot: row-count
     // verification must fail that pair and fall through to batch-2 —
@@ -410,6 +412,70 @@ class StreamingSpec extends SparkSuite {
     val set = loaded.get.clusters.collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(set === Set(("a", "a"), ("b", "a"), ("c", "a")))
+    assert(idPairs(loaded.get.backptrs) === Set(("b", "a"), ("c", "b")))
+
+    // a batch committed in one stage only (a torn pair) never resumes
+    io.commit("stream_backptrs", st.backptrs, "t1@batch-5")
+    assert(StreamingClusters.loadState(spark, io, "t1").get.batches === 2L)
+  }
+
+  test("loadState walks back past a corrupt newest stream_state snapshot") {
+    import graft.streaming.StreamingClusters
+    import graft.io.TableIO
+    import spark.implicits._
+    def fold(st: StreamingClusters.State, rows: Seq[(String, String, Double)]) =
+      StreamingClusters.update(spark, st,
+        rows.toDF("cur_id", "ant_id", "score"))
+    val ioRoot = Files.createTempDirectory("graft-state-corrupt").toString
+    val io = new TableIO(ioRoot)
+    var st = StreamingClusters.empty(spark)
+    st = fold(st, Seq(("b", "a", 1.0)))
+    st = fold(st, Seq(("c", "b", 1.0)))
+    StreamingClusters.commitState(io, st, "t1") // batch-2, intact
+    st = fold(st, Seq(("e", "d", 1.0)))
+    st = fold(st, Seq(("d", "c", 2.0)))
+    StreamingClusters.commitState(io, st, "t1") // batch-4, about to corrupt
+    deleteLargestPart(java.nio.file.Paths.get(ioRoot, "stream_state", "snap-1"))
+
+    val loaded = StreamingClusters.loadState(spark, io, "t1")
+    assert(loaded.isDefined && loaded.get.batches === 2L,
+      "a corrupt newest snapshot must fall through to the next-older intact one")
+    assert(idPairs(loaded.get.clusters) === Set(("a", "a"), ("b", "a"), ("c", "a")))
+    assert(idPairs(loaded.get.backptrs) === Set(("b", "a"), ("c", "b")))
+  }
+
+  test("an output committed in the two-table layout resumes as one state " +
+      "table, and its next fold commits stream_state") {
+    import graft.streaming.StreamingClusters
+    import graft.io.TableIO
+    import spark.implicits._
+    def fold(st: StreamingClusters.State, rows: Seq[(String, String, Double)]) =
+      StreamingClusters.update(spark, st, rows.toDF("cur_id", "ant_id", "score"))
+    val io = new TableIO(Files.createTempDirectory("graft-sclust-legacy").toString)
+    var st = StreamingClusters.empty(spark)
+    st = fold(st, Seq(("b", "a", 1.0), ("c", "b", 1.0)))
+    st = fold(st, Seq(("e", "d", 1.0), ("x", "y", 1.0)))
+    StreamingSpec.retiredCommitState(io, st, "leg")
+    val (committedCl, committedBp) = (idPairs(st.clusters), idPairs(st.backptrs))
+    val b3 = Seq(("d", "c", 2.0), ("x", "a", 3.0)) // a merge and a re-point
+    val uninterrupted = fold(st, b3)
+
+    val loaded = StreamingClusters.loadState(spark, io, "leg")
+      .getOrElse(fail("the two-table layout must resume"))
+    assert(loaded.batches === 2L)
+    assert(loaded.table.columns.toSeq === Seq("mention_id", "cluster_id", "ant_id"))
+    assert(idPairs(loaded.clusters) === committedCl)
+    assert(idPairs(loaded.backptrs) === committedBp)
+    val resumed = fold(loaded, b3)
+    assert(idPairs(resumed.clusters) === idPairs(uninterrupted.clusters))
+    assert(idPairs(resumed.backptrs) === idPairs(uninterrupted.backptrs))
+
+    // the next commit is the one-table snapshot, and loadState prefers it
+    StreamingClusters.commitState(io, resumed, "leg")
+    assert(io.latestSnapshot("stream_state") === Some(0))
+    val again = StreamingClusters.loadState(spark, io, "leg").get
+    assert(again.batches === 3L)
+    assert(idPairs(again.clusters) === idPairs(uninterrupted.clusters))
   }
 
   test("maintain resumes from loadState + durable checkpoint without double-folding") {
@@ -575,16 +641,16 @@ class StreamingSpec extends SparkSuite {
       val (m, folds) = withFoldProgress(runStream(appIn, appOut))
       info(m)
       assert(field(m, "folds").toLong === k + 1L, "one fold per appended slice")
-      assert(io.latestSnapshot("stream_clusters") === Some(k),
+      assert(io.latestSnapshot("stream_state") === Some(k),
         "one state commit per appended slice")
-      assert(io.latestSnapshot("stream_backptrs") === Some(k))
+      assert(io.latestSnapshot("stream_clusters").isEmpty)
       assert(folds.size === 1, s"one fold microbatch per run, got ${folds.size}")
       assert(folds.forall(_.stateOperators.isEmpty), "the fold query holds no state")
     }
     // a re-run with no new files neither folds nor commits
     val (m, folds) = withFoldProgress(runStream(appIn, appOut))
     assert(field(m, "folds") === sfSlices.size.toString)
-    assert(io.latestSnapshot("stream_clusters") === Some(sfSlices.size - 1))
+    assert(io.latestSnapshot("stream_state") === Some(sfSlices.size - 1))
     assert(folds.isEmpty)
 
     val (drainIn, drainOut) = (s"$tmp/drain/in", s"$tmp/drain/out")
@@ -639,7 +705,8 @@ class StreamingSpec extends SparkSuite {
     val arcSchema = "ant_id STRING, cur_id STRING, block_key STRING, " +
       "score DOUBLE, ts TIMESTAMP"
     // the layout the stateful decode left: band pairer (10-minute horizon)
-    // → arc sink → stateful running decode → fold, committed every fold
+    // → arc sink → stateful running decode → fold, committed every fold as
+    // the two-table state, and no output-path marker
     var folds = 0L
     for (k <- 0 until 2) {
       appendSlice(k, in)
@@ -654,9 +721,9 @@ class StreamingSpec extends SparkSuite {
       val arcStream = spark.readStream.schema(arcSchema).parquet(s"$out/band_scores")
       val (q, ref) = StreamingClusters.maintain(spark,
         StreamingSpec.retiredDecode(spark, arcStream, 0.0),
+        onBatch = StreamingSpec.retiredCommitState(io, _, DenseToken),
         trigger = Some(Trigger.AvailableNow()),
         initial = StreamingClusters.loadState(spark, io, DenseToken),
-        commitCadence = Some((io, DenseToken, 1)),
         checkpointLocation = Some(s"$out/stream_checkpoint"))
       q.awaitTermination()
       folds = ref.get().batches
@@ -670,11 +737,76 @@ class StreamingSpec extends SparkSuite {
     assert(!Files.exists(stateDir))
     assert(field(m, "resumed_from_fold") === folds.toString)
     assert(field(m, "folds") === (folds + 1).toString)
+    assert(io.latestSnapshot("stream_state") === Some(0),
+      "the first fold after the two-table layout commits one state table")
     assertStateIsBatchDecode(out)
+    assert(Files.exists(java.nio.file.Paths.get(out, "stream_checkpoint", "output_path")),
+      "an output without a path marker gets one")
+  }
+
+  test("a driver-held fold commits its state in one write: at most 9 Spark " +
+      "jobs per microbatch, and the snapshot's file count stays bounded") {
+    import graft.streaming.StreamingClusters
+    import graft.io.TableIO
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-fold-jobs").toString
+    val (in, ckpt) = (s"$root/arcs", s"$root/ckpt")
+    val io = new TableIO(root)
+    def stream = spark.readStream
+      .schema("cur_id STRING, ant_id STRING, score DOUBLE").parquet(in)
+    // six appends, one maintain run each (the Run --streaming shape): fresh
+    // links, merges of committed clusters, and several arcs per mention;
+    // each mention's arcs arrive in one append, as the band pairer emits them
+    val appends = Seq(
+      Seq(("b", "a", 1.0), ("c", "b", 1.0), ("c", "a", 0.5)),
+      Seq(("e", "d", 1.0), ("g", "f", 1.0)),
+      Seq(("d", "c", 2.0), ("h", "g", 1.0), ("h", "e", 1.0)),
+      Seq(("i", "a", 1.0), ("j", "i", 1.0), ("k", "j", 1.0)),
+      Seq(("f", "k", 1.0), ("m", "l", 1.0)),
+      Seq(("l", "h", 1.0), ("n", "z", 0.2), ("n", "m", 0.7)))
+    val files = for ((rows, k) <- appends.zipWithIndex) yield {
+      rows.toDF("cur_id", "ant_id", "score").coalesce(1)
+        .write.mode("append").parquet(in)
+      val initial = StreamingClusters.loadState(spark, io, "jobs")
+      var st: StreamingClusters.State = null
+      val jobs = jobsRecordedDuring {
+        val (q, ref) = StreamingClusters.maintain(spark, stream,
+          trigger = Some(Trigger.AvailableNow()), initial = initial,
+          commitCadence = Some((io, "jobs", 1)), checkpointLocation = Some(ckpt))
+        q.awaitTermination(180000)
+        st = ref.get()
+      }
+      assert(st.batches === k + 1L)
+      assert(st.pins.isEmpty, "a committed fold's state is its snapshot, not a pin")
+      info(s"append $k: ${jobs.size} jobs, ${jobs.count(_.writes)} writing")
+      assert(jobs.size <= 9, s"fold microbatch $k ran ${jobs.size} Spark jobs")
+      assert(jobs.count(_.writes) === 1, s"fold microbatch $k must write one table")
+      assert(io.latestSnapshot("stream_state") === Some(k))
+      val snap = java.nio.file.Paths.get(root, "stream_state", s"snap-$k")
+      import scala.jdk.CollectionConverters._
+      Files.list(snap).iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+    }
+    info(s"data files per snapshot: ${files.mkString(", ")}")
+    assert(files.forall(_ <= spark.sparkContext.defaultParallelism),
+      s"snapshot file counts must stay within one per core: $files")
+    assert(Seq("stream_clusters", "stream_backptrs").forall(io.latestSnapshot(_).isEmpty))
+    assert(committedState(io, "jobs") === batchDecode(spark.read.parquet(in), 0.0))
   }
 }
 
 object StreamingSpec {
+
+  /** The state commit before the state was one table, kept as the reference
+    * copy that builds an output in its layout: the clusters and the
+    * backpointers as two stages under the same lineage token
+    * `<tag>@batch-<n>`. */
+  def retiredCommitState(io: graft.io.TableIO,
+      st: graft.streaming.StreamingClusters.State, tag: String): String = {
+    val lin = s"$tag@batch-${st.batches}"
+    io.commit("stream_clusters", st.clusters, lin)
+    io.commit("stream_backptrs", st.backptrs, lin)
+    lin
+  }
 
   /** The band pairer's eviction horizon before it became
     * [[StreamingAssembly.IdleHorizonMs]]: 10 minutes of event time. */
