@@ -203,8 +203,7 @@ object Bench {
     val transcripts = Transcripts.load(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism, col("conv_id"))
     val mentions = Mentions.extractIdentifier(transcripts).localCheckpoint(true)
-    val pairsAttr = Scoring.attachAttrs(
-      Blocking.convBandPairs(mentions, cfg.blocking), mentions)
+    val pairsAttr = Blocking.convBandPairsAttr(mentions, cfg.blocking)
     val feats = SparseFeatures.featureStrings(pairsAttr,
       SparseFeatures.normCounts(mentions))
     val g = mentions.select(col("mention_id"),

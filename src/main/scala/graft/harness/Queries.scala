@@ -131,7 +131,7 @@ object Queries {
     * speaker-role / number / gender agreement family (UNKNOWN-safe). */
   def p5BandFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     val m = pipeline(spark, sfDir).mentions
-    Scoring.scorePairs(Blocking.convBandPairs(m, harnessCfg.blocking), m)
+    Scoring.scorePairsAttr(Blocking.convBandPairsAttr(m, harnessCfg.blocking))
       .select(col("ant_id"), col("cur_id"),
         col("f_same_role"), col("f_number_match"), col("f_number_clash"),
         col("f_gender_match"), col("f_gender_clash"),
@@ -508,8 +508,7 @@ object Queries {
   private def sparsePath(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) =
     memoSparse.getOrElseUpdate(sfDir, {
       val r = pipeline(spark, sfDir)
-      val pairsAttr = Scoring.attachAttrs(
-        Blocking.convBandPairs(r.mentions, harnessCfg.blocking), r.mentions)
+      val pairsAttr = Blocking.convBandPairsAttr(r.mentions, harnessCfg.blocking)
       val (sem, hearst) = semSeam(spark, sfDir)
       val feats = SparseFeatures.featureStrings(pairsAttr,
         SparseFeatures.normCounts(r.mentions), Some(sem), Some(hearst)).cache()

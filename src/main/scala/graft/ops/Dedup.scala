@@ -112,11 +112,12 @@ object Dedup {
     * after verification are tiny relative to the corpus, so they almost
     * always take the bounded driver union-find (skipping the checkpointed
     * loop's per-iteration action overhead entirely); a graph over
-    * [[graft.pipeline.Clustering.maxDriverEdges]] falls back to the
-    * distributed hash-to-min loop. Ids stay longs end to end; canonical id
-    * = component minimum either way (oracle `dd_canonical` pins the
-    * equality). */
-  def canonicalize(pairs: DataFrame): DataFrame = {
+    * `maxEdges` ([[graft.pipeline.Clustering.maxDriverEdges]] by default)
+    * falls back to the distributed hash-to-min loop. Ids stay longs end to
+    * end; canonical id = component minimum either way (oracle
+    * `dd_canonical` pins the equality). */
+  def canonicalize(pairs: DataFrame,
+      maxEdges: Int = graft.pipeline.Clustering.maxDriverEdges): DataFrame = {
     // pin the verified pair list ONCE: the solver's bounded fetch, the
     // fallback loop and the node derivation each consume it, and without
     // the checkpoint every consumer re-runs the (expensive) upstream
@@ -125,7 +126,7 @@ object Dedup {
     val nodes = p.select(col("doc_a").as("id"))
       .unionByName(p.select(col("doc_b").as("id"))).distinct()
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    graft.pipeline.Clustering.components(nodes, edges)
+    graft.pipeline.Clustering.components(nodes, edges, maxEdges = maxEdges)
       .select(col("mention_id").as("doc_id"), col("cluster_id").as("canonical_id"))
   }
 

@@ -19,12 +19,14 @@ import graft.functions._
   *
   * **Mention level (conversation band, B1).** All (ant, cur) with
   * `0 < cur.m_seq − ant.m_seq ≤ maxConvDist` within a conversation
-  * (`DocumentGraph.scala:91-102`) — bounded per conversation, skew-free.
-  * Closed-class mentions (pronouns/nominals) pair only here.
+  * (`DocumentGraph.scala:91-102`), from one sweep per conversation
+  * ([[bandSweep]]): O(mentions × maxConvDist) work, one conversation per
+  * task group, so a long conversation costs its length, not its square
+  * (one very long conversation still lands on one task). Closed-class
+  * mentions (pronouns/nominals) pair only here.
   *
   * Skew control: per-key surface counts are capped (`maxBlockSize`); the
-  * oversize audit is [[blockStats]] (manifest counters / B7). The band join
-  * runs under AQE skew-join handling.
+  * oversize audit is [[blockStats]] (manifest counters / B7).
   */
 object Blocking {
 
@@ -152,42 +154,47 @@ object Blocking {
       .localCheckpoint(true)
   }
 
-  /** B1 conversation-band mention pairs `(ant_id, cur_id)` (closed- and
-    * open-class). */
-  def convBandPairs(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
-    val m = mentions.select(col("conv_id"), col("mention_id"), col("m_seq"))
-    val a = m.select(col("conv_id"), col("mention_id").as("ant_id"), col("m_seq").as("ant_seq"))
-    val c = m.select(col("conv_id"), col("mention_id").as("cur_id"), col("m_seq").as("cur_seq"))
-    a.join(c, Seq("conv_id"))
-      .filter(col("cur_seq") > col("ant_seq") &&
-        col("cur_seq") - col("ant_seq") <= cfg.maxConvDist)
-      .select(col("ant_id"), col("cur_id"), lit("conv").as("block_key"))
+  /** B1 over one conversation (`DocumentGraph.scala:91-102`): each mention
+    * of `arrivals` (in `seq` order) pairs, as `(ant, cur)`, with every
+    * `carried` (an earlier sweep's window) or earlier arrival `ant` with `0 <
+    * seq(cur) − seq(ant) ≤ maxConvDist`. The window is trimmed by `seq`
+    * value: O(mentions × maxConvDist) work. Batch ([[convBandPairsAttr]])
+    * and stream ([[graft.streaming.StreamingAssembly.streamingBandPairs]])
+    * both run it. */
+  def bandSweep[M](carried: Seq[M], arrivals: Iterator[M], maxConvDist: Int)(
+      seq: M => Int): Iterator[(M, M)] = {
+    val window = scala.collection.mutable.ArrayDeque.from(carried)
+    arrivals.flatMap { cur =>
+      val s = seq(cur)
+      while (window.nonEmpty && s - seq(window.head) > maxConvDist) window.removeHead()
+      val pairs = window.iterator.filter(a => seq(a) < s).map((_, cur)).toVector
+      window += cur
+      pairs
+    }
   }
 
-  /** [[convBandPairs]] with BOTH mentions' scoring attributes carried
-    * through the conversation self-join — the band-scoring input in ONE
-    * equi-join. The ids-only variant feeds [[graft.pipeline.Scoring
-    * .attachAttrs]], which re-joins the (much larger) pair table against
-    * mentions twice; at band width w each mention-side shuffle here moves
-    * the 100k-mention attr table once, where attachAttrs shuffles the ~w×
-    * pair table twice. Output = `attachAttrs(convBandPairs(m), m)` exactly
-    * (same rows, same columns), pinned by spec. */
+  /** B1 band pairs `(ant_id, <attrs>_a, cur_id, <attrs>_c, block_key)` with
+    * both mentions' scoring attributes in the input's types: [[bandSweep]]
+    * per `conv_id` group sorted by `m_seq`. Over `Pipeline.run`'s mentions
+    * (spread by `conv_id`) this only sorts; other inputs shuffle once. */
   def convBandPairsAttr(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val attrs = mentions.select(
       col("mention_id"), col("conv_id"), col("m_seq"), col("norm"),
       col("head_key"), col("toks"), col("mtype"), col("closed_class"),
       col("role"), col("number"), col("gender"))
-    val a = attrs.toDF(attrs.columns.map(_ + "_a"): _*)
-      .withColumnRenamed("mention_id_a", "ant_id")
-      .withColumn("conv_id", col("conv_id_a"))
-    val c = attrs.toDF(attrs.columns.map(_ + "_c"): _*)
-      .withColumnRenamed("mention_id_c", "cur_id")
-      .withColumn("conv_id", col("conv_id_c"))
-    a.join(c, Seq("conv_id"))
-      .filter(col("m_seq_c") > col("m_seq_a") &&
-        col("m_seq_c") - col("m_seq_a") <= cfg.maxConvDist)
-      .drop("conv_id")
-      .withColumn("block_key", lit("conv"))
+    def side(id: String, suffix: String) = attrs.schema.map(f =>
+      f.copy(name = if (f.name == "mention_id") id else f.name + suffix))
+    val out = StructType(side("ant_id", "_a") ++ side("cur_id", "_c") :+
+      StructField("block_key", StringType, nullable = false))
+    val mSeq = attrs.schema.fieldIndex("m_seq")
+    attrs.groupBy(col("conv_id")).as[String, Row](Encoders.STRING, Encoders.row(attrs.schema))
+      .flatMapSortedGroups(col("m_seq")) { (_, ms) =>
+        bandSweep(Nil, ms, cfg.maxConvDist)(_.getInt(mSeq)).map { case (a, c) =>
+          Row.fromSeq(a.toSeq ++ c.toSeq :+ "conv") }
+      }(Encoders.row(out))
+      .toDF()
   }
 
   /** Per-surface open-class mention counts `(norm, n_mentions)` — the skew
@@ -378,7 +385,8 @@ object Blocking {
       surfacePairs(surfaceTable(mentions), cfg)
         .unionByName(selfSurfacePairs(mentions, cfg)),
       mentions, cfg)
-    convBandPairs(mentions, cfg).unionByName(global)
+    convBandPairsAttr(mentions, cfg).select(col("ant_id"), col("cur_id"), col("block_key"))
+      .unionByName(global)
       .groupBy(col("ant_id"), col("cur_id"))
       .agg(min(col("block_key")).as("block_key"))
   }

@@ -216,9 +216,9 @@ object Clustering {
     * bounded solve, [[editBackpointers]]' two probes and the streaming
     * fold's arc and touched-cluster fetches; each takes it as the default
     * of a `maxEdges` parameter. 200k string edges is at most ~20 MB of
-    * driver heap. Mutable so specs can force the distributed fallbacks on
-    * small fixtures. */
-  private[graft] var maxDriverEdges: Int = 200000
+    * driver heap. Specs force the distributed fallbacks on small fixtures
+    * by passing a smaller `maxEdges`. */
+  val maxDriverEdges: Int = 200000
 
   /** The bounded solve: ONE bounded fetch of `edges` (two columns, String
     * or Long ids; [[graft.functions.fetchBounded]], so at most max+1 rows

@@ -45,20 +45,21 @@ object Mentions {
   val IdentifierRe = "^(?:[A-Za-z]+[#-])?[0-9]+$"
 
   /** Identifier + pronoun mentions (single-token; harness path). */
-  def extractIdentifier(transcripts: DataFrame): DataFrame = {
-    val t = transcripts
+  def extractIdentifier(transcripts: DataFrame): DataFrame =
+    finish(identifierCandidates(transcripts))
+
+  /** Every identifier or pronoun token as a candidate; stateless, so the
+    * stream extracts with it too. */
+  def identifierCandidates(transcripts: DataFrame): DataFrame =
+    transcripts
       .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-    val cands = t.filter(
-      col("tok").rlike(IdentifierRe) ||
-        lower(col("tok")).isin(Pronouns: _*))
+      .filter(col("tok").rlike(IdentifierRe) || lower(col("tok")).isin(Pronouns: _*))
       .select(col("conv_id"), col("turn_idx"), col("pos").as("start"),
         col("pos").as("end"), col("tok").as("surface"),
         when(lower(col("tok")).isin(Pronouns: _*), "PRONOMINAL")
           .otherwise("PROPER").as("mtype"),
         col("role"), col("ts"))
-    finish(cands)
-  }
 
   /** All three generators union'd (fixture/ER path): capitalized runs,
     * pronouns, determiner+nominal. Sentence-initial capitalized tokens are

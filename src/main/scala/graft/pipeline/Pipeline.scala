@@ -129,9 +129,9 @@ object Pipeline {
     * `surfaceScores` is `scorer.surface` over the run's surface pairs. */
   def arcs(mentions: DataFrame, surfaces: DataFrame, surfaceScores: DataFrame,
       scorer: Scorer, cfg: Config): DataFrame = {
-    // the band leg carries both mentions' attrs through the ONE conv_id
-    // self-join (convBandPairsAttr) — the ids-only + attachAttrs shape
-    // shuffled the ~10×-larger pair table against mentions twice more
+    // the band leg carries both mentions' attrs out of the one sweep per
+    // conversation (convBandPairsAttr): no join, and no exchange over the
+    // mentions, which are already spread by conv_id
     val band = scorer.band(Blocking.convBandPairsAttr(mentions, cfg.blocking))
     val linked = surfaceScores.filter(col("score") > cfg.linkThreshold)
       .select(col("norm_a"), col("norm_b"), col("block_key"), col("score"))

@@ -20,8 +20,8 @@ sealed trait Scorer {
     * per distinct blocked surface pair. */
   def surface(surfacePairs: DataFrame, surfaces: DataFrame): DataFrame
 
-  /** Band arcs `(ant_id, cur_id, block_key, score)` over an attribute-attached
-    * pair table ([[Blocking.convBandPairsAttr]] output). */
+  /** Band arcs `(ant_id, cur_id, block_key, score)` over the band sweep's
+    * attribute-carrying pairs ([[Blocking.convBandPairsAttr]] output). */
   def band(bandAttr: DataFrame): DataFrame
 
   /** Per-surface self scores `(norm, block_key, score)` — the score every

@@ -219,14 +219,9 @@ object Scoring {
       .select(col("norm_a").as("norm"), col("block_key"), col("score"))
   }
 
-  /** Full scoring stage: pairs + mentions → scored pairs. */
-  def scorePairs(pairs: DataFrame, mentions: DataFrame,
-      w: Weights = DefaultWeights): DataFrame =
-    scorePairsAttr(attachAttrs(pairs, mentions), w)
-
-  /** [[scorePairs]] over an ALREADY-attribute-attached pair table (e.g.
-    * [[Blocking.convBandPairsAttr]] output — one equi-join instead of
-    * pairs-side re-joins). */
+  /** Full scoring stage over an attribute-attached pair table
+    * ([[Blocking.convBandPairsAttr]] output, or [[attachAttrs]] over an ids
+    * pair table) → scored pairs. */
   def scorePairsAttr(pairsAttr: DataFrame, w: Weights = DefaultWeights): DataFrame =
     score(featurize(pairsAttr), w)
       .select(col("ant_id"), col("cur_id"), col("block_key"),

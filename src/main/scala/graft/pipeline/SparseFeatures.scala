@@ -436,8 +436,8 @@ object SparseFeatures {
       counts: DataFrame, wmap: graft.functions.SparseWeightMap): DataFrame =
     scoreAttachedSparseFast(Scoring.attachAttrs(pairs, mentions), counts, wmap)
 
-  /** [[scorePairsSparseFast]] over an ALREADY-attribute-attached pair table
-    * ([[Blocking.convBandPairsAttr]] output). */
+  /** [[scorePairsSparseFast]] over an attribute-carrying pair table (the
+    * band sweep's [[Blocking.convBandPairsAttr]] output). */
   def scoreAttachedSparseFast(pairsAttr: DataFrame, counts: DataFrame,
       wmap: graft.functions.SparseWeightMap): DataFrame = {
     val (df, base) = pairFeatureFrame(pairsAttr, counts, None, None)

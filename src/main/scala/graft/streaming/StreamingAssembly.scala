@@ -46,22 +46,12 @@ object StreamingAssembly {
   def streamTranscripts(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(transcriptSchema).parquet(dir)
 
-  /** Stateless streaming mention extraction — identical logic to the batch
-    * identifier generator (mention ids are position-derived, no window). */
-  def extractMentions(stream: DataFrame): DataFrame = {
-    import graft.pipeline.Mentions.{IdentifierRe, Pronouns}
-    stream
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .filter(col("tok").rlike(IdentifierRe) || lower(col("tok")).isin(Pronouns: _*))
-      .select(col("conv_id"), col("turn_idx"), col("pos").as("start"),
-        col("tok").as("surface"),
-        when(lower(col("tok")).isin(Pronouns: _*), "PRONOMINAL")
-          .otherwise("PROPER").as("mtype"),
-        graft.functions.mentionId(col("conv_id"), col("turn_idx"), col("pos"))
-          .as("mention_id"),
-        col("role"), col("ts"))
-  }
+  /** Stateless streaming mention extraction: the batch identifier candidates
+    * plus their position-derived `mention_id` (the band pairer assigns `m_seq`). */
+  def extractMentions(stream: DataFrame): DataFrame =
+    graft.pipeline.Mentions.identifierCandidates(stream)
+      .withColumn("mention_id",
+        graft.functions.mentionId(col("conv_id"), col("turn_idx"), col("start")))
 
   // ---- streaming band scoring + decode (the streaming face of the
   // ---- pipeline's conversation-band leg) ----------------------------------
@@ -94,9 +84,11 @@ object StreamingAssembly {
 
   /** Streaming B1 band-pair emission: per-conversation keyed state holding
     * the last `maxConvDist` mentions (the band window) plus the running
-    * canonical sequence counter (W1's streaming analog). Each arriving
-    * mention emits one candidate pair per in-band buffered antecedent, with
-    * both mentions' attributes attached (so downstream featurize+score is
+    * canonical sequence counter (W1's streaming analog). Each microbatch
+    * runs the batch band kernel ([[graft.pipeline.Blocking.bandSweep]]) over
+    * the buffered window followed by the sorted arrivals, so each arriving
+    * mention emits one candidate pair per in-band antecedent, with both
+    * mentions' attributes attached (so downstream featurize+score is
     * stateless).
     *
     * Arrival contract: a conversation's mentions arrive in `(turn_idx,
@@ -129,31 +121,27 @@ object StreamingAssembly {
         (conv: String, rows: Iterator[MIn], state: GroupState[BandBuf]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty[BandPair] }
           else {
-            var buf = state.getOption.map(_.ms).getOrElse(Nil)
-            var nextSeq = state.getOption.map(_.nextSeq).getOrElse(0)
-            val out = scala.collection.mutable.ArrayBuffer.empty[BandPair]
-            var maxTsMs = 0L
-            rows.toSeq.sortBy(m => (m.turn_idx, m.start)).foreach { m =>
-              if (m.ts != null) maxTsMs = math.max(maxTsMs, m.ts.getTime)
-              val seq = nextSeq; nextSeq += 1
-              buf.foreach { a =>
-                if (seq - a.m_seq <= maxConvDist)
-                  out += BandPair(a.mention_id, m.mention_id, "conv",
-                    conv, conv, a.m_seq, seq,
-                    a.norm, m.norm, a.head_key, m.head_key, a.toks, m.toks,
-                    a.mtype, m.mtype, a.closed_class, m.closed_class,
-                    a.role, m.role, a.number, m.number, a.gender, m.gender, m.ts)
-              }
-              // trim to the band: the NEXT mention has seq+1, so only
-              // antecedents with (seq+1) - a.m_seq <= maxConvDist can pair
-              buf = BufM(m.mention_id, seq, m.norm, m.head_key, m.toks, m.mtype,
-                m.closed_class, m.role, m.number, m.gender) ::
-                buf.filter(a => seq + 1 - a.m_seq <= maxConvDist)
-            }
-            state.update(BandBuf(nextSeq, buf))
+            val carried = state.getOption.fold(List.empty[BufM])(_.ms).sortBy(_.m_seq)
+            val firstSeq = state.getOption.fold(0)(_.nextSeq)
+            val arrived = rows.toVector.sortBy(m => (m.turn_idx, m.start))
+              .zipWithIndex.map { case (m, i) =>
+                (BufM(m.mention_id, firstSeq + i, m.norm, m.head_key, m.toks, m.mtype,
+                  m.closed_class, m.role, m.number, m.gender), m.ts) }
+            val nextSeq = firstSeq + arrived.size
+            // the buffer keeps what the NEXT mention (m_seq = nextSeq) can pair with
+            state.update(BandBuf(nextSeq,
+              (carried ++ arrived.map(_._1)).filter(nextSeq - _.m_seq <= maxConvDist).reverse))
+            val maxTsMs = arrived.flatMap(m => Option(m._2)).map(_.getTime).maxOption
             state.setTimeoutTimestamp(
-              math.max(state.getCurrentWatermarkMs(), maxTsMs) + horizonMs)
-            out.iterator
+              math.max(state.getCurrentWatermarkMs(), maxTsMs.getOrElse(0L)) + horizonMs)
+            graft.pipeline.Blocking.bandSweep[(BufM, java.sql.Timestamp)](
+                carried.map((_, null)), arrived.iterator, maxConvDist)(_._1.m_seq)
+              .map { case ((a, _), (m, ts)) =>
+                BandPair(a.mention_id, m.mention_id, "conv",
+                  conv, conv, a.m_seq, m.m_seq,
+                  a.norm, m.norm, a.head_key, m.head_key, a.toks, m.toks,
+                  a.mtype, m.mtype, a.closed_class, m.closed_class,
+                  a.role, m.role, a.number, m.number, a.gender, m.gender, ts) }
           }
         })
   }

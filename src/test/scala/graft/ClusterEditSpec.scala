@@ -109,11 +109,9 @@ class ClusterEditSpec extends SparkSuite {
     val clusters0 = Clustering.cluster(spark, mentions, bp).localCheckpoint(true)
     val edits = Seq((mid("cA", 1, 2), mid("cB", 0, 0))).toDF("cur_id", "new_ant_id")
     val fast = Clustering.editBackpointers(spark, clusters0, bp, edits)
-    val saved = Clustering.maxDriverEdges
-    val (slowSet, hinted) = try {
-      Clustering.maxDriverEdges = 0
-      broadcastHinted(toSet(Clustering.editBackpointers(spark, clusters0, bp, edits)))
-    } finally Clustering.maxDriverEdges = saved
+    val (slowSet, hinted) =
+      broadcastHinted(toSet(Clustering.editBackpointers(spark, clusters0, bp, edits,
+        maxEdges = 0)))
     // the edit-id set (mention_id) and the touched set (cluster_id) are over
     // the bound here by construction: neither may carry a broadcast hint
     assert(!hinted.exists(c => c == Seq("mention_id") || c == Seq("cluster_id")),
@@ -147,14 +145,10 @@ class ClusterEditSpec extends SparkSuite {
     val mentions = ids.toDF("mention_id")
     val bp = (1 until n).map(i => (ids(i), ids(i - 1))).toDF("cur_id", "ant_id")
     val expected = Clustering.cluster(spark, mentions, bp)
-    val saved = Clustering.maxDriverEdges
     val sc = spark.sparkContext
-    val (dist, pinsAfter) = try {
-      Clustering.maxDriverEdges = 0
-      val before = sc.getPersistentRDDs.size
-      val d = Clustering.cluster(spark, mentions, bp).localCheckpoint(true)
-      (d, sc.getPersistentRDDs.size - before)
-    } finally Clustering.maxDriverEdges = saved
+    val before = sc.getPersistentRDDs.size
+    val dist = Clustering.cluster(spark, mentions, bp, maxEdges = 0).localCheckpoint(true)
+    val pinsAfter = sc.getPersistentRDDs.size - before
     // chain of 40 conversations -> O(log n) CC iterations; without the
     // release each iteration leaked one labels checkpoint. Allow the
     // result pin + the loop's live labels + a small constant of pinned
@@ -177,17 +171,15 @@ class ClusterEditSpec extends SparkSuite {
       (chains(4)(1), chains(3)(3)))
     val bp = (within ++ cross).toDF("cur_id", "ant_id")
     val sc = spark.sparkContext
-    val saved = Clustering.maxDriverEdges
-    def run(bound: Int): (Set[(String, String)], Int) = try {
-      Clustering.maxDriverEdges = bound
+    def run(bound: Int): (Set[(String, String)], Int) = {
       val before = Pins.ids(sc)
-      val out = Clustering.cluster(spark, mentions, bp)
+      val out = Clustering.cluster(spark, mentions, bp, maxEdges = bound)
       val pinned = Pins.ids(sc) -- before
       val labels = toSet(out)
       Pins.release(sc, pinned)
       (labels, pinned.size)
-    } finally Clustering.maxDriverEdges = saved
-    val (dflt, dfltPins) = run(saved)
+    }
+    val (dflt, dfltPins) = run(Clustering.maxDriverEdges)
     val (small, smallPins) = run(5)
     val (dist, _) = run(0)
     // components: {c00,c01}, {c02,c03,c04}, {c05}, the isolated c99

@@ -33,20 +33,6 @@ class ErQualitySpec extends SparkSuite {
       s"extraction must exactly match the scripted extents: $prf")
   }
 
-  test("convBandPairsAttr == attachAttrs(convBandPairs) exactly (rows + columns)") {
-    val m = res.mentions
-    val viaAttach = Scoring.attachAttrs(Blocking.convBandPairs(m), m)
-    val direct = Blocking.convBandPairsAttr(m)
-    assert(direct.columns.sorted === viaAttach.columns.sorted,
-      s"column sets must match: ${direct.columns.sorted.toSeq} vs ${viaAttach.columns.sorted.toSeq}")
-    val cols = viaAttach.columns.sorted.map(col).toSeq
-    val a = viaAttach.select(cols: _*)
-    val b = direct.select(cols: _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "attr-carrying band self-join must produce exactly the attachAttrs rows")
-    assert(b.count() > 0)
-  }
-
   test("blocking recall >= 0.995 (antecedent + entity connectivity)") {
     // B7a: reference-semantics within-conversation antecedent recall
     val ar = Eval.antecedentRecall(universe, res.mentions, gold).collect()(0)

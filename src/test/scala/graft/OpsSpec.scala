@@ -152,14 +152,12 @@ class OpsSpec extends SparkSuite {
     val big = 5000000000L
     val pairs = Seq((big + 3, big + 1), (big + 2, big + 3), (7L, 9L), (9L, 12L),
       (4L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val saved = Clustering.maxDriverEdges
-    def run(bound: Int) = try {
-      Clustering.maxDriverEdges = bound
-      val out = Dedup.canonicalize(pairs)
+    def run(bound: Int) = {
+      val out = Dedup.canonicalize(pairs, maxEdges = bound)
       (out.schema("canonical_id").dataType, out.schema("doc_id").dataType,
         out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    } finally Clustering.maxDriverEdges = saved
-    val (dType, dIdType, driver) = run(saved)
+    }
+    val (dType, dIdType, driver) = run(Clustering.maxDriverEdges)
     val (lType, lIdType, loop) = run(0)
     assert(Seq(dType, dIdType, lType, lIdType).forall(_ == LongType))
     assert(loop === driver)

@@ -41,8 +41,8 @@ class PlanSpec extends SparkSuite {
     val m = graft.pipeline.Mentions.extractIdentifier(
       graft.sources.Transcripts.load(spark, sf)).localCheckpoint(true)
     val counts = graft.pipeline.SparseFeatures.normCounts(m).localCheckpoint(true)
-    val pairs = graft.pipeline.Blocking.convBandPairs(m)
-    val pairsAttr = graft.pipeline.Scoring.attachAttrs(pairs, m)
+    val pairsAttr = graft.pipeline.Blocking.convBandPairsAttr(m)
+    val pairs = pairsAttr.select("ant_id", "cur_id", "block_key")
     val feats = graft.pipeline.SparseFeatures.featureStrings(pairsAttr, counts)
     val labels = pairsAttr.select(col("ant_id"), col("cur_id"),
       (col("head_key_a") === col("head_key_c")).cast("double").as("label"))
@@ -76,9 +76,21 @@ class PlanSpec extends SparkSuite {
     assert(!hasCartesian(r.clusters))
   }
 
-  test("band pair join is an equi-join on conv_id (no broadcast NL)") {
-    val plan = Queries.pipeline(spark, sf).scored.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      "the conversation band must join on keys, never nested-loop")
+  test("band leg over Pipeline.run's cached mentions: no join, no exchange") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val band = graft.pipeline.Blocking.convBandPairsAttr(Queries.pipeline(spark, sf).mentions)
+    assert(optimized(band).collect { case j: Join => j }.isEmpty,
+      "the conversation band is one sweep per conversation, never a join")
+    // the cached relation is a leaf here: only exchanges the band leg itself
+    // plans would show, and the mentions are already spread by conv_id
+    val physical = new AdaptiveSparkPlanHelper {}.collect(band.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j.nodeName
+      case e: Exchange => e.nodeName
+    }
+    assert(physical.isEmpty, s"band leg plans a join or an exchange: $physical")
+    assert(band.count() > 0)
   }
 }

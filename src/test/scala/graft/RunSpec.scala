@@ -336,7 +336,7 @@ class RunSpec extends SparkSuite {
     // (the in-conversation band leg): scores -> decode -> full clustering
     val m = Mentions.extractIdentifier(
       Transcripts.load(spark, "/root/testdata/sf0.001"))
-    val scored = Scoring.scorePairs(Blocking.convBandPairs(m, Blocking.Config()), m)
+    val scored = Scoring.scorePairsAttr(Blocking.convBandPairsAttr(m, Blocking.Config()))
     val batchBp = Decode.backpointers(scored, 0.0)
       .select("cur_id", "ant_id").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
@@ -495,8 +495,7 @@ class RunSpec extends SparkSuite {
     val m = Mentions.extractIdentifier(
       Transcripts.load(spark, "/root/testdata/sf0.001"))
     val counts = SparseFeatures.normCounts(m)
-    val pairsAttr = Scoring.attachAttrs(
-      Blocking.convBandPairs(m, Blocking.Config()), m)
+    val pairsAttr = Blocking.convBandPairsAttr(m, Blocking.Config())
     val feats = SparseFeatures.featureStrings(pairsAttr, counts)
     val labels = pairsAttr.select(col("ant_id"), col("cur_id"),
       (col("head_key_a") === col("head_key_c")).cast("double").as("label"))
@@ -518,7 +517,7 @@ class RunSpec extends SparkSuite {
     val wmap = SparseFeatures.collectWeights(wLoaded)
       .getOrElse(fail("fixture model must be broadcast-size"))
     val batchScores = SparseFeatures.scorePairsSparseFast(
-        Blocking.convBandPairs(m, Blocking.Config()), m, counts, wmap)
+        pairsAttr.select("ant_id", "cur_id", "block_key"), m, counts, wmap)
       .select(col("ant_id"), col("cur_id"), col("score"))
     val batchBp = Decode.backpointers(batchScores, 0.0)
       .select("cur_id", "ant_id").collect()

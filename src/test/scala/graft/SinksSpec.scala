@@ -65,8 +65,7 @@ class SinksSpec extends SparkSuite {
   }
 
   test("P7: auxiliary featurizer extends the linear model") {
-    val pairs = Scoring.featurize(Scoring.attachAttrs(
-      Blocking.convBandPairs(res.mentions), res.mentions)).cache()
+    val pairs = Scoring.featurize(Blocking.convBandPairsAttr(res.mentions)).cache()
     val adjacent = (col("m_seq_c") - col("m_seq_a") === 1).cast("double")
     val joined = Scoring.score(pairs)
       .select(col("ant_id"), col("cur_id"), col("score").as("base"),

@@ -130,7 +130,8 @@ class SparseSpec extends SparkSuite {
       mentions, cfgB, extraCols = Seq("score"), keepInBand = bridgeKeepInBand)
       .select(col("ant_id"), col("cur_id"), col("score"))
     val band = SparseFeatures.scorePairsSparse(
-      Blocking.convBandPairs(mentions, cfgB), mentions, counts, w)
+      Blocking.convBandPairsAttr(mentions, cfgB).select("ant_id", "cur_id", "block_key"),
+      mentions, counts, w)
       .select(col("ant_id"), col("cur_id"), col("score"))
     val selfSc = SparseFeatures.selfScoresSparse(surfaces, counts, w)
       .select(col("norm"), col("score").as("self_score"))
@@ -275,7 +276,8 @@ class SparseSpec extends SparkSuite {
         Seq("ant_id", "cur_id"), "left_anti").cache()
     assert(droppedBridges.count() > 0, "fixture must actually exercise in-band bridges")
     val band = SparseFeatures.scorePairsSparse(
-      Blocking.convBandPairs(mentions, cfgB), mentions, counts, wAdv)
+      Blocking.convBandPairsAttr(mentions, cfgB).select("ant_id", "cur_id", "block_key"),
+      mentions, counts, wAdv)
       .select(col("ant_id"), col("cur_id"), col("score"))
     val selfSc = SparseFeatures.selfScoresSparse(surfaces, counts, wAdv)
       .select(col("norm"), col("score").as("self_score"))
@@ -346,7 +348,8 @@ class SparseSpec extends SparkSuite {
     val cfgB = Blocking.Config()
     val surfaces = Blocking.surfaceTable(mentions).cache()
     val sPairs = Blocking.surfacePairs(surfaces, cfgB).cache()
-    val bandPairs = Blocking.convBandPairs(mentions, cfgB)
+    val bandPairs = Blocking.convBandPairsAttr(mentions, cfgB)
+      .select("ant_id", "cur_id", "block_key")
 
     // integer-exact sums ⇒ the double scores must match exactly, not just to
     // a rounding tolerance — compare with no round()

@@ -37,12 +37,11 @@ class StreamingSpec extends SparkSuite {
     val transcripts = spark.read.parquet(dir)
     val m = Mentions.extractIdentifier(transcripts).cache()
     val cfg = Blocking.Config()
-    val batchScores = Scoring.scorePairs(
-      Blocking.convBandPairs(m, cfg), m)
+    val batchScores = Scoring.scorePairsAttr(Blocking.convBandPairsAttr(m, cfg))
       .select(col("ant_id"), col("cur_id"), round(col("score"), 9).as("score"))
       .cache()
     val batchBptr = Decode.backpointers(
-      Scoring.scorePairs(Blocking.convBandPairs(m, cfg), m), 0.0)
+      Scoring.scorePairsAttr(Blocking.convBandPairsAttr(m, cfg)), 0.0)
       .select("cur_id", "ant_id").collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
     // replay the enriched mentions as a file stream; ONE file per conv order
@@ -94,10 +93,10 @@ class StreamingSpec extends SparkSuite {
     val m = Mentions.extractIdentifier(transcripts).cache()
     val cfg = Blocking.Config()
     val counts = SparseFeatures.normCounts(m).cache()
-    val bandPairs = Blocking.convBandPairs(m, cfg)
+    val pairsAttr = Blocking.convBandPairsAttr(m, cfg)
+    val bandPairs = pairsAttr.select("ant_id", "cur_id", "block_key")
     // deterministic model: log-odds against a head-match pseudo-label — any
     // fixed weight table works, the test pins stream == batch under it
-    val pairsAttr = Scoring.attachAttrs(bandPairs, m)
     val feats = SparseFeatures.featureStrings(pairsAttr, counts)
     val labels = pairsAttr.select(col("ant_id"), col("cur_id"),
       (col("head_key_a") === col("head_key_c")).cast("double").as("label"))
@@ -145,7 +144,7 @@ class StreamingSpec extends SparkSuite {
     val streamed = spark.table("stream_e2e_band")
       .select(col("ant_id"), col("cur_id"), round(col("score"), 9).as("score"))
     val m = Mentions.extractIdentifier(spark.read.parquet(dir))
-    val batch = Scoring.scorePairs(Blocking.convBandPairs(m, Blocking.Config()), m)
+    val batch = Scoring.scorePairsAttr(Blocking.convBandPairsAttr(m, Blocking.Config()))
       .select(col("ant_id"), col("cur_id"), round(col("score"), 9).as("score"))
     assert(batch.count() > 0)
     assert(streamed.count() === batch.count())
@@ -218,7 +217,7 @@ class StreamingSpec extends SparkSuite {
       .repartition(3).write.mode("overwrite").parquet(cd)
     val m = Mentions.extractIdentifier(spark.read.parquet(cd)).cache()
     val cfg = Blocking.Config()
-    val scored = Scoring.scorePairs(Blocking.convBandPairs(m, cfg), m)
+    val scored = Scoring.scorePairsAttr(Blocking.convBandPairsAttr(m, cfg))
       .select(col("ant_id"), col("cur_id"), col("score")).cache()
     // ascending-score replay: a mention's best arc lands in its LAST wave,
     // so earlier waves link it provisionally and later waves re-point it —
